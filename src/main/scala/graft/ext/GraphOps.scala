@@ -4,7 +4,7 @@ import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.plans.Fixpoint
+import graft.plans.Rounds
 
 /** Graph analytics over the quad graph / relational edge lists
   * (SURVEY §2.D: "GraphX for components/PageRank, Pregel for
@@ -15,7 +15,8 @@ import graft.plans.Fixpoint
   * dictionary-encoded RDF terms or harness keys), DataFrame out, so
   * results join back into Catalyst plans. GraphX is used where its
   * Pregel machinery wins (components, PageRank); plain-DataFrame
-  * semi-naive BFS ([[Fixpoint]]) where a bounded traversal is enough.
+  * round loops where a bounded traversal is enough, each round's
+  * state an eager checkpoint owned by [[graft.plans.Rounds]].
   *
   * Scale: GraphX partitions edges (EdgePartition2D for skew); the
   * BFS variant shuffles only the frontier each round. Vertex ids are
@@ -24,21 +25,28 @@ import graft.plans.Fixpoint
   */
 object GraphOps {
 
-  /** Max vertex count for the per-round state-table broadcast hint in
-    * [[hits]] / [[labelPropagation]] (r19 review): (long, long) rows
-    * are ~16 bytes serialized, so 5M rows ≈ 80 MB built relation —
-    * comfortably inside ordinary executor memory and far below the
-    * 8 GB / 512M-row broadcast hard limits; beyond it the hint drops
-    * away and Catalyst plans the shuffle join a graph that size
-    * needs. Env-overridable for cluster tuning.
-    */
-  private val BroadcastVertexCap: Long =
-    sys.env.get("SPARK_GRAFT_BCAST_VERTEX_CAP").map(_.toLong)
-      .getOrElse(5000000L)
-
   private def toEdgeRdd(edges: DataFrame) =
     edges.select(col("src").cast("long"), col("dst").cast("long"))
       .rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
+
+  /** Undirected form: every edge in both directions (carrying the
+    * `extra` columns along), deduped.
+    */
+  private def undirected(edges: DataFrame, extra: String*): DataFrame = {
+    val rest = extra.map(col)
+    edges.select(col("src") +: col("dst") +: rest: _*)
+      .unionByName(edges.select(col("dst").as("src") +: col("src").as("dst") +: rest: _*))
+      .distinct()
+  }
+
+  /** Canonical undirected form: (least, greatest) long id pairs, deduped. */
+  private def canonical(edges: DataFrame): DataFrame =
+    edges.select(least(col("src"), col("dst")).cast("long").as("src"),
+      greatest(col("src"), col("dst")).cast("long").as("dst")).distinct()
+
+  /** [[canonical]] without self-loops: the simple graph. */
+  private def simple(edges: DataFrame): DataFrame =
+    canonical(edges).filter(col("src") =!= col("dst"))
 
   /** Connected components (undirected reachability); component id =
     * min vertex id in the component (GraphX convention, deterministic).
@@ -60,11 +68,7 @@ object GraphOps {
     */
   def triangleCount(spark: SparkSession, edges: DataFrame): DataFrame = {
     import spark.implicits._
-    val canon = edges
-      .select(least(col("src"), col("dst")).cast("long").as("src"),
-        greatest(col("src"), col("dst")).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-    Graph.fromEdges(toEdgeRdd(canon), 0)
+    Graph.fromEdges(toEdgeRdd(simple(edges)), 0)
       .partitionBy(org.apache.spark.graphx.PartitionStrategy.EdgePartition2D)
       .triangleCount()
       .vertices.map { case (id, n) => (id, n.toLong) }
@@ -83,10 +87,7 @@ object GraphOps {
     */
   def localClustering(spark: SparkSession, edges: DataFrame): DataFrame = {
     import spark.implicits._
-    val canon = edges
-      .select(least(col("src"), col("dst")).cast("long").as("src"),
-        greatest(col("src"), col("dst")).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+    val canon = simple(edges).localCheckpoint()
     val deg = canon.select(col("src").as("id"))
       .unionByName(canon.select(col("dst").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))
@@ -121,69 +122,57 @@ object GraphOps {
   def kTruss(spark: SparkSession, edges: DataFrame, k: Int = 4,
       rounds: Int = 3): DataFrame = {
     require(k >= 3, s"kTruss: k must be >= 3 (got $k)")
-    val canon = edges
-      .select(least(col("src"), col("dst")).cast("long").as("src"),
-        greatest(col("src"), col("dst")).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
-    val ord = canon.select(col("src").as("v"))
-      .unionByName(canon.select(col("dst").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("d"))
-      .localCheckpoint()
     def lt(d1: org.apache.spark.sql.Column, v1: org.apache.spark.sql.Column,
         d2: org.apache.spark.sql.Column,
         v2: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       d1 < d2 || (d1 === d2 && v1 < v2)
-    var cur = canon.withColumn("support", lit(0L))
-    // r18 fixpoint early-exit — same argument as kCore: the peel only
-    // removes edges, support is a pure function of the surviving set,
-    // so an unchanged count ⇒ identical set ⇒ identical support ⇒
-    // every later round is the identity. Exact vs the unrolled oracle.
-    var nEdges = -1L
-    var converged = false
-    for (_ <- 1 to rounds if !converged) {
-      val e = cur
-        .join(ord.select(col("v").as("src"), col("d").as("ds")), Seq("src"))
-        .join(ord.select(col("v").as("dst"), col("d").as("dd")), Seq("dst"))
-      val dir = e.select(
-        when(lt(col("ds"), col("src"), col("dd"), col("dst")),
-          col("src")).otherwise(col("dst")).as("u"),
-        when(lt(col("ds"), col("src"), col("dd"), col("dst")),
-          col("dst")).otherwise(col("src")).as("w"),
-        when(lt(col("ds"), col("src"), col("dd"), col("dst")),
-          col("dd")).otherwise(col("ds")).as("dw"))
-      val d1 = dir.select(col("u"), col("w").as("b"), col("dw").as("db"))
-      val d2 = dir.select(col("u"), col("w").as("c"), col("dw").as("dc"))
-      val tri = d1.join(d2, Seq("u"))
-        .where(lt(col("db"), col("b"), col("dc"), col("c")))
-        .join(dir.select(col("u").as("b"), col("w").as("c")), Seq("b", "c"),
-          "left_semi")
-        .select(col("u").as("a"), col("b"), col("c"))
-      val sup = tri.select(least(col("a"), col("b")).as("src"),
-          greatest(col("a"), col("b")).as("dst"))
-        .unionByName(tri.select(least(col("a"), col("c")).as("src"),
-          greatest(col("a"), col("c")).as("dst")))
-        .unionByName(tri.select(least(col("b"), col("c")).as("src"),
-          greatest(col("b"), col("c")).as("dst")))
-        .groupBy("src", "dst").agg(count(lit(1)).as("sup"))
-      val prev = cur
-      cur = cur.select(col("src"), col("dst"))
-        .join(sup, Seq("src", "dst"))
-        .filter(col("sup") >= k - 2)
-        .select(col("src"), col("dst"), col("sup").as("support"))
-        .localCheckpoint()
-      val n2 = cur.count()
-      converged = n2 == nEdges
-      nEdges = n2
-      Ranks.sealLeavesRelease(prev)
+    Rounds { r =>
+      val canon = r.keep(simple(edges))
+      val ord = r.keep(canon.select(col("src").as("v"))
+        .unionByName(canon.select(col("dst").as("v")))
+        .groupBy("v").agg(count(lit(1)).as("d")))
+      var cur = canon.withColumn("support", lit(0L))
+      // r18 fixpoint early-exit — same argument as kCore: the peel only
+      // removes edges, support is a pure function of the surviving set,
+      // so an unchanged count ⇒ identical set ⇒ identical support ⇒
+      // every later round is the identity. Exact vs the unrolled oracle.
+      var nEdges = -1L
+      var converged = false
+      for (_ <- 1 to rounds if !converged) {
+        val e = cur
+          .join(ord.select(col("v").as("src"), col("d").as("ds")), Seq("src"))
+          .join(ord.select(col("v").as("dst"), col("d").as("dd")), Seq("dst"))
+        val dir = e.select(
+          when(lt(col("ds"), col("src"), col("dd"), col("dst")),
+            col("src")).otherwise(col("dst")).as("u"),
+          when(lt(col("ds"), col("src"), col("dd"), col("dst")),
+            col("dst")).otherwise(col("src")).as("w"),
+          when(lt(col("ds"), col("src"), col("dd"), col("dst")),
+            col("dd")).otherwise(col("ds")).as("dw"))
+        val d1 = dir.select(col("u"), col("w").as("b"), col("dw").as("db"))
+        val d2 = dir.select(col("u"), col("w").as("c"), col("dw").as("dc"))
+        val tri = d1.join(d2, Seq("u"))
+          .where(lt(col("db"), col("b"), col("dc"), col("c")))
+          .join(dir.select(col("u").as("b"), col("w").as("c")), Seq("b", "c"),
+            "left_semi")
+          .select(col("u").as("a"), col("b"), col("c"))
+        val sup = tri.select(least(col("a"), col("b")).as("src"),
+            greatest(col("a"), col("b")).as("dst"))
+          .unionByName(tri.select(least(col("a"), col("c")).as("src"),
+            greatest(col("a"), col("c")).as("dst")))
+          .unionByName(tri.select(least(col("b"), col("c")).as("src"),
+            greatest(col("b"), col("c")).as("dst")))
+          .groupBy("src", "dst").agg(count(lit(1)).as("sup"))
+        cur = r.swap(cur, cur.select(col("src"), col("dst"))
+          .join(sup, Seq("src", "dst"))
+          .filter(col("sup") >= k - 2)
+          .select(col("src"), col("dst"), col("sup").as("support")))
+        val n2 = cur.count()
+        converged = n2 == nEdges
+        nEdges = n2
+      }
+      cur
     }
-    // seal the survivors, then release every round-local checkpoint
-    // (LogicalRDD-leaf release — Dataset.unpersist is a no-op for
-    // localCheckpoint blocks, UnpersistProbeSpec)
-    val out = Ranks.sealAndRelease(
-      cur.select(col("src"), col("dst"), col("support")), canon)
-    Ranks.sealLeavesRelease(cur)
-    Ranks.sealLeavesRelease(ord)
-    out
   }
 
   /** Fixed-iteration PageRank (GraphX semantics: rank = reset + (1 -
@@ -217,181 +206,123 @@ object GraphOps {
     * `localCheckpoint` truncates lineage per round.
     */
   def personalizedPageRank(spark: SparkSession, edges: DataFrame,
-      seeds: DataFrame, iters: Int = 10, reset: Double = 0.15): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
-    val outdeg = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("od"))
-      .localCheckpoint()
-    // restart mass comes from the seed set ALONE — a seed with no
-    // edges still carries its indicator (rank = reset), it just never
-    // propagates; semi-joining seeds against edge-derived vertices
-    // would silently drop isolated seeds, breaking the documented
-    // "restart indicator 1 on each seed" contract
-    val pers = seeds.select(col("id").as("v")).distinct()
-      .withColumn("p", lit(1.0))
-      .localCheckpoint()
-    var rank = pers.select(col("v"), (col("p") * reset).as("rank"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val contrib = e
-        .join(rank.select(col("v").as("src"), col("rank")), Seq("src"))
-        .join(outdeg.select(col("v").as("src"), col("od")), Seq("src"))
-        .groupBy(col("dst").as("v"))
-        .agg(sum(col("rank") / col("od")).as("in_mass"))
-      val prev = rank
-      rank = pers.select(col("v"), (col("p") * reset).as("base"))
-        .join(contrib, Seq("v"), "full")
-        .select(col("v"),
-          (coalesce(col("base"), lit(0.0)) +
-            lit(1.0 - reset) * coalesce(col("in_mass"), lit(0.0))).as("rank"))
-        .localCheckpoint()
-      // the new checkpoint is eager — the superseded round's blocks are
-      // dead weight in the block manager from here on (each call
-      // otherwise pins iters+3 checkpointed DFs until the next GC +
-      // ContextCleaner pass, which is exactly the storage creep that
-      // starves execution memory in a long benchmark run)
-      Ranks.releaseCheckpoint(prev)
+      seeds: DataFrame, iters: Int = 10, reset: Double = 0.15): DataFrame =
+    Rounds { r =>
+      val e = r.keep(edges.select(col("src"), col("dst")).distinct())
+      val outdeg = r.keep(
+        e.groupBy(col("src").as("v")).agg(count(lit(1)).as("od")))
+      // restart mass comes from the seed set ALONE — a seed with no
+      // edges still carries its indicator (rank = reset), it just never
+      // propagates; semi-joining seeds against edge-derived vertices
+      // would silently drop isolated seeds, breaking the documented
+      // "restart indicator 1 on each seed" contract
+      val pers = r.keep(seeds.select(col("id").as("v")).distinct()
+        .withColumn("p", lit(1.0)))
+      var rank = r.keep(pers.select(col("v"), (col("p") * reset).as("rank")))
+      for (_ <- 1 to iters) {
+        val contrib = e
+          .join(rank.select(col("v").as("src"), col("rank")), Seq("src"))
+          .join(outdeg.select(col("v").as("src"), col("od")), Seq("src"))
+          .groupBy(col("dst").as("v"))
+          .agg(sum(col("rank") / col("od")).as("in_mass"))
+        rank = r.swap(rank, pers.select(col("v"), (col("p") * reset).as("base"))
+          .join(contrib, Seq("v"), "full")
+          .select(col("v"),
+            (coalesce(col("base"), lit(0.0)) +
+              lit(1.0 - reset) * coalesce(col("in_mass"), lit(0.0))).as("rank")))
+      }
+      rank.select(col("v").as("id"), (round(col("rank") * lit(1e6), 0)
+          .cast("long").cast("double") / lit(1e6)).as("rank"))
+        .where(col("rank") > 0)
     }
-    Ranks.releaseCheckpoint(e)
-    Ranks.releaseCheckpoint(outdeg)
-    Ranks.releaseCheckpoint(pers)
-    rank.select(col("v").as("id"), (round(col("rank") * lit(1e6), 0)
-        .cast("long").cast("double") / lit(1e6)).as("rank"))
-      .where(col("rank") > 0)
-  }
 
   /** Unweighted shortest hop counts from a set of source vertices,
     * treating edges as undirected. Semi-naive BFS: each round joins
     * only the new frontier against the edge list — the DataFrame
     * equivalent of a Pregel iteration.
     */
-  def shortestHops(spark: SparkSession, edges: DataFrame, sources: DataFrame): DataFrame = {
-    val und = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint()
-    val out = shortestHopsOn(und, sources)
-    Ranks.releaseCheckpoint(und)
-    out
-  }
+  def shortestHops(spark: SparkSession, edges: DataFrame, sources: DataFrame): DataFrame =
+    Rounds(r => hops(r, r.keep(undirected(edges)), sources, labelled = false))
 
-  /** BFS core over a PREBUILT undirected checkpointed edge list —
-    * callers running several sweeps over the same graph (diameter's
-    * double sweep) build `und` once and release it themselves (r18).
+  /** Labelled semi-naive BFS over a kept undirected edge list `und`:
+    * rows (seed, id, dist) when `labelled` (one BFS per source, the
+    * source id as the label), (id, dist) otherwise. Each round joins
+    * only the new frontier against `und`, keeps the per-(label, id)
+    * minimum hop and drops pairs already reached; it stops on an empty
+    * frontier or after `maxDepth` rounds. The result is a checkpoint
+    * tracked by `r`.
     */
-  private def shortestHopsOn(und: DataFrame, sources: DataFrame): DataFrame = {
-    var dists = sources.select(col("id").cast("long"), lit(0L).as("dist"))
-      .distinct().localCheckpoint()
-    var frontier = dists
-    var done = false
-    while (!done) {
-      val next = frontier.join(und, frontier("id") === und("src"))
-        .select(und("dst").as("id"), (frontier("dist") + 1).as("dist"))
-        .groupBy("id").agg(min("dist").as("dist"))
-        .join(dists.select(col("id").as("seen")), col("id") === col("seen"), "left_anti")
-        .localCheckpoint()
-      if (next.isEmpty) { done = true; Ranks.releaseCheckpoint(next) }
-      else {
-        val prevDists = dists
-        dists = dists.unionByName(next).localCheckpoint()
-        // release superseded checkpoints once the union is materialized;
-        // round 1's frontier IS the initial dists (same blocks), which
-        // prevDists already covers
-        Ranks.releaseCheckpoint(prevDists)
-        if (!(frontier eq prevDists)) Ranks.releaseCheckpoint(frontier)
-        frontier = next
-      }
-    }
-    if (!(frontier eq dists)) Ranks.releaseCheckpoint(frontier)
-    dists
-  }
-
-  /** Harmonic centrality from a SEED SET (landmark influence):
-    * h(seed) = Σ over reachable v ≠ seed of 1/d(seed, v), per seed,
-    * by a labeled semi-naive BFS over undirected edges — state is
-    * (seed, id, dist), each round joins only the new frontier against
-    * the edge list, superseded checkpoints release as soon as the
-    * union materializes (the r10 lesson). Contributions ship as the
-    * engine-exact integer `1000000 div d` (micro-units — the
-    * FLOAT_AUDIT integer-plane rule for cross-engine quotients).
-    * Seeds are an explicit bounded frame: state is
-    * O(|seeds| · reachable) — landmark centrality, not all-pairs —
-    * and `maxDepth` caps the rounds on long-tailed graphs. Returns
-    * (seed, h_micro, n_reached), sealed so the BFS checkpoints free
-    * deterministically.
-    */
-  /** Labeled semi-naive BFS shared by the seed-centrality family:
-    * (seed, id, dist) rows for every vertex reachable from each seed
-    * within `maxDepth`, superseded checkpoints released per round.
-    * The returned frame is localCheckpoint'd — callers aggregate and
-    * seal with [[Ranks.sealAndRelease]] against it.
-    */
-  private def seedDistances(spark: SparkSession, edges: DataFrame,
-      seeds: DataFrame, maxDepth: Int): DataFrame = {
-    val und = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint()
-    var dists = seeds.select(col("id").cast("long").as("seed"),
-        col("id").cast("long").as("id"), lit(0L).as("dist"))
-      .distinct().localCheckpoint()
+  private def hops(r: Rounds, und: DataFrame, sources: DataFrame,
+      labelled: Boolean, maxDepth: Int = Int.MaxValue): DataFrame = {
+    val id = col("id").cast("long")
+    val keys = (if (labelled) Seq("seed") else Nil) :+ "id"
+    var dists = r.keep(sources.select(
+      keys.map(k => id.as(k)) :+ lit(0L).as("dist"): _*).distinct())
     var frontier = dists
     var depth = 0
     var done = false
     while (!done && depth < maxDepth) {
-      val next = frontier.join(und, frontier("id") === und("src"))
-        .select(frontier("seed"), und("dst").as("id"),
-          (frontier("dist") + 1).as("dist"))
-        .groupBy("seed", "id").agg(min("dist").as("dist"))
-        .join(dists.select(col("seed").as("s2"), col("id").as("i2")),
-          col("seed") === col("s2") && col("id") === col("i2"), "left_anti")
-        .select("seed", "id", "dist")
-        .localCheckpoint()
-      if (next.isEmpty) { done = true; Ranks.releaseCheckpoint(next) }
+      val next = r.keep(frontier.join(und, frontier("id") === und("src"))
+        .select(keys.init.map(frontier(_)) :+ und("dst").as("id") :+
+          (frontier("dist") + 1).as("dist"): _*)
+        .groupBy(keys.map(col): _*).agg(min("dist").as("dist"))
+        .join(dists.select(keys.map(k => col(k).as(s"__$k")): _*),
+          keys.map(k => col(k) === col(s"__$k")).reduce(_ && _), "left_anti"))
+      if (next.isEmpty) { r.release(next); done = true }
       else {
-        val prev = dists
-        dists = dists.unionByName(next).localCheckpoint()
-        Ranks.releaseCheckpoint(prev)
-        if (!(frontier eq prev)) Ranks.releaseCheckpoint(frontier)
+        dists = r.swap(dists, dists.unionByName(next))
+        r.release(frontier)
         frontier = next
       }
       depth += 1
     }
-    if (!(frontier eq dists)) Ranks.releaseCheckpoint(frontier)
-    Ranks.releaseCheckpoint(und)
     dists
   }
 
+  /** Per-seed aggregate over the (seed, id, dist) rows [[hops]] reaches
+    * from each seed within `maxDepth` (the seed itself excluded),
+    * sealed as the result.
+    */
+  private def seedAggregate(edges: DataFrame, seeds: DataFrame, maxDepth: Int)(
+      agg: org.apache.spark.sql.RelationalGroupedDataset => DataFrame): DataFrame =
+    Rounds { r =>
+      val reached = hops(r, r.keep(undirected(edges)), seeds, labelled = true,
+        maxDepth)
+      r.keep(agg(reached.filter(col("dist") > 0).groupBy("seed")))
+    }
+
+  /** Harmonic centrality from a SEED SET (landmark influence):
+    * h(seed) = Σ over reachable v ≠ seed of 1/d(seed, v), per seed,
+    * by the labelled semi-naive BFS [[hops]] over undirected edges.
+    * Contributions ship as the engine-exact integer `1000000 div d`
+    * (micro-units — the FLOAT_AUDIT integer-plane rule for
+    * cross-engine quotients). Seeds are an explicit bounded frame:
+    * state is O(|seeds| · reachable) — landmark centrality, not
+    * all-pairs — and `maxDepth` caps the rounds on long-tailed graphs.
+    * Returns (seed, h_micro, n_reached).
+    */
   def harmonicFromSeeds(spark: SparkSession, edges: DataFrame,
-      seeds: DataFrame, maxDepth: Int = 8): DataFrame = {
-    val dists = seedDistances(spark, edges, seeds, maxDepth)
-    Ranks.sealAndRelease(
-      dists.filter(col("dist") > 0)
-        .groupBy("seed").agg(
-          sum(expr("1000000L div dist")).as("h_micro"),
-          count(lit(1)).as("n_reached")),
-      dists)
-  }
+      seeds: DataFrame, maxDepth: Int = 8): DataFrame =
+    seedAggregate(edges, seeds, maxDepth)(_.agg(
+      sum(expr("1000000L div dist")).as("h_micro"),
+      count(lit(1)).as("n_reached")))
 
   /** Closeness centrality from a SEED SET (r14 — the 10-line sibling
-    * the [[harmonicFromSeeds]] state machine was built to admit):
-    * c(seed) = n_reached / Σ d(seed, v) over the reachable set — the
-    * within-component closeness, emitted as the engine-exact integer
-    * `1000000·n_reached div sum_dist` (micro-units, FLOAT_AUDIT
-    * integer-plane rule; `sum_dist ≥ n_reached ≥ 1` for any seed
-    * that reaches anything, so the division is total). Same labeled
-    * BFS, same O(|seeds|·reachable) state bound, same per-round
-    * checkpoint release.
+    * of [[harmonicFromSeeds]]): c(seed) = n_reached / Σ d(seed, v) over
+    * the reachable set — the within-component closeness, emitted as
+    * the engine-exact integer `1000000·n_reached div sum_dist`
+    * (micro-units, FLOAT_AUDIT integer-plane rule; `sum_dist ≥
+    * n_reached ≥ 1` for any seed that reaches anything, so the
+    * division is total). Same labelled BFS, same O(|seeds|·reachable)
+    * state bound.
     */
   def closenessFromSeeds(spark: SparkSession, edges: DataFrame,
-      seeds: DataFrame, maxDepth: Int = 8): DataFrame = {
-    val dists = seedDistances(spark, edges, seeds, maxDepth)
-    Ranks.sealAndRelease(
-      dists.filter(col("dist") > 0)
-        .groupBy("seed").agg(
-          sum("dist").as("sum_dist"),
-          count(lit(1)).as("n_reached"))
-        .select(col("seed"), col("sum_dist"), col("n_reached"),
-          expr("(1000000L * n_reached) div sum_dist").as("closeness_micro")),
-      dists)
-  }
+      seeds: DataFrame, maxDepth: Int = 8): DataFrame =
+    seedAggregate(edges, seeds, maxDepth)(_.agg(
+        sum("dist").as("sum_dist"),
+        count(lit(1)).as("n_reached"))
+      .select(col("seed"), col("sum_dist"), col("n_reached"),
+        expr("(1000000L * n_reached) div sum_dist").as("closeness_micro")))
 
   /** Betweenness from a SEED SET — truncated Brandes (r15, the r14
     * verdict's item 7b): one layer-synchronous forward BFS per seed
@@ -414,42 +345,33 @@ object GraphOps {
     * LOUD: σ < 2²⁰ and δ < 2⁴⁰ keep every product under 2⁶³.
     */
   def betweennessFromSeeds(spark: SparkSession, edges: DataFrame,
-      seeds: DataFrame, maxDepth: Int = 2): DataFrame = {
-    import spark.implicits._
-    val und = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint()
+      seeds: DataFrame, maxDepth: Int = 2): DataFrame = Rounds { r =>
+    val und = r.keep(undirected(edges))
     val sigGuard = when(col("sigma") < (1L << 20), col("sigma"))
       .otherwise(raise_error(concat(lit("betweennessFromSeeds: sigma "),
         col("sigma"), lit(" exceeds the 2^20 product bound"))).cast("long"))
-    var layers = Vector(
+    var layers = Vector(r.keep(
       seeds.select(col("id").cast("long").as("seed"),
           col("id").cast("long").as("id"),
-          lit(1L).as("sigma")).distinct().localCheckpoint())
+          lit(1L).as("sigma")).distinct()))
     var visited = layers.head
     var depth = 0
     var done = false
     while (!done && depth < maxDepth) {
       depth += 1
       val frontier = layers.last
-      val next = frontier.join(und, frontier("id") === und("src"))
+      val next = r.keep(frontier.join(und, frontier("id") === und("src"))
         .groupBy(frontier("seed").as("seed"), und("dst").as("id"))
         .agg(sum(frontier("sigma")).as("sigma"))
         .select(col("seed"), col("id"), sigGuard.as("sigma"))
         .join(visited.select(col("seed").as("s2"), col("id").as("i2")),
           col("seed") === col("s2") && col("id") === col("i2"), "left_anti")
-        .select("seed", "id", "sigma")
-        .localCheckpoint()
-      if (next.isEmpty) { done = true; Ranks.releaseCheckpoint(next) }
+        .select("seed", "id", "sigma"))
+      if (next.isEmpty) { r.release(next); done = true }
       else {
-        val prev = visited
-        visited = visited.unionByName(next).localCheckpoint()
-        // never drop the SEED layer's blocks mid-run (first iteration:
-        // prev eq layers.head): the empty-deltas fallback and the final
-        // release sweep still reference it, and a localCheckpoint leaf
-        // cannot be recomputed once its blocks are gone (r16, ADVICE).
-        // It is released exactly once, in the end-of-run sweep.
-        if (!(prev eq layers.head)) Ranks.releaseCheckpoint(prev)
+        // the seed layer (round 1's visited) is never read again: the
+        // backward pass starts at layer 1
+        visited = r.swap(visited, visited.unionByName(next))
         layers :+= next
       }
     }
@@ -471,26 +393,20 @@ object GraphOps {
         .select(cur("seed").as("seed"), cur("id").as("id"),
           expr("sigma * (1000000L + wdelta) div wsigma").as("term"))
         .groupBy("seed", "id").agg(sum("term").as("delta"))
-      val level = cur.join(
+      val level = r.keep(cur.join(
           terms.select(col("seed").as("ts"), col("id").as("ti"),
             col("delta").as("tdelta")),
           cur("seed") === col("ts") && cur("id") === col("ti"), "left_outer")
         .select(cur("seed"), cur("id"), cur("sigma"),
-          coalesce(col("tdelta"), lit(0L)).as("delta"))
-        .localCheckpoint()
+          coalesce(col("tdelta"), lit(0L)).as("delta")))
       deltas ::= level
       succDelta = level
     }
-    val out = deltas.map(_.select(col("id"), col("delta")))
+    r.keep(deltas.map(_.select(col("id"), col("delta")))
       .reduceOption(_.unionByName(_))
-      .getOrElse(layers.head.limit(0).select(col("id"), lit(0L).as("delta")))
+      .getOrElse(spark.range(0).select(col("id"), lit(0L).as("delta")))
       .groupBy("id").agg(sum("delta").as("bc_micro"))
-      .filter(col("bc_micro") > 0)
-    val res = Ranks.sealAndRelease(out, visited)
-    // release the per-layer/per-level checkpoints (each is a
-    // LogicalRDD leaf — the seal-and-release discipline)
-    (layers ++ deltas :+ und).foreach(df => Ranks.sealLeavesRelease(df))
-    res
+      .filter(col("bc_micro") > 0))
   }
 
   /** Bounded-round WEIGHTED shortest paths from a seed set (r17, the
@@ -509,25 +425,16 @@ object GraphOps {
     *         edges of a seed (seeds at dist 0).
     */
   def weightedPathsFromSeeds(spark: SparkSession, edges: DataFrame,
-      seeds: DataFrame, rounds: Int = 4): DataFrame = {
-    val und = edges
-      .select(col("src").cast("long"), col("dst").cast("long"),
-        col("w").cast("long"))
-      .unionByName(edges.select(col("dst").cast("long").as("src"),
-        col("src").cast("long").as("dst"), col("w").cast("long")))
-      .distinct().localCheckpoint()
-    var dist = seeds.select(col("id").cast("long"), lit(0L).as("dist"))
-      .distinct().localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val prev = dist
-      dist = dist.join(und, dist("id") === und("src"))
+      seeds: DataFrame, rounds: Int = 4): DataFrame = Rounds { r =>
+    val und = r.keep(undirected(edges.select(col("src").cast("long"),
+      col("dst").cast("long"), col("w").cast("long")), "w"))
+    var dist = r.keep(seeds.select(col("id").cast("long"), lit(0L).as("dist"))
+      .distinct())
+    for (_ <- 1 to rounds)
+      dist = r.swap(dist, dist.join(und, dist("id") === und("src"))
         .select(und("dst").as("id"), (dist("dist") + und("w")).as("dist"))
-        .unionByName(prev)
-        .groupBy("id").agg(min("dist").as("dist"))
-        .localCheckpoint()
-      Ranks.releaseCheckpoint(prev)
-    }
-    Ranks.releaseCheckpoint(und)
+        .unionByName(dist)
+        .groupBy("id").agg(min("dist").as("dist")))
     dist
   }
 
@@ -596,32 +503,26 @@ object GraphOps {
     * is sealed.
     */
   private def walkFromSeeds(edges: DataFrame, seeds: DataFrame,
-      rounds: Int, prio: Int => org.apache.spark.sql.Column): DataFrame = {
-    val e = edges.distinct().localCheckpoint()
-    var cur = seeds.select(col("id").cast("long").as("seed"),
-        col("id").cast("long").as("node"))
-      .distinct().localCheckpoint()
-    val cps = scala.collection.mutable.ArrayBuffer[DataFrame](e, cur)
-    val steps = scala.collection.mutable.ArrayBuffer[DataFrame](
-      cur.select(col("seed"), lit(0L).as("step"), col("node")))
-    for (t <- 1 to rounds) {
-      val stepped = cur.join(e, cur("node") === e("src"))
-        .withColumn("__prio", prio(t))
-        .groupBy("seed")
-        .agg(min(struct(col("__prio"), col("dst"))).as("m"))
-        .select(col("seed"), col("m")("dst").as("node"))
-      cur = stepped
-        .unionByName(
-          cur.join(stepped.select("seed"), Seq("seed"), "left_anti"))
-        .localCheckpoint()
-      cps += cur
-      steps += cur.select(col("seed"), lit(t.toLong).as("step"), col("node"))
+      rounds: Int, prio: Int => org.apache.spark.sql.Column): DataFrame =
+    Rounds { r =>
+      val e = r.keep(edges.distinct())
+      val walk = (1 to rounds).scanLeft(r.keep(
+          seeds.select(col("id").cast("long").as("seed"),
+            col("id").cast("long").as("node")).distinct())) { (cur, t) =>
+        val stepped = cur.join(e, cur("node") === e("src"))
+          .withColumn("__prio", prio(t))
+          .groupBy("seed")
+          .agg(min(struct(col("__prio"), col("dst"))).as("m"))
+          .select(col("seed"), col("m")("dst").as("node"))
+        r.keep(stepped.unionByName(
+          cur.join(stepped.select("seed"), Seq("seed"), "left_anti")))
+      }
+      r.keep(walk.zipWithIndex
+        .map { case (cur, t) =>
+          cur.select(col("seed"), lit(t.toLong).as("step"), col("node"))
+        }
+        .reduce(_ unionByName _))
     }
-    val out = steps.reduce(_ unionByName _)
-    val res = Ranks.sealAndRelease(out, cps.last)
-    cps.dropRight(1).foreach(df => Ranks.sealLeavesRelease(df))
-    res
-  }
 
   /** Diameter lower bound by the classic DOUBLE SWEEP (the first
     * step of iFUB / Magnien-Latapy-Habib): BFS from a deterministic
@@ -648,24 +549,18 @@ object GraphOps {
         col("id").as("seed1"), col("id").as("ecc1"), col("id").as("seed2"),
         col("id").as("ecc2"), col("id").as("n_reached"))
     val seed1 = minRow.getLong(0)
-    // r18: both sweeps run over ONE undirected checkpointed edge list
-    // (the second shortestHops call previously rebuilt + re-shuffled it)
-    val und = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint()
-    val d1 = shortestHopsOn(und, Seq(seed1).toDF("id"))
-    val ecc1 = d1.agg(max("dist")).head.getLong(0)
-    val seed2 = d1.filter(col("dist") === ecc1)
-      .agg(min("id")).head.getLong(0)
-    Ranks.releaseCheckpoint(d1)
-    val d2 = shortestHopsOn(und, Seq(seed2).toDF("id"))
-    val out = Ranks.sealAndRelease(
-      d2.agg(max("dist").as("ecc2"), count(lit(1)).as("n_reached"))
+    Rounds { r =>
+      val und = r.keep(undirected(edges))
+      val d1 = hops(r, und, Seq(seed1).toDF("id"), labelled = false)
+      val ecc1 = d1.agg(max("dist")).head.getLong(0)
+      val seed2 = d1.filter(col("dist") === ecc1)
+        .agg(min("id")).head.getLong(0)
+      r.release(d1)
+      val d2 = hops(r, und, Seq(seed2).toDF("id"), labelled = false)
+      r.keep(d2.agg(max("dist").as("ecc2"), count(lit(1)).as("n_reached"))
         .select(lit(seed1).as("seed1"), lit(ecc1).as("ecc1"),
-          lit(seed2).as("seed2"), col("ecc2"), col("n_reached")),
-      d2)
-    Ranks.releaseCheckpoint(und)
-    out
+          lit(seed2).as("seed2"), col("ecc2"), col("n_reached")))
+    }
   }
 
   /** Per-community MODULARITY contributions for a given labeling
@@ -680,17 +575,11 @@ object GraphOps {
     * driver-side scalar.
     */
   def modularityByCommunity(spark: SparkSession, edges: DataFrame,
-      labels: DataFrame): DataFrame = {
-    // canonicalize to UNDIRECTED form first (least, greatest): a
-    // caller handing the common both-directions representation — or
-    // a mix of once- and twice-listed edges — must not inflate m,
-    // degrees, or intra counts (the sibling BFS operators normalize
-    // the same way inside seedDistances/shortestHops)
-    val e0 = edges.select(
-        least(col("src"), col("dst")).cast("long").as("src"),
-        greatest(col("src"), col("dst")).cast("long").as("dst"))
-      .distinct()
-      .localCheckpoint()
+      labels: DataFrame): DataFrame = Rounds { r =>
+    // canonicalize to UNDIRECTED form first: a caller handing the
+    // common both-directions representation — or a mix of once- and
+    // twice-listed edges — must not inflate m, degrees, or intra counts
+    val e0 = r.keep(canonical(edges))
     val m = e0.count()
     val l = labels.select(col("id"), col("label"))
     val ls = l.select(col("id").as("__s"), col("label").as("__lsrc"))
@@ -706,16 +595,14 @@ object GraphOps {
       .join(l, Seq("id"))
       .groupBy("label")
       .agg(sum("__deg").as("degree_sum"), count(lit(1)).as("n_nodes"))
-    Ranks.sealAndRelease(
-      comm.join(intra, Seq("label"), "left_outer")
-        .select(col("label"), col("n_nodes"),
-          coalesce(col("intra_edges"), lit(0L)).as("intra_edges"),
-          col("degree_sum"))
-        .withColumn("q_micro", expr(
-          s"(1000000L * intra_edges) div ${m}L - " +
-            s"(((1000000L * degree_sum) div ${2 * m}L) * " +
-            s"((1000000L * degree_sum) div ${2 * m}L)) div 1000000L")),
-      e0)
+    r.keep(comm.join(intra, Seq("label"), "left_outer")
+      .select(col("label"), col("n_nodes"),
+        coalesce(col("intra_edges"), lit(0L)).as("intra_edges"),
+        col("degree_sum"))
+      .withColumn("q_micro", expr(
+        s"(1000000L * intra_edges) div ${m}L - " +
+          s"(((1000000L * degree_sum) div ${2 * m}L) * " +
+          s"((1000000L * degree_sum) div ${2 * m}L)) div 1000000L")))
   }
 
   /** Bounded k-core peel: `rounds` iterations of "drop every vertex
@@ -734,11 +621,11 @@ object GraphOps {
     *         the peeled subgraph.
     */
   def kCore(spark: SparkSession, edges: DataFrame, k: Int = 3,
-      rounds: Int = 6): DataFrame = {
+      rounds: Int = 6): DataFrame = Rounds { r =>
     def degrees(e: DataFrame): DataFrame =
       e.select(col("src").as("v")).unionByName(e.select(col("dst").as("v")))
         .groupBy("v").agg(count(lit(1)).as("c"))
-    var e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
+    var e = r.keep(edges.select(col("src"), col("dst")).distinct())
     // r18 fixpoint early-exit (guide §1.2): peeling only REMOVES edges,
     // so an unchanged edge count means an identical edge set, and every
     // remaining round is the identity — skip it. Output is EXACTLY the
@@ -748,15 +635,12 @@ object GraphOps {
     var converged = false
     for (_ <- 1 to rounds if !converged) {
       val keep = degrees(e).filter(col("c") >= k).select("v")
-      val prev = e
-      e = e
+      e = r.swap(e, e
         .join(keep.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
-        .localCheckpoint()
+        .join(keep.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi"))
       val n2 = e.count()
       converged = n2 == n
       n = n2
-      Ranks.releaseCheckpoint(prev) // superseded round, blocks dead
     }
     degrees(e).select(col("v").as("id"), col("c").as("core_deg"))
   }
@@ -796,50 +680,31 @@ object GraphOps {
     // Per half-round: broadcast build (vertex-sized) + one partial-
     // combined sum exchange, instead of an edge-list broadcast + a
     // vertex exchange + a union-wide re-aggregation exchange.
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
-    val verts = e.select(col("src").as("v"))
-      .unionByName(e.select(col("dst").as("v"))).distinct()
-      .localCheckpoint()
-    // r19 review: an UNCONDITIONAL broadcast hint would bypass the
-    // auto-threshold at any graph size and OOM the driver (or hit the
-    // 8 GB / 512M-row broadcast hard limits) on vertex counts that
-    // grow with the edge count. Guard on the actual vertex count
-    // (one cheap job over the checkpoint): two-long-column rows are
-    // ~16 bytes serialized, so the cap keeps the built relation in
-    // the tens-of-MB range; above it the hint drops away and Catalyst
-    // picks the shuffle join a graph that size needs.
-    val hintV = verts.count() <= BroadcastVertexCap
-    def bc(df: DataFrame): DataFrame = if (hintV) broadcast(df) else df
-    var hub = verts.withColumn("hub", lit(1L))
-    var auth = verts.withColumn("auth", lit(1L))
-    for (_ <- 1 to rounds) {
-      val (prevAuth, prevHub) = (auth, hub)
-      auth = Ranks.seal(verts.join(
-          e.join(bc(hub.select(col("v").as("src"), col("hub"))),
-              Seq("src"))
-            .groupBy(col("dst").as("v")).agg(sum("hub").as("auth")),
-          Seq("v"), "left")
-        // vertices with no in-edges keep authority 0 this round
-        .select(col("v"), coalesce(col("auth"), lit(0L)).as("auth")))
-      hub = Ranks.seal(verts.join(
-          e.join(bc(auth.select(col("v").as("dst"), col("auth"))),
-              Seq("dst"))
-            .groupBy(col("src").as("v")).agg(sum("auth").as("hub")),
-          Seq("v"), "left")
-        .select(col("v"), coalesce(col("hub"), lit(0L)).as("hub")))
-      // round 1's prev hub/auth are lazy derivations of verts — the
-      // checkpoint-root check makes the release a no-op there (never
-      // touch the shared leaves); later rounds free superseded blocks
-      Ranks.releaseCheckpoint(prevAuth)
-      Ranks.releaseCheckpoint(prevHub)
+    Rounds { r =>
+      val e = r.keep(edges.select(col("src"), col("dst")).distinct())
+      val verts = r.keep(e.select(col("src").as("v"))
+        .unionByName(e.select(col("dst").as("v"))).distinct())
+      val bc = Rounds.broadcastVertexState(verts)
+      var hub = verts.withColumn("hub", lit(1L))
+      var auth = verts.withColumn("auth", lit(1L))
+      for (_ <- 1 to rounds) {
+        auth = r.swap(auth, verts.join(
+            e.join(bc(hub.select(col("v").as("src"), col("hub"))),
+                Seq("src"))
+              .groupBy(col("dst").as("v")).agg(sum("hub").as("auth")),
+            Seq("v"), "left")
+          // vertices with no in-edges keep authority 0 this round
+          .select(col("v"), coalesce(col("auth"), lit(0L)).as("auth")))
+        hub = r.swap(hub, verts.join(
+            e.join(bc(auth.select(col("v").as("dst"), col("auth"))),
+                Seq("dst"))
+              .groupBy(col("src").as("v")).agg(sum("auth").as("hub")),
+            Seq("v"), "left")
+          .select(col("v"), coalesce(col("hub"), lit(0L)).as("hub")))
+      }
+      r.keep(hub.join(auth, Seq("v"))
+        .select(col("v").as("id"), col("hub"), col("auth")))
     }
-    val out = Ranks.seal(hub.join(auth, Seq("v"))
-      .select(col("v").as("id"), col("hub"), col("auth")))
-    Ranks.releaseCheckpoint(hub)
-    Ranks.releaseCheckpoint(auth)
-    Ranks.releaseCheckpoint(verts)
-    Ranks.releaseCheckpoint(e)
-    out
   }
 
   /** Adamic–Adar link-prediction scores over a bipartite edge list
@@ -915,7 +780,7 @@ object GraphOps {
     * billion-edge community pass.
     */
   def labelPropagation(spark: SparkSession, edges: DataFrame,
-      rounds: Int = 3): DataFrame = {
+      rounds: Int = 3): DataFrame = Rounds { r =>
     // r19 (guide §3.1, probe-profiled like [[hits]]): the old per-
     // round join auto-BROADCAST the 2×|E| undirected edge checkpoint
     // (accurate stats, under the 10 MB threshold) and probed from the
@@ -925,24 +790,18 @@ object GraphOps {
     // label table flips the probe to the edge checkpoint's partitions
     // (parallel) and drops the per-round edge broadcast build.
     val und0 = edges.select(col("src"), col("dst")).distinct()
-    val und = und0.unionByName(
-      und0.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
+    val und = r.keep(und0.unionByName(
+      und0.select(col("dst").as("src"), col("src").as("dst"))))
     var labels = und.select(col("src").as("v")).distinct()
       .withColumn("lbl", col("v"))
-    // same vertex-count broadcast guard as [[hits]] (r19 review): the
-    // hint only fires when the per-round label table provably fits
-    val hintV = und.select(col("src")).distinct().count() <=
-      BroadcastVertexCap
-    def bc(df: DataFrame): DataFrame = if (hintV) broadcast(df) else df
+    val bc = Rounds.broadcastVertexState(und.select(col("src")).distinct())
     for (_ <- 1 to rounds) {
       // argmax by (count desc, label asc) as a MIN over (-c, lbl)
       // structs: both aggregation steps are map-side combinable, so a
       // celebrity vertex's neighbor-label histogram reduces in
       // parallel — a per-vertex window sort would stream the whole
       // hub through one task (and pay a sort the argmax doesn't need)
-      val prev = labels
-      labels = Ranks.seal(und
+      labels = r.swap(labels, und
         .join(bc(labels.select(col("v").as("dst"), col("lbl"))),
           Seq("dst"))
         .groupBy(col("src").as("v"), col("lbl"))
@@ -950,9 +809,7 @@ object GraphOps {
         .groupBy("v")
         .agg(min(struct((-col("c")).as("nc"), col("lbl").as("lbl"))).as("best"))
         .select(col("v"), col("best")("lbl").as("lbl")))
-      Ranks.releaseCheckpoint(prev) // superseded round, blocks dead
     }
-    Ranks.releaseCheckpoint(und)
     labels.select(col("v").as("id"), col("lbl").as("label"))
   }
 }

@@ -1,13 +1,13 @@
 package graft.ext
 
 /** Test hook: pre-seal finalized QueryExecutions recorded by
-  * [[Ranks.seal]]. PlanQualitySpec enables capture around a gate
-  * build so its plan-shape contracts (broadcast joins, partial
-  * window-group-limits, no-cartesian pins) keep asserting the REAL
-  * join/aggregate shapes of operators whose results are sealed by a
-  * terminal localCheckpoint — without it the executed plan of the
-  * returned frame is a bare `Scan ExistingRDD` and every assertion
-  * is vacuous (the r18 verdict's PlanQualitySpec breakage). Disabled
+  * [[Ranks.seal]] and [[graft.plans.Rounds.keep]]. PlanQualitySpec
+  * enables capture around a gate build so its plan-shape contracts
+  * (broadcast joins, partial window-group-limits, no-cartesian pins)
+  * keep asserting the REAL join/aggregate shapes of operators whose
+  * results are sealed by a terminal localCheckpoint — without it the
+  * executed plan of the returned frame is a bare `Scan ExistingRDD`
+  * and every assertion is vacuous (the r18 verdict's PlanQualitySpec breakage). Disabled
   * (one volatile read per terminal seal) outside tests.
   *
   * Capture is OWNER-THREAD-scoped, not just thread-buffered (r19
@@ -35,7 +35,7 @@ object SealCapture {
     if (owner == Thread.currentThread().getId)
       buf.toVector.map(_.executedPlan.toString)
     else Vector.empty
-  private[ext] def add(
+  private[graft] def add(
       qe: org.apache.spark.sql.execution.QueryExecution): Unit =
     if (owner == Thread.currentThread().getId) buf += qe
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.Rounds
+
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Two paths, as a scale story:
@@ -488,37 +490,30 @@ object Similarity {
         zip_with(col("en"), typedLit(c),
           (a, b) => round(a * b * lit(1e6), 0).cast("long")),
         lit(0L), (acc, x) => acc + x)
-    val en = corpus.select(col("vec_id"),
-        transform(col(emb), x => x.cast("double") / l2Norm(col(emb))).as("en"))
-      .localCheckpoint()
-    require(k >= 1, s"kCenterSeeds: k >= 1 (got $k)")
-    val firstArr = en.orderBy(col("vec_id").asc).limit(1).collect()
-    require(firstArr.nonEmpty, "kCenterSeeds: empty corpus")
-    val first = firstArr(0)
-    var chosen = List((first.getLong(0), first.getSeq[Double](1), 0L))
-    var pts = en.filter(col("vec_id") =!= first.getLong(0))
-      .withColumn("mind", distTo(first.getSeq[Double](1)))
-      .localCheckpoint()
-    for (_ <- 2 to k) {
-      val nxtArr = pts.orderBy(col("mind").desc, col("vec_id").asc).limit(1)
-        .collect()
-      require(nxtArr.nonEmpty,
-        s"kCenterSeeds: k=$k exceeds the number of distinct vectors")
-      val nxt = nxtArr(0)
-      chosen ::= ((nxt.getLong(0), nxt.getSeq[Double](1), nxt.getLong(2)))
-      val prev = pts
-      pts = pts.filter(col("vec_id") =!= nxt.getLong(0))
-        .withColumn("mind", least(col("mind"), distTo(nxt.getSeq[Double](1))))
-        .localCheckpoint()
-      // real checkpoint release (Dataset.unpersist is a no-op on
-      // localCheckpoint blocks — UnpersistProbeSpec)
-      Ranks.releaseCheckpoint(prev)
+    Rounds { r =>
+      val en = r.keep(corpus.select(col("vec_id"),
+        transform(col(emb), x => x.cast("double") / l2Norm(col(emb))).as("en")))
+      require(k >= 1, s"kCenterSeeds: k >= 1 (got $k)")
+      val firstArr = en.orderBy(col("vec_id").asc).limit(1).collect()
+      require(firstArr.nonEmpty, "kCenterSeeds: empty corpus")
+      val first = firstArr(0)
+      var chosen = List((first.getLong(0), first.getSeq[Double](1), 0L))
+      var pts = r.keep(en.filter(col("vec_id") =!= first.getLong(0))
+        .withColumn("mind", distTo(first.getSeq[Double](1))))
+      for (_ <- 2 to k) {
+        val nxtArr = pts.orderBy(col("mind").desc, col("vec_id").asc).limit(1)
+          .collect()
+        require(nxtArr.nonEmpty,
+          s"kCenterSeeds: k=$k exceeds the number of distinct vectors")
+        val nxt = nxtArr(0)
+        chosen ::= ((nxt.getLong(0), nxt.getSeq[Double](1), nxt.getLong(2)))
+        pts = r.swap(pts, pts.filter(col("vec_id") =!= nxt.getLong(0))
+          .withColumn("mind", least(col("mind"), distTo(nxt.getSeq[Double](1)))))
+      }
+      chosen.reverse.zipWithIndex
+        .map { case ((id, _, d), i) => (i + 1L, id, d) }
+        .toDF("round", "vec_id", "dist_micro")
     }
-    Ranks.releaseCheckpoint(pts)
-    Ranks.releaseCheckpoint(en)
-    chosen.reverse.zipWithIndex
-      .map { case ((id, _, d), i) => (i + 1L, id, d) }
-      .toDF("round", "vec_id", "dist_micro")
   }
 
   /** int8 quantization scale `127 / max|x|` (guarded against the

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.plans.Rounds
+
 /** Text-analysis operators for LLM-data pipelines over the `documents`
   * table: tokenization, language-ID, quality scoring, fingerprinting.
   *
@@ -559,8 +561,9 @@ object TextAnalysis {
     * rewrite runs a PARTIAL rank-limit before the exchange (rk <= cap
     * is a pushable row_number predicate), so every map partition ships
     * at most `cap` rows per source — a skewed mega-source costs its
-    * scan but never dominates the shuffle (verified in ExplainAudit:
-    * Partial WindowGroupLimit below the Exchange, Final above it).
+    * scan but never dominates the shuffle (the formatted plan, e.g. a
+    * tools/PlanDump dump, shows a Partial WindowGroupLimit below the
+    * Exchange and the Final one above it).
     */
   def sourceCap(docs: org.apache.spark.sql.DataFrame,
       cap: Int = 10): org.apache.spark.sql.DataFrame = {
@@ -821,38 +824,33 @@ object TextAnalysis {
     // loop and rounds × corpus passes. Forms that COLLIDE after a
     // merge rewrite ("a·b·c" and "ab·c" both becoming "ab·c") re-fold
     // by summing their counts.
-    var corpus = docs
-      .select(explode(tokens(col("text"))).as("w"))
-      .where(length(col("w")) > 1)
-      .select(concat_ws(BpeSep, split(col("w"), "")).as("s"))
-      .groupBy("s").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    for (_ <- 1 to rounds) {
-      val syms = split(col("s"), BpeSep)
-      val pairs = corpus
-        .select(col("cnt"), explode(zip_with(
-          slice(syms, lit(1), size(syms) - 1),
-          slice(syms, lit(2), size(syms) - 1),
-          (a, b) => concat(a, lit(BpeSep), b))).as("pair"))
-        .groupBy("pair").agg(sum("cnt").as("n"))
-      val top = pairs.orderBy(col("n").desc, col("pair").asc).limit(1).collect()
-      if (top.nonEmpty) {
-        val pair = top(0).getString(0)
-        out += ((pair, top(0).getLong(1)))
-        val prev = corpus
-        corpus = corpus
-          .select(replace(col("s"), lit(pair), lit(pair.replace(BpeSep, ""))).as("s"),
-            col("cnt"))
-          .groupBy("s").agg(sum("cnt").as("cnt"))
-          .localCheckpoint()
-        // real checkpoint release (Dataset.unpersist is a no-op on
-        // localCheckpoint blocks — UnpersistProbeSpec)
-        Ranks.releaseCheckpoint(prev)
+    Rounds { r =>
+      var corpus = r.keep(docs
+        .select(explode(tokens(col("text"))).as("w"))
+        .where(length(col("w")) > 1)
+        .select(concat_ws(BpeSep, split(col("w"), "")).as("s"))
+        .groupBy("s").agg(count(lit(1)).as("cnt")))
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+      for (_ <- 1 to rounds) {
+        val syms = split(col("s"), BpeSep)
+        val pairs = corpus
+          .select(col("cnt"), explode(zip_with(
+            slice(syms, lit(1), size(syms) - 1),
+            slice(syms, lit(2), size(syms) - 1),
+            (a, b) => concat(a, lit(BpeSep), b))).as("pair"))
+          .groupBy("pair").agg(sum("cnt").as("n"))
+        val top = pairs.orderBy(col("n").desc, col("pair").asc).limit(1).collect()
+        if (top.nonEmpty) {
+          val pair = top(0).getString(0)
+          out += ((pair, top(0).getLong(1)))
+          corpus = r.swap(corpus, corpus
+            .select(replace(col("s"), lit(pair), lit(pair.replace(BpeSep, ""))).as("s"),
+              col("cnt"))
+            .groupBy("s").agg(sum("cnt").as("cnt")))
+        }
       }
+      out.toSeq
     }
-    Ranks.releaseCheckpoint(corpus)
-    out.toSeq
   }
 
   /** Tokenizer ENCODE — apply the induced merges ([[bpeMergeSeq]]) to

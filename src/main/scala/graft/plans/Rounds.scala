@@ -1,0 +1,96 @@
+package graft.plans
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.broadcast
+
+/** Checkpoint owner for one iterative operator (the Pregelix shape:
+  * each round is state ⋈ edges plus a group-by, cut off from its
+  * lineage by an eager `localCheckpoint`). Every checkpoint the
+  * operator takes goes through [[keep]]; [[swap]] replaces a round's
+  * state and frees the one it supersedes; when the body returns,
+  * every tracked checkpoint the result does not read as a
+  * `LogicalRDD` leaf is released. No terminal seal, no extra job: a
+  * result that is itself a [[keep]] is the operator's own seal.
+  *
+  * Release is by ownership, never by plan walk: only a frame that IS
+  * a tracked checkpoint root frees blocks, so a lazy derivation of a
+  * live checkpoint (a round-1 "previous" state projected off the edge
+  * list) and a frame released twice are both no-ops. `Dataset.
+  * unpersist` cannot do this — it is a no-op for localCheckpoint
+  * blocks (UnpersistProbeSpec); the leaf RDD's own unpersist is what
+  * frees them.
+  */
+final class Rounds private () {
+  private val held = scala.collection.mutable.LinkedHashMap.empty[Int, RDD[_]]
+
+  /** Eagerly checkpoint `df` and track the blocks. The pre-checkpoint
+    * plan is offered to [[graft.ext.SealCapture]], so plan-shape
+    * contracts see through the checkpoint scan.
+    */
+  def keep(df: DataFrame): DataFrame = {
+    val out = df.localCheckpoint()
+    graft.ext.SealCapture.add(df.queryExecution)
+    Rounds.root(out).foreach(r => held(r.id) = r)
+    out
+  }
+
+  /** The next round's state: checkpoint `next`, then free `prev`. */
+  def swap(prev: DataFrame, next: DataFrame): DataFrame = {
+    val out = keep(next)
+    release(prev)
+    out
+  }
+
+  /** Free `df`'s blocks now if it is a tracked checkpoint root. */
+  def release(df: DataFrame): Unit =
+    Rounds.root(df).flatMap(r => held.remove(r.id))
+      .foreach(_.unpersist(blocking = false))
+
+  private def releaseExcept(live: Set[Int]): Unit = {
+    held.valuesIterator.filterNot(r => live(r.id))
+      .foreach(_.unpersist(blocking = false))
+    held.clear()
+  }
+}
+
+object Rounds {
+
+  /** Vertex count up to which the per-round vertex-state table is
+    * broadcast: (long, long) rows are ~16 bytes serialized, so 5M rows
+    * is ~80 MB built relation, far below the 8 GB / 512M-row broadcast
+    * limits. Beyond it Catalyst plans the shuffle join a graph that
+    * size needs.
+    */
+  private val BroadcastVertexCap = 5000000L
+
+  /** Run one operator's body; release what its result does not read
+    * (everything, if the result is not a frame or the body throws).
+    */
+  def apply[T](body: Rounds => T): T = {
+    val r = new Rounds
+    val out =
+      try body(r)
+      catch { case e: Throwable => r.releaseExcept(Set.empty); throw e }
+    r.releaseExcept(out match {
+      case d: Dataset[_] => d.queryExecution.analyzed.collectLeaves()
+        .collect { case l: LogicalRDD => l.rdd.id }.toSet
+      case _ => Set.empty
+    })
+    out
+  }
+
+  /** Broadcast hint for a per-round vertex-state table, guarded by one
+    * count job over `vertices`: without the guard the hint would bypass
+    * the auto-threshold at any graph size.
+    */
+  def broadcastVertexState(vertices: DataFrame): DataFrame => DataFrame =
+    if (vertices.count() <= BroadcastVertexCap) broadcast(_) else identity
+
+  private def root(df: Dataset[_]): Option[RDD[_]] =
+    df.queryExecution.analyzed match {
+      case l: LogicalRDD => Some(l.rdd)
+      case _ => None
+    }
+}

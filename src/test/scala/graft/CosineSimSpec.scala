@@ -27,6 +27,14 @@ class CosineSimSpec extends GraftSuite {
     assert(got.toSeq === Seq((1L, 1L, 0L), (2L, 4L, 2000000L), (3L, 3L, 1000000L)))
   }
 
+  test("kCenterSeeds releases every round's checkpoint") {
+    import spark.implicits._
+    val e = (1 to 12).map(i => (i.toLong, Seq(math.cos(i).toFloat,
+      math.sin(i).toFloat))).toDF("vec_id", "embedding")
+    val got = assertCheckpointsOwned(Similarity.kCenterSeeds(e, k = 4))
+    assert(got.count() == 4L)
+  }
+
   test("marginTopMatch: hand-computed margin on a known neighborhood") {
     import spark.implicits._
     // query 0 at (1,0); neighborhood cosines 1.0, 0.8, 0.6, 0.0 —

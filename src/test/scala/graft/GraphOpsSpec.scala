@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.GraphOps
+import graft.plans.Rounds
 
 /** Unit contracts for the bounded k-core peel (its oracle gate checks
   * end-to-end equality on the fixture; these pin the algorithm).
@@ -355,5 +357,107 @@ class GraphOpsSpec extends GraftSuite {
       .filter(col("step") === 1)
       .collect().map(_.getLong(2))
     assert(step1.sorted.sameElements(rerun.sorted))
+  }
+
+  test("round-loop operators leave persisted only the checkpoints their result reads") {
+    import spark.implicits._
+    // two triangles sharing vertex 3, a pendant 6, a self-loop 7
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 3L),
+      (5L, 6L), (7L, 7L)).toDF("src", "dst")
+    val w = e.withColumn("w", col("src") + col("dst"))
+    val seeds = Seq(1L, 4L).toDF("id")
+    val labels = (1L to 7L).toDF("id").withColumn("label", col("id") % 2)
+    Seq[(String, () => DataFrame)](
+      "kCore" -> (() => GraphOps.kCore(spark, e, k = 2)),
+      "kTruss" -> (() => GraphOps.kTruss(spark, e, k = 3)),
+      "personalizedPageRank" ->
+        (() => GraphOps.personalizedPageRank(spark, e, seeds, iters = 3)),
+      "shortestHops" -> (() => GraphOps.shortestHops(spark, e, seeds)),
+      "harmonicFromSeeds" -> (() => GraphOps.harmonicFromSeeds(spark, e, seeds)),
+      "closenessFromSeeds" ->
+        (() => GraphOps.closenessFromSeeds(spark, e, seeds, maxDepth = 2)),
+      "betweennessFromSeeds" ->
+        (() => GraphOps.betweennessFromSeeds(spark, e, seeds, maxDepth = 3)),
+      "weightedPathsFromSeeds" ->
+        (() => GraphOps.weightedPathsFromSeeds(spark, w, seeds)),
+      "randomWalkFromSeeds" ->
+        (() => GraphOps.randomWalkFromSeeds(spark, e, seeds)),
+      "weightedWalkFromSeeds" ->
+        (() => GraphOps.weightedWalkFromSeeds(spark, w, seeds)),
+      "diameterSweep" -> (() => GraphOps.diameterSweep(spark, e)),
+      "modularityByCommunity" ->
+        (() => GraphOps.modularityByCommunity(spark, e, labels)),
+      "hits" -> (() => GraphOps.hits(spark, e)),
+      "labelPropagation" -> (() => GraphOps.labelPropagation(spark, e))
+    ).foreach { case (name, op) =>
+      withClue(s"$name: ") { assertCheckpointsOwned(op()) }
+    }
+  }
+
+  test("Rounds: a lazy derivation of a live checkpoint is never released") {
+    import spark.implicits._
+    val before = persistedRdds()
+    val out = Rounds { r =>
+      val base = r.keep(Seq(1L, 2L, 3L).toDF("v"))
+      // round 1's previous state is a projection of `base`, not a
+      // checkpoint of its own: swapping it out must leave `base` alone
+      var cur = base.withColumn("s", lit(0L))
+      for (_ <- 1 to 2) {
+        val prev = cur
+        cur = r.swap(cur, cur.select(col("v"), (col("s") + col("v")).as("s")))
+        assert(checkpointLeaves(base).subsetOf(persistedRdds()),
+          "swap released the checkpoint under a lazy previous state")
+        assert((persistedRdds() & (checkpointLeaves(prev) -- checkpointLeaves(base)))
+          .isEmpty, "swap kept the superseded round's checkpoint")
+      }
+      r.release(base.select(col("v")))
+      assert(checkpointLeaves(base).subsetOf(persistedRdds()),
+        "release of a derivation freed its upstream checkpoint")
+      cur.join(base, "v")
+    }
+    assert(out.orderBy("v").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSeq == Seq((1L, 2L), (2L, 4L), (3L, 6L)))
+    // base and round 2 stay (the result reads them); round 1 is gone
+    assert(persistedRdds() -- before == checkpointLeaves(out) &&
+      checkpointLeaves(out).size == 2)
+  }
+
+  test("Rounds: an early stop leaves no superseded round persisted") {
+    import spark.implicits._
+    val before = persistedRdds()
+    // halving chain 64 → 32 → … → 0: the frontier empties after 7 of
+    // at most 100 rounds
+    var rounds = 0
+    val out = Rounds { r =>
+      var state = r.keep(Seq(64L).toDF("v"))
+      var frontier = state
+      var done = false
+      while (!done && rounds < 100) {
+        rounds += 1
+        val next = r.keep(frontier.select((col("v") / 2).cast("long").as("v"))
+          .join(state, Seq("v"), "left_anti"))
+        val superseded = checkpointLeaves(state) ++ checkpointLeaves(frontier)
+        if (next.isEmpty) {
+          r.release(next)
+          assert((persistedRdds() & checkpointLeaves(next)).isEmpty)
+          done = true
+        } else {
+          state = r.swap(state, state.unionByName(next))
+          r.release(frontier)
+          frontier = next
+          assert((persistedRdds() & superseded).isEmpty,
+            "a superseded round is still persisted after the swap")
+        }
+      }
+      state
+    }
+    assert(rounds == 8 && out.count() == 8L)
+    assert(persistedRdds() -- before == checkpointLeaves(out) &&
+      checkpointLeaves(out).size == 1)
+    // a body that throws releases everything it kept
+    intercept[IllegalStateException] {
+      Rounds { r => r.keep(Seq(1L).toDF("v")); throw new IllegalStateException }
+    }
+    assert(persistedRdds() -- before == checkpointLeaves(out))
   }
 }

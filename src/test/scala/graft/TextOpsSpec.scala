@@ -91,6 +91,14 @@ class TextOpsSpec extends GraftSuite {
     assert(got.toSeq === Seq((1L, "s1", 3L, 3L), (2L, "s2", 3L, 5L)))
   }
 
+  test("bpeMergeSeq releases every round's checkpoint, past the last productive merge too") {
+    import spark.implicits._
+    // "abab" yields 2 productive merges; rounds 3-5 find no pair
+    val docs = Seq((1L, "s1", "abab ab")).toDF("doc_id", "source", "text")
+    val merges = assertCheckpointsOwned(TextAnalysis.bpeMergeSeq(docs, rounds = 5))
+    assert(merges.map(_._1.replace(TextAnalysis.BpeSep, "")) == Seq("ab", "abab"))
+  }
+
   test("bpeEncodeCounts loop form: 100+-merge induction, loop ≡ chain ≡ driver fold") {
     import spark.implicits._
     import TextAnalysis.BpeSep
