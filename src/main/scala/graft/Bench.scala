@@ -4,8 +4,6 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 import scala.jdk.OptionConverters._
 
-import org.apache.spark.sql.SparkSession
-
 object Bench {
 
   /** Pids of this process and its ancestors (sbt, shell, …) — anything
@@ -59,15 +57,7 @@ object Bench {
       s"[bench] PREFLIGHT: ${foreign.size} foreign JVM(s) alive — timings " +
         "below are suspect; kill them and re-run before trusting this output")
     val loadBefore = loadAvg()
-    val spark = graft.core.LocalIo(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // limit guards (sameAs harvest, dup-cluster pair cap) must not
-      // run CollectLimit's serialized incremental partition scale-up
-      .config("spark.sql.limit.initialNumPartitions", "1000"))
-      .getOrCreate()
+    val spark = graft.core.LocalIo.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // local iteration aid: SPARK_GRAFT_ONLY=q1,q2 times a subset
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -279,8 +269,7 @@ object Bench {
     // they stayed pinned).
     val familyViews = Map(
       "r" -> Seq("quads", "owlhorst_mat", "pred_stats"),
-      "g" -> Seq("g_edges_partsupp"),
-      "d" -> Seq("minhash_pairs"))
+      "g" -> Seq("g_edges_partsupp"))
     val ordered = selected.toSeq.sortBy { case (n, _) =>
       val i = familyOrder.indexOf(family(n))
       (if (i < 0) familyOrder.size else i, n)

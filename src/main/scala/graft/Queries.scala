@@ -32,13 +32,8 @@ object Queries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 
-  // minhash near-dup pairs are an intermediate VIEW shared by the pair
-  // gate and the cluster gate — computed and persisted once per
-  // (session, dataset), like the SPARQL quads view
   private def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    graft.core.DfCache.df(s, dir, "minhash_pairs") {
-      Dedup.minHashPairs(t(s, dir, "documents"), 0.5)
-    }
+    Dedup.minHashPairs(t(s, dir, "documents"), 0.5)
 
   /** Inline DuckDB expression mirroring [[TextAnalysis.polyHash]] —
     * a sequential left fold `(h*31 + codepoint) mod 1e9+7` over the
@@ -1235,20 +1230,19 @@ object Queries {
              count(*)::BIGINT AS n_intervals
       FROM i GROUP BY 1""")),
 
-    Q("w_interval_overlap", (s, dir) => {
+    Q("w_interval_overlap", (s, dir) => graft.plans.Rounds { r =>
       // r18 (guide §2.4): the overlap self-join reads the interval
       // frame on BOTH sides — without a checkpoint the events
       // aggregation ran twice (plan showed two full scans + exchanges
       // feeding the join). Materialize iv once (it is the per-(user,
       // day) aggregate — far smaller than events at any scale), seal
       // the per-day counts, release.
-      val iv = t(s, dir, "events")
+      val iv = r.keep(t(s, dir, "events")
         .groupBy(col("user_id"), to_date(col("ts")).as("day"))
         .agg(min("ts").as("s"), max("ts").as("e"))
         .select(concat_ws(":", col("user_id"), col("day")).as("iv_key"),
-          col("day"), col("s"), col("e"))
-        .localCheckpoint()
-      val out = graft.ext.Ranks.seal(graft.ext.EventWindows
+          col("day"), col("s"), col("e")))
+      r.keep(graft.ext.EventWindows
         .intervalOverlapPairs(iv.select("iv_key", "s", "e"),
           bucketUs = 86400000000L,
           // day-confined intervals in day bins: one bin per interval,
@@ -1257,8 +1251,6 @@ object Queries {
           dedup = false)
         .withColumn("day", substring_index(col("a_key"), ":", -1))
         .groupBy("day").agg(count(lit(1)).as("n_pairs")))
-      graft.ext.Ranks.releaseCheckpoint(iv)
-      out
     }, Some("""
       WITH iv AS (
         SELECT user_id, CAST(ts AS DATE) AS day, min(ts) AS s, max(ts) AS e

@@ -7,9 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped cache for shared intermediate DataFrames (the quads
-  * view, the OWL-Horst materialization, minhash pair sets, predicate
-  * stats). Mirrors the reference's load-time artifacts: computed once
-  * per (session, dataset), reused by every query.
+  * view, the OWL-Horst materialization, predicate stats, the graph
+  * gates' edge list). Mirrors the reference's load-time artifacts:
+  * computed once per (session, dataset), reused by every query.
   *
   * Keys are `applicationId:sessionUUID:dir:name` — a stable unique
   * session identity, not `SparkSession.hashCode` (which can collide
@@ -97,8 +97,8 @@ object DfCache {
   }
 
   /** Drop (and unpersist) ONE named entry of (session, dataset) — for
-    * gate-family-scoped shared views (e.g. the minhash pair set used
-    * only by the dedup gates): a long benchmark session releases them
+    * gate-family-scoped shared views (e.g. the edge list used only by
+    * the graph gates): a long benchmark session releases them
     * when their family is done instead of pinning every view until the
     * application exits and letting the storage pool crowd execution
     * memory. No-op if the entry was never computed.

@@ -5,9 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Session configs that route local-mode file I/O away from Hadoop's
   * forking permission paths (see [[graft.hadoop.BareLocalFileSystem]]
   * and [[graft.streaming.NioCheckpointFileManager]] for the why).
-  * Applied by every graft-owned session builder (Bench, Verify,
-  * tests); a production cluster session would keep the defaults for
-  * HDFS/S3 and never hit the local-permission code at all.
+  * Applied by every graft-owned session builder (the mains through
+  * [[session]], tests); a production cluster session would keep the
+  * defaults for HDFS/S3 and never hit the local-permission code at
+  * all.
   */
 object LocalIo {
   val configs: Seq[(String, String)] = Seq(
@@ -27,11 +28,24 @@ object LocalIo {
     // that genuinely need fan-out on a KB-scale-but-CPU-heavy shuffle
     // now request it LOCALLY with an explicit scale-adaptive
     // repartition (AQE never coalesces a user-specified partition
-    // count) instead of a global config twiddle. Env-overridable for
-    // A/B measurement; the default is Spark's default.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "1mb"))
+    // count) instead of a global config twiddle.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1mb")
 
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     configs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** The local session of the registry mains (Bench, Verify, OpProbe,
+    * DredAdjudicate): `local[cpus]` with one shuffle partition per
+    * core and the UI off. The first limit/collect job runs over (up
+    * to) every partition at once — CollectLimit's default incremental
+    * scale-up (1, 4, 16… serialized 1-task jobs) dominates the wall
+    * time of limit guards over multi-stage DAGs.
+    */
+  def session(cpus: String): SparkSession =
+    apply(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.limit.initialNumPartitions", "1000"))
+      .getOrCreate()
 }

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Rounds
+
 /** Deduplication operators for LLM-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard near-dup.
   *
@@ -88,20 +90,19 @@ object Dedup {
     * results are unaffected.
     */
   def minHashPairs(docs: DataFrame, threshold: Double = 0.5,
-                   maxBucket: Int = 1000): DataFrame = {
+                   maxBucket: Int = 1000): DataFrame = Rounds { r =>
     val nBands = MinHashParams.size / BandSize
-    val sig = Ranks.fanout(docs, col("doc_id"))
+    // r19: fan-out + EAGER materialization — the minhash pass is the
+    // gate's hottest compute and a lazy persist both serialized it on
+    // the one scan task and let AQE's concurrent subtrees race to
+    // recompute it
+    val sig = r.keep(Ranks.fanout(docs, col("doc_id"))
       // tokens materialize in their own projection: shinglesOf's lambda
       // then reads an attribute per element instead of re-splitting the
       // text per gram (HOFs re-evaluate free subexpressions per element)
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(col("doc_id"), shinglesOf(col("tk")).as("toks"))
-      .withColumn("mh", minHashOfShingles(col("toks")))
-      // r19: fan-out (above) + EAGER materialization — the minhash
-      // pass is the gate's hottest compute and a lazy persist both
-      // serialized it on the one scan task and let AQE's concurrent
-      // subtrees race to recompute it
-      .localCheckpoint()
+      .withColumn("mh", minHashOfShingles(col("toks"))))
     // band join carries ONLY (band_id, band_key, doc_id) — the shingle
     // arrays never enter this shuffle; candidate pairs are deduped
     // BEFORE the (expensive) exact-Jaccard verify, so a pair colliding
@@ -128,17 +129,15 @@ object Dedup {
       .repartition(docs.sparkSession.sparkContext.defaultParallelism,
         col("doc_a"), col("doc_b"))
       .distinct()
-    // seal the (tiny) pair set, then RELEASE the signature
+    // seal the (tiny) pair set; Rounds then releases the signature
     // checkpoint: without this every call pins a full shingle copy of
     // the corpus for the session lifetime
-    val out = Ranks.seal(cand
+    r.keep(cand
       .join(sig.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")), "doc_a")
       .join(sig.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         jaccard(col("toks_a"), col("toks_b")).as("jaccard"))
       .where(col("jaccard") >= threshold))
-    Ranks.releaseCheckpoint(sig)
-    out
   }
 
   /** 16-bit SimHash: bit i of the fingerprint is the majority vote of
@@ -299,12 +298,11 @@ object Dedup {
     * input grows with its document frequency beyond the capped prefix.
     */
   def winnowOverlapPairs(docs: DataFrame, k: Int = 4, w: Int = 4,
-                         minShared: Int = 3): DataFrame = {
+                         minShared: Int = 3): DataFrame = Rounds { r =>
     // r19: fan-out + eager materialization (see [[ngramJaccardPairs]])
-    val docFp = Ranks.fanout(docs, col("doc_id"))
+    val docFp = r.keep(Ranks.fanout(docs, col("doc_id"))
       .select(col("doc_id"),
-        winnowFingerprints(col("text"), k, w).as("fps"))
-      .localCheckpoint()
+        winnowFingerprints(col("text"), k, w).as("fps")))
     val ex = docFp.select(col("doc_id"), size(col("fps")).as("n_fp"),
       explode(col("fps")).as("fp"))
     val docFreq = ex.groupBy("fp").agg(count(lit(1)).as("df"))
@@ -323,16 +321,14 @@ object Dedup {
       .repartition(docs.sparkSession.sparkContext.defaultParallelism,
         col("doc_a"), col("doc_b"))
       .distinct()
-    // seal the tiny pair set, then release the fingerprint checkpoint
-    // (same per-call discipline as [[ngramJaccardPairs]])
-    val out = Ranks.seal(cand
+    // seal the tiny pair set; the fingerprint checkpoint is released
+    // on return (same per-call discipline as [[ngramJaccardPairs]])
+    r.keep(cand
       .join(docFp.select(col("doc_id").as("doc_a"), col("fps").as("fps_a")), "doc_a")
       .join(docFp.select(col("doc_id").as("doc_b"), col("fps").as("fps_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         size(array_intersect(col("fps_a"), col("fps_b"))).cast("long").as("n_shared"))
       .where(col("n_shared") >= minShared))
-    Ranks.releaseCheckpoint(docFp)
-    out
   }
 
   /** Bloom-filter affine bit hashes: bit_i(t) = ((a_i·polyHash(t) +
@@ -622,17 +618,16 @@ object Dedup {
     * enter only the exact verify.
     */
   def minHashEstimatePairs(docs: DataFrame,
-      maxBucket: Int = 1000): DataFrame = {
+      maxBucket: Int = 1000): DataFrame = Rounds { r =>
     val nBands = MinHashParams.size / BandSize
     // r19: fan-out + EAGER materialization (see [[minHashPairs]]) —
     // probe showed FIVE concurrent single-task ~870 ms recomputations
     // of this signature pass (lazy persist + AQE's concurrently
     // materializing subtrees) per invocation
-    val sig = Ranks.fanout(docs, col("doc_id"))
+    val sig = r.keep(Ranks.fanout(docs, col("doc_id"))
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(col("doc_id"), shinglesOf(col("tk")).as("toks"))
-      .withColumn("mh", minHashOfShingles(col("toks")))
-      .localCheckpoint()
+      .withColumn("mh", minHashOfShingles(col("toks"))))
     val banded = sig.select(
       col("doc_id"),
       posexplode(transform(
@@ -657,7 +652,7 @@ object Dedup {
       zip_with(col("mh_a"), col("mh_b"),
         (x, y) => when(x === y, 1L).otherwise(0L)),
       lit(0L), (acc, v) => acc + v)
-    val out = Ranks.seal(cand
+    r.keep(cand
       .join(sig.select(col("doc_id").as("doc_a"), col("toks").as("toks_a"),
         col("mh").as("mh_a")), "doc_a")
       .join(sig.select(col("doc_id").as("doc_b"), col("toks").as("toks_b"),
@@ -673,8 +668,6 @@ object Dedup {
             lit(MinHashParams.size.toDouble), 0)
           .cast("long").as("est_micro"),
         col("jaccard")))
-    Ranks.releaseCheckpoint(sig)
-    out
   }
 
   /** Exact n-gram Jaccard near-dup pairs via a prefix-filtered
@@ -691,7 +684,8 @@ object Dedup {
     * (t·max(|a|,|b|) ≤ min(|a|,|b|)) and an exact intersection verify.
     * No join key's input grows quadratically in df.
     */
-  def ngramJaccardPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.3): DataFrame = {
+  def ngramJaccardPairs(docs: DataFrame, n: Int = 3,
+      threshold: Double = 0.3): DataFrame = Rounds { r =>
     // per-doc distinct shingle set, kept as ~60-bit wide hashes (tiny,
     // fixed width — the raw shingle strings never enter any shuffle;
     // the wide hash keeps the EXACT-verify claim honest at corpus
@@ -699,13 +693,12 @@ object Dedup {
     // r19 (guide §2.5): fan the scan out to the core budget BEFORE the
     // CPU-heavy shingle derivation (a one-row-group table scans as ONE
     // task), and materialize it eagerly — the lazy persist let AQE's
-    // concurrently-materializing subtrees (l/r prefix sides, docFreq)
+    // concurrently-materializing subtrees (both prefix sides, docFreq)
     // RACE and each recompute the shingle pass (probe: six serial
     // ~150 ms single-task copies of the same stage).
-    val docSh = Ranks.fanout(docs, col("doc_id"))
+    val docSh = r.keep(Ranks.fanout(docs, col("doc_id"))
       .select(col("doc_id"),
-        array_distinct(graft.functions.GramHashes.wide(col("text"), n)).as("sh"))
-      .localCheckpoint()
+        array_distinct(graft.functions.GramHashes.wide(col("text"), n)).as("sh")))
     val ex = docSh.select(col("doc_id"), size(col("sh")).as("n_sh"),
       explode(col("sh")).as("sh_hash"))
     // global document frequency; df=1 shingles cannot create a pair
@@ -735,9 +728,9 @@ object Dedup {
           .partitionBy("doc_id").orderBy(col("df"), col("sh_hash"))))
       .where(col("rk") <= prefixLen)
       .select("sh_hash", "doc_id", "n_sh")
-    val l = ranked.select(col("sh_hash"), col("doc_id").as("doc_a"), col("n_sh").as("na"))
-    val r = ranked.select(col("sh_hash"), col("doc_id").as("doc_b"), col("n_sh").as("nb"))
-    val cand = l.join(r, "sh_hash")
+    val cand = ranked.select(col("sh_hash"), col("doc_id").as("doc_a"), col("n_sh").as("na"))
+      .join(ranked.select(col("sh_hash"), col("doc_id").as("doc_b"), col("n_sh").as("nb")),
+        "sh_hash")
       .where(col("doc_a") < col("doc_b"))
       .where(least(col("na"), col("nb")) >=
         lit(tc) * greatest(col("na"), col("nb")))
@@ -750,8 +743,11 @@ object Dedup {
       .repartition(docs.sparkSession.sparkContext.defaultParallelism,
         col("doc_a"), col("doc_b"))
       .distinct()
-    // exact verify on the full hash sets — candidate volume is tiny
-    val out = Ranks.seal(cand
+    // exact verify on the full hash sets — candidate volume is tiny;
+    // seal the pair set, and Rounds releases the shingle checkpoint: an
+    // unreleased corpus-sized copy per invocation (3 bench reps = 3
+    // copies) would pin storage for the session lifetime
+    r.keep(cand
       .join(docSh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
       .join(docSh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
@@ -762,12 +758,6 @@ object Dedup {
             / (col("na") + col("nb") - col("inter")), 0)
           .cast("long").cast("double") / lit(1e6)).as("jaccard"))
       .where(col("jaccard") >= threshold))
-      // seal the (tiny) pair set, then RELEASE the shingle checkpoint
-      // — same rationale as [[minHashPairs]]: an unreleased corpus-
-      // sized copy per invocation (3 bench reps = 3 copies) would pin
-      // storage for the session lifetime
-    Ranks.releaseCheckpoint(docSh)
-    out
   }
 
   /** Asymmetric n-gram CONTAINMENT pairs: C(A→B) = |A∩B| / |A| ≥ t —
@@ -786,14 +776,13 @@ object Dedup {
     * posting-list shape an entity-resolution deployment shards.
     */
   def containmentPairs(docs: DataFrame, n: Int = 3,
-      threshold: Double = 0.6): DataFrame = {
+      threshold: Double = 0.6): DataFrame = Rounds { r =>
     // r19: same fan-out + eager-materialize treatment as
     // [[ngramJaccardPairs]] (one-row-group scan serializes the shingle
     // pass; a lazy persist lets AQE's concurrent subtrees recompute it)
-    val docSh = Ranks.fanout(docs, col("doc_id"))
+    val docSh = r.keep(Ranks.fanout(docs, col("doc_id"))
       .select(col("doc_id"),
-        array_distinct(graft.functions.GramHashes.wide(col("text"), n)).as("sh"))
-      .localCheckpoint()
+        array_distinct(graft.functions.GramHashes.wide(col("text"), n)).as("sh")))
     val ex = docSh.select(col("doc_id"), size(col("sh")).as("n_sh"),
       explode(col("sh")).as("sh_hash"))
     val docFreq = ex.groupBy("sh_hash").agg(count(lit(1)).as("df"))
@@ -818,7 +807,7 @@ object Dedup {
       .repartition(docs.sparkSession.sparkContext.defaultParallelism,
         col("doc_a"), col("doc_b"))
       .distinct()
-    val out = Ranks.seal(cand
+    r.keep(cand
       .join(docSh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
       .join(docSh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
@@ -828,8 +817,6 @@ object Dedup {
         (round(col("c") * lit(1e6), 0).cast("long").cast("double")
           / lit(1e6)).as("containment"))
       .where(col("containment") >= threshold))
-    Ranks.releaseCheckpoint(docSh)
-    out
   }
 
   /** Sorted-neighborhood blocking (Hernández & Stolfo): sort the

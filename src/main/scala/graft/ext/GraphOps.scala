@@ -1,8 +1,10 @@
 package graft.ext
 
 import org.apache.spark.graphx.{Edge, Graph}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.LogicalRDD
 
 import graft.plans.Rounds
 
@@ -28,6 +30,21 @@ object GraphOps {
   private def toEdgeRdd(edges: DataFrame) =
     edges.select(col("src").cast("long"), col("dst").cast("long"))
       .rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
+
+  /** Unpersist every cached RDD derived from the checkpoint `ck`.
+    * GraphX caches each graph it builds (triangleCount builds several)
+    * and hands back no handle to them. `ck` must be the operator's own
+    * checkpoint, so whatever reads it is the operator's own too; call
+    * this only once nothing reads those RDDs.
+    */
+  private def releaseDerived(ck: DataFrame): Unit = {
+    val root = ck.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id
+    val memo = scala.collection.mutable.Map.empty[Int, Boolean]
+    def reads(x: RDD[_]): Boolean =
+      memo.getOrElseUpdate(x.id, x.id == root || x.dependencies.exists(d => reads(d.rdd)))
+    ck.sparkSession.sparkContext.getPersistentRDDs.valuesIterator
+      .filter(x => x.id != root && reads(x)).foreach(_.unpersist(blocking = false))
+  }
 
   /** Undirected form: every edge in both directions (carrying the
     * `extra` columns along), deduped.
@@ -85,9 +102,9 @@ object GraphOps {
     * contract as [[triangleCount]]); degrees are one combinable count;
     * the assembly is one join keyed by 8-byte ids.
     */
-  def localClustering(spark: SparkSession, edges: DataFrame): DataFrame = {
+  def localClustering(spark: SparkSession, edges: DataFrame): DataFrame = Rounds { r =>
     import spark.implicits._
-    val canon = simple(edges).localCheckpoint()
+    val canon = r.keep(simple(edges))
     val deg = canon.select(col("src").as("id"))
       .unionByName(canon.select(col("dst").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))
@@ -96,13 +113,14 @@ object GraphOps {
       .triangleCount()
       .vertices.map { case (id, n) => (id, n.toLong) }
       .toDF("id", "triangles")
-    Ranks.sealAndRelease(
-      deg.filter(col("degree") >= 2)
-        .join(tri, "id")
-        .select(col("id"), col("degree"), col("triangles"),
-          expr("(2000000L * triangles) div (degree * (degree - 1L))")
-            .as("lcc_micro")),
-      canon)
+    val out = r.keep(deg.filter(col("degree") >= 2)
+      .join(tri, "id")
+      .select(col("id"), col("degree"), col("triangles"),
+        expr("(2000000L * triangles) div (degree * (degree - 1L))")
+          .as("lcc_micro")))
+    // the sealed result no longer reads the GraphX graphs
+    releaseDerived(canon)
+    out
   }
 
   /** Bounded k-TRUSS peel (r16): keep edges whose SUPPORT (triangles

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.plans.Rounds
+
 /** Distributed rank/prefix primitives for GLOBAL (or near-global)
   * window shapes — the class Spark's `Window.orderBy` without a
   * partition key executes as ONE window task ("Moving all data to a
@@ -32,33 +34,13 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object Ranks {
 
-  /** Seal-and-release (the r10 checkpoint-leak lesson, flagged again
-    * by the r12 verdict for THESE primitives): eagerly checkpoint the
-    * OUTPUT, then unpersist the intermediate range-partitioned
-    * layout's blocks immediately — otherwise every call pins a
-    * full-width copy of the input until the ContextCleaner happens to
-    * GC it, and repeated callers (w_rfm runs three passes per
-    * execution, benches run three reps) accumulate pinned blocks.
-    * The output's own blocks live exactly as long as the caller's
-    * reference — the primitive cannot know when the caller is done,
-    * but the wide intermediate is entirely ours to free.
-    */
-  private[ext] def sealAndRelease(out: DataFrame, parts: DataFrame): DataFrame = {
-    val res = out.localCheckpoint(true)
-    sealLeavesRelease(parts)
-    res
-  }
-
-  /** Unpersist every LogicalRDD leaf of `df`'s plan — the release
-    * half of [[sealAndRelease]] for callers holding several
-    * checkpointed intermediates.
-    */
-  /** NOTE (r16, pinned by UnpersistProbeSpec): `Dataset.unpersist` is
-    * a NO-OP for localCheckpoint blocks on this Spark build (it only
-    * uncaches CacheManager-registered plans) — THIS is the mechanism
-    * that actually frees checkpoint storage. Release only frames whose
-    * consumers are themselves materialized: a localCheckpoint leaf
-    * cannot recompute once its blocks drop.
+  /** Unpersist every LogicalRDD leaf of `df`'s plan, for the
+    * operators outside [[graft.plans.Rounds]] that hold several
+    * checkpointed intermediates. `Dataset.unpersist` is a NO-OP for
+    * localCheckpoint blocks on this Spark build (UnpersistProbeSpec);
+    * the leaf RDD's own unpersist is what frees them. Release only
+    * frames whose consumers are themselves materialized: a
+    * localCheckpoint leaf cannot recompute once its blocks drop.
     */
   private[graft] def sealLeavesRelease(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
@@ -101,21 +83,6 @@ object Ranks {
     else df.repartition(p, keys: _*)
   }
 
-  /** Terminal seal with pre-seal plan capture (r19, the r18 verdict's
-    * PlanQualitySpec breakage): a terminal `localCheckpoint(true)`
-    * truncates the RESULT's executed plan to a `Scan ExistingRDD`
-    * leaf, so plan-shape contracts asserted on the returned frame see
-    * nothing. Routing the terminal seal through here records the
-    * sealed frame's QueryExecution — the eager checkpoint has already
-    * executed it, so AQE has finalized — for [[SealCapture]] readers
-    * (tests only; a volatile-flag no-op otherwise).
-    */
-  private[graft] def seal(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint(true)
-    SealCapture.add(df.queryExecution)
-    out
-  }
-
   /** Adds `rankName` (0-based row index within its `keyCols` group,
     * in `sortCols` order) and `totalName` (the group's row count) to
     * every row — the distributed, skew-proof equivalent of
@@ -126,13 +93,12 @@ object Ranks {
     */
   def keyedRowIndex(df: DataFrame, keyCols: Seq[String],
       sortCols: Seq[Column], rankName: String,
-      totalName: String): DataFrame = {
+      totalName: String): DataFrame = Rounds { rounds =>
     val spark = df.sparkSession
     val nPart = spark.sessionState.conf.numShufflePartitions
     val order = keyCols.map(col) ++ sortCols
-    val parts = df.repartitionByRange(nPart, order: _*)
-      .sortWithinPartitions(order: _*)
-      .localCheckpoint(true)
+    val parts = rounds.keep(df.repartitionByRange(nPart, order: _*)
+      .sortWithinPartitions(order: _*))
     val schema = parts.schema
     val kIdx = keyCols.map(schema.fieldIndex).toArray
     def keyOf(r: Row): Vector[Any] = kIdx.map(r.get(_)).toVector
@@ -206,9 +172,9 @@ object Ranks {
         }
       }
     }
-    sealAndRelease(spark.createDataFrame(out, StructType(schema.fields
+    rounds.keep(spark.createDataFrame(out, StructType(schema.fields
       :+ StructField(rankName, LongType, nullable = false)
-      :+ StructField(totalName, LongType, nullable = false))), parts)
+      :+ StructField(totalName, LongType, nullable = false))))
   }
 
   /** Adds `outName` = the INCLUSIVE running sum of the long column
@@ -219,12 +185,11 @@ object Ranks {
     * shape with addition as the monoid. Non-null contract as there.
     */
   def prefixSumLong(df: DataFrame, sortCols: Seq[Column],
-      valueName: String, outName: String): DataFrame = {
+      valueName: String, outName: String): DataFrame = Rounds { rounds =>
     val spark = df.sparkSession
     val nPart = spark.sessionState.conf.numShufflePartitions
-    val parts = df.repartitionByRange(nPart, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .localCheckpoint(true)
+    val parts = rounds.keep(df.repartitionByRange(nPart, sortCols: _*)
+      .sortWithinPartitions(sortCols: _*))
     val schema = parts.schema
     val vIdx = schema.fieldIndex(valueName)
     val sums = parts.rdd.mapPartitionsWithIndex { (pid, it) =>
@@ -255,8 +220,8 @@ object Ranks {
         Row.fromSeq(r.toSeq :+ run)
       }
     }
-    sealAndRelease(spark.createDataFrame(out, StructType(schema.fields
-      :+ StructField(outName, LongType, nullable = false))), parts)
+    rounds.keep(spark.createDataFrame(out, StructType(schema.fields
+      :+ StructField(outName, LongType, nullable = false))))
   }
 
   /** Standard SQL `ntile(k)` bucket (1-based) from a 0-based global
@@ -281,12 +246,11 @@ object Ranks {
     * driver walk carries the exclusive prefix min, pass 2 is map-only.
     */
   def prefixMinLong(df: DataFrame, sortCols: Seq[Column],
-      valueName: String, outName: String): DataFrame = {
+      valueName: String, outName: String): DataFrame = Rounds { rounds =>
     val spark = df.sparkSession
     val nPart = spark.sessionState.conf.numShufflePartitions
-    val parts = df.repartitionByRange(nPart, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .localCheckpoint(true)
+    val parts = rounds.keep(df.repartitionByRange(nPart, sortCols: _*)
+      .sortWithinPartitions(sortCols: _*))
     val schema = parts.schema
     val vIdx = schema.fieldIndex(valueName)
     val mins = parts.rdd.mapPartitionsWithIndex { (pid, it) =>
@@ -325,7 +289,7 @@ object Ranks {
         o
       }
     }
-    sealAndRelease(spark.createDataFrame(out, StructType(schema.fields
-      :+ StructField(outName, LongType, nullable = true))), parts)
+    rounds.keep(spark.createDataFrame(out, StructType(schema.fields
+      :+ StructField(outName, LongType, nullable = true))))
   }
 }

@@ -1,14 +1,15 @@
 package graft.ext
 
 /** Test hook: pre-seal finalized QueryExecutions recorded by
-  * [[Ranks.seal]] and [[graft.plans.Rounds.keep]]. PlanQualitySpec
+  * [[graft.plans.Rounds.keep]], the only capture point. PlanQualitySpec
   * enables capture around a gate build so its plan-shape contracts
   * (broadcast joins, partial window-group-limits, no-cartesian pins)
   * keep asserting the REAL join/aggregate shapes of operators whose
-  * results are sealed by a terminal localCheckpoint — without it the
+  * results are sealed by a terminal checkpoint — without it the
   * executed plan of the returned frame is a bare `Scan ExistingRDD`
-  * and every assertion is vacuous (the r18 verdict's PlanQualitySpec breakage). Disabled
-  * (one volatile read per terminal seal) outside tests.
+  * and every assertion is vacuous (the r18 verdict's PlanQualitySpec
+  * breakage). Disabled (one volatile read per kept frame) outside
+  * tests.
   *
   * Capture is OWNER-THREAD-scoped, not just thread-buffered (r19
   * review): suites share one session and run in parallel, so while

@@ -241,7 +241,7 @@ object TextAnalysis {
     * (the [[t_unigram_nll]] technique) so both engines agree exactly.
     */
   def pmiCollocations(docs: org.apache.spark.sql.DataFrame,
-      minCount: Long = 5): org.apache.spark.sql.DataFrame = {
+      minCount: Long = 5): org.apache.spark.sql.DataFrame = Rounds { r =>
     val toks = tokens(col("text"))
     // guard: Spark's sequence(1, 0) is DESCENDING [1, 0] — emit no
     // bigrams for single-token docs instead
@@ -258,13 +258,12 @@ object TextAnalysis {
     // unigram pass and one bigram pass — the count tables checkpoint
     // once and the corpus TOTALS derive from them (Σ counts) instead
     // of re-scanning the token/bigram streams.
-    val nUni = uni.groupBy("t").agg(count(lit(1)).as("n")).localCheckpoint()
-    val nBiAll = bi.groupBy("bigram").agg(count(lit(1)).as("n_ab"))
-      .localCheckpoint()
+    val nUni = r.keep(uni.groupBy("t").agg(count(lit(1)).as("n")))
+    val nBiAll = r.keep(bi.groupBy("bigram").agg(count(lit(1)).as("n_ab")))
     val nBi = nBiAll.filter(col("n_ab") >= minCount)
     val totU = nUni.agg(sum("n").as("n_uni"))
     val totB = nBiAll.agg(sum("n_ab").as("n_bi"))
-    val out = Ranks.seal(nBi
+    r.keep(nBi
       .withColumn("ta", substring_index(col("bigram"), " ", 1))
       .withColumn("tb", substring_index(col("bigram"), " ", -1))
       .join(broadcast(nUni.select(col("t").as("ta"), col("n").as("n_a"))), Seq("ta"))
@@ -274,9 +273,6 @@ object TextAnalysis {
         round(log((col("n_ab").cast("double") * col("n_uni") * col("n_uni"))
           / (col("n_bi").cast("double") * col("n_a") * col("n_b"))) * 1e6, 0)
           .cast("long").as("pmi_unats")))
-    Ranks.releaseCheckpoint(nUni)
-    Ranks.releaseCheckpoint(nBiAll)
-    out
   }
 
   /** Bigram-LM negative log-likelihood per document — the CCNet-style
@@ -288,7 +284,8 @@ object TextAnalysis {
     * are integer micro-nats (exact order-independent sums); corpus
     * count tables are vocab-bounded and broadcast.
     */
-  def bigramNll(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  def bigramNll(
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = Rounds { r =>
     val toks = tokens(col("text"))
     val bigramsOf = when(size(toks) >= 2,
       transform(sequence(lit(1), size(toks) - 1),
@@ -305,16 +302,15 @@ object TextAnalysis {
     // budget before the two tokenize+explode passes — probe-measured
     // 1.9 s of the gate was the docBi pass serialized on one task
     val d = Ranks.fanout(docs, col("doc_id"))
-    val docBi = d.select(col("doc_id"), explode(bigramsOf).as("bigram"))
-      .groupBy("doc_id", "bigram").agg(count(lit(1)).as("k"))
-      .localCheckpoint()
+    val docBi = r.keep(d.select(col("doc_id"), explode(bigramsOf).as("bigram"))
+      .groupBy("doc_id", "bigram").agg(count(lit(1)).as("k")))
     val uni = d.select(explode(toks).as("t"))
-    val nUni = uni.groupBy("t").agg(count(lit(1)).as("c_a")).localCheckpoint()
+    val nUni = r.keep(uni.groupBy("t").agg(count(lit(1)).as("c_a")))
     val nBi = docBi.groupBy("bigram").agg(sum("k").as("c_ab"))
     val vocab = nUni.agg(count(lit(1)).as("v"))
-    // seal the (per-doc, tiny) result, then free the intermediate
-    // checkpoints deterministically (the Ranks discipline)
-    val out = Ranks.seal(docBi
+    // seal the (per-doc, tiny) result; Rounds frees the intermediate
+    // checkpoints deterministically on return
+    r.keep(docBi
       .join(broadcast(nBi), Seq("bigram"))
       .withColumn("ta", substring_index(col("bigram"), " ", 1))
       .join(broadcast(nUni.withColumnRenamed("t", "ta")), Seq("ta"))
@@ -326,9 +322,6 @@ object TextAnalysis {
       .withColumn("avg_nll",
         round(col("nll_unats").cast("double") / col("n_bigrams"), 0)
           .cast("long").cast("double") / lit(1e6)))
-    Ranks.releaseCheckpoint(docBi)
-    Ranks.releaseCheckpoint(nUni)
-    out
   }
 
   /** Deterministic train/valid/test split assignment from the document
@@ -960,7 +953,7 @@ object TextAnalysis {
     * per-query top-k.
     */
   def sparseCosineTopK(docs: org.apache.spark.sql.DataFrame,
-      isQuery: Column, k: Int = 5): org.apache.spark.sql.DataFrame = {
+      isQuery: Column, k: Int = 5): org.apache.spark.sql.DataFrame = Rounds { r =>
     val base = docs.select(col("doc_id"), col("text"), isQuery.as("__q"))
     val nDocs = base.agg(count(lit(1)).cast("double").as("n_docs"))
     // r18 (guide §2.4 "share one exchange"): tf and the weighted
@@ -977,18 +970,16 @@ object TextAnalysis {
     // term-keyed, so the layout is also the term-partitioned sharding
     // the dots join wants. defaultParallelism = core budget at any
     // cluster size.
-    val tf = base
+    val tf = r.keep(base
       .select(col("doc_id"), col("__q"), explode(tokens(col("text"))).as("term"))
       .groupBy("doc_id", "__q", "term").agg(count(lit(1)).as("tf"))
       .repartition(docs.sparkSession.sparkContext.defaultParallelism,
-        col("term"))
-      .localCheckpoint()
+        col("term")))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val weighted = tf.join(dfreq, "term")
+    val weighted = r.keep(tf.join(dfreq, "term")
       .crossJoin(broadcast(nDocs))
       .select(col("doc_id"), col("__q"), col("term"),
-        (col("tf") * log(col("n_docs") / col("df"))).as("w"))
-      .localCheckpoint()
+        (col("tf") * log(col("n_docs") / col("df"))).as("w")))
     val norms = weighted.groupBy("doc_id")
       .agg(sum(round(col("w") * col("w") * 1e6).cast("long")).as("nsq_micro"))
     val q = weighted.filter(col("__q"))
@@ -1011,14 +1002,10 @@ object TextAnalysis {
           (sqrt(col("q_nsq") / 1e6) * sqrt(col("nsq_micro") / 1e6))).as("cos"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("cos").desc, col("doc_id").asc)
-    val out = Ranks.seal(
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("doc_id"), round(col("cos"), 6).as("cos"),
-          col("rank")))
-    Ranks.releaseCheckpoint(weighted)
-    Ranks.releaseCheckpoint(tf)
-    out
+    r.keep(scored.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("doc_id"), round(col("cos"), 6).as("cos"),
+        col("rank")))
   }
 
   /** Eval-calibration threshold sweep (the PR-curve grid a quality

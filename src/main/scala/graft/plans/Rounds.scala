@@ -5,10 +5,10 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.broadcast
 
-/** Checkpoint owner for one iterative operator (the Pregelix shape:
-  * each round is state ⋈ edges plus a group-by, cut off from its
-  * lineage by an eager `localCheckpoint`). Every checkpoint the
-  * operator takes goes through [[keep]]; [[swap]] replaces a round's
+/** Checkpoint owner for one operator, iterative or staged (the
+  * Pregelix shape: each round or stage is cut off from its lineage by
+  * an eager `localCheckpoint` and owned by the loop that made it).
+  * Every checkpoint the operator takes goes through [[keep]]; [[swap]] replaces a round's
   * state and frees the one it supersedes; when the body returns,
   * every tracked checkpoint the result does not read as a
   * `LogicalRDD` leaf is released. No terminal seal, no extra job: a

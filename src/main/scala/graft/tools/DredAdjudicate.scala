@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Adjudication main for the DRed delete-maintenance cost (the r15/r16
@@ -25,13 +24,7 @@ object DredAdjudicate {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.LocalIo(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.limit.initialNumPartitions", "1000"))
-      .getOrCreate()
+    val spark = graft.core.LocalIo.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val quads = graft.rdf.TpchRdf.graphDf(spark, sfDir).localCheckpoint()
     val (mat, tMat) = timed {

@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Stage-level timing probe for ONE registry gate: runs the gate
   * `reps` times (construction + count, the bench action) and prints
@@ -17,13 +16,7 @@ object OpProbe {
     val reps = if (args.length > 1) args(1).toInt else 2
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.LocalIo(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.limit.initialNumPartitions", "1000"))
-      .getOrCreate()
+    val spark = graft.core.LocalIo.session(cpus)
     // experiment passthrough: SPARK_GRAFT_PROBE_CONF="k=v;k=v"
     sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach(_.split(";")
       .filter(_.contains("=")).foreach { kv =>

@@ -26,8 +26,8 @@ object PlanDump {
     Files.createDirectories(Paths.get(outDir))
     // sealed/iterative gates truncate their returned frame's plan to a
     // checkpoint scan — capture the pre-seal FINALIZED plans of every
-    // terminal/loop seal (Ranks.seal, Rounds.keep) and append them, so
-    // the dump carries the real join/aggregate shapes (r19)
+    // checkpoint taken through Rounds.keep (the only capture point) and
+    // append them, so the dump carries the real join/aggregate shapes
     graft.ext.SealCapture.enable()
     for (g <- gatesCsv.split(",").map(_.trim).filter(_.nonEmpty)) {
       graft.ext.SealCapture.clear()

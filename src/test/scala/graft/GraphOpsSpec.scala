@@ -370,6 +370,7 @@ class GraphOpsSpec extends GraftSuite {
     Seq[(String, () => DataFrame)](
       "kCore" -> (() => GraphOps.kCore(spark, e, k = 2)),
       "kTruss" -> (() => GraphOps.kTruss(spark, e, k = 3)),
+      "localClustering" -> (() => GraphOps.localClustering(spark, e)),
       "personalizedPageRank" ->
         (() => GraphOps.personalizedPageRank(spark, e, seeds, iters = 3)),
       "shortestHops" -> (() => GraphOps.shortestHops(spark, e, seeds)),

@@ -18,9 +18,10 @@ class PlanQualitySpec extends GraftSuite {
     * string carries codegen span markers. Gates that SEAL their result
     * with a terminal localCheckpoint return a bare `Scan ExistingRDD`
     * plan — for those, [[graft.ext.SealCapture]] records the pre-seal
-    * finalized plan at [[graft.ext.Ranks.seal]] time (r19, fixing the
-    * r18 vacuous-assert breakage); the contracts assert on the
-    * concatenation, so sealed shapes stay pinned.
+    * finalized plan at [[graft.plans.Rounds.keep]], its only capture
+    * point (r19, fixing the r18 vacuous-assert breakage); the
+    * contracts assert on the concatenation, so sealed shapes stay
+    * pinned.
     */
   private def plan(name: String): String = {
     graft.ext.SealCapture.enable()

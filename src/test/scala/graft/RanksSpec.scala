@@ -112,11 +112,15 @@ class RanksSpec extends GraftSuite {
   test("prefixMinLong fails fast on a null value column") {
     val withNull = fixture.withColumn("v",
       when(col("id") === 1005L, lit(null)).otherwise(col("v")).cast("long"))
+    val before = persistedRdds()
     val e = intercept[org.apache.spark.SparkException] {
       Ranks.prefixMinLong(withNull, Seq(col("id").asc), "v", "pm").count()
     }
     assert(e.getMessage.contains("prefixMinLong") ||
       Option(e.getCause).exists(_.getMessage.contains("prefixMinLong")))
+    // the staged range layout is released on the throw, not leaked
+    val leaked = persistedRdds() -- before
+    assert(leaked.isEmpty, s"checkpoints left persisted by the failed call: $leaked")
   }
 
   test("empty and singleton inputs survive both primitives") {

@@ -53,10 +53,25 @@ class TextOpsSpec extends GraftSuite {
       (1L, "a b c d e"),
       (2L, "x y a b c d e z"),
       (3L, "p q r s t u v")).toDF("doc_id", "text")
-    val got = graft.ext.Dedup.containmentPairs(docs, 3, 0.6)
+    val got = assertCheckpointsOwned(graft.ext.Dedup.containmentPairs(docs, 3, 0.6))
       .orderBy("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got.toSeq === Seq((1L, 2L, 1.0)))
+  }
+
+  test("dedup pair operators leave persisted only the checkpoints their result reads") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "the quick brown fox jumps over the lazy cat"),
+      (3L, "an entirely different sentence about other things")).toDF("doc_id", "text")
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "minHashPairs" -> (() => graft.ext.Dedup.minHashPairs(docs)),
+      "minHashEstimatePairs" -> (() => graft.ext.Dedup.minHashEstimatePairs(docs)),
+      "ngramJaccardPairs" -> (() => graft.ext.Dedup.ngramJaccardPairs(docs))
+    ).foreach { case (name, op) =>
+      withClue(s"$name: ") { assertCheckpointsOwned(op()) }
+    }
   }
 
   test("bpeMerges: greedy merge sequence with left-to-right replace semantics") {
@@ -171,8 +186,8 @@ class TextOpsSpec extends GraftSuite {
       (5L, "spark catalyst optimizer rules engine"),
       (6L, "completely different words here entirely"),
       (7L, "spark engine with other catalyst stuff padding")).toDF("doc_id", "text")
-    val got = graft.ext.TextAnalysis
-      .sparseCosineTopK(docs, col("doc_id") === 0, k = 2)
+    val got = assertCheckpointsOwned(graft.ext.TextAnalysis
+      .sparseCosineTopK(docs, col("doc_id") === 0, k = 2))
       .orderBy("rank").collect()
     assert(got(0).getLong(1) == 5L && math.abs(got(0).getDouble(2) - 1.0) < 1e-4)
     assert(got(1).getLong(1) == 7L && got(1).getDouble(2) < 0.999)
@@ -212,7 +227,8 @@ class TextOpsSpec extends GraftSuite {
       (4L, "entirely different words with no shared runs anywhere at all"),
       (5L, "another unrelated document about completely other topics here"))
       .toDF("doc_id", "text").repartition(4)
-    val got = graft.ext.Dedup.winnowOverlapPairs(docs, 4, 4, minShared = 2)
+    val got = assertCheckpointsOwned(
+        graft.ext.Dedup.winnowOverlapPairs(docs, 4, 4, minShared = 2))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     // brute force: full pairwise fingerprint intersection
     val fps = docs.select(col("doc_id"),
@@ -482,7 +498,7 @@ class TextOpsSpec extends GraftSuite {
     import spark.implicits._
     val docs = ((1 to 9).map(i => (i.toLong, "x y q")) :+ (10L, "q y x"))
       .toDF("doc_id", "text")
-    val got = graft.ext.TextAnalysis.bigramNll(docs)
+    val got = assertCheckpointsOwned(graft.ext.TextAnalysis.bigramNll(docs))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(3))).toMap
     // corpus: c(x)=10, c(y)=10, c(q)=10, V=3; c("x y")=9, c("y q")=9,
     // c("q y")=1, c("y x")=1
@@ -498,7 +514,7 @@ class TextOpsSpec extends GraftSuite {
     // "x y" always adjacent (strong collocation), "x z" never
     val docs = (1 to 5).map(i => (i.toLong, "x y q x y w"))
       .toDF("doc_id", "text")
-    val got = graft.ext.TextAnalysis.pmiCollocations(docs, 5)
+    val got = assertCheckpointsOwned(graft.ext.TextAnalysis.pmiCollocations(docs, 5))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     // unigrams: x=10,y=10,q=5,w=5, N=30; bigrams: per doc 5 → N_bi=25
     // "x y": n_ab=10, pmi = ln(10·30·30/(25·10·10)) = ln(3.6)
