@@ -850,18 +850,17 @@ final class QuadStore(spark: SparkSession, dir: String) {
       case DataRe(b) => b.trim
       case _ => throw new IllegalArgumentException(s"unsupported update: ${u.take(80)}")
     }
-    val GraphStart = """(?is)\bGRAPH\s*<([^>]*)>\s*\{""".r
+    // one Matcher over the body, searched from each block's end: no
+    // copy of the remaining body per GRAPH block
+    val graphStart = """(?is)\bGRAPH\s*<([^>]*)>\s*\{""".r.pattern.matcher(body)
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[Turtle.Stmt])]
     val defaultText = new StringBuilder
     var cursor = 0
-    var m = GraphStart.findFirstMatchIn(body.substring(cursor))
-    while (m.isDefined) {
-      val mm = m.get
-      defaultText.append(body.substring(cursor, cursor + mm.start)).append('\n')
-      val (_, block, end) = balancedBlock(body, cursor + mm.start)
-      out += mm.group(1) -> Turtle.parseDoc(block)
+    while (graphStart.find(cursor)) {
+      defaultText.append(body.substring(cursor, graphStart.start)).append('\n')
+      val (_, block, end) = balancedBlock(body, graphStart.start)
+      out += graphStart.group(1) -> Turtle.parseDoc(block)
       cursor = end
-      m = GraphStart.findFirstMatchIn(body.substring(cursor))
     }
     defaultText.append(body.substring(cursor))
     if (defaultText.toString.trim.nonEmpty)

@@ -319,10 +319,8 @@ object JsonLd {
       .as[(String, Array[Byte])]
       .mapPartitions { files =>
         files.flatMap { case (path, bytes) =>
-          val scope = java.security.MessageDigest.getInstance("MD5")
-            .digest(path.getBytes("UTF-8")).take(8)
-            .map("%02x".format(_)).mkString + ":"
-          parseDoc(new String(bytes, java.nio.charset.StandardCharsets.UTF_8), scope)
+          parseDoc(new String(bytes, java.nio.charset.StandardCharsets.UTF_8),
+            Rio.fileScope(path))
         }
       }
     parsed.select(

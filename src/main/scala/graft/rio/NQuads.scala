@@ -192,11 +192,7 @@ object NQuads {
         lines.flatMap { case (line, path) =>
           if (line.trim.isEmpty || line.trim.startsWith("#")) Iterator.empty
           else {
-            val scope = scopes.getOrElseUpdate(path,
-              java.security.MessageDigest.getInstance("MD5")
-                .digest(path.getBytes("UTF-8")).take(8)
-                .map("%02x".format(_)).mkString + ":")
-            parseDoc(line, scope).iterator
+            parseDoc(line, scopes.getOrElseUpdate(path, Rio.fileScope(path))).iterator
           }
         }
       }

@@ -17,6 +17,16 @@ object Rio {
   def stripFileScheme(p: String): String =
     p.stripPrefix("file://").stripPrefix("file:")
 
+  /** Blank-node label scope of one source file: the first 8 bytes of
+    * the MD5 of its path, in hex, then ':'. A 64-bit salt because a
+    * 32-bit hashCode collides at ~77k files (birthday bound) and would
+    * silently fuse blank nodes of different files.
+    */
+  def fileScope(path: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(path.getBytes("UTF-8")).take(8)
+      .map("%02x".format(_)).mkString + ":"
+
   private sealed trait Fmt
   private case object LineFmt extends Fmt
   private case object TrigFmt extends Fmt

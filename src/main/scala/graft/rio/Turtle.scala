@@ -5,10 +5,14 @@ import org.apache.spark.sql.functions._
 
 import graft.rdf.Rdf
 
-/** Streaming Turtle parser (SURVEY §2.A A8: the reference bulk-loads
-  * Turtle files into named graphs via
+/** Turtle parser (SURVEY §2.A A8: the reference bulk-loads Turtle
+  * files into named graphs via
   * `repositoryConnection.add(inputFile, baseURI, RDFFormat.TURTLE,
   * context)`, `GraphDBSystemAdapter.java:286`).
+  *
+  * A document is tokenized whole, in one pass that is linear in its
+  * length: one regex `Matcher` is advanced with `region` + `lookingAt`
+  * rather than re-run on a copy of the remaining text ([[tokenize]]).
   *
   * Spark has no built-in RDF source, so ingestion is `binaryFile`
   * scan → per-file parse inside `mapPartitions` → `Dataset[Quad]`
@@ -60,32 +64,37 @@ object Turtle {
       """|\^\^|[;,.\[\](){}]""" +
       """|[A-Za-z_][A-Za-z0-9_]*""").r
 
+  /** One pass over the document: a single `Matcher` is moved token by
+    * token with `region(idx, len)` + `lookingAt()`. Matching against
+    * `doc.subSequence(idx, len)` instead copies the whole remaining
+    * document per token, which makes the parse quadratic. The region
+    * always ends at `doc.length`, so with the default opaque, anchoring
+    * bounds the match is the one the tail would give.
+    */
   private[rio] def tokenize(doc: String): Vector[Tok] = {
     val out = Vector.newBuilder[Tok]
+    val m = TokenRe.pattern.matcher(doc)
     var idx = 0
     while (idx < doc.length) {
-      TokenRe.findPrefixMatchOf(doc.subSequence(idx, doc.length)) match {
-        case None =>
-          throw new IllegalArgumentException(
-            s"turtle: unrecognized input at '${doc.substring(idx).take(30)}'")
-        case Some(m) =>
-          val s = m.matched
-          idx += s.length
-          val c = s.charAt(0)
-          if (c.isWhitespace || c == '#') ()
-          else if (c == '<') out += TIri(s.substring(1, s.length - 1))
-          else if (s.startsWith("\"\"\"") || s.startsWith("'''"))
-            out += TStr(unescape(s.substring(3, s.length - 3)))
-          else if (c == '"' || c == '\'')
-            out += TStr(unescape(s.substring(1, s.length - 1)))
-          else if (s.startsWith("_:")) out += TBNode(decodeBnodeLabel(s.substring(2)))
-          else if (c == '@') out += TLang(s.substring(1))
-          else if (c.isDigit || ((c == '+' || c == '-' || c == '.') && s.length > 1))
-            out += TNum(s)
-          else if (s.contains(":")) out += TPName(s)
-          else if (c.isLetter || c == '_') out += TWord(s)
-          else out += TPunct(s)
-      }
+      if (!m.region(idx, doc.length).lookingAt())
+        throw new IllegalArgumentException(
+          s"turtle: unrecognized input at '${doc.substring(idx).take(30)}'")
+      val s = m.group()
+      idx = m.end()
+      val c = s.charAt(0)
+      if (c.isWhitespace || c == '#') ()
+      else if (c == '<') out += TIri(s.substring(1, s.length - 1))
+      else if (s.startsWith("\"\"\"") || s.startsWith("'''"))
+        out += TStr(unescape(s.substring(3, s.length - 3)))
+      else if (c == '"' || c == '\'')
+        out += TStr(unescape(s.substring(1, s.length - 1)))
+      else if (s.startsWith("_:")) out += TBNode(decodeBnodeLabel(s.substring(2)))
+      else if (c == '@') out += TLang(s.substring(1))
+      else if (c.isDigit || ((c == '+' || c == '-' || c == '.') && s.length > 1))
+        out += TNum(s)
+      else if (s.contains(":")) out += TPName(s)
+      else if (c.isLetter || c == '_') out += TWord(s)
+      else out += TPunct(s)
     }
     out.result()
   }
@@ -401,12 +410,8 @@ object Turtle {
       .as[(String, Array[Byte])]
       .mapPartitions { files =>
         files.flatMap { case (path, bytes) =>
-          // 64-bit content salt: a 32-bit hashCode collides at ~77k
-          // files (birthday bound) and would silently fuse blank nodes
-          val scope = java.security.MessageDigest.getInstance("MD5")
-            .digest(path.getBytes("UTF-8")).take(8)
-            .map("%02x".format(_)).mkString + ":"
-          parseDoc(new String(bytes, java.nio.charset.StandardCharsets.UTF_8), scope)
+          parseDoc(new String(bytes, java.nio.charset.StandardCharsets.UTF_8),
+            Rio.fileScope(path))
         }
       }
     // case-class field order (lex, kind, dt, lang, num) matches the
@@ -426,10 +431,8 @@ object Turtle {
       .as[(String, Array[Byte])]
       .mapPartitions { files =>
         files.flatMap { case (path, bytes) =>
-          val scope = java.security.MessageDigest.getInstance("MD5")
-            .digest(path.getBytes("UTF-8")).take(8)
-            .map("%02x".format(_)).mkString + ":"
-          parseTriG(new String(bytes, java.nio.charset.StandardCharsets.UTF_8), scope)
+          parseTriG(new String(bytes, java.nio.charset.StandardCharsets.UTF_8),
+            Rio.fileScope(path))
         }
       }
     parsed.select(

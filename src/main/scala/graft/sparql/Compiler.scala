@@ -511,11 +511,7 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
       ext.select((in.columns :+ v).map(c => ext(c)).toIndexedSeq: _*)
 
     case ValuesOp(vars, rows) =>
-      rows.map { row =>
-        spark.range(1).select(vars.zip(row).map { case (v, t) =>
-          t.map(constCol).getOrElse(nullTerm).as(v)
-        }.toIndexedSeq: _*)
-      }.reduce(_.unionByName(_))
+      rowsFrame(vars, rows.map(_.map(_.map(constCol).getOrElse(nullTerm))))
 
     case Group(input, keys, aggs) =>
       val pushed = groupOverIds(input, keys, aggs)
@@ -1286,12 +1282,19 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
     */
   private def valuesIdFrame(v: ValuesOp): DataFrame = {
     import graft.core.TermDictionary.litTermId
-    v.rows.map { row =>
-      spark.range(1).select(v.vars.zip(row).map { case (name, t) =>
-        lit(litTermId(t.get.lex, t.get.kind)).as(name)
-      }.toIndexedSeq: _*)
-    }.reduce(_.unionByName(_))
+    rowsFrame(v.vars, v.rows.map(_.map(t => lit(litTermId(t.get.lex, t.get.kind)))))
   }
+
+  /** Constant rows as one relation: a one-row range exploding an array
+    * of row structs. A union of one range per row is analysed again at
+    * every `unionByName`, which is quadratic in the row count (a
+    * 5,000-row VALUES block ran for over ten minutes).
+    */
+  private def rowsFrame(vars: Seq[String], rows: Seq[Seq[Column]]): DataFrame =
+    spark.range(1)
+      .select(explode(array(rows.map(r =>
+        struct(vars.zip(r).map { case (v, c) => c.as(v) }: _*)): _*)).as("__row"))
+      .select(vars.map(v => col("__row").getField(v).as(v)): _*)
 
   /** Simple BGP on the encoded plane → (desugared patterns, scoped
     * encoded table, graph var). None when no encoded view exists or a

@@ -66,35 +66,36 @@ object SparqlParser {
       case TPunct(")") => true
       case _ => false
     }
+    // one Matcher moved by region + lookingAt: matching a copy of the
+    // remaining text per token would make tokenizing quadratic
+    val m = TokenRe.pattern.matcher(q)
     while (idx < q.length) {
-      TokenRe.findPrefixMatchOf(q.subSequence(idx, q.length)) match {
-        case None => throw ParseError("unrecognized input", q.substring(idx).take(20))
-        case Some(m) =>
-          val s = m.matched
-          idx += s.length
-          val c = s.charAt(0)
-          if (c.isWhitespace || c == '#') ()
-          else if (c == '<' && s.length > 1 && s.last == '>')
-            emit(TIri(s.substring(1, s.length - 1)))
-          else if (s.startsWith("\"\"\"") || s.startsWith("'''"))
-            emit(TStr(unescape(s.substring(3, s.length - 3))))
-          else if (c == '"' || c == '\'')
-            emit(TStr(unescape(s.substring(1, s.length - 1))))
-          // lone '?' is the zero-or-one path modifier, not a variable
-          else if ((c == '?' || c == '$') && s.length > 1) emit(TVar(s.substring(1)))
-          else if (c == '@') emit(TLang(s.substring(1)))
-          else if (c.isDigit || (c == '.' && s.length > 1 && s(1).isDigit))
-            emit(TNum(s))
-          else if ((c == '+' || c == '-') && s.length > 1 && (s(1).isDigit || s(1) == '.')) {
-            if (last != null && valueShaped(last)) {
-              emit(TPunct(c.toString)); emit(TNum(s.substring(1)))
-            } else emit(TNum(s))
-          }
-          else if (s.contains(":")) emit(TPName(s))
-          else if (c.isLetter || c == '_')
-            emit(TWord(s))
-          else emit(TPunct(s))
+      if (!m.region(idx, q.length).lookingAt())
+        throw ParseError("unrecognized input", q.substring(idx).take(20))
+      val s = m.group()
+      idx = m.end()
+      val c = s.charAt(0)
+      if (c.isWhitespace || c == '#') ()
+      else if (c == '<' && s.length > 1 && s.last == '>')
+        emit(TIri(s.substring(1, s.length - 1)))
+      else if (s.startsWith("\"\"\"") || s.startsWith("'''"))
+        emit(TStr(unescape(s.substring(3, s.length - 3))))
+      else if (c == '"' || c == '\'')
+        emit(TStr(unescape(s.substring(1, s.length - 1))))
+      // lone '?' is the zero-or-one path modifier, not a variable
+      else if ((c == '?' || c == '$') && s.length > 1) emit(TVar(s.substring(1)))
+      else if (c == '@') emit(TLang(s.substring(1)))
+      else if (c.isDigit || (c == '.' && s.length > 1 && s(1).isDigit))
+        emit(TNum(s))
+      else if ((c == '+' || c == '-') && s.length > 1 && (s(1).isDigit || s(1) == '.')) {
+        if (last != null && valueShaped(last)) {
+          emit(TPunct(c.toString)); emit(TNum(s.substring(1)))
+        } else emit(TNum(s))
       }
+      else if (s.contains(":")) emit(TPName(s))
+      else if (c.isLetter || c == '_')
+        emit(TWord(s))
+      else emit(TPunct(s))
     }
     out.result()
   }

@@ -250,6 +250,50 @@ class IngestSpec extends GraftSuite {
     assert(stmts.exists(s => s.p.lex == "]" && s.o.lex == "ex:v2"))
   }
 
+  test("turtle: a ~2 MB N-Triples document parses in linear time") {
+    // one statement per line, mixing every token shape the bulk load
+    // meets; a tokenizer that copies the document tail per token
+    // needs about a minute here
+    val xsd = "http://www.w3.org/2001/XMLSchema#"
+    val q3 = "\"\"\""
+    val lines = (0 until 20000).map { i =>
+      val s = s"<http://example.org/data/item/$i>"
+      i % 5 match {
+        case 0 => s"$s <http://example.org/schema/price> \"${i % 997}.25\"^^<${xsd}decimal> ."
+        case 1 => s"$s <http://example.org/schema/label> \"item number $i\"@en ."
+        case 2 => s"_:b$i <http://example.org/schema/of> $s ."
+        case 3 if i % 1000 == 3 =>
+          s"$s <http://example.org/schema/note> ${q3}line one\nline \"two\" $i$q3 ."
+        case _ => s"$s <http://example.org/schema/next> <http://example.org/data/item/${i + 1}> ."
+      }
+    }
+    val doc = lines.mkString("\n")
+    assert(doc.length > 2000000)
+    val t0 = System.nanoTime()
+    val stmts = Turtle.parseDoc(doc, "lin:")
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(stmts.length == lines.length)
+    assert(secs < 10.0, f"2 MB parse took $secs%.1f s")
+    assert(stmts.count(_.o.lex.startsWith("line one\n")) == 20)
+    assert(stmts.count(_.s.lex.startsWith("lin:b")) == 4000)
+  }
+
+  test("turtle: documents ending in a long string, a ''' literal or a comment") {
+    val q3 = "\"\"\""
+    val long = Turtle.parseDoc(s"<s:1> <p:x> ${q3}a \"\"quoted\"\" b$q3")
+    assert(long.map(_.o.lex) == Seq("a \"\"quoted\"\" b"))
+    val single = Turtle.parseDoc("<s:2> <p:y> '''two\nlines'''")
+    assert(single.map(_.o.lex) == Seq("two\nlines"))
+    val comment = Turtle.parseDoc("<s:3> <p:z> <o:3> . # no newline after this")
+    assert(comment.map(st => (st.s.lex, st.p.lex, st.o.lex)) == Seq(("s:3", "p:z", "o:3")))
+  }
+
+  test("turtle: unrecognized input is quoted in the error") {
+    val tail = "~tilde is not a token, nor is anything after it"
+    val e = intercept[IllegalArgumentException](Turtle.parseDoc(s"<s:1> <p:x> $tail"))
+    assert(e.getMessage == s"turtle: unrecognized input at '${tail.take(30)}'")
+  }
+
   test("turtle emit → parse round-trips statements") {
     val stmts = Turtle.parseDoc(fixture, "f1:")
     val reparsed = Turtle.parseDoc(Turtle.emit(stmts))
@@ -302,6 +346,24 @@ class IngestSpec extends GraftSuite {
     assert(rewritten.contains("INSERT DATA") && rewritten.contains("GRAPH <g:b>"))
     store.insertData("""INSERT { <s:2> <p:x> "w" . } WITH <g:b>""")
     assert(store.snapshot().filter(col("g") === "g:b").count() == 1)
+  }
+
+  test("INSERT DATA with several GRAPH blocks and default-graph triples") {
+    val d = Files.createTempDirectory("qs-multi")
+    val store = new QuadStore(spark, d.toString)
+    store.executeUpdate("""INSERT DATA {
+      <s:d1> <p:x> "d1" .
+      GRAPH <g:a> { <s:a1> <p:x> "a1" . <s:a2> <p:x> "a2" . }
+      <s:d2> <p:x> "d2" .
+      GRAPH <g:b> { <s:b1> <p:x> "b1" . }
+      GRAPH <g:c> { <s:c1> <p:x> "c1" . }
+      <s:d3> <p:x> "d3" .
+    }""")
+    val got = store.snapshot().select(col("s")("lex"), col("g"))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got == Map(
+      "s:a1" -> "g:a", "s:a2" -> "g:a", "s:b1" -> "g:b", "s:c1" -> "g:c",
+      "s:d1" -> "urn:default", "s:d2" -> "urn:default", "s:d3" -> "urn:default"))
   }
 
   test("COPY/MOVE/ADD graph management updates") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import graft.rdf.TpchRdf
-import graft.sparql.Sparql
+import graft.sparql.{Sparql, SparqlParser}
 
 /** End-to-end SPARQL engine tests: text → parse → algebra → DataFrame
   * over the TPC-H-derived quads view at sf0.001.
@@ -166,6 +166,24 @@ class SparqlSpec extends GraftSuite {
         ?r :name ?rname . ?n :region ?r .
       }""")
     assert(rows.length == 10) // 5 nations per region
+  }
+
+  test("a 5,000-row VALUES block parses in linear time and binds every row") {
+    val text = (1 to 5000).map(i => s"""(<urn:v:$i> "row $i")""")
+      .mkString("SELECT ?k ?v WHERE { VALUES (?k ?v) {\n", "\n", "\n} }")
+    val t0 = System.nanoTime()
+    SparqlParser.parse(text)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 10.0, f"5,000-row VALUES parse took $secs%.1f s")
+    val rows = q(text)
+    assert(rows.length == 5000)
+    assert(rows.map(_.getString(0)).toSet == (1 to 5000).map(i => s"urn:v:$i").toSet)
+  }
+
+  test("unrecognized query input is quoted in the ParseError") {
+    val e = intercept[SparqlParser.ParseError](
+      SparqlParser.tokenize("SELECT ?x WHERE { ?x ~ ?y . ?y ?p ?o . ?o ?q ?r }"))
+    assert(e.getMessage == "unrecognized input at '~ ?y . ?y ?p ?o . ?o'")
   }
 
   test("subquery: max balance then join") {
