@@ -111,7 +111,7 @@ object DfCache {
         // OWL-Horst closure) — Dataset.unpersist is a NO-OP for those
         // (UnpersistProbeSpec); free the entry's own LogicalRDD blocks
         // promptly instead of waiting on GC + ContextCleaner
-        graft.ext.Ranks.releaseCheckpoint(d)
+        graft.plans.Rounds.releaseRoot(d)
       } catch { case _: Throwable => () }
       case _ => ()
     }
@@ -133,7 +133,7 @@ object DfCache {
         e.getValue match {
           case d: DataFrame => try {
             d.unpersist()
-            graft.ext.Ranks.releaseCheckpoint(d) // checkpoint-leaf entries
+            graft.plans.Rounds.releaseRoot(d) // checkpoint-leaf entries
           } catch { case _: Throwable => () }
           case _ => ()
         }

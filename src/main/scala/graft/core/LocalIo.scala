@@ -34,8 +34,8 @@ object LocalIo {
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     configs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
-  /** The local session of the registry mains (Bench, Verify, OpProbe,
-    * DredAdjudicate): `local[cpus]` with one shuffle partition per
+  /** The local session of every main (Bench, Verify, OpProbe,
+    * DredAdjudicate, PlanDump, StreamProbe): `local[cpus]` with one shuffle partition per
     * core and the UI off. The first limit/collect job runs over (up
     * to) every partition at once — CollectLimit's default incremental
     * scale-up (1, 4, 16… serialized 1-task jobs) dominates the wall

@@ -34,38 +34,6 @@ import graft.plans.Rounds
   */
 object Ranks {
 
-  /** Unpersist every LogicalRDD leaf of `df`'s plan, for the
-    * operators outside [[graft.plans.Rounds]] that hold several
-    * checkpointed intermediates. `Dataset.unpersist` is a NO-OP for
-    * localCheckpoint blocks on this Spark build (UnpersistProbeSpec);
-    * the leaf RDD's own unpersist is what frees them. Release only
-    * frames whose consumers are themselves materialized: a
-    * localCheckpoint leaf cannot recompute once its blocks drop.
-    */
-  private[graft] def sealLeavesRelease(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** Release a frame's OWN checkpoint blocks — iff the frame IS a
-    * localCheckpoint root (its analyzed plan is exactly the LogicalRDD
-    * leaf). The safe drop-in for `Dataset.unpersist` on checkpointed
-    * loop frames (a NO-OP for localCheckpoint blocks on this Spark
-    * build — UnpersistProbeSpec): unlike [[sealLeavesRelease]] it
-    * never walks into a derivation's leaves, because those belong to
-    * live upstream frames (e.g. a round-1 "previous" frame that is a
-    * lazy projection of the still-needed edge checkpoint). A no-op on
-    * non-checkpoint frames, so loop code may call it unconditionally.
-    */
-  private[graft] def releaseCheckpoint(df: org.apache.spark.sql.Dataset[_]): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Fan a low-parallelism frame out to the session's core budget
     * (r19, guide §2.5/§6): at bench SF a whole table is one parquet
     * row group, so a scan-rooted frame is ONE partition and every

@@ -698,17 +698,10 @@ object Similarity {
     */
   def pqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       subspaces: Int = 8, codebookSize: Int = 16): DataFrame = {
-    val dbg = sys.env.contains("GRAFT_PQ_DEBUG")
-    var t0 = System.nanoTime()
-    def mark(l: String): Unit = if (dbg) {
-      System.err.println(f"[pq] $l: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      t0 = System.nanoTime()
-    }
     val cwords: Array[Seq[Float]] = corpus
       .orderBy(seedHash(col("vec_id")).asc, col("vec_id").asc)
       .limit(codebookSize).select("embedding").collect()
       .map(_.getSeq[Float](0))
-    mark("codebook collect")
     val dims = cwords.head.length
     val sub = dims / subspaces
     // codeword SUBVECTORS as literals: the hot expressions below fold
@@ -749,8 +742,6 @@ object Similarity {
         (0 until subspaces).map(j =>
           l2sq(col(s"qsub$j"), element_at(cwSubLits(j), col(s"code$j") + 1)))
           .reduce(_ + _).as("adist"))
-    mark("plan build")
-    if (dbg) { scored.count(); mark("scored count") }
     val w = Window.partitionBy("query_id").orderBy(col("adist").asc, col("vec_id").asc)
     scored.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)

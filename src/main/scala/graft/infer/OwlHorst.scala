@@ -3,7 +3,7 @@ package graft.infer
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.plans.Fixpoint
+import graft.plans.{Fixpoint, Rounds}
 import graft.rdf.Rdf
 
 /** OWL-Horst (pD*) forward-chaining materializer — the reference's one
@@ -36,7 +36,10 @@ import graft.rdf.Rdf
   * families, per-rule joins for the two-premise ones, plus a
   * semi-naive [[Fixpoint]] for transitive properties.
   * Rules run in rounds until no new triple appears (datalog fixpoint,
-  * `delta = rules(all) ∖ all`), with `localCheckpoint` per round.
+  * `delta = rules(all) ∖ all`). A run and a DRed delete are each one
+  * [[graft.plans.Rounds]] scope: every round's checkpoint is an
+  * `r.keep`, and what the result does not read is freed on return or
+  * throw.
   *
   * sameAs: equivalence classes are tiny (entity aliases), so the class
   * map is collected and broadcast, and affected statements are
@@ -406,13 +409,13 @@ object OwlHorst {
     * the standard collision guard. Shared by [[onePass]] and the DRed
     * rederive pass.
     */
-  private def closeTransitivePairs(tp: String, edges: DataFrame): DataFrame = {
+  private def closeTransitivePairs(r: Rounds, tp: String,
+      edges: DataFrame): DataFrame = {
     import graft.core.TermDictionary.termId
-    val dict = edges.select(col("a").as("term"))
+    val dict = r.keep(edges.select(col("a").as("term"))
       .unionByName(edges.select(col("b").as("term")))
       .distinct()
-      .select(termId(col("term")).as("id"), col("term"))
-      .localCheckpoint()
+      .select(termId(col("term")).as("id"), col("term")))
     val Array(nIds, nTerms) = dict
       .agg(countDistinct(col("id")), countDistinct(col("term")))
       .head().toSeq.map(_.asInstanceOf[Long]).toArray
@@ -519,11 +522,11 @@ object OwlHorst {
     * sub-property copies of the delta, so e.g. a functional statement
     * asserted via a sub-property still pairs in-pass). The whole pass
     * is ONE plan, executed by the caller's single
-    * `distinct().except(...).localCheckpoint()` per round; deeper
+    * `r.keep(distinct().except(...))` per round; deeper
     * cascades (e.g. sameAs expansion of in-pass statements) resolve
     * across outer rounds.
     */
-  private def onePass(spark: SparkSession, ont: Ontology,
+  private def onePass(r: Rounds, spark: SparkSession, ont: Ontology,
       ruleDf: Option[DataFrame], all: DataFrame, newIn: DataFrame,
       prevClosures: scala.collection.mutable.Map[String, DataFrame],
       equivDf: Option[DataFrame], equivChanged: Boolean,
@@ -578,7 +581,7 @@ object OwlHorst {
               fed("o")("kind") =!= LIT).isEmpty
       }
       if (!alreadyClosed) {
-        val closed = closeTransitivePairs(tp, edges)
+        val closed = closeTransitivePairs(r, tp, edges)
         prevClosures(tp) = closed
         emit(closed.select(col("a").as("s"), Rdf.iri(lit(tp)).as("p"), col("b").as("o")))
       }
@@ -695,7 +698,7 @@ object OwlHorst {
     */
   def incrementalDelete(spark: SparkSession, base: DataFrame,
       deleted: DataFrame): DataFrame =
-    incrementalDeleteDeltas(spark, base, deleted).after
+    Rounds(_ => incrementalDeleteDeltas(spark, base, deleted).after)
 
   /** [[incrementalDelete]] result carrying the inferred-plane DELTAS
     * (triple-level; the plane is single-graph): `dropInf` = prior
@@ -726,9 +729,13 @@ object OwlHorst {
     * .deleteWithInference]]) consumes this form.
     */
   def incrementalDeleteDeltas(spark: SparkSession, base: DataFrame,
+      deleted: DataFrame): DeleteResult =
+    Rounds(deleteDeltas(_, spark, base, deleted))
+
+  private def deleteDeltas(r: Rounds, spark: SparkSession, base: DataFrame,
       deleted: DataFrame): DeleteResult = {
-    val delQuads = deleted.select(col("g"), col("s"), col("p"), col("o"))
-      .filter(col("g") =!= G).distinct().localCheckpoint()
+    val delQuads = r.keep(deleted.select(col("g"), col("s"), col("p"), col("o"))
+      .filter(col("g") =!= G).distinct())
     val explicitRows = base.filter(col("g") =!= G)
     // quad-level removal: broadcast anti join (delete batches are
     // small; the big plane is scanned map-only, multiplicity kept)
@@ -741,10 +748,9 @@ object OwlHorst {
     // remaining explicit plane lose explicit support. The
     // surviving-copy probe broadcasts the SMALL deleted side under a
     // semi join (map-only over the big plane).
-    val delTrip = trip(delQuads).distinct().localCheckpoint()
-    val deletedTriples = delTrip.except(
-        tripSemiJoin(remExpl, delTrip, "left_semi", hintBc = true).distinct())
-      .localCheckpoint()
+    val delTrip = r.keep(trip(delQuads).distinct())
+    val deletedTriples = r.keep(delTrip.except(
+        tripSemiJoin(remExpl, delTrip, "left_semi", hintBc = true).distinct()))
     val infQuads = base.filter(col("g") === G)
     if (deletedTriples.isEmpty)
       // every deleted quad survives in another graph — the triple set
@@ -788,7 +794,7 @@ object OwlHorst {
     val prior = spark.conf.getOption(flagKey)
     spark.conf.set(flagKey, "false")
     try
-      doRunDelete(spark, remainingExplicit, remExpl, trip(infQuads),
+      doRunDelete(r, spark, remainingExplicit, remExpl, trip(infQuads),
         deletedTriples, ontOld)
     finally {
       prior match {
@@ -859,7 +865,7 @@ object OwlHorst {
       tpBase: Map[String, DataFrame], twoPremBase: DataFrame,
       blockSlice: DataFrame, infTrip: DataFrame,
       seedRows: Seq[org.apache.spark.sql.Row], pairs: Seq[(String, String)],
-      roundCap: Int, wsCap: Int, dbg: Boolean): DriverTaintResult = {
+      roundCap: Int, wsCap: Int): DriverTaintResult = {
     import org.apache.spark.sql.Row
     import DriverRows._
     val taint = scala.collection.mutable.LinkedHashMap.empty[(TK, TK, TK), Row]
@@ -876,7 +882,6 @@ object OwlHorst {
       cappedCollect(df, cond).toRight(DriverTaintOverflow)
     while (delta.nonEmpty && rounds < roundCap) {
       rounds += 1
-      val t0 = System.nanoTime()
       val deltaPreds = delta.map(dP(_).getString(0)).toSet
       val concl = scala.collection.mutable.ArrayBuffer.empty[Row]
       // single-premise dispatch (the broadcast rule table, driver-run)
@@ -1112,9 +1117,6 @@ object OwlHorst {
             case Right(got) => got.map(key).toSet
           }
         val fresh = cand.filterNot { case (k, _) => blocked(k) }
-        if (dbg) System.err.println(
-          f"[owlhorst-dred] driver taint round $rounds: " +
-            f"${(System.nanoTime() - t0) / 1e9}%.1fs fresh=${fresh.size}")
         if (fresh.isEmpty) delta = Nil
         else {
           taint ++= fresh
@@ -1146,7 +1148,7 @@ object OwlHorst {
   private def rederiveSeedDriver(ont: Ontology, rules: Seq[Rule],
       taintRows: Seq[org.apache.spark.sql.Row],
       prePairs: Seq[(String, String)], remaining: DataFrame,
-      remExpl: DataFrame, dbg: Boolean):
+      remExpl: DataFrame):
       Option[(Seq[org.apache.spark.sql.Row], Boolean)] = {
     import org.apache.spark.sql.Row
     import DriverRows._
@@ -1316,8 +1318,6 @@ object OwlHorst {
       val k = key(r)
       if (taintKeys(k)) seedMap.getOrElseUpdate(k, r)
     }
-    if (dbg) System.err.println(
-      s"[owlhorst-dred] driver taint=${taintRows.size} seed=${seedMap.size}")
     // ---- targeted equivalence reseed (driver form) -------------------
     var preClosed = !needP12
     var validPairs: Seq[(String, String)] = if (needP12) Nil else prePairs
@@ -1403,20 +1403,12 @@ object OwlHorst {
     Some((out.values.toSeq, preClosed))
   }
 
-  private def doRunDelete(spark: SparkSession, remainingExplicit: DataFrame,
-      remExpl: DataFrame, infTrip: DataFrame,
+  private def doRunDelete(r: Rounds, spark: SparkSession,
+      remainingExplicit: DataFrame, remExpl: DataFrame, infTrip: DataFrame,
       deletedTriples: DataFrame,
       ontOld: Option[Ontology] = None): DeleteResult = {
     import spark.implicits._
-    val dbg = sys.env.contains("GRAFT_INFER_DEBUG")
-    var tMark = System.nanoTime()
-    def mark(l: String): Unit = if (dbg) {
-      System.err.println(
-        f"[owlhorst-dred] $l: ${(System.nanoTime() - tMark) / 1e9}%.1fs")
-      tMark = System.nanoTime()
-    }
     val ont = ontology(remainingExplicit)
-    mark("ontology")
     val rules = compileRules(ont)
     val ruleDf = if (rules.isEmpty) None else Some(broadcast(ruleTable(spark, rules)))
     // pre-delete triple set as a SET: old explicit = remaining ∪
@@ -1434,9 +1426,9 @@ object OwlHorst {
     val (basePairs, baseMembers, driverPairs): (Option[DataFrame],
         Option[Set[String]], Option[Seq[(String, String)]]) =
       if (headPairs.length > broadcastLimit)
-        (Some(SameAs.pairsFromClasses(
-            SameAs.classes(spark, baseAll).localCheckpoint(), SameAs.classCap)
-          .localCheckpoint()), None, None)
+        (Some(r.keep(SameAs.pairsFromClasses(
+            SameAs.classes(r, spark, baseAll), SameAs.classCap))),
+          None, None)
       else if (headPairs.isEmpty)
         (None, Some(Set.empty[String]), Some(Nil))
       else {
@@ -1455,7 +1447,7 @@ object OwlHorst {
     // Round-invariant → checkpointed ONCE; the fixpoint otherwise
     // re-scans the dataset every round (the r15 DRed profile: the
     // slice scans, not the joins, dominated the taint cost)
-    val blockSlice: DataFrame = (baseMembers match {
+    val blockSlice: DataFrame = r.keep(baseMembers match {
       case Some(ms) if ms.size <= 1000 =>
         var cond = col("p")("lex").isin(derivablePreds: _*)
         if (ms.nonEmpty)
@@ -1463,21 +1455,19 @@ object OwlHorst {
             col("o")("lex").isin(ms.toSeq: _*)
         remExpl.filter(cond)
       case _ => remExpl
-    }).localCheckpoint()
+    })
     // round-invariant base slices, one scan each: the per-property
     // closed pair sets and the two-premise-family statement slice
     val tpBase: Map[String, DataFrame] = ont.transitive.map { tp =>
-      tp -> baseAll
+      tp -> r.keep(baseAll
         .filter(col("p")("lex") === tp && col("o")("kind") =!= LIT)
-        .select(col("s"), col("p"), col("o")).localCheckpoint()
+        .select(col("s"), col("p"), col("o")))
     }.toMap
     val twoPremPreds = (ont.functional ++ ont.invFunctional ++
       ont.someValues.map(_._2) ++ ont.allValues.map(_._2)).distinct
-    val twoPremBase: DataFrame = baseAll
+    val twoPremBase: DataFrame = r.keep(baseAll
       .filter(col("p")("lex").isin(twoPremPreds: _*) ||
-        col("p")("lex") === RdfType)
-      .localCheckpoint()
-    mark("slices")
+        col("p")("lex") === RdfType))
     // ---- axiom-delete taint seed (r16, verdict #6) ---------------------
     // Conclusions whose derivation used a compiled rule LOST with the
     // deleted axiom. ontology() closes the sub-class/property planes
@@ -1516,19 +1506,17 @@ object OwlHorst {
           lostOnt.someValues.map(_._2) ++ lostOnt.allValues.map(_._2)).distinct
         // the closed base already carries every sub-property-inherited
         // copy as a materialized row, so the family slice is complete
-        val slice = baseAll.filter(col("p")("lex").isin(famPreds: _*) ||
-          col("p")("lex") === RdfType).localCheckpoint()
+        val slice = r.keep(baseAll.filter(col("p")("lex").isin(famPreds: _*) ||
+          col("p")("lex") === RdfType))
         frames ++= twoPremiseConclusions(spark, lostOnt, slice, slice,
           p12Mirror = false).map(sel0)
       }
       frames.reduceOption(_.unionByName(_)) match {
         case None => deletedTriples.limit(0)
         case Some(f) =>
-          val cand = f.distinct().localCheckpoint()
-          cand.except(
-              tripSemiJoin(remExpl, cand, "left_semi", hintBc = true)
-                .distinct())
-            .localCheckpoint()
+          val cand = r.keep(f.distinct())
+          r.keep(cand.except(
+            tripSemiJoin(remExpl, cand, "left_semi", hintBc = true).distinct()))
       }
     }
     // FAIL-SAFE size guard (r16 review): a lost TransitiveProperty
@@ -1544,12 +1532,9 @@ object OwlHorst {
         System.err.println(s"[owlhorst-dred] axiom taint seed exceeds " +
           s"$axiomSeedCap rows — falling back to full re-materialization")
         capFallbacks.incrementAndGet()
-        (tpBase.values.toSeq :+ twoPremBase :+ blockSlice)
-          .foreach(graft.ext.Ranks.sealLeavesRelease)
         return fullDiffDeltas(materialize(spark, remainingExplicit), infTrip)
       }
     }
-    mark("axiom seed")
     // ---- phase 1: OVERDELETE taint fixpoint --------------------------
     val taintCap =
       sys.props.getOrElse("graft.infer.taint.max.rounds", "16").toInt
@@ -1574,15 +1559,14 @@ object OwlHorst {
       val head = seedFrame.limit(driverWsCap + 1).collect()
       if (head.length <= driverWsCap) {
         taintFixpointDriver(ont, rules, tpBase, twoPremBase, blockSlice,
-            infTrip, head.toSeq, driverPairs.get, taintCap, driverWsCap,
-            dbg) match {
+            infTrip, head.toSeq, driverPairs.get, taintCap,
+            driverWsCap) match {
           case DriverTaintDone(rows, _) =>
             dredDriverTaints.incrementAndGet()
-            taintAll = spark.createDataFrame(
-                new java.util.ArrayList[org.apache.spark.sql.Row](
-                  scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-                deletedTriples.schema)
-              .localCheckpoint()
+            taintAll = r.keep(spark.createDataFrame(
+              new java.util.ArrayList[org.apache.spark.sql.Row](
+                scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
+              deletedTriples.schema))
             driverTaintRows = rows
             driverDone = true
           case DriverTaintUnconverged =>
@@ -1590,8 +1574,6 @@ object OwlHorst {
               s"hit the $taintCap-round cap before convergence — falling " +
               "back to full re-materialization")
             capFallbacks.incrementAndGet()
-            (tpBase.values.toSeq :+ twoPremBase :+ blockSlice)
-              .foreach(graft.ext.Ranks.sealLeavesRelease)
             return fullDiffDeltas(materialize(spark, remainingExplicit),
               infTrip)
           case DriverTaintOverflow => () // distributed loop below
@@ -1601,7 +1583,7 @@ object OwlHorst {
     if (!driverDone) {
     taintAll = axiomSeed match {
       case Some(s0) if !s0.isEmpty =>
-        deletedTriples.unionByName(s0).distinct().localCheckpoint()
+        r.keep(deletedTriples.unionByName(s0).distinct())
       case _ => deletedTriples
     }
     var delta = taintAll
@@ -1615,7 +1597,6 @@ object OwlHorst {
     var hammered = Set.empty[String]
     while (grew && rounds < taintCap) {
       rounds += 1
-      val t0 = System.nanoTime()
       // ---- per-round branch pruning (r16): the delta is a tiny
       // checkpointed leaf, so ONE driver collect of its (s,p,o) lexes
       // prunes the round's plan EXACTLY — a rule family whose match
@@ -1708,9 +1689,9 @@ object OwlHorst {
             if (tmHead.length <= 1000) newEnds.toSeq.toDF("m")
             else tSame.select(col("s")("lex").as("m"))
               .unionByName(tSame.select(col("o")("lex").as("m"))).distinct()
-          val affected = broadcast(tm.unionByName(
+          val affected = broadcast(r.keep(tm.unionByName(
               ed.join(tm, ed("from") === tm("m")).select(ed("to").as("m")))
-            .distinct().localCheckpoint())
+            .distinct()))
           if (tmHead.length <= 1000)
             hammered ++= affected.select("m").collect().map(_.getString(0))
           emit(infTrip.join(affected,
@@ -1724,17 +1705,12 @@ object OwlHorst {
       // the explicit blockers by a REVERSED broadcast semi join —
       // tiny-left anti joins reshuffle the big slice every round
       // (the deletedTriples surviving-copy trick)
-      val cand = concls.reduceOption(_.unionByName(_))
+      val cand = r.keep(concls.reduceOption(_.unionByName(_))
         .getOrElse(deletedTriples.limit(0))
         .distinct()
-        .except(taintAll)
-        .localCheckpoint()
-      val fresh = cand.except(
-          tripSemiJoin(blockSlice, cand, "left_semi", hintBc = true)
-            .distinct())
-        .localCheckpoint()
-      if (dbg) System.err.println(f"[owlhorst-dred] taint round $rounds: " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1fs fresh=${fresh.count()}")
+        .except(taintAll))
+      val fresh = r.keep(cand.except(
+        tripSemiJoin(blockSlice, cand, "left_semi", hintBc = true).distinct()))
       if (fresh.isEmpty) grew = false
       else {
         taintAll = taintAll.unionByName(fresh)
@@ -1750,16 +1726,12 @@ object OwlHorst {
         s"$taintCap-round cap before convergence — falling back to full " +
         "re-materialization")
       capFallbacks.incrementAndGet()
-      (tpBase.values.toSeq :+ twoPremBase :+ blockSlice)
-        .foreach(graft.ext.Ranks.sealLeavesRelease)
       return fullDiffDeltas(materialize(spark, remainingExplicit), infTrip)
     }
     } // end distributed taint loop (!driverDone)
     // ---- phase 2: REDERIVE SEED --------------------------------------
-    mark("taint loop")
     val remainingInferred =
-      tripSemiJoin(infTrip, taintAll, "left_anti").localCheckpoint()
-    mark("remainingInferred")
+      r.keep(tripSemiJoin(infTrip, taintAll, "left_anti"))
     val remaining = remExpl.unionByName(remainingInferred)
     // driver-side phase 2 (r17): with the taint driver-known, the seed
     // probes run on collected rows against ONE checkpointed remaining
@@ -1767,10 +1739,10 @@ object OwlHorst {
     // through to the distributed phase 2 below unchanged
     var driverSeed: Option[(Seq[org.apache.spark.sql.Row], Boolean)] = None
     if (driverTaintRows != null) {
-      val remainingProbe = remaining.localCheckpoint()
-      try driverSeed = rederiveSeedDriver(ont, rules, driverTaintRows,
-        driverPairs.get, remainingProbe, remExpl, dbg)
-      finally graft.ext.Ranks.releaseCheckpoint(remainingProbe)
+      val remainingProbe = r.keep(remaining)
+      driverSeed = rederiveSeedDriver(ont, rules, driverTaintRows,
+        driverPairs.get, remainingProbe, remExpl)
+      r.release(remainingProbe)
     }
     var seed2: DataFrame = null
     var preClosedOut = false
@@ -1778,11 +1750,10 @@ object OwlHorst {
       val (rows, pc) = driverSeed.get
       seed2 =
         if (rows.isEmpty) deletedTriples.limit(0)
-        else spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](
-              scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-            deletedTriples.schema)
-          .localCheckpoint()
+        else r.keep(spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](
+            scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
+          deletedTriples.schema))
       preClosedOut = pc
     } else {
     val taintPreds = taintAll.select(col("p")("lex")).distinct()
@@ -1852,12 +1823,11 @@ object OwlHorst {
         }
       // the non-determining sides: typings + the (small) functional
       // family slices — never the svp/avp statement bulk
-      val cur = remaining.filter(col("p")("lex") === RdfType ||
-          col("p")("lex").isin(
-            (ontSeed.functional ++ ontSeed.invFunctional).distinct: _*))
-        .localCheckpoint()
+      val cur = r.keep(remaining.filter(col("p")("lex") === RdfType ||
+        col("p")("lex").isin(
+          (ontSeed.functional ++ ontSeed.invFunctional).distinct: _*)))
       seeds ++= twoPremiseConclusions(spark, ontSeed,
-        fed.localCheckpoint(), cur, p12Mirror = false).map(sel)
+        r.keep(fed), cur, p12Mirror = false).map(sel)
     }
     ont.transitive.foreach { tp =>
       if (taintPreds.contains(tp)) {
@@ -1878,20 +1848,18 @@ object OwlHorst {
           .select(col("s").as("a"), col("o").as("b"))
         val srcs = taintAll.filter(col("p")("lex") === tp)
           .select(col("s").as("term")).distinct()
-        val dict = edges.select(col("a").as("term"))
+        val dict = r.keep(edges.select(col("a").as("term"))
           .unionByName(edges.select(col("b").as("term")))
           .unionByName(srcs)
           .distinct()
-          .select(termId(col("term")).as("id"), col("term"))
-          .localCheckpoint()
+          .select(termId(col("term")).as("id"), col("term")))
         val Array(nIds, nTerms) = dict
           .agg(countDistinct(col("id")), countDistinct(col("term")))
           .head().toSeq.map(_.asInstanceOf[Long]).toArray
         require(nIds == nTerms,
           s"term-id collision in $tp seeded closure: $nTerms terms, $nIds ids")
-        val eIds = edges
-          .select(termId(col("a")).as("ea"), termId(col("b")).as("eb"))
-          .localCheckpoint()
+        val eIds = r.keep(edges
+          .select(termId(col("a")).as("ea"), termId(col("b")).as("eb")))
         val n0 = srcs.select(termId(col("term")).as("x"),
           termId(col("term")).as("y"))
         val pairs = Fixpoint.reachNodes(n0, f =>
@@ -1907,19 +1875,15 @@ object OwlHorst {
       }
     }
     // the seed is exactly the tainted one-step-rederivable statements
-    mark("seed frames built")
     // ∩ taint FIRST (broadcast semi over the checkpointed taint set —
     // map-only), THEN distinct: the other order shuffles the full
     // candidate stream (the dispatch pass over a data-shaped slice)
     // just to dedup rows that are about to be discarded
-    val seed = tripSemiJoin(
+    val seed = r.keep(tripSemiJoin(
         seeds.reduceOption(_.unionByName(_))
           .getOrElse(deletedTriples.limit(0)),
         taintAll, "left_semi", hintBc = true)
-      .distinct()
-      .localCheckpoint()
-    if (dbg) System.err.println(
-      s"[owlhorst-dred] taint=${taintAll.count()} seed=${seed.count()}")
+      .distinct())
     // ---- targeted equivalence reseed --------------------------------
     // The hammer stripped EVERY inferred row touching a tainted sameAs
     // edge's class. When the pre-delete pairs are driver-known and the
@@ -1980,12 +1944,9 @@ object OwlHorst {
           // full close's assembly excludes explicit rows; every other
           // seed frame is taint-guarded and taint excludes explicit —
           // the reseed was the one unguarded path, r16 red-first)
-          val rsCand = sExp.unionByName(oExp).unionByName(prs)
-            .distinct().localCheckpoint()
-          reseed = Some(rsCand.except(
-              tripSemiJoin(remExpl, rsCand, "left_semi", hintBc = true)
-                .distinct())
-            .localCheckpoint())
+          val rsCand = r.keep(sExp.unionByName(oExp).unionByName(prs).distinct())
+          reseed = Some(r.keep(rsCand.except(
+            tripSemiJoin(remExpl, rsCand, "left_semi", hintBc = true).distinct())))
         }
         // post-delete pairs: unaffected classes keep their pre-delete
         // pairs; the affected classes' pairs come from the re-cluster
@@ -2023,8 +1984,8 @@ object OwlHorst {
         val oE = src.join(pdf, src("o")("lex") === pdf("from"))
           .select(src("s").as("s"), src("p").as("p"),
             Rdf.iri(pdf("to")).as("o"))
-        tripSemiJoin(sE.unionByName(oE), taintAll, "left_semi", hintBc = true)
-          .distinct().localCheckpoint()
+        r.keep(tripSemiJoin(sE.unionByName(oE), taintAll, "left_semi",
+          hintBc = true).distinct())
       }
       validPairs match {
         case Some(vp) =>
@@ -2039,9 +2000,9 @@ object OwlHorst {
             val fromMembers = rel.map(_._1).distinct
             val src =
               if (fromMembers.size <= 1000)
-                remaining.filter(
+                r.keep(remaining.filter(
                   col("s")("lex").isin(fromMembers: _*) ||
-                    col("o")("lex").isin(fromMembers: _*)).localCheckpoint()
+                    col("o")("lex").isin(fromMembers: _*)))
               else remaining
             expSeed = Some(expandInto(broadcast(rel.toDF("from", "to")), src))
           }
@@ -2051,10 +2012,9 @@ object OwlHorst {
           // pair table to tainted endpoints — taint-bounded, so the
           // pruned table broadcasts
           case Some(te) if te.nonEmpty =>
-            val rel = basePairs.get
+            val rel = r.keep(basePairs.get
               .join(broadcast(te.toSeq.toDF("m")),
-                col("to") === col("m"), "left_semi")
-              .localCheckpoint()
+                col("to") === col("m"), "left_semi"))
             if (!rel.isEmpty)
               expSeed = Some(expandInto(broadcast(rel), remaining))
           case _ =>
@@ -2067,7 +2027,7 @@ object OwlHorst {
     }
     seed2 = (Seq(seed) ++ reseed ++ expSeed) match {
       case Seq(s0) => s0
-      case ss => ss.reduce(_.unionByName(_)).distinct().localCheckpoint()
+      case ss => r.keep(ss.reduce(_.unionByName(_)).distinct())
     }
     preClosedOut = preClosed
     } // end distributed phase 2 (driverSeed.isEmpty)
@@ -2078,40 +2038,31 @@ object OwlHorst {
       if (seed2.isEmpty) afterDelete
       else afterDelete.unionByName(
         seed2.select(lit(G).as("g"), col("s"), col("p"), col("o")))
-    mark("seed checkpoint")
     val res = run(spark, quadsIn, seed2, equivPreClosed = preClosedOut)
-    mark("reinsert run")
     // ---- taint-bounded inferred-plane deltas (r16) ---------------------
     // Both delta directions live inside the taint set (see
     // [[DeleteResult]]), so restrict each plane to the (broadcast-small)
     // taint with a map-only semi join FIRST — the except() then runs on
     // delta-sized frames, never the whole inferred plane.
-    val taintedPrior = tripSemiJoin(infTrip, taintAll, "left_semi",
-      hintBc = true).distinct().localCheckpoint()
+    val taintedPrior = r.keep(tripSemiJoin(infTrip, taintAll, "left_semi",
+      hintBc = true).distinct())
     val afterInf = res.filter(col("g") === G)
       .select(col("s"), col("p"), col("o"))
-    val taintedAfter = tripSemiJoin(afterInf, taintAll, "left_semi",
-      hintBc = true).distinct().localCheckpoint()
+    val taintedAfter = r.keep(tripSemiJoin(afterInf, taintAll, "left_semi",
+      hintBc = true).distinct())
     val dropInf = taintedPrior.except(taintedAfter)
     val addInf = taintedAfter.except(taintedPrior)
-    mark("plane deltas")
-    // run() returned an eagerly-checkpointed leaf and every delta
-    // consumer is itself checkpointed — the round-local slices can
-    // release now (LogicalRDD-leaf release: Dataset.unpersist is a
-    // no-op for localCheckpoint blocks, UnpersistProbeSpec)
-    (tpBase.values.toSeq :+ twoPremBase :+ blockSlice)
-      .foreach(graft.ext.Ranks.sealLeavesRelease)
     DeleteResult(res, dropInf, addInf)
   }
 
   private def run(spark: SparkSession, quads: DataFrame, seed: DataFrame,
-      equivPreClosed: Boolean = false): DataFrame = {
+      equivPreClosed: Boolean = false): DataFrame = Rounds { r =>
     // The deep Union-of-self-joined-lineage plans built below trip
     // Catalyst's Union constraint rewriting on struct-typed columns
     // (NoSuchElementException in rewriteConstraints). Constraint
     // propagation only infers redundant filters — safe to disable
     // while the fixpoint runs. The returned result is an eagerly
-    // localCheckpoint'ed LEAF (see end of doRun), so the flag can be
+    // checkpointed LEAF (see end of doRun), so the flag can be
     // restored here without re-arming the crash at the caller's first
     // action — and unrelated queries in the session keep
     // constraint-derived pruning.
@@ -2122,7 +2073,7 @@ object OwlHorst {
       // checkpoint the final union: every derived branch and the
       // explicit slice collapse to materialized partitions, making the
       // result plan-independent of the disabled-flag window
-      doRun(spark, quads, seed, equivPreClosed).localCheckpoint()
+      r.keep(doRun(r, spark, quads, seed, equivPreClosed))
     } finally {
       prior match {
         case Some(v) => spark.conf.set(flagKey, v)
@@ -2131,8 +2082,8 @@ object OwlHorst {
     }
   }
 
-  private def doRun(spark: SparkSession, quads: DataFrame, seed: DataFrame,
-      equivPreClosed: Boolean = false): DataFrame = {
+  private def doRun(r: Rounds, spark: SparkSession, quads: DataFrame,
+      seed: DataFrame, equivPreClosed: Boolean = false): DataFrame = {
     import spark.implicits._
     if (seed eq quads) fullCloseRuns.incrementAndGet()
     else deltaSeedRuns.incrementAndGet()
@@ -2158,7 +2109,7 @@ object OwlHorst {
     var all = quads.select(col("s"), col("p"), col("o"))
     var delta =
       if (seed eq quads) all // full materialization: seed IS the dataset
-      else seed.select(col("s"), col("p"), col("o")).distinct().localCheckpoint()
+      else r.keep(seed.select(col("s"), col("p"), col("o")).distinct())
     val prevClosures = scala.collection.mutable.Map.empty[String, DataFrame]
     // sameAs equivalence classes: a driver-side union-find fed from
     // each round's checkpointed delta while the pair count is
@@ -2183,14 +2134,12 @@ object OwlHorst {
     // matching that shape, not the whole accumulated set.
     val derivablePreds = (rules.map(_.outP) ++ ont.transitive ++
       Seq(RdfType, "owl:sameAs")).distinct
-    val dbg = sys.env.contains("GRAFT_INFER_DEBUG")
     val roundCap =
       if (seed eq quads)
         sys.props.getOrElse("graft.infer.fullclose.max.rounds", "16").toInt
       else sys.props.getOrElse("graft.infer.delta.max.rounds", "16").toInt
     while (grew && rounds < roundCap) {
       rounds += 1
-      val t0 = System.nanoTime()
       var equivChanged = false
       var equivDf: Option[DataFrame] = None
       // round 1 harvests from EVERYTHING (the incremental path's base
@@ -2230,14 +2179,14 @@ object OwlHorst {
         // symmetric/reflexive re-derivations always take this exit)
         comps match {
           case None =>
-            comps = Some(SameAs.classes(spark, all).localCheckpoint())
+            comps = Some(SameAs.classes(r, spark, all))
             equivChanged = true
             if (equivPreClosed && rounds == 1) {
               // caller asserts `all` is already expansion-closed under
               // its own classes: build the pair table but expand the
               // DELTA only (see the preClosed note below)
-              distPairs = Some(SameAs.pairsFromClasses(
-                comps.get, SameAs.classCap).localCheckpoint())
+              distPairs = Some(r.keep(SameAs.pairsFromClasses(
+                comps.get, SameAs.classCap)))
               equivChanged = false
             }
           case Some(prev) =>
@@ -2246,14 +2195,13 @@ object OwlHorst {
               .select(col("s")("lex").as("a"), col("o")("lex").as("b"))
               .filter(col("a") =!= col("b")).distinct()
             if (SameAs.bridgingCount(prev, newEdges) > 0) {
-              comps = Some(
-                SameAs.increment(spark, prev, newEdges).localCheckpoint())
+              comps = Some(SameAs.increment(r, spark, prev, newEdges))
               equivChanged = true
             }
         }
         if (equivChanged)
           distPairs = Some(
-            SameAs.pairsFromClasses(comps.get, SameAs.classCap).localCheckpoint())
+            r.keep(SameAs.pairsFromClasses(comps.get, SameAs.classCap)))
         equivDf = distPairs
       }
       val eTerms = equiv.flatMap(p => Seq(p._1, p._2)).distinct
@@ -2269,11 +2217,9 @@ object OwlHorst {
               col("o")("lex").isin(eTerms: _*)
           all.filter(cond)
         }
-      val fresh = onePass(spark, ont, ruleDf, all, delta, prevClosures,
-          equivDf, equivChanged, basePreClosed = equivPreClosed)
-        .distinct().except(relevant).localCheckpoint()
-      if (dbg) System.err.println(f"[owlhorst] round $rounds: " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1fs fresh=${fresh.count()}")
+      val fresh = r.keep(onePass(r, spark, ont, ruleDf, all, delta,
+          prevClosures, equivDf, equivChanged, basePreClosed = equivPreClosed)
+        .distinct().except(relevant))
       if (fresh.isEmpty) grew = false
       else {
         // both sides are checkpointed leaves — the lazy union is enough;
@@ -2299,7 +2245,7 @@ object OwlHorst {
         s"$roundCap-round cap before convergence — falling back to a " +
         "full close")
       capFallbacks.incrementAndGet()
-      return doRun(spark, quads, quads)
+      return doRun(r, spark, quads, quads)
     }
     // the inferred set is exactly the union of the per-round deltas
     // (each is `except`-disjoint from everything before it) plus any

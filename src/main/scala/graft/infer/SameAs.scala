@@ -6,6 +6,8 @@ import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Rounds
+
 /** Distributed sameAs equivalence classes — the 100 TB path of
   * OWL-Horst's eq-* rules (SURVEY §2.C "hard parts"). The driver-side
   * union-find in [[OwlHorst]] is right for alias-scale sameAs (a few
@@ -42,7 +44,13 @@ object SameAs {
   def classCap: Long =
     sys.props.getOrElse("graft.sameas.class.cap", "10000").toLong
 
-  private def runCc(spark: SparkSession, members: DataFrame,
+  /** `(member, cc)` over `edges`, checkpointed through `r.keep`.
+    * GraphX caches the edge and vertex RDDs of the input graph and of
+    * the components graph and frees neither; both are released once
+    * the assignment is checkpointed, so only the checkpoint outlives
+    * the call.
+    */
+  private def runCc(r: Rounds, spark: SparkSession, members: DataFrame,
       edges: DataFrame): DataFrame = {
     import spark.implicits._
     ccRuns.incrementAndGet()
@@ -55,8 +63,11 @@ object SameAs {
     require(nMembers == nIds,
       s"sameAs term-hash collision: $nMembers members, $nIds ids — widen the id")
     val es = edges.as[(Long, Long)].rdd.map { case (s, d) => Edge(s, d, 1) }
-    val cc = Graph.fromEdges(es, 0).connectedComponents().vertices
-    m.join(cc.toDF("id", "cc"), "id").select(col("member"), col("cc"))
+    val g = Graph.fromEdges(es, 0)
+    val cc = g.connectedComponents()
+    try r.keep(m.join(cc.vertices.toDF("id", "cc"), "id")
+      .select(col("member"), col("cc")))
+    finally { cc.unpersist(blocking = false); g.unpersist(blocking = false) }
   }
 
   private def sameAsEdges(triples: DataFrame): DataFrame =
@@ -70,11 +81,11 @@ object SameAs {
     * the component, deterministic). Full build from scratch — the
     * fixpoint seed.
     */
-  def classes(spark: SparkSession, triples: DataFrame): DataFrame = {
+  def classes(r: Rounds, spark: SparkSession, triples: DataFrame): DataFrame = {
     val pairs = sameAsEdges(triples)
     val members = pairs.select(col("a").as("member"))
       .unionByName(pairs.select(col("b").as("member"))).distinct()
-    runCc(spark, members,
+    runCc(r, spark, members,
       pairs.select(xxhash64(col("a")).as("src"), xxhash64(col("b")).as("dst")))
   }
 
@@ -97,7 +108,7 @@ object SameAs {
     * itself) plus the new edges — linear in |members| + |newEdges| and
     * diameter ≤ 2, not the full historical edge multiset.
     */
-  def increment(spark: SparkSession, prev: DataFrame,
+  def increment(r: Rounds, spark: SparkSession, prev: DataFrame,
       newEdges: DataFrame): DataFrame = {
     val newMembers = newEdges.select(col("a").as("member"))
       .unionByName(newEdges.select(col("b").as("member")))
@@ -106,7 +117,7 @@ object SameAs {
       .select(xxhash64(col("member")).as("src"), col("cc").as("dst"))
       .unionByName(
         newEdges.select(xxhash64(col("a")).as("src"), xxhash64(col("b")).as("dst")))
-    runCc(spark, members, edges)
+    runCc(r, spark, members, edges)
   }
 
   /** Ordered `(from, to)` cross pairs within each class (`from ≠ to`)
@@ -129,8 +140,4 @@ object SameAs {
     val r = kept.select(col("cc"), col("member").as("to"))
     l.join(r, "cc").filter(col("from") =!= col("to")).select("from", "to")
   }
-
-  /** One-shot convenience: classes + capped cross pairs. */
-  def crossPairs(spark: SparkSession, triples: DataFrame): DataFrame =
-    pairsFromClasses(classes(spark, triples), classCap)
 }

@@ -27,6 +27,9 @@ import org.apache.spark.storage.StorageLevel
   *  - per-delta caching truncates recompute lineage (the union DAG is
   *    narrow over cached leaves), bounding rounds by graph diameter,
   *    not path count. FixpointSpec asserts the shuffle-records budget.
+  *  - each call is one [[Rounds]] scope: the seed checkpoint is freed
+  *    on return, the sealed result is handed to an enclosing scope
+  *    (OwlHorst's) or, outside one, left to the caller.
   */
 object Fixpoint {
 
@@ -39,71 +42,78 @@ object Fixpoint {
     * `subtractByKey` would miss duplicates (normalize binary to base64
     * first). `groupCols` closes each group independently (e.g. per
     * named graph) in one shared fixpoint whose rounds are bounded by
-    * the max diameter across groups.
+    * the max diameter across groups. A reach loop seeded with the edge
+    * set: each round joins the new pairs' heads onto the edges.
     */
   def closure(edges0: DataFrame, joinCond: (DataFrame, DataFrame) => Column,
-      maxRounds: Int = 64, groupCols: Seq[String] = Nil): DataFrame = {
-    val spark = edges0.sparkSession
-    val sc = spark.sparkContext
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val part = new HashPartitioner(parts)
+      maxRounds: Int = 64, groupCols: Seq[String] = Nil): DataFrame =
     // normalize column order to (groupCols, a, b): candidate rows are
     // built in that order and Row-level set ops are positional
-    val edges = edges0
-      .select((groupCols.map(col) :+ col("a") :+ col("b")): _*)
-      .distinct().localCheckpoint()
-    val schema = edges.schema
-    def keyed(df: DataFrame): RDD[(Row, Unit)] =
-      df.rdd.map(r => (r, ())).partitionBy(part)
-
-    var deltas = List(
-      keyed(edges).persist(StorageLevel.MEMORY_AND_DISK))
-    deltas.head.count()
-    var frontier = edges
-    var round = 0
-    var done = false
-    while (!done && round < maxRounds) {
-      round += 1
+    reach(edges0.select((groupCols.map(col) :+ col("a") :+ col("b")): _*),
+        seedVisited = true, maxRounds, "closure") { edges =>
       val step = groupCols.foldLeft(
           edges.withColumnRenamed("a", "m").withColumnRenamed("b", "b2")) {
         (d, g) => d.withColumnRenamed(g, s"__$g")
       }
-      val cond = (joinCond(frontier, step) +:
-        groupCols.map(g => frontier(g) === step(s"__$g"))).reduce(_ && _)
-      val cand = frontier.join(step, cond)
-        .select((groupCols.map(g => frontier(g).as(g)) :+
-          frontier("a").as("a") :+ col("b2").as("b")): _*)
-        .distinct()
-      // novelty: narrow set-difference against the partitioner-aware
-      // union of all cached deltas — count() materializes the cache in
-      // one pass and doubles as the emptiness test
-      val next = keyed(cand).subtractByKey(sc.union(deltas))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (next.count() == 0) { done = true; next.unpersist(blocking = false) }
-      else {
-        deltas = next :: deltas
-        frontier = spark.createDataFrame(next.keys, schema)
+      frontier => {
+        val cond = (joinCond(frontier, step) +:
+          groupCols.map(g => frontier(g) === step(s"__$g"))).reduce(_ && _)
+        frontier.join(step, cond)
+          .select((groupCols.map(g => frontier(g).as(g)) :+
+            frontier("a").as("a") :+ col("b2").as("b")): _*)
       }
     }
-    if (!done) System.err.println(
-      s"[fixpoint] WARNING: closure stopped at the $maxRounds-round cap " +
-        "before convergence — results may be incomplete")
-    finish(spark.createDataFrame(sc.union(deltas).keys, schema), deltas)
-  }
 
-  /** Materialize the fixpoint result (localCheckpoint truncates the
-    * lineage onto fresh blocks owned by the returned DataFrame), then
-    * release every per-round delta — otherwise each closure/BFS call
-    * leaks `diameter` cached RDDs for the session lifetime, exactly
-    * the heap/disk creep that destabilizes long benchmark runs. The
-    * checkpointed blocks themselves are reclaimed by the
-    * ContextCleaner once the caller drops the DataFrame.
+  /** The one semi-naive loop behind [[closure]] and [[reachNodes]],
+    * run as one [[Rounds]] scope. The distinct `seed` is the first
+    * frontier (checkpointed through `r.keep`); with `seedVisited` it is
+    * also the first visited delta and part of the result. Each round
+    * steps the frontier (`step` gets the checkpointed seed), dedups,
+    * and keeps only rows no earlier delta holds — a narrow
+    * `subtractByKey` against the co-partitioned delta union, whose
+    * `count()` both caches the delta and tests for the stop. The
+    * result is the union of the visited deltas, sealed by `r.keep`;
+    * the RDD deltas are unpersisted on return and on a throw.
     */
-  private def finish(result: DataFrame, deltas: List[RDD[(Row, Unit)]]): DataFrame = {
-    val out = result.localCheckpoint(true)
-    deltas.foreach(_.unpersist(blocking = false))
-    out
-  }
+  private def reach(seed: DataFrame, seedVisited: Boolean, maxRounds: Int,
+      what: String)(step: DataFrame => DataFrame => DataFrame): DataFrame =
+    Rounds { r =>
+      val spark = seed.sparkSession
+      val sc = spark.sparkContext
+      val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+      val start = r.keep(seed.distinct())
+      val schema = start.schema
+      val next = step(start)
+      var cached = List.empty[RDD[(Row, Unit)]]
+      def visit(rows: RDD[(Row, Unit)]): Long = {
+        cached = rows.persist(StorageLevel.MEMORY_AND_DISK) :: cached
+        rows.count()
+      }
+      def keyed(df: DataFrame): RDD[(Row, Unit)] =
+        df.rdd.map(row => (row, ())).partitionBy(part)
+      try {
+        var deltas = List.empty[RDD[(Row, Unit)]]
+        if (seedVisited) { val d = keyed(start); visit(d); deltas = List(d) }
+        var frontier = start
+        var round = 0
+        var done = false
+        while (!done && round < maxRounds) {
+          round += 1
+          val k = keyed(next(frontier).distinct())
+          val fresh = if (deltas.isEmpty) k else k.subtractByKey(sc.union(deltas))
+          if (visit(fresh) == 0) done = true
+          else {
+            deltas = fresh :: deltas
+            frontier = spark.createDataFrame(fresh.keys, schema)
+          }
+        }
+        if (!done) System.err.println(
+          s"[fixpoint] WARNING: $what stopped at the $maxRounds-round cap " +
+            "before convergence — results may be incomplete")
+        if (deltas.isEmpty) seed.limit(0)
+        else r.keep(spark.createDataFrame(sc.union(deltas).keys, schema))
+      } finally cached.foreach(_.unpersist(blocking = false))
+    }
 
   /** Closure for term-struct pairs (join on lex+kind identity). */
   def closureTerms(edges: DataFrame): DataFrame =
@@ -135,41 +145,12 @@ object Fixpoint {
     * [[closure]]: when a path endpoint is bound, BFS from it touches
     * only the reachable subgraph instead of closing the whole edge
     * relation — the difference between O(reachable) and O(graph) work
-    * at store scale. Same discipline: distinct frontier, narrow
-    * subtract against co-partitioned visited deltas.
+    * at store scale. Same loop: distinct frontier, narrow subtract
+    * against co-partitioned visited deltas.
     */
   def reachNodes(n0: DataFrame, step: DataFrame => DataFrame,
-      maxRounds: Int = 64): DataFrame = {
-    val spark = n0.sparkSession
-    val sc = spark.sparkContext
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val part = new HashPartitioner(parts)
-    var frontier = n0.distinct().localCheckpoint()
-    val schema = frontier.schema
-    def keyed(df: DataFrame): RDD[(Row, Unit)] =
-      df.rdd.map(r => (r, ())).partitionBy(part)
-
-    var deltas: List[RDD[(Row, Unit)]] = Nil
-    var round = 0
-    var done = false
-    while (!done && round < maxRounds) {
-      round += 1
-      val s = step(frontier).distinct()
-      val sk = keyed(s)
-      val next = (if (deltas.isEmpty) sk else sk.subtractByKey(sc.union(deltas)))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (next.count() == 0) { done = true; next.unpersist(blocking = false) }
-      else {
-        deltas = next :: deltas
-        frontier = spark.createDataFrame(next.keys, schema)
-      }
-    }
-    if (!done) System.err.println(
-      s"[fixpoint] WARNING: reachability stopped at the $maxRounds-round cap " +
-        "before convergence — results may be incomplete")
-    if (deltas.isEmpty) n0.limit(0)
-    else finish(spark.createDataFrame(sc.union(deltas).keys, schema), deltas)
-  }
+      maxRounds: Int = 64): DataFrame =
+    reach(n0, seedVisited = false, maxRounds, "reachability")(_ => step)
 
   /** Closure for plain string pairs. */
   def closureStrings(edges: DataFrame): DataFrame =

@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions.broadcast
 /** Checkpoint owner for one operator, iterative or staged (the
   * Pregelix shape: each round or stage is cut off from its lineage by
   * an eager `localCheckpoint` and owned by the loop that made it).
-  * Every checkpoint the operator takes goes through [[keep]]; [[swap]] replaces a round's
-  * state and frees the one it supersedes; when the body returns,
-  * every tracked checkpoint the result does not read as a
-  * `LogicalRDD` leaf is released. No terminal seal, no extra job: a
+  * Every checkpoint the operator takes goes through [[keep]]; [[swap]]
+  * replaces a round's state and frees the one it supersedes; when the
+  * body returns, every tracked checkpoint the result does not read as
+  * a `LogicalRDD` leaf is released. No terminal seal, no extra job: a
   * result that is itself a [[keep]] is the operator's own seal.
   *
   * Release is by ownership, never by plan walk: only a frame that IS
@@ -21,8 +21,17 @@ import org.apache.spark.sql.functions.broadcast
   * unpersist` cannot do this — it is a no-op for localCheckpoint
   * blocks (UnpersistProbeSpec); the leaf RDD's own unpersist is what
   * frees them.
+  *
+  * Nesting: a scope opened inside another scope on the same thread
+  * (OwlHorst's run calling [[Fixpoint]]) hands the checkpoints its
+  * result reads to the enclosing scope, which frees them when its own
+  * result does not read them. A scope on another thread never attaches
+  * to this one. So a frame made inside a body may reach only that
+  * body's result — never a cache or a field, whose blocks the
+  * enclosing scope would free. [[releaseRoot]] is the one release
+  * outside a scope.
   */
-final class Rounds private () {
+final class Rounds private (outer: Option[Rounds]) {
   private val held = scala.collection.mutable.LinkedHashMap.empty[Int, RDD[_]]
 
   /** Eagerly checkpoint `df` and track the blocks. The pre-checkpoint
@@ -48,9 +57,12 @@ final class Rounds private () {
     Rounds.root(df).flatMap(r => held.remove(r.id))
       .foreach(_.unpersist(blocking = false))
 
-  private def releaseExcept(live: Set[Int]): Unit = {
-    held.valuesIterator.filterNot(r => live(r.id))
-      .foreach(_.unpersist(blocking = false))
+  /** Free what `live` does not name; hand the rest to the enclosing
+    * scope, if any. */
+  private def close(live: Set[Int]): Unit = {
+    val (kept, freed) = held.values.partition(r => live(r.id))
+    freed.foreach(_.unpersist(blocking = false))
+    outer.foreach(o => kept.foreach(r => o.held(r.id) = r))
     held.clear()
   }
 }
@@ -65,21 +77,37 @@ object Rounds {
     */
   private val BroadcastVertexCap = 5000000L
 
-  /** Run one operator's body; release what its result does not read
-    * (everything, if the result is not a frame or the body throws).
+  /** The open scopes of this thread, innermost first. A plain
+    * ThreadLocal: an inheritable one would attach the threads Spark
+    * spawns to the scope that spawned them.
+    */
+  private val open = ThreadLocal.withInitial[List[Rounds]](() => Nil)
+
+  /** Run one operator's body; release every tracked checkpoint its
+    * result does not read — the result frame, or the frame fields of a
+    * case class or tuple result — and all of them if the body throws.
     */
   def apply[T](body: Rounds => T): T = {
-    val r = new Rounds
+    val enclosing = open.get
+    val r = new Rounds(enclosing.headOption)
+    open.set(r :: enclosing)
     val out =
       try body(r)
-      catch { case e: Throwable => r.releaseExcept(Set.empty); throw e }
-    r.releaseExcept(out match {
-      case d: Dataset[_] => d.queryExecution.analyzed.collectLeaves()
-        .collect { case l: LogicalRDD => l.rdd.id }.toSet
-      case _ => Set.empty
+      catch { case e: Throwable => r.close(Set.empty); throw e }
+      finally open.set(enclosing)
+    r.close(out match {
+      case p: Product => p.productIterator.flatMap(reads).toSet
+      case x => reads(x)
     })
     out
   }
+
+  /** Free `df`'s blocks now if it is a checkpoint root; a no-op for any
+    * other frame. The one release outside a scope: for checkpoints a
+    * scope cannot own (a cache entry, a guard's key frame).
+    */
+  private[graft] def releaseRoot(df: Dataset[_]): Unit =
+    root(df).foreach(_.unpersist(blocking = false))
 
   /** Broadcast hint for a per-round vertex-state table, guarded by one
     * count job over `vertices`: without the guard the hint would bypass
@@ -87,6 +115,12 @@ object Rounds {
     */
   def broadcastVertexState(vertices: DataFrame): DataFrame => DataFrame =
     if (vertices.count() <= BroadcastVertexCap) broadcast(_) else identity
+
+  private def reads(x: Any): Set[Int] = x match {
+    case d: Dataset[_] => d.queryExecution.analyzed.collectLeaves()
+      .collect { case l: LogicalRDD => l.rdd.id }.toSet
+    case _ => Set.empty
+  }
 
   private def root(df: Dataset[_]): Option[RDD[_]] =
     df.queryExecution.analyzed match {

@@ -16,8 +16,10 @@ import Algebra._
   * pushdown, column pruning, join strategy (broadcast vs shuffle via
   * AQE) and whole-stage codegen; the only imperative loop is the
   * transitive-closure fixpoint for `p*`/`p+` paths, which Catalyst
-  * cannot express (no recursion) — it runs driver-side with
-  * `localCheckpoint` per round to truncate plan lineage (SURVEY §4.2).
+  * cannot express (no recursion) — it runs driver-side as one
+  * [[graft.plans.Rounds]] scope ([[graft.plans.Fixpoint]]) that
+  * checkpoints its rounds and frees what its result does not read
+  * (SURVEY §4.2).
   *
   * Join ordering inside a BGP uses a bound-term selectivity heuristic
   * (most-constant pattern first, then greedy shared-variable chaining) —
@@ -2975,12 +2977,11 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
         // lesson — so the count stays a full, now-cheap, leaf count.)
         val keysCk = keys.localCheckpoint()
         if (keysCk.count() > 1000) {
-          // release the oversized frame's cached partitions NOW — the
-          // bail path is exactly where the leaf is big (r16, ADVICE);
-          // the success leaf is <=1000 rows and GC-collected.
-          // LogicalRDD-leaf release: Dataset.unpersist is a no-op for
-          // localCheckpoint blocks (UnpersistProbeSpec)
-          graft.ext.Ranks.sealLeavesRelease(keysCk)
+          // release the oversized frame's blocks NOW — the bail path is
+          // exactly where the leaf is big; the success leaf is <=1000
+          // rows and GC-collected. keysCk is a checkpoint root, so the
+          // root release frees it (Dataset.unpersist would not)
+          graft.plans.Rounds.releaseRoot(keysCk)
           return None
         }
         keysCk.crossJoin(lr)
@@ -3081,12 +3082,11 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
         // probe — the round-7 serialized-scale-up lesson.)
         val keysCk = keys.localCheckpoint()
         if (keysCk.count() > 1000) {
-          // release the oversized frame's cached partitions NOW — the
-          // bail path is exactly where the leaf is big (r16, ADVICE);
-          // the success leaf is <=1000 rows and GC-collected.
-          // LogicalRDD-leaf release: Dataset.unpersist is a no-op for
-          // localCheckpoint blocks (UnpersistProbeSpec)
-          graft.ext.Ranks.sealLeavesRelease(keysCk)
+          // release the oversized frame's blocks NOW — the bail path is
+          // exactly where the leaf is big; the success leaf is <=1000
+          // rows and GC-collected. keysCk is a checkpoint root, so the
+          // root release frees it (Dataset.unpersist would not)
+          graft.plans.Rounds.releaseRoot(keysCk)
           return None
         }
         keysCk.crossJoin(lr)
@@ -3415,7 +3415,7 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
         val keysCk = keys.localCheckpoint()
         if (keysCk.count() > 1000) {
           // same oversized-frame release as the semi-join guard above
-          graft.ext.Ranks.sealLeavesRelease(keysCk)
+          graft.plans.Rounds.releaseRoot(keysCk)
           return None
         }
         if (emptyGroup) keysCk.join(idM, lit(true), "left_outer")

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Diagnostic main: runs the streaming gates with a progress listener
@@ -15,14 +14,7 @@ object StreamProbe {
     val gates = sys.env.getOrElse("SPARK_GRAFT_ONLY",
       "st_stream_window,st_stream_dedup,st_watermark_drop,st_stream_join")
       .split(",").map(_.trim).toSeq
-    val builder = graft.core.LocalIo(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false"))
-    // A/B knob: SPARK_PROBE_CONF="k=v;k2=v2" extra session confs
-    sys.env.get("SPARK_PROBE_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+    val spark = graft.core.LocalIo.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     // self-profiler: sample executor-task + stream-execution threads
     val sampler = new Thread(() => {
       while (true) {

@@ -17,12 +17,6 @@ object OpProbe {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.LocalIo.session(cpus)
-    // experiment passthrough: SPARK_GRAFT_PROBE_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach(_.split(";")
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      })
     spark.sparkContext.setLogLevel("ERROR")
     @volatile var rep = 0
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named registry gates to files —
   * the before/after plan evidence of the optimization rounds
   * (plans/rNN/<gate>_{before,after}.txt). Not a benchmark: runs at a
@@ -17,11 +15,7 @@ object PlanDump {
     require(args.length == 3, "PlanDump <outDir> <suffix> <gates,csv>")
     val Array(outDir, suffix, gatesCsv) = args
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = graft.core.LocalIo(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.core.LocalIo.session("4")
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     // sealed/iterative gates truncate their returned frame's plan to a

@@ -28,7 +28,7 @@ class FixpointSpec extends GraftSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val closed = Fixpoint.closureStrings(edges)
+      val closed = assertCheckpointsOwned(Fixpoint.closureStrings(edges))
       val cnt = closed.count()
       org.apache.spark.graft.ListenerSync.await(spark.sparkContext)
       assert(cnt == n.toLong * (n - 1) / 2) // all i<j pairs of a 40-chain
@@ -48,8 +48,8 @@ class FixpointSpec extends GraftSuite {
     val edges = Seq(
       ("g1", "a", "b"), ("g1", "b", "c"),
       ("g2", "a", "b")).toDF("g", "a", "b")
-    val closed = Fixpoint.closure(edges, (f, s) => f("b") === s("m"),
-        groupCols = Seq("g"))
+    val closed = assertCheckpointsOwned(Fixpoint.closure(edges,
+        (f, s) => f("b") === s("m"), groupCols = Seq("g")))
       .as[(String, String, String)].collect().toSet
     assert(closed == Set(
       ("g1", "a", "b"), ("g1", "b", "c"), ("g1", "a", "c"),
@@ -61,8 +61,8 @@ class FixpointSpec extends GraftSuite {
     val edges = (Seq(("s", "a"), ("a", "b"), ("b", "s")) ++
       Seq(("x", "y"), ("y", "z"))).toDF("from", "to")
     val seeds = Seq("s").toDF("n")
-    val reached = Fixpoint.reachNodes(seeds, f =>
-        edges.join(f, edges("from") === f("n")).select(edges("to").as("n")))
+    val reached = assertCheckpointsOwned(Fixpoint.reachNodes(seeds, f =>
+        edges.join(f, edges("from") === f("n")).select(edges("to").as("n"))))
       .as[String].collect().toSet
     assert(reached == Set("a", "b", "s")) // cycle closes back to the seed
   }

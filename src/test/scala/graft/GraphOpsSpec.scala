@@ -461,4 +461,38 @@ class GraphOpsSpec extends GraftSuite {
     }
     assert(persistedRdds() -- before == checkpointLeaves(out))
   }
+
+  test("Rounds: a nested scope hands its result's checkpoints to the enclosing scope") {
+    import spark.implicits._
+    val before = persistedRdds()
+    var inner: DataFrame = null
+    val out = Rounds { _ =>
+      inner = Rounds(r => r.keep(Seq(1L, 2L).toDF("v")))
+      assert(checkpointLeaves(inner).subsetOf(persistedRdds()),
+        "the inner scope freed the checkpoint its result reads")
+      Rounds(r => r.keep(inner.select((col("v") * 10).as("v"))))
+    }
+    assert(out.as[Long].collect().sorted.toSeq == Seq(10L, 20L))
+    // the outer result reads only its own seal: the enclosing scope
+    // freed the inner result it was handed
+    assert((persistedRdds() & checkpointLeaves(inner)).isEmpty,
+      "the enclosing scope did not free the nested scope's result")
+    assert(persistedRdds() -- before == checkpointLeaves(out))
+  }
+
+  test("Rounds: a scope opened on another thread does not attach to the outer scope") {
+    import spark.implicits._
+    var other: DataFrame = null
+    Rounds { _ =>
+      val t = new Thread(() => other = Rounds(r => r.keep(Seq(1L).toDF("v"))))
+      t.start()
+      t.join()
+      0L
+    }
+    assert(checkpointLeaves(other).nonEmpty &&
+      checkpointLeaves(other).subsetOf(persistedRdds()),
+      "a scope on this thread freed another thread's result")
+    assert(other.count() == 1L)
+    Rounds.releaseRoot(other)
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,21 +23,24 @@ abstract class GraftSuite extends AnyFunSuite {
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   /** Ids of the checkpoint RDDs `df` reads as `LogicalRDD` leaves. */
-  def checkpointLeaves(df: DataFrame): Set[Int] =
+  def checkpointLeaves(df: Dataset[_]): Set[Int] =
     df.queryExecution.analyzed.collectLeaves()
       .collect { case l: LogicalRDD => l.rdd.id }.toSet
 
   /** Runs `op` and forces its result: the persisted-RDD set may grow
-    * only by the checkpoints a frame result reads (by none for any
-    * other result) — every intermediate checkpoint was released.
+    * only by the checkpoints the result reads — a frame result, or the
+    * frame fields of a case class or tuple result (none for any other
+    * result) — so every intermediate checkpoint was released.
     */
   def assertCheckpointsOwned[T](op: => T): T = {
     val before = persistedRdds()
     val out = op
-    val reads = out match {
-      case df: DataFrame => df.collect(); checkpointLeaves(df)
-      case _ => Set.empty[Int]
+    val frames = out match {
+      case d: Dataset[_] => Seq(d)
+      case p: Product => p.productIterator.collect { case d: Dataset[_] => d }.toSeq
+      case _ => Nil
     }
+    val reads = frames.flatMap { d => d.collect(); checkpointLeaves(d) }.toSet
     val added = persistedRdds() -- before
     assert(added.subsetOf(reads),
       s"persisted RDDs the result does not read: ${added -- reads}")

@@ -911,6 +911,23 @@ class SparqlSpec extends GraftSuite {
     assert(cross == crossWant && cross.length == 4)
   }
 
+  test("correlated EXISTS over MINUS: an oversized key frame fails loud and is freed") {
+    // the shape of the bounded cross join above, keyed by the 1,500
+    // distinct order prices: past the 1,000-key bound the guard frees
+    // its checkpointed key frame and the query fails loud
+    val all = q("SELECT ?o WHERE { ?o :totalprice ?p }")
+    assert(all.length > 1000)
+    val before = persistedRdds()
+    val ex = intercept[UnsupportedOperationException] {
+      q("""SELECT ?o WHERE { ?o :totalprice ?p .
+             FILTER EXISTS { ?s a :Supplier
+               MINUS { ?s a :Supplier . FILTER(?p > 100000) } } }""")
+    }
+    assert(ex.getMessage.contains("oversized-key-frame"))
+    assert(persistedRdds() == before,
+      s"the bail path left persisted: ${persistedRdds() -- before}")
+  }
+
   test("correlated EXISTS decorrelates inside compound booleans and BIND") {
     // EXISTS && extra condition: the flag-column path must substitute
     val got = q("""SELECT ?c WHERE {
