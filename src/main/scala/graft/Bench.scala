@@ -86,7 +86,7 @@ object Bench {
         store.append(graft.rdf.TpchRdf.graphDf(spark, sfDir), "bench")
         store.compact()
         graft.core.DfCache.df(spark, sfDir, "quads") {
-          store.snapshot().select("g", "s", "p", "o")
+          store.snapshot()
         }
         SparkEntry.queries("r_ask")(spark, sfDir).count()
         // inference is a LOAD-time cost in the reference (ruleset

@@ -11,7 +11,7 @@ import graft.sparql.Sparql
   * run SPARQL updates, materialize inference at load time, and query
   * (SELECT / ASK / CONSTRUCT / DESCRIBE) with results as DataFrames or
   * W3C SPARQL-JSON. Everything delegates to the real modules; this
-  * object only fixes the wiring (snapshot per query = the reference's
+  * object only fixes the wiring (one store pin per query = the reference's
   * repository-connection read isolation,
   * `GraphDBSystemAdapter.java:246,281`).
   *
@@ -72,13 +72,15 @@ final class Graft private[graft] (spark: SparkSession, dir: String) {
   def exportNQuads(path: String): Unit =
     graft.rio.NQuads.write(store.snapshot(), path)
 
-  /** SELECT/ASK/CONSTRUCT/DESCRIBE over the current snapshot. A
-    * compacted store also serves its id-encoded sidecar, so simple
-    * BGPs join on 8-byte term ids and decode at the result edge.
+  /** SELECT/ASK/CONSTRUCT/DESCRIBE over one pinned version of the
+    * store: both planes come from one manifest read, and the id plane
+    * lets simple BGPs join on 8-byte term ids and decode at the result
+    * edge.
     */
-  def query(text: String): DataFrame =
-    Sparql.query(spark, store.snapshot(), text,
-      encoded = store.snapshotEncoded())
+  def query(text: String): DataFrame = {
+    val pin = store.pin()
+    Sparql.query(spark, pin.quads, text, encoded = pin.encoded)
+  }
 
   /** W3C SPARQL 1.1 Results JSON for any query form: SELECT bindings
     * (streamed serialization), the ASK boolean envelope, and a
@@ -111,9 +113,10 @@ final class Graft private[graft] (spark: SparkSession, dir: String) {
           "DataFrame form instead"
       else s"${if (parsed.isAsk) "ASK" else "SELECT"} results have no " +
         s"'$fmt' serialization (supported: ${allowed.toSeq.sorted.mkString(", ")})")
-    val c = new graft.sparql.Compiler(spark, store.snapshot(),
+    val pin = store.pin()
+    val c = new graft.sparql.Compiler(spark, pin.quads,
       fromGraphs = parsed.fromGraphs, fromNamed = parsed.fromNamed,
-      encoded = store.snapshotEncoded())
+      encoded = pin.encoded)
     Sparql.evaluate(c, parsed) match {
       case Sparql.AskResult(b) =>
         if (fmt == "json") SparqlJson.ask(b) else graft.rio.SparqlXml.ask(b)

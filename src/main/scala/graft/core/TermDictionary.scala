@@ -1,7 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Dictionary encoding of RDF terms into stable 64-bit ids — the
   * rebuild of GraphDB's entity pool (`owlim:entity-index-size` /
@@ -46,6 +47,13 @@ object TermDictionary {
     // seed 42L = the default the xxhash64 SQL function constructs with
     XxHash64(Seq(Literal(lex), Literal(kind)), 42L).eval(null).asInstanceOf[Long]
   }
+
+  /** Schema of [[build]]'s output — the store's `-dict` sidecar format:
+    * the id and the quad term struct it resolves to.
+    */
+  val DictSchema: StructType = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("term", Encoders.product[graft.rio.Turtle.Term].schema)))
 
   /** Distinct terms of the dataset with their ids: `(id, term)`.
     *
@@ -94,6 +102,10 @@ object TermDictionary {
       s"cross-segment term-id collision: $nIdent distinct term " +
         s"identities, $nIds distinct ids — widen the id")
   }
+
+  /** Schema of [[encode]]'s output — the store's `-enc` sidecar format. */
+  val EncodedSchema: StructType = StructType(StructField("g", StringType) +:
+    Seq("s_id", "p_id", "o_id").map(StructField(_, LongType, nullable = false)))
 
   /** Encode quads to `(g, s_id, p_id, o_id)` — ids are pure column
     * expressions (no dictionary join needed on the encode side).

@@ -790,19 +790,31 @@ object OwlHorst {
         Some(ontology(explicitRows)) }
     // same constraint-propagation guard window as [[run]] — the taint
     // rounds build the same deep Union-of-lineage plans
+    withoutConstraintPropagation(spark)(
+      doRunDelete(r, spark, remainingExplicit, remExpl, trip(infQuads),
+        deletedTriples, ontOld))
+  }
+
+  /** Runs `body` with Catalyst constraint propagation off and restores
+    * the session's prior setting afterwards (see [[run]] for why).
+    */
+  private def withoutConstraintPropagation[A](spark: SparkSession)(body: => A): A = {
     val flagKey = "spark.sql.constraintPropagation.enabled"
     val prior = spark.conf.getOption(flagKey)
     spark.conf.set(flagKey, "false")
-    try
-      doRunDelete(r, spark, remainingExplicit, remExpl, trip(infQuads),
-        deletedTriples, ontOld)
-    finally {
-      prior match {
-        case Some(v) => spark.conf.set(flagKey, v)
-        case None => spark.conf.unset(flagKey)
-      }
+    try body
+    finally prior match {
+      case Some(v) => spark.conf.set(flagKey, v)
+      case None => spark.conf.unset(flagKey)
     }
   }
+
+  /** owl:sameAs pair count past which equivalence classes leave the
+    * driver union-find for distributed connected components
+    * (`graft.sameas.broadcast.limit`).
+    */
+  private def sameAsBroadcastLimit: Int =
+    sys.props.getOrElse("graft.sameas.broadcast.limit", "50000").toInt
 
   // ---- driver-side taint fixpoint (r17, the r16 verdict's #2) --------
 
@@ -1418,8 +1430,7 @@ object OwlHorst {
     // of its owl:sameAs rows carries the full class structure — no
     // fixpoint. Driver union-find at alias scale, distributed CC past
     // the broadcast limit (the doRun flip).
-    val broadcastLimit =
-      sys.props.getOrElse("graft.sameas.broadcast.limit", "50000").toInt
+    val broadcastLimit = sameAsBroadcastLimit
     val headPairs = baseAll.filter(col("p")("lex") === "owl:sameAs")
       .select(col("s")("lex"), col("o")("lex"))
       .limit(broadcastLimit + 1).collect()
@@ -2066,19 +2077,11 @@ object OwlHorst {
     // restored here without re-arming the crash at the caller's first
     // action — and unrelated queries in the session keep
     // constraint-derived pruning.
-    val flagKey = "spark.sql.constraintPropagation.enabled"
-    val prior = spark.conf.getOption(flagKey)
-    spark.conf.set(flagKey, "false")
-    try {
+    withoutConstraintPropagation(spark) {
       // checkpoint the final union: every derived branch and the
       // explicit slice collapse to materialized partitions, making the
       // result plan-independent of the disabled-flag window
       r.keep(doRun(r, spark, quads, seed, equivPreClosed))
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(flagKey, v)
-        case None => spark.conf.unset(flagKey)
-      }
     }
   }
 
@@ -2116,8 +2119,7 @@ object OwlHorst {
     // alias-scale; past `broadcastLimit` pairs the whole machinery
     // flips to distributed GraphX connected components ([[SameAs]])
     // and the driver never holds the pair set again
-    val broadcastLimit =
-      sys.props.getOrElse("graft.sameas.broadcast.limit", "50000").toInt
+    val broadcastLimit = sameAsBroadcastLimit
     val uf = new UnionFind
     var equiv = Seq.empty[(String, String)]
     var distSame = false

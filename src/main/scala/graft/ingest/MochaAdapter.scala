@@ -38,10 +38,11 @@ import graft.sparql.{Sparql, SparqlParser}
   *    (`:223-231`); otherwise SELECT → SPARQL-JSON bytes, placeholder
   *    document on failure (`:240-261`)
   *
-  * Isolation: queries run on [[QuadStore.snapshot]] — last committed
-  * segment set — instead of the reference's shared read lock, so
-  * SELECTs are never interleaved with half-applied inserts (the
-  * reference quirk SURVEY flags at A14).
+  * Isolation: each query compiles against one [[QuadStore.pin]] — one
+  * committed version, struct and id planes alike — instead of the
+  * reference's shared read lock, so a SELECT never sees a half-applied
+  * insert (the reference quirk SURVEY flags at A14) and an update that
+  * commits from the update pool mid-query never gives it two versions.
   */
 final class MochaAdapter(spark: SparkSession, store: QuadStore, stagingDir: String) {
 
@@ -191,9 +192,10 @@ final class MochaAdapter(spark: SparkSession, store: QuadStore, stagingDir: Stri
       val json =
         try {
           val parsed = SparqlParser.parse(queryString)
-          val c = new graft.sparql.Compiler(spark, store.snapshot(),
+          val pin = store.pin()
+          val c = new graft.sparql.Compiler(spark, pin.quads,
             fromGraphs = parsed.fromGraphs, fromNamed = parsed.fromNamed,
-            encoded = store.snapshotEncoded())
+            encoded = pin.encoded)
           graft.sparql.Sparql.evaluate(c, parsed) match {
             case graft.sparql.Sparql.AskResult(b) => SparqlJson.ask(b)
             case graft.sparql.Sparql.SelectResult(sol) => SparqlJson.select(sol)

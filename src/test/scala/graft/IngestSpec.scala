@@ -857,4 +857,82 @@ class IngestSpec extends GraftSuite {
     assert(store.snapshotEncoded().isDefined,
       "encoded plane must be live again after the tombstone-triggered compact")
   }
+
+  test("graph IRIs that look like numbers survive compaction on both planes") {
+    val qs = Files.createTempDirectory("qs-numg")
+    val store = new QuadStore(spark, qs.toString)
+    val ad = new MochaAdapter(spark, store, Files.createTempDirectory("stg-numg").toString)
+    store.insertData("""INSERT DATA { GRAPH <1> { <s:1> <p:x> "a" . } }""")
+    store.insertData("""INSERT DATA { GRAPH <2> { <s:2> <p:x> "b" . } }""")
+    store.compact()
+    val text = """SELECT ?g ?s WHERE { GRAPH ?g { ?s <p:x> ?o } }"""
+    def answers(enc: Option[graft.core.EncodedQuads]) =
+      Sparql.query(spark, store.snapshot(), text, encoded = enc)
+        .collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    assert(answers(None).size == 2)
+    assert(answers(store.snapshotEncoded()) == answers(None))
+
+    val res = ByteBuffer.wrap(ad.receiveTask("t1", text.getBytes(UTF_8)))
+    ad.readString(res)
+    val body = new Array[Byte](res.getInt()); res.get(body)
+    val json = new String(body, UTF_8)
+    assert(json != SparqlJson.failurePlaceholder)
+    assert(json.contains("s:1") && json.contains("s:2"), json)
+
+    // a flat appended segment unions with the partitioned compacted one
+    store.insertData("""INSERT DATA { GRAPH <3> { <s:3> <p:x> "c" . } }""")
+    assert(answers(None).size == 3)
+    assert(answers(store.snapshotEncoded()) == answers(None))
+  }
+
+  test("snapshot and snapshotEncoded start no Spark job") {
+    val qs = Files.createTempDirectory("qs-jobs")
+    val store = new QuadStore(spark, qs.toString)
+    store.insertData("""INSERT DATA { GRAPH <ga> { <s:1> <p:x> "a" . } }""")
+    store.insertData("""INSERT DATA { GRAPH <gb> { <s:2> <p:x> "b" . } }""")
+    store.compact()
+    store.insertData("""INSERT DATA { GRAPH <gc> { <s:3> <p:x> "c" . } }""")
+    // count only this thread's jobs: suites may share the session
+    val group = s"snapshot-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "snapshot reads")
+    try {
+      val snap = store.snapshot()
+      val enc = store.snapshotEncoded()
+      org.apache.spark.graft.ListenerSync.await(spark.sparkContext)
+      assert(jobs.get == 0, s"building both planes started ${jobs.get} jobs")
+      assert(enc.isDefined)
+      assert(snap.columns.toSeq == Seq("g", "s", "p", "o"))
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("a pin's two planes keep its version after later commits") {
+    val qs = Files.createTempDirectory("qs-pin")
+    val store = new QuadStore(spark, qs.toString)
+    store.insertData("""INSERT DATA { GRAPH <ga> { <s:1> <p:x> "a" . <s:2> <p:x> "b" . } }""")
+    val pin = store.pin()
+    // a delete, an append and a compaction all commit after the pin
+    store.executeUpdate("""DELETE DATA { GRAPH <ga> { <s:1> <p:x> "a" . } }""")
+    store.insertData("""INSERT DATA { GRAPH <gb> { <s:3> <p:x> "c" . } }""")
+    store.compact()
+    assert(store.snapshot().count() == 2)
+    // both planes are built lazily, after the commits, from the pin's list
+    assert(pin.quads.count() == 2)
+    assert(pin.quads.filter(col("s")("lex") === "s:3").isEmpty)
+    assert(pin.encoded.get.quads.count() == 2)
+    val subjects = graft.sparql.Sparql.query(spark, pin.quads,
+      "SELECT ?s WHERE { ?s <p:x> ?o }", encoded = pin.encoded)
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(subjects.size == 2 && subjects.exists(_.contains("s:1")) &&
+      !subjects.exists(_.contains("s:3")), subjects)
+  }
 }
