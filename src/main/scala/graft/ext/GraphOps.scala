@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -18,7 +18,11 @@ import graft.plans.Rounds
   * results join back into Catalyst plans. GraphX is used where its
   * Pregel machinery wins (components, PageRank); plain-DataFrame
   * round loops where a bounded traversal is enough, each round's
-  * state an eager checkpoint owned by [[graft.plans.Rounds]].
+  * state an eager checkpoint owned by [[graft.plans.Rounds]]. Every
+  * stop test and driver-side scalar (an empty frontier, an unchanged
+  * edge count, a landmark id, a vertex or edge count) is a probe on
+  * the keep it reads: the operators here run no Dataset action of
+  * their own.
   *
   * Scale: GraphX partitions edges (EdgePartition2D for skew); the
   * BFS variant shuffles only the frontier each round. Vertex ids are
@@ -76,6 +80,26 @@ object GraphOps {
       .toDF("id", "component")
   }
 
+  /** The GraphX triangle path of [[triangleCount]] and
+    * [[localClustering]]: keep the simple graph `canon`, count each
+    * vertex's triangles over it (rows `id`, `triangles`), keep
+    * `result(canon, triangles)` and release the graphs GraphX cached
+    * on the way, which the kept result no longer reads.
+    */
+  private def withTriangles(spark: SparkSession, edges: DataFrame)(
+      result: (DataFrame, DataFrame) => DataFrame): DataFrame = Rounds { r =>
+    import spark.implicits._
+    val canon = r.keep(simple(edges))
+    val tri = Graph.fromEdges(toEdgeRdd(canon), 0)
+      .partitionBy(org.apache.spark.graphx.PartitionStrategy.EdgePartition2D)
+      .triangleCount()
+      .vertices.map { case (id, n) => (id, n.toLong) }
+      .toDF("id", "triangles")
+    val out = r.keep(result(canon, tri))
+    releaseDerived(canon)
+    out
+  }
+
   /** Per-vertex triangle counts (undirected). Edges are canonicalized
     * (src < dst, deduped) before GraphX's TriangleCount, which
     * requires a canonical orientation; isolated self-loops drop out.
@@ -83,14 +107,8 @@ object GraphOps {
     * smaller adjacency set of its endpoints — no enumeration of all
     * 2-paths on hub vertices.
     */
-  def triangleCount(spark: SparkSession, edges: DataFrame): DataFrame = {
-    import spark.implicits._
-    Graph.fromEdges(toEdgeRdd(simple(edges)), 0)
-      .partitionBy(org.apache.spark.graphx.PartitionStrategy.EdgePartition2D)
-      .triangleCount()
-      .vertices.map { case (id, n) => (id, n.toLong) }
-      .toDF("id", "triangles")
-  }
+  def triangleCount(spark: SparkSession, edges: DataFrame): DataFrame =
+    withTriangles(spark, edges)((_, tri) => tri)
 
   /** Per-vertex LOCAL CLUSTERING COEFFICIENT (r16, the r15 verdict's
     * coverage item): lcc(v) = 2·T(v) / (deg(v)·(deg(v)−1)) over the
@@ -102,26 +120,17 @@ object GraphOps {
     * contract as [[triangleCount]]); degrees are one combinable count;
     * the assembly is one join keyed by 8-byte ids.
     */
-  def localClustering(spark: SparkSession, edges: DataFrame): DataFrame = Rounds { r =>
-    import spark.implicits._
-    val canon = r.keep(simple(edges))
-    val deg = canon.select(col("src").as("id"))
-      .unionByName(canon.select(col("dst").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("degree"))
-    val tri = Graph.fromEdges(toEdgeRdd(canon), 0)
-      .partitionBy(org.apache.spark.graphx.PartitionStrategy.EdgePartition2D)
-      .triangleCount()
-      .vertices.map { case (id, n) => (id, n.toLong) }
-      .toDF("id", "triangles")
-    val out = r.keep(deg.filter(col("degree") >= 2)
-      .join(tri, "id")
-      .select(col("id"), col("degree"), col("triangles"),
-        expr("(2000000L * triangles) div (degree * (degree - 1L))")
-          .as("lcc_micro")))
-    // the sealed result no longer reads the GraphX graphs
-    releaseDerived(canon)
-    out
-  }
+  def localClustering(spark: SparkSession, edges: DataFrame): DataFrame =
+    withTriangles(spark, edges) { (canon, tri) =>
+      canon.select(col("src").as("id"))
+        .unionByName(canon.select(col("dst").as("id")))
+        .groupBy("id").agg(count(lit(1)).as("degree"))
+        .filter(col("degree") >= 2)
+        .join(tri, "id")
+        .select(col("id"), col("degree"), col("triangles"),
+          expr("(2000000L * triangles) div (degree * (degree - 1L))")
+            .as("lcc_micro"))
+    }
 
   /** Bounded k-TRUSS peel (r16): keep edges whose SUPPORT (triangles
     * through the edge) is ≥ k−2, peeling for `rounds` rounds — the
@@ -140,23 +149,17 @@ object GraphOps {
   def kTruss(spark: SparkSession, edges: DataFrame, k: Int = 4,
       rounds: Int = 3): DataFrame = {
     require(k >= 3, s"kTruss: k must be >= 3 (got $k)")
-    def lt(d1: org.apache.spark.sql.Column, v1: org.apache.spark.sql.Column,
-        d2: org.apache.spark.sql.Column,
-        v2: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    def lt(d1: Column, v1: Column, d2: Column, v2: Column): Column =
       d1 < d2 || (d1 === d2 && v1 < v2)
     Rounds { r =>
       val canon = r.keep(simple(edges))
       val ord = r.keep(canon.select(col("src").as("v"))
         .unionByName(canon.select(col("dst").as("v")))
         .groupBy("v").agg(count(lit(1)).as("d")))
-      var cur = canon.withColumn("support", lit(0L))
-      // r18 fixpoint early-exit — same argument as kCore: the peel only
-      // removes edges, support is a pure function of the surviving set,
-      // so an unchanged count ⇒ identical set ⇒ identical support ⇒
-      // every later round is the identity. Exact vs the unrolled oracle.
-      var nEdges = -1L
-      var converged = false
-      for (_ <- 1 to rounds if !converged) {
+      // support is a pure function of the surviving set, so an
+      // unchanged count also means identical support: [[peel]]'s early
+      // exit stays exact (no count before round 1: support is unset)
+      peel(r, canon.withColumn("support", lit(0L)), -1L, rounds) { cur =>
         val e = cur
           .join(ord.select(col("v").as("src"), col("d").as("ds")), Seq("src"))
           .join(ord.select(col("v").as("dst"), col("d").as("dd")), Seq("dst"))
@@ -181,16 +184,33 @@ object GraphOps {
           .unionByName(tri.select(least(col("b"), col("c")).as("src"),
             greatest(col("b"), col("c")).as("dst")))
           .groupBy("src", "dst").agg(count(lit(1)).as("sup"))
-        cur = r.swap(cur, cur.select(col("src"), col("dst"))
+        cur.select(col("src"), col("dst"))
           .join(sup, Seq("src", "dst"))
           .filter(col("sup") >= k - 2)
-          .select(col("src"), col("dst"), col("sup").as("support")))
-        val n2 = cur.count()
-        converged = n2 == nEdges
-        nEdges = n2
+          .select(col("src"), col("dst"), col("sup").as("support"))
       }
-      cur
     }
+  }
+
+  /** Bounded peel: up to `rounds` rounds of `step` from `init` (`n`
+    * rows, or −1 when unknown), each round's state a swapped keep.
+    * Peeling only REMOVES rows, so a round that keeps as many rows as
+    * the one before kept the identical set and every remaining round
+    * is the identity: the loop stops there, with EXACTLY the
+    * round-`rounds` result (the oracle's unrolled contract). The count
+    * is a probe on each round's keep.
+    */
+  private def peel(r: Rounds, init: DataFrame, n: Long, rounds: Int)(
+      step: DataFrame => DataFrame): DataFrame = {
+    var (cur, last, converged) = (init, n, false)
+    for (_ <- 1 to rounds if !converged) {
+      val (next, p) = r.probe(step(cur), count(lit(1)))
+      r.release(cur)
+      cur = next
+      converged = p.getLong(0) == last
+      last = p.getLong(0)
+    }
+    cur
   }
 
   /** Fixed-iteration PageRank (GraphX semantics: rank = reset + (1 -
@@ -260,41 +280,46 @@ object GraphOps {
     * equivalent of a Pregel iteration.
     */
   def shortestHops(spark: SparkSession, edges: DataFrame, sources: DataFrame): DataFrame =
-    Rounds(r => hops(r, r.keep(undirected(edges)), sources, labelled = false))
+    Rounds(r => hops(r, r.keep(undirected(edges)), sources, labelled = false)._1)
 
   /** Labelled semi-naive BFS over a kept undirected edge list `und`:
     * rows (seed, id, dist) when `labelled` (one BFS per source, the
     * source id as the label), (id, dist) otherwise. Each round joins
     * only the new frontier against `und`, keeps the per-(label, id)
     * minimum hop and drops pairs already reached; it stops on an empty
-    * frontier or after `maxDepth` rounds. The result is a checkpoint
-    * tracked by `r`.
+    * frontier (a zero count probe on the frontier's keep) or after
+    * `maxDepth` rounds. Returns the reached rows, a checkpoint tracked
+    * by `r`, with the depth of the last non-empty frontier and that
+    * frontier's probe row (count, least id).
     */
   private def hops(r: Rounds, und: DataFrame, sources: DataFrame,
-      labelled: Boolean, maxDepth: Int = Int.MaxValue): DataFrame = {
+      labelled: Boolean, maxDepth: Int = Int.MaxValue): (DataFrame, Int, Row) = {
     val id = col("id").cast("long")
     val keys = (if (labelled) Seq("seed") else Nil) :+ "id"
-    var dists = r.keep(sources.select(
-      keys.map(k => id.as(k)) :+ lit(0L).as("dist"): _*).distinct())
+    val probes = Seq(count(lit(1)), min(id))
+    var (dists, last) = r.probe(sources.select(
+      keys.map(k => id.as(k)) :+ lit(0L).as("dist"): _*).distinct(), probes: _*)
     var frontier = dists
     var depth = 0
     var done = false
     while (!done && depth < maxDepth) {
-      val next = r.keep(frontier.join(und, frontier("id") === und("src"))
+      val (next, p) = r.probe(frontier.join(und, frontier("id") === und("src"))
         .select(keys.init.map(frontier(_)) :+ und("dst").as("id") :+
           (frontier("dist") + 1).as("dist"): _*)
         .groupBy(keys.map(col): _*).agg(min("dist").as("dist"))
         .join(dists.select(keys.map(k => col(k).as(s"__$k")): _*),
-          keys.map(k => col(k) === col(s"__$k")).reduce(_ && _), "left_anti"))
-      if (next.isEmpty) { r.release(next); done = true }
+          keys.map(k => col(k) === col(s"__$k")).reduce(_ && _), "left_anti"),
+        probes: _*)
+      if (p.getLong(0) == 0) { r.release(next); done = true }
       else {
         dists = r.swap(dists, dists.unionByName(next))
         r.release(frontier)
         frontier = next
+        last = p
+        depth += 1
       }
-      depth += 1
     }
-    dists
+    (dists, depth, last)
   }
 
   /** Per-seed aggregate over the (seed, id, dist) rows [[hops]] reaches
@@ -304,8 +329,8 @@ object GraphOps {
   private def seedAggregate(edges: DataFrame, seeds: DataFrame, maxDepth: Int)(
       agg: org.apache.spark.sql.RelationalGroupedDataset => DataFrame): DataFrame =
     Rounds { r =>
-      val reached = hops(r, r.keep(undirected(edges)), seeds, labelled = true,
-        maxDepth)
+      val (reached, _, _) = hops(r, r.keep(undirected(edges)), seeds,
+        labelled = true, maxDepth)
       r.keep(agg(reached.filter(col("dist") > 0).groupBy("seed")))
     }
 
@@ -368,24 +393,25 @@ object GraphOps {
     val sigGuard = when(col("sigma") < (1L << 20), col("sigma"))
       .otherwise(raise_error(concat(lit("betweennessFromSeeds: sigma "),
         col("sigma"), lit(" exceeds the 2^20 product bound"))).cast("long"))
-    var layers = Vector(r.keep(
+    val seedLayer = r.keep(
       seeds.select(col("id").cast("long").as("seed"),
           col("id").cast("long").as("id"),
-          lit(1L).as("sigma")).distinct()))
-    var visited = layers.head
+          lit(1L).as("sigma")).distinct())
+    var layers = Vector(seedLayer)
+    var visited = seedLayer
     var depth = 0
     var done = false
     while (!done && depth < maxDepth) {
       depth += 1
       val frontier = layers.last
-      val next = r.keep(frontier.join(und, frontier("id") === und("src"))
+      val (next, p) = r.probe(frontier.join(und, frontier("id") === und("src"))
         .groupBy(frontier("seed").as("seed"), und("dst").as("id"))
         .agg(sum(frontier("sigma")).as("sigma"))
         .select(col("seed"), col("id"), sigGuard.as("sigma"))
         .join(visited.select(col("seed").as("s2"), col("id").as("i2")),
           col("seed") === col("s2") && col("id") === col("i2"), "left_anti")
-        .select("seed", "id", "sigma"))
-      if (next.isEmpty) { r.release(next); done = true }
+        .select("seed", "id", "sigma"), count(lit(1)))
+      if (p.getLong(0) == 0) { r.release(next); done = true }
       else {
         // the seed layer (round 1's visited) is never read again: the
         // backward pass starts at layer 1
@@ -395,7 +421,7 @@ object GraphOps {
     }
     // backward: δ = 0 at the deepest layer; each shallower layer sums
     // the integer dependency terms over its DAG successors
-    val deltaGuard = (d: org.apache.spark.sql.Column) =>
+    val deltaGuard = (d: Column) =>
       when(d < (1L << 40), d)
         .otherwise(raise_error(concat(lit("betweennessFromSeeds: delta "),
           d, lit(" exceeds the 2^40 product bound"))).cast("long"))
@@ -521,7 +547,7 @@ object GraphOps {
     * is sealed.
     */
   private def walkFromSeeds(edges: DataFrame, seeds: DataFrame,
-      rounds: Int, prio: Int => org.apache.spark.sql.Column): DataFrame =
+      rounds: Int, prio: Int => Column): DataFrame =
     Rounds { r =>
       val e = r.keep(edges.distinct())
       val walk = (1 to rounds).scanLeft(r.keep(
@@ -549,34 +575,30 @@ object GraphOps {
     * eccentricity is the standard tight lower bound on the
     * component's diameter (exact on trees and on the star
     * hierarchies the fixture graphs form). Both sweeps are the
-    * distributed [[shortestHops]] fixpoint; landmark selection is a
-    * pair of 1-row aggregates (the only driver-side values), so the
-    * operator runs exactly two BFS passes regardless of graph size —
-    * never all-pairs. Returns ONE row (seed1, ecc1, seed2, ecc2,
-    * n_reached): ecc2 is the diameter lower bound, n_reached the
-    * size of seed2's component (the reachability certificate).
+    * distributed [[shortestHops]] fixpoint; the landmarks are probes
+    * on checkpoints the sweep keeps anyway (the least id on the
+    * undirected edge list, the least id of the first sweep's last
+    * frontier), so the operator runs exactly two BFS passes regardless
+    * of graph size — never all-pairs. Returns ONE row (seed1, ecc1,
+    * seed2, ecc2, n_reached): ecc2 is the diameter lower bound,
+    * n_reached the size of seed2's component (the reachability
+    * certificate); an empty graph gives an empty frame.
     */
-  def diameterSweep(spark: SparkSession, edges: DataFrame): DataFrame = {
+  def diameterSweep(spark: SparkSession, edges: DataFrame): DataFrame = Rounds { r =>
     import spark.implicits._
-    val minRow = edges.select(col("src").cast("long").as("id"))
-      .unionByName(edges.select(col("dst").cast("long").as("id")))
-      .agg(min("id")).head
-    // empty graph: an empty RESULT frame, not an NPE off the null min
-    if (minRow.isNullAt(0))
-      return spark.range(0).select(
+    val (und, p) = r.probe(undirected(edges), min(col("src").cast("long")))
+    if (p.isNullAt(0))
+      spark.range(0).select(
         col("id").as("seed1"), col("id").as("ecc1"), col("id").as("seed2"),
         col("id").as("ecc2"), col("id").as("n_reached"))
-    val seed1 = minRow.getLong(0)
-    Rounds { r =>
-      val und = r.keep(undirected(edges))
-      val d1 = hops(r, und, Seq(seed1).toDF("id"), labelled = false)
-      val ecc1 = d1.agg(max("dist")).head.getLong(0)
-      val seed2 = d1.filter(col("dist") === ecc1)
-        .agg(min("id")).head.getLong(0)
+    else {
+      val seed1 = p.getLong(0)
+      val (d1, ecc1, last) = hops(r, und, Seq(seed1).toDF("id"), labelled = false)
+      val seed2 = last.getLong(1)
       r.release(d1)
-      val d2 = hops(r, und, Seq(seed2).toDF("id"), labelled = false)
+      val (d2, _, _) = hops(r, und, Seq(seed2).toDF("id"), labelled = false)
       r.keep(d2.agg(max("dist").as("ecc2"), count(lit(1)).as("n_reached"))
-        .select(lit(seed1).as("seed1"), lit(ecc1).as("ecc1"),
+        .select(lit(seed1).as("seed1"), lit(ecc1.toLong).as("ecc1"),
           lit(seed2).as("seed2"), col("ecc2"), col("n_reached")))
     }
   }
@@ -590,15 +612,15 @@ object GraphOps {
     * 10¹² even at m ~ 10⁹ edges (the naive 10⁶·d_c² blows a long at
     * m ~ 10⁶). Shape: one distinct, two combinable degree/intra
     * counts keyed by community, a label join; m is the single
-    * driver-side scalar.
+    * driver-side scalar, a probe on the edge keep.
     */
   def modularityByCommunity(spark: SparkSession, edges: DataFrame,
       labels: DataFrame): DataFrame = Rounds { r =>
     // canonicalize to UNDIRECTED form first: a caller handing the
     // common both-directions representation — or a mix of once- and
     // twice-listed edges — must not inflate m, degrees, or intra counts
-    val e0 = r.keep(canonical(edges))
-    val m = e0.count()
+    val (e0, p) = r.probe(canonical(edges), count(lit(1)))
+    val m = p.getLong(0)
     val l = labels.select(col("id"), col("label"))
     val ls = l.select(col("id").as("__s"), col("label").as("__lsrc"))
     val ld = l.select(col("id").as("__d"), col("label").as("__ldst"))
@@ -643,22 +665,12 @@ object GraphOps {
     def degrees(e: DataFrame): DataFrame =
       e.select(col("src").as("v")).unionByName(e.select(col("dst").as("v")))
         .groupBy("v").agg(count(lit(1)).as("c"))
-    var e = r.keep(edges.select(col("src"), col("dst")).distinct())
-    // r18 fixpoint early-exit (guide §1.2): peeling only REMOVES edges,
-    // so an unchanged edge count means an identical edge set, and every
-    // remaining round is the identity — skip it. Output is EXACTLY the
-    // round-`rounds` result (the oracle's unrolled contract); the count
-    // reads the just-materialized checkpoint blocks, near-free.
-    var n = e.count()
-    var converged = false
-    for (_ <- 1 to rounds if !converged) {
-      val keep = degrees(e).filter(col("c") >= k).select("v")
-      e = r.swap(e, e
-        .join(keep.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi"))
-      val n2 = e.count()
-      converged = n2 == n
-      n = n2
+    val (e0, p) = r.probe(edges.select(col("src"), col("dst")).distinct(),
+      count(lit(1)))
+    val e = peel(r, e0, p.getLong(0), rounds) { cur =>
+      val keep = degrees(cur).filter(col("c") >= k).select("v")
+      cur.join(keep.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
+        .join(keep.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
     }
     degrees(e).select(col("v").as("id"), col("c").as("core_deg"))
   }
@@ -700,9 +712,9 @@ object GraphOps {
     // vertex exchange + a union-wide re-aggregation exchange.
     Rounds { r =>
       val e = r.keep(edges.select(col("src"), col("dst")).distinct())
-      val verts = r.keep(e.select(col("src").as("v"))
-        .unionByName(e.select(col("dst").as("v"))).distinct())
-      val bc = Rounds.broadcastVertexState(verts)
+      val (verts, p) = r.probe(e.select(col("src").as("v"))
+        .unionByName(e.select(col("dst").as("v"))).distinct(), count(lit(1)))
+      val bc = Rounds.broadcastVertexState(p.getLong(0))
       var hub = verts.withColumn("hub", lit(1L))
       var auth = verts.withColumn("auth", lit(1L))
       for (_ <- 1 to rounds) {
@@ -810,9 +822,10 @@ object GraphOps {
     val und0 = edges.select(col("src"), col("dst")).distinct()
     val und = r.keep(und0.unionByName(
       und0.select(col("dst").as("src"), col("src").as("dst"))))
-    var labels = und.select(col("src").as("v")).distinct()
-      .withColumn("lbl", col("v"))
-    val bc = Rounds.broadcastVertexState(und.select(col("src")).distinct())
+    val (verts, p) = r.probe(und.select(col("src").as("v")).distinct(),
+      count(lit(1)))
+    var labels = verts.withColumn("lbl", col("v"))
+    val bc = Rounds.broadcastVertexState(p.getLong(0))
     for (_ <- 1 to rounds) {
       // argmax by (count desc, label asc) as a MIN over (-c, lbl)
       // structs: both aggregation steps are map-side combinable, so a

@@ -831,22 +831,26 @@ object Similarity {
     * k from a corpus count and `targetClusterSize`); passing an
     * explicit positive `k` pins the cluster count (fixture gates, or
     * when the caller already knows its corpus scale).
+    *
+    * The derived path runs as one [[Rounds]] scope: the corpus count
+    * is a probe on a checkpoint of the input, which the ≥4 reads of
+    * the body (seed collect, both join sides, final join) then share
+    * instead of recomputing its lineage, and the narrow result is
+    * kept. The pinned-k path leaves caching to the caller, who knows
+    * the corpus.
     */
   def semDedup(corpus: DataFrame, k: Int = 0, threshold: Double = 0.5,
-               targetClusterSize: Long = 4096L): DataFrame = {
-    // deriving k adds a count() action on top of the ≥4 reads the body
-    // already makes (seed collect + both join sides + final join) — an
-    // expensive upstream lineage would recompute for each, so the
-    // derived path persists the input for the call's duration (the
-    // pinned-k path leaves caching to the caller, who knows the corpus)
-    val src =
-      if (k > 0) corpus
-      else corpus.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val kEff =
-      if (k > 0) k
-      else math.max(1L, (src.count() + targetClusterSize - 1) / targetClusterSize).toInt
+               targetClusterSize: Long = 4096L): DataFrame =
+    if (k > 0) semDedupWith(corpus, k, threshold)
+    else Rounds { r =>
+      val (src, p) = r.probe(corpus, count(lit(1)))
+      val kEff = math.max(1L, (p.getLong(0) + targetClusterSize - 1) / targetClusterSize)
+      r.keep(semDedupWith(src, kEff.toInt, threshold))
+    }
+
+  private def semDedupWith(src: DataFrame, k: Int, threshold: Double): DataFrame = {
     val assigned = src.withColumn("cluster",
-      bestCell(col("embedding"), seedCentroids(src, kEff))("cid"))
+      bestCell(col("embedding"), seedCentroids(src, k))("cid"))
     val l = assigned.select(col("cluster"), col("vec_id").as("vec_a"),
       col("embedding").as("emb_a"))
     val r = assigned.select(col("cluster"), col("vec_id").as("vec_b"),
@@ -857,16 +861,9 @@ object Similarity {
         cosine(col("emb_a"), col("emb_b")).as("cos"))
       .where(col("cos") >= threshold)
       .groupBy(col("vec_b").as("vec_id")).agg(min("vec_a").as("dup_of"))
-    val out = assigned.select("vec_id", "cluster").join(dups, Seq("vec_id"), "left")
+    assigned.select("vec_id", "cluster").join(dups, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster"), col("dup_of"),
         col("dup_of").isNull.as("keep"))
-    if (k > 0) out
-    else {
-      // narrow 4-column result: materialize it, release the input cache
-      val snapped = out.localCheckpoint(true)
-      src.unpersist(blocking = false)
-      snapped
-    }
   }
 
   /** Embedding-cosine near-duplicate pairs (the fifth dedup mode of
@@ -876,36 +873,31 @@ object Similarity {
     * track the corpus or within-bucket pairs go quadratic. `bits ≤ 0`
     * derives bits = ⌈log₂(n / targetBucketSize)⌉ from a corpus count
     * (clamped to [4, 24]); an explicit positive `bits` pins it.
+    *
+    * Same caching contract as [[semDedup]]: the derived-bits path is
+    * one [[Rounds]] scope whose corpus count is a probe on the input's
+    * checkpoint, which both self-join sides then read; the (tiny) pair
+    * output is kept. A pinned `bits` leaves caching to the caller.
     */
   def cosineNearDupPairs(corpus: DataFrame, threshold: Double, bits: Int = 0,
-                         targetBucketSize: Long = 4096L): DataFrame = {
-    // same caching contract as [[semDedup]]: the derived-bits path adds
-    // a count() over the input lineage and the self-join reads it twice
-    // more — persist for the call, snapshot the (tiny) pair output,
-    // release; a pinned `bits` leaves caching to the caller
-    val src =
-      if (bits > 0) corpus
-      else corpus.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bitsEff =
-      if (bits > 0) bits
-      else {
-        val n = math.max(1L, src.count())
-        val need = math.ceil(math.log(n.toDouble / targetBucketSize) / math.log(2.0)).toInt
-        math.min(24, math.max(4, need))
-      }
-    val b = src.withColumn("bucket", lshBucket(col("embedding"), bitsEff))
+                         targetBucketSize: Long = 4096L): DataFrame =
+    if (bits > 0) cosineNearDupPairsWith(corpus, threshold, bits)
+    else Rounds { r =>
+      val (src, p) = r.probe(corpus, count(lit(1)))
+      val n = math.max(1L, p.getLong(0))
+      val need = math.ceil(math.log(n.toDouble / targetBucketSize) / math.log(2.0)).toInt
+      r.keep(cosineNearDupPairsWith(src, threshold, math.min(24, math.max(4, need))))
+    }
+
+  private def cosineNearDupPairsWith(src: DataFrame, threshold: Double,
+      bits: Int): DataFrame = {
+    val b = src.withColumn("bucket", lshBucket(col("embedding"), bits))
     val l = b.select(col("bucket"), col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
     val r = b.select(col("bucket"), col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
-    val out = l.join(r, Seq("bucket"))
+    l.join(r, Seq("bucket"))
       .where(col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"), cosine(col("emb_a"), col("emb_b")).as("cos"))
       .where(col("cos") >= threshold)
       .distinct()
-    if (bits > 0) out
-    else {
-      val snapped = out.localCheckpoint(true)
-      src.unpersist(blocking = false)
-      snapped
-    }
   }
 }

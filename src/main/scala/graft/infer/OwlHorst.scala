@@ -1,6 +1,6 @@
 package graft.infer
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.plans.{Fixpoint, Rounds}
@@ -1720,9 +1720,10 @@ object OwlHorst {
         .getOrElse(deletedTriples.limit(0))
         .distinct()
         .except(taintAll))
-      val fresh = r.keep(cand.except(
-        tripSemiJoin(blockSlice, cand, "left_semi", hintBc = true).distinct()))
-      if (fresh.isEmpty) grew = false
+      val (fresh, p) = r.probe(cand.except(
+        tripSemiJoin(blockSlice, cand, "left_semi", hintBc = true).distinct()),
+        count(lit(1)))
+      if (p.getLong(0) == 0) grew = false
       else {
         taintAll = taintAll.unionByName(fresh)
         delta = fresh
@@ -2128,6 +2129,9 @@ object OwlHorst {
     var comps: Option[DataFrame] = None
     var distPairs: Option[DataFrame] = None
     var freshes = Seq.empty[DataFrame]
+    // sameAs rows in the previous round's delta (a probe on its keep):
+    // with none, that round's harvest would find no pair
+    var deltaSameAs = 0L
     var rounds = 0
     var grew = true
     // Every derivable statement has p in this closed set — EXCEPT the
@@ -2149,10 +2153,13 @@ object OwlHorst {
       // of new statements still needs them); later rounds only from
       // the round's delta
       val harvestSrc = if (rounds == 1) all else delta
+      val harvest = rounds == 1 || deltaSameAs > 0
       if (!distSame) {
-        val pairRows = harvestSrc.filter(col("p")("lex") === "owl:sameAs")
-          .select(col("s")("lex"), col("o")("lex"))
-          .limit(broadcastLimit + 1).collect()
+        val pairRows =
+          if (!harvest) Array.empty[Row]
+          else harvestSrc.filter(col("p")("lex") === "owl:sameAs")
+            .select(col("s")("lex"), col("o")("lex"))
+            .limit(broadcastLimit + 1).collect()
         if (pairRows.length > broadcastLimit) distSame = true
         else {
           val merges = pairRows.count(r => uf.union(r.getString(0), r.getString(1)))
@@ -2196,7 +2203,7 @@ object OwlHorst {
               .filter(col("p")("lex") === "owl:sameAs")
               .select(col("s")("lex").as("a"), col("o")("lex").as("b"))
               .filter(col("a") =!= col("b")).distinct()
-            if (SameAs.bridgingCount(prev, newEdges) > 0) {
+            if (harvest && SameAs.bridgingCount(prev, newEdges) > 0) {
               comps = Some(SameAs.increment(r, spark, prev, newEdges))
               equivChanged = true
             }
@@ -2219,11 +2226,13 @@ object OwlHorst {
               col("o")("lex").isin(eTerms: _*)
           all.filter(cond)
         }
-      val fresh = r.keep(onePass(r, spark, ont, ruleDf, all, delta,
+      val (fresh, p) = r.probe(onePass(r, spark, ont, ruleDf, all, delta,
           prevClosures, equivDf, equivChanged, basePreClosed = equivPreClosed)
-        .distinct().except(relevant))
-      if (fresh.isEmpty) grew = false
+        .distinct().except(relevant),
+        count(lit(1)), count(when(col("p")("lex") === "owl:sameAs", 1)))
+      if (p.getLong(0) == 0) grew = false
       else {
+        deltaSameAs = p.getLong(1)
         // both sides are checkpointed leaves — the lazy union is enough;
         // re-checkpointing the whole accumulator each round rewrites
         // every byte already materialized

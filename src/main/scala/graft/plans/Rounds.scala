@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.broadcast
 
@@ -13,6 +13,11 @@ import org.apache.spark.sql.functions.broadcast
   * body returns, every tracked checkpoint the result does not read as
   * a `LogicalRDD` leaf is released. No terminal seal, no extra job: a
   * result that is itself a [[keep]] is the operator's own seal.
+  *
+  * Stop tests: a stop test or driver scalar over a frame the loop
+  * keeps is a [[probe]] on that keep — an aggregate the checkpoint's
+  * own job computes — never a second action (`count`, `isEmpty`,
+  * `agg(...).head`) on the kept frame.
   *
   * Release is by ownership, never by plan walk: only a frame that IS
   * a tracked checkpoint root frees blocks, so a lazy derivation of a
@@ -38,11 +43,23 @@ final class Rounds private (outer: Option[Rounds]) {
     * plan is offered to [[graft.ext.SealCapture]], so plan-shape
     * contracts see through the checkpoint scan.
     */
-  def keep(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint()
-    graft.ext.SealCapture.add(df.queryExecution)
+  def keep(df: DataFrame): DataFrame = probe(df)._1
+
+  /** [[keep]] `df` and return, with the checkpoint, the values of the
+    * aggregate `cols` over its rows (in order; `Row.empty` for none).
+    * The checkpoint's own job computes them (`Dataset.observe`), so
+    * the probe starts no job of its own; over no rows a count reads 0
+    * and a min or max null. The values are read from the execution
+    * that ran the checkpoint as soon as it returns: an `Observation`
+    * would wait for a listener-bus event, which a full bus queue drops.
+    */
+  def probe(df: DataFrame, cols: Column*): (DataFrame, Row) = {
+    val name = s"probe-${java.util.UUID.randomUUID}"
+    val src = if (cols.isEmpty) df else df.observe(name, cols.head, cols.tail: _*)
+    val out = src.localCheckpoint()
+    graft.ext.SealCapture.add(src.queryExecution)
     Rounds.root(out).foreach(r => held(r.id) = r)
-    out
+    (out, if (cols.isEmpty) Row.empty else src.queryExecution.observedMetrics(name))
   }
 
   /** The next round's state: checkpoint `next`, then free `prev`. */
@@ -109,12 +126,12 @@ object Rounds {
   private[graft] def releaseRoot(df: Dataset[_]): Unit =
     root(df).foreach(_.unpersist(blocking = false))
 
-  /** Broadcast hint for a per-round vertex-state table, guarded by one
-    * count job over `vertices`: without the guard the hint would bypass
-    * the auto-threshold at any graph size.
+  /** Broadcast hint for a per-round vertex-state table over `vertices`
+    * vertices (the caller's probe of its vertex keep): without the
+    * guard the hint would bypass the auto-threshold at any graph size.
     */
-  def broadcastVertexState(vertices: DataFrame): DataFrame => DataFrame =
-    if (vertices.count() <= BroadcastVertexCap) broadcast(_) else identity
+  def broadcastVertexState(vertices: Long): DataFrame => DataFrame =
+    if (vertices <= BroadcastVertexCap) broadcast(_) else identity
 
   private def reads(x: Any): Set[Int] = x match {
     case d: Dataset[_] => d.queryExecution.analyzed.collectLeaves()

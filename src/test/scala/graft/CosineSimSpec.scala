@@ -167,6 +167,16 @@ class CosineSimSpec extends GraftSuite {
       s"fixed k should show the quadratic blowup the rule prevents: $fFull vs $fHalf")
   }
 
+  test("semDedup and cosineNearDupPairs: derived paths release what their result does not read") {
+    val e = Tables(spark, sf, "embeddings")
+    val dedup = assertCheckpointsOwned(Similarity.semDedup(e, 0, 0.3, 32L))
+    assert(dedup.count() == e.count())
+    assert(dedup.columns.toSeq == Seq("vec_id", "cluster", "dup_of", "keep"))
+    val pairs = assertCheckpointsOwned(Similarity.cosineNearDupPairs(e, 0.3))
+    assert(pairs.count() ==
+      Similarity.cosineNearDupPairs(e, 0.3, bits = 4).count())
+  }
+
   test("self-similarity is 1, null on length mismatch") {
     import spark.implicits._
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(1.0f, 2.0f, 3.0f)),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.ext.GraphOps
@@ -371,6 +371,7 @@ class GraphOpsSpec extends GraftSuite {
       "kCore" -> (() => GraphOps.kCore(spark, e, k = 2)),
       "kTruss" -> (() => GraphOps.kTruss(spark, e, k = 3)),
       "localClustering" -> (() => GraphOps.localClustering(spark, e)),
+      "triangleCount" -> (() => GraphOps.triangleCount(spark, e)),
       "personalizedPageRank" ->
         (() => GraphOps.personalizedPageRank(spark, e, seeds, iters = 3)),
       "shortestHops" -> (() => GraphOps.shortestHops(spark, e, seeds)),
@@ -460,6 +461,35 @@ class GraphOpsSpec extends GraftSuite {
       Rounds { r => r.keep(Seq(1L).toDF("v")); throw new IllegalStateException }
     }
     assert(persistedRdds() -- before == checkpointLeaves(out))
+  }
+
+  test("Rounds: a probe returns its aggregates with the keep, from the keep's own jobs") {
+    import spark.implicits._
+    val probes = Seq(count(lit(1)), max("v"))
+    // a fresh plan per call (nothing cached or reused between keeps),
+    // with a shuffle, so each keep runs its own stage jobs
+    def fresh(n: Long): DataFrame = spark.range(0, n, 1, 4)
+      .select((col("id") % 7).as("v")).groupBy("v").agg(count(lit(1)).as("c"))
+    Rounds { r =>
+      val (kept, p) = r.probe(fresh(100), probes: _*)
+      assert(p.getLong(0) == 7L && p.getLong(1) == 6L)
+      assert(kept.as[(Long, Long)].collect().map(_._2).sum == 100L)
+      // dynamically empty: the plan runs, the join matches nothing
+      val (noMatch, pj) = r.probe(fresh(50).join(Seq(99L).toDF("v"), "v"), probes: _*)
+      assert(pj.getLong(0) == 0L && pj.isNullAt(1))
+      assert(noMatch.isEmpty)
+      // statically empty: the optimizer prunes the plan to no rows
+      for (empty <- Seq(fresh(50).filter(lit(false)), fresh(50).limit(0))) {
+        val (_, ps) = r.probe(empty, probes: _*)
+        assert(ps.getLong(0) == 0L && ps.isNullAt(1))
+      }
+      assert(r.probe(fresh(10))._2 == Row.empty)
+      val (_, plainJobs) = jobsIn(r.keep(fresh(200)))
+      val (_, probedJobs) = jobsIn(r.probe(fresh(200), probes: _*))
+      assert(plainJobs > 0 && probedJobs <= plainJobs,
+        s"a probed keep ran $probedJobs jobs, a plain keep $plainJobs")
+      0L
+    }
   }
 
   test("Rounds: a nested scope hands its result's checkpoints to the enclosing scope") {

@@ -893,26 +893,10 @@ class IngestSpec extends GraftSuite {
     store.compact()
     store.insertData("""INSERT DATA { GRAPH <gc> { <s:3> <p:x> "c" . } }""")
     // count only this thread's jobs: suites may share the session
-    val group = s"snapshot-jobs-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "snapshot reads")
-    try {
-      val snap = store.snapshot()
-      val enc = store.snapshotEncoded()
-      org.apache.spark.graft.ListenerSync.await(spark.sparkContext)
-      assert(jobs.get == 0, s"building both planes started ${jobs.get} jobs")
-      assert(enc.isDefined)
-      assert(snap.columns.toSeq == Seq("g", "s", "p", "o"))
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    val ((snap, enc), jobs) = jobsIn((store.snapshot(), store.snapshotEncoded()))
+    assert(jobs == 0, s"building both planes started $jobs jobs")
+    assert(enc.isDefined)
+    assert(snap.columns.toSeq == Seq("g", "s", "p", "o"))
   }
 
   test("a pin's two planes keep its version after later commits") {

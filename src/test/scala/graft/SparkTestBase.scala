@@ -46,4 +46,29 @@ abstract class GraftSuite extends AnyFunSuite {
       s"persisted RDDs the result does not read: ${added -- reads}")
     out
   }
+
+  /** Runs `op` in a job group of its own and returns its result with
+    * the number of Spark jobs started in that group. Suites share the
+    * session, so jobs of other threads are not counted.
+    */
+  def jobsIn[T](op: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-in-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobsIn")
+    try {
+      val out = op
+      org.apache.spark.graft.ListenerSync.await(sc)
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
