@@ -749,10 +749,16 @@ object OwlHorst {
     // surviving-copy probe broadcasts the SMALL deleted side under a
     // semi join (map-only over the big plane).
     val delTrip = r.keep(trip(delQuads).distinct())
-    val deletedTriples = r.keep(delTrip.except(
-        tripSemiJoin(remExpl, delTrip, "left_semi", hintBc = true).distinct()))
+    // the keep's own job counts the lost triples and the axioms among
+    // them (axiom routing below)
+    val (deletedTriples, lost) = r.probe(delTrip.except(
+        tripSemiJoin(remExpl, delTrip, "left_semi", hintBc = true).distinct()),
+      count(lit(1)),
+      count(when(col("p")("lex").isin(AxiomPreds: _*) ||
+        (col("p")("lex") === RdfType &&
+          col("o")("lex").isin(AxiomTypeObjects: _*)), 1)))
     val infQuads = base.filter(col("g") === G)
-    if (deletedTriples.isEmpty)
+    if (lost.getLong(0) == 0)
       // every deleted quad survives in another graph — the triple set
       // (and so the closure) is unchanged. An axiom quad with a
       // surviving copy changes no ontology either — it never reaches
@@ -774,18 +780,14 @@ object OwlHorst {
     // same surrender family as the axiom-seed row cap).
     val axiomBatchMax =
       sys.props.getOrElse("graft.infer.axiom.batch.max", "8").toInt
-    val deletedAxioms = deletedTriples.filter(
-      col("p")("lex").isin(AxiomPreds: _*) ||
-        (col("p")("lex") === RdfType &&
-          col("o")("lex").isin(AxiomTypeObjects: _*)))
-      .limit(axiomBatchMax + 1).collect()
-    if (deletedAxioms.length > axiomBatchMax) {
+    val deletedAxioms = lost.getLong(1)
+    if (deletedAxioms > axiomBatchMax) {
       dredAxiomFallbacks.incrementAndGet()
       return fullDiffDeltas(materialize(spark, remainingExplicit),
         trip(infQuads))
     }
     val ontOld =
-      if (deletedAxioms.isEmpty) { dredDeletes.incrementAndGet(); None }
+      if (deletedAxioms == 0) { dredDeletes.incrementAndGet(); None }
       else { dredAxiomIncrementals.incrementAndGet()
         Some(ontology(explicitRows)) }
     // same constraint-propagation guard window as [[run]] — the taint
@@ -1492,7 +1494,7 @@ object OwlHorst {
     // survivors subtract against the FULL remaining explicit plane (a
     // lost rule's output predicate may fall outside the new derivable
     // set, so the pruned blockSlice is not enough here).
-    val axiomSeed: Option[DataFrame] = ontOld.map { oOld =>
+    val axiomSeed: Option[(DataFrame, Long)] = ontOld.map { oOld =>
       def sel0(df: DataFrame) = df.select(col("s").as("s"),
         col("p").as("p"), col("o").as("o"))
       var frames = Seq.empty[DataFrame]
@@ -1523,11 +1525,13 @@ object OwlHorst {
           p12Mirror = false).map(sel0)
       }
       frames.reduceOption(_.unionByName(_)) match {
-        case None => deletedTriples.limit(0)
+        case None => (deletedTriples.limit(0), 0L)
         case Some(f) =>
           val cand = r.keep(f.distinct())
-          r.keep(cand.except(
-            tripSemiJoin(remExpl, cand, "left_semi", hintBc = true).distinct()))
+          val (s0, n) = r.probe(cand.except(
+            tripSemiJoin(remExpl, cand, "left_semi", hintBc = true).distinct()),
+            count(lit(1)))
+          (s0, n.getLong(0))
       }
     }
     // FAIL-SAFE size guard (r16 review): a lost TransitiveProperty
@@ -1538,8 +1542,8 @@ object OwlHorst {
     // round-cap fallbacks).
     val axiomSeedCap =
       sys.props.getOrElse("graft.infer.axiomseed.cap", "50000").toLong
-    axiomSeed.foreach { s0 =>
-      if (s0.count() > axiomSeedCap) {
+    axiomSeed.foreach { case (_, n) =>
+      if (n > axiomSeedCap) {
         System.err.println(s"[owlhorst-dred] axiom taint seed exceeds " +
           s"$axiomSeedCap rows — falling back to full re-materialization")
         capFallbacks.incrementAndGet()
@@ -1564,7 +1568,7 @@ object OwlHorst {
     var driverTaintRows: Seq[org.apache.spark.sql.Row] = null
     if (driverWsCap > 0 && driverPairs.isDefined) {
       val seedFrame = axiomSeed match {
-        case Some(s0) if !s0.isEmpty => deletedTriples.unionByName(s0)
+        case Some((s0, n)) if n > 0 => deletedTriples.unionByName(s0)
         case _ => deletedTriples
       }
       val head = seedFrame.limit(driverWsCap + 1).collect()
@@ -1593,7 +1597,7 @@ object OwlHorst {
     }
     if (!driverDone) {
     taintAll = axiomSeed match {
-      case Some(s0) if !s0.isEmpty =>
+      case Some((s0, n)) if n > 0 =>
         r.keep(deletedTriples.unionByName(s0).distinct())
       case _ => deletedTriples
     }

@@ -115,19 +115,6 @@ object Fixpoint {
       } finally cached.foreach(_.unpersist(blocking = false))
     }
 
-  /** Closure for term-struct pairs (join on lex+kind identity). */
-  def closureTerms(edges: DataFrame): DataFrame =
-    closure(edges, (f, s) =>
-      f("b")("lex") === s("m")("lex") && f("b")("kind") === s("m")("kind"))
-
-  /** Closure of term-struct pairs `(g, a, b)` WITHIN each named graph
-    * (the GRAPH ?var property-path case).
-    */
-  def closureTermsGrouped(edges: DataFrame): DataFrame =
-    closure(edges, (f, s) =>
-      f("b")("lex") === s("m")("lex") && f("b")("kind") === s("m")("kind"),
-      groupCols = Seq("g"))
-
   /** Closure of 8-byte term-id pairs `(a, b)` — the encoded-plane
     * variant: every fixpoint round shuffles 16-byte rows instead of
     * lexical term structs (SURVEY §1.5/§7 hard-part (5) applied to the
@@ -135,10 +122,6 @@ object Fixpoint {
     */
   def closureLongs(edges: DataFrame): DataFrame =
     closure(edges, (f, s) => f("b") === s("m"))
-
-  /** Id-pair closure `(g, a, b)` within each named graph. */
-  def closureLongsGrouped(edges: DataFrame): DataFrame =
-    closure(edges, (f, s) => f("b") === s("m"), groupCols = Seq("g"))
 
   /** Node set reachable in ≥1 application of `step` from `n0` (a
     * single-column "n" DataFrame). The seeded counterpart of

@@ -121,7 +121,7 @@ object Rounds {
 
   /** Free `df`'s blocks now if it is a checkpoint root; a no-op for any
     * other frame. The one release outside a scope: for checkpoints a
-    * scope cannot own (a cache entry, a guard's key frame).
+    * scope cannot own, which are [[graft.core.DfCache]] entries.
     */
   private[graft] def releaseRoot(df: Dataset[_]): Unit =
     root(df).foreach(_.unpersist(blocking = false))

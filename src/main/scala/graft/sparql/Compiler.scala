@@ -676,30 +676,31 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
     if (shared.exists(localNullable)) return None
     val localDf = comp(local)
     if (shared.exists(v => !localDf.columns.contains(v))) return None
+    // one bounded collect: up to max + 1 distinct bindings tell both
+    // the empty and the oversized case apart from an injectable one
+    val maxKeys = math.min(Sparql.boundJoinMaxKeys, Int.MaxValue - 1L).toInt
+    if (maxKeys <= 0) return None
     val keys = localDf.select(shared.map(localDf(_)).toIndexedSeq: _*)
-      .distinct().persist()
-    try {
-      val n = keys.count()
-      if (n == 0 || n > Sparql.boundJoinMaxKeys) return None
-      val rows = keys.collect().map { row =>
-        shared.indices.map { i =>
-          if (row.isNullAt(i)) Option.empty[T]
-          else {
-            val t = row.getStruct(i)
-            Some(T(t.getString(0), t.getInt(1), t.getString(2),
-              t.getString(3)))
-          }
-        }.toSeq
+      .distinct().limit(maxKeys + 1).collect()
+    if (keys.isEmpty || keys.length > maxKeys) return None
+    val rows = keys.map { row =>
+      shared.indices.map { i =>
+        if (row.isNullAt(i)) Option.empty[T]
+        else {
+          val t = row.getStruct(i)
+          Some(T(t.getString(0), t.getInt(1), t.getString(2),
+            t.getString(3)))
+        }
       }.toSeq
-      Sparql.serviceBoundJoins.incrementAndGet()
-      val injected = Join(ValuesOp(shared, rows), svc.inner)
-      val remoteDf = new Compiler(spark, remote)
-        .compile(injected, valueNeeded ++ shared)
-      val nullable = localNullable ++ maybeUnbound(svc)
-      Some(
-        if (svcLeft) solJoin(remoteDf, localDf, "inner", nullable)
-        else solJoin(localDf, remoteDf, "inner", nullable))
-    } finally keys.unpersist()
+    }.toSeq
+    Sparql.serviceBoundJoins.incrementAndGet()
+    val injected = Join(ValuesOp(shared, rows), svc.inner)
+    val remoteDf = new Compiler(spark, remote)
+      .compile(injected, valueNeeded ++ shared)
+    val nullable = localNullable ++ maybeUnbound(svc)
+    Some(
+      if (svcLeft) solJoin(remoteDf, localDf, "inner", nullable)
+      else solJoin(localDf, remoteDf, "inner", nullable))
   }
 
   private def solJoin(l: DataFrame, r: DataFrame, joinType: String,
@@ -2967,24 +2968,8 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
     val cand = ilCond match {
       case Some(c) => keys.join(lr, c)
       case None =>
-        // dependent cross join: bound the key frame before exploding.
-        // The guard is FOLDED into the frame it guards (r15): the
-        // distinct key frame materializes ONCE via localCheckpoint and
-        // both the bound count and the cross join read the leaf — the
-        // old standalone keys.count() re-ran the distinct a second
-        // time inside the main plan. (A CollectLimit probe would run
-        // the serialized incremental partition scale-up — the round-7
-        // lesson — so the count stays a full, now-cheap, leaf count.)
-        val keysCk = keys.localCheckpoint()
-        if (keysCk.count() > 1000) {
-          // release the oversized frame's blocks NOW — the bail path is
-          // exactly where the leaf is big; the success leaf is <=1000
-          // rows and GC-collected. keysCk is a checkpoint root, so the
-          // root release frees it (Dataset.unpersist would not)
-          graft.plans.Rounds.releaseRoot(keysCk)
-          return None
-        }
-        keysCk.crossJoin(lr)
+        // dependent cross join: bound the key frame before exploding
+        boundedKeyFrame(keys).getOrElse(return None).crossJoin(lr)
     }
     def lVal(v: String): Column =
       if (sharedIL.contains(v) && nullIL(v)) coalesce(cand(v), cand(lRen(v)))
@@ -3036,6 +3021,19 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
     Some(in.join(ok, eq, if (positive) "left_semi" else "left_anti"))
   }
 
+  /** The 1000-key guard of a dependent cross join on the struct plane:
+    * the distinct key frame materializes ONCE, as one checkpoint that
+    * both the bound test and the join read, and its row count comes
+    * from the checkpoint's own job. `None` past the bound, with the
+    * oversized frame's blocks freed by the scope at once — the bail
+    * path is exactly where the leaf is big.
+    */
+  private def boundedKeyFrame(keys: DataFrame): Option[DataFrame] =
+    graft.plans.Rounds { r =>
+      val (ck, p) = r.probe(keys, count(lit(1)))
+      if (p.getLong(0) > 1000) None else Some(ck)
+    }
+
   private def compCorrExistsMinus(input: Op, l: Op, r: Op,
       outerScope: Set[String], positive: Boolean): Option[DataFrame] = {
     if (corrVarsOf(l, outerScope).nonEmpty) return None
@@ -3075,21 +3073,8 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
     val cand = ilCond match {
       case Some(c) => keys.join(lr, c)
       case None =>
-        // dependent cross join: bound the key frame before exploding.
-        // Guard FOLDED into the frame (r15): one localCheckpoint feeds
-        // both the bound count and the cross join — no second distinct
-        // inside the main plan. (Plain count, not a CollectLimit
-        // probe — the round-7 serialized-scale-up lesson.)
-        val keysCk = keys.localCheckpoint()
-        if (keysCk.count() > 1000) {
-          // release the oversized frame's blocks NOW — the bail path is
-          // exactly where the leaf is big; the success leaf is <=1000
-          // rows and GC-collected. keysCk is a checkpoint root, so the
-          // root release frees it (Dataset.unpersist would not)
-          graft.plans.Rounds.releaseRoot(keysCk)
-          return None
-        }
-        keysCk.crossJoin(lr)
+        // dependent cross join: bound the key frame before exploding
+        boundedKeyFrame(keys).getOrElse(return None).crossJoin(lr)
     }
     // an l var's value on a cand row: the outer key wins where joined
     def lVal(v: String): Column =
@@ -3409,15 +3394,7 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
       case Some(c) =>
         if (emptyGroup) keys.join(idM, c, "left_outer") else keys.join(idM, c)
       case None =>
-        // guard FOLDED into the frame it guards (r15): one
-        // localCheckpoint feeds both the bound count and the join —
-        // no second distinct inside the main plan
-        val keysCk = keys.localCheckpoint()
-        if (keysCk.count() > 1000) {
-          // same oversized-frame release as the semi-join guard above
-          graft.plans.Rounds.releaseRoot(keysCk)
-          return None
-        }
+        val keysCk = boundedKeyFrame(keys).getOrElse(return None)
         if (emptyGroup) keysCk.join(idM, lit(true), "left_outer")
         else keysCk.crossJoin(idM)
     }
@@ -3676,65 +3653,45 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
       case PVar(pv) =>
         scoped.select((col("s").as("a") +: col("o").as("b") +:
           col("p").as(pv) +: gVar.map(_ => col("g")).toSeq): _*)
-      case path if gVar.isDefined =>
-        // per-graph evaluation; pairs carry g, picked up below. A
-        // CONSTANT endpoint matches zero-length paths in EVERY named
-        // graph regardless of whether the term occurs there (§9.3
-        // ZeroLengthPath with a bound term — same semantics the seeded
-        // walk gives the non-GRAPH form)
-        val base = encSc match {
-          case Some(enc) if pathHasClosure(path) =>
-            decodeIdCols(evalPathIdsG(path, enc), Seq("a", "b"),
-              pathDecodeDict(path, scoped, needFull = pathHasZeroLength(path)))
-          case _ => evalPathG(path, scoped)
-        }
-        val constEnd = (tp.s, tp.o) match {
-          case (t: T, _) => Some(t)
-          case (_, t: T) => Some(t)
-          case _ => None
-        }
-        constEnd match {
-          case Some(t) if pathHasZeroLength(path) =>
-            base.unionByName(scoped.select(col("g")).distinct()
-              .select(col("g"), constCol(t).as("a"), constCol(t).as("b")))
-              .distinct()
-          case _ => base
-        }
       case path =>
-        encSc match {
-          case Some(enc) if pathHasClosure(path) =>
-            def seedId(t: T) =
-              spark.range(1).select(lit(litTermId(t.lex, t.kind)).as("n"))
-            // seeded outputs are {seed} ∪ predicate-incident nodes, so
-            // the LOCAL dictionary + seed fallback always suffices;
-            // only an unseeded top-level zero-length path surfaces
-            // arbitrary universe terms and needs the full dictionary
-            (tp.s, tp.o) match {
-              case (t: T, _) => // constant subject: forward id-frontier walk
-                decodeIdCols(walkIds(path, seedId(t), fwd = true, enc),
-                    Seq("n"), pathDecodeDict(path, scoped, needFull = false),
-                    Map("n" -> constCol(t)))
-                  .select(constCol(t).as("a"), col("n").as("b"))
-              case (_, t: T) => // constant object: backward id-frontier walk
-                decodeIdCols(walkIds(path, seedId(t), fwd = false, enc),
-                    Seq("n"), pathDecodeDict(path, scoped, needFull = false),
-                    Map("n" -> constCol(t)))
-                  .select(col("n").as("a"), constCol(t).as("b"))
-              case _ =>
-                decodeIdCols(evalPathIds(path, enc), Seq("a", "b"),
-                  pathDecodeDict(path, scoped, needFull = pathHasZeroLength(path)))
-            }
-          case _ =>
-            def seed(t: T) = spark.range(1).select(constCol(t).as("n"))
-            (tp.s, tp.o) match {
-              case (t: T, _) => // constant subject: forward frontier walk
-                walk(path, seed(t), fwd = true, scoped)
-                  .select(constCol(t).as("a"), col("n").as("b"))
-              case (_, t: T) => // constant object: backward frontier walk
-                walk(path, seed(t), fwd = false, scoped)
-                  .select(col("n").as("a"), constCol(t).as("b"))
-              case _ => evalPath(path, scoped)
-            }
+        val pl = pathPlane(path, scoped, encSc)
+        if (gVar.isDefined) {
+          // per-graph evaluation; pairs carry g, picked up below. A
+          // CONSTANT endpoint matches zero-length paths in EVERY named
+          // graph regardless of whether the term occurs there (§9.3
+          // ZeroLengthPath with a bound term — same semantics the seeded
+          // walk gives the non-GRAPH form)
+          val base = pl.decode(evalPath(path, pl, grouped = true),
+            Seq("a", "b"), needFull = pathHasZeroLength(path))
+          val constEnd = (tp.s, tp.o) match {
+            case (t: T, _) => Some(t)
+            case (_, t: T) => Some(t)
+            case _ => None
+          }
+          constEnd match {
+            case Some(t) if pathHasZeroLength(path) =>
+              base.unionByName(scoped.select(col("g")).distinct()
+                .select(col("g"), constCol(t).as("a"), constCol(t).as("b")))
+                .distinct()
+            case _ => base
+          }
+        } else {
+          // seeded outputs are {seed} ∪ predicate-incident nodes, so the
+          // id plane's LOCAL dictionary + seed fallback always suffices;
+          // only an unseeded top-level zero-length path surfaces
+          // arbitrary universe terms and needs the full dictionary
+          def walkFrom(t: T, fwd: Boolean) =
+            pl.decode(walk(path, spark.range(1).select(pl.seed(t).as("n")), fwd, pl),
+              Seq("n"), needFull = false, Map("n" -> constCol(t)))
+          (tp.s, tp.o) match {
+            case (t: T, _) => // constant subject: forward frontier walk
+              walkFrom(t, fwd = true).select(constCol(t).as("a"), col("n").as("b"))
+            case (_, t: T) => // constant object: backward frontier walk
+              walkFrom(t, fwd = false).select(col("n").as("a"), constCol(t).as("b"))
+            case _ =>
+              pl.decode(evalPath(path, pl, grouped = false), Seq("a", "b"),
+                needFull = pathHasZeroLength(path))
+          }
         }
     }
     // bind/constrain s and o
@@ -3773,193 +3730,93 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
   // property paths (SURVEY §2.B path table)
   // ------------------------------------------------------------------
 
-  /** Evaluate a path to a pair relation (a, b) over the scoped quads.
-    * `p*`/`p+` run a distinct-frontier transitive-closure fixpoint with
-    * `localCheckpoint` per round (lineage truncation — SURVEY §4.2).
+  /** What the path operators differ in between the two term planes.
+    * The struct plane runs over the scoped quads' term structs and
+    * decodes nothing. The id plane runs over the encoded table's 8-byte
+    * ids (id equality ⟺ term identity, collision-checked at encode) and
+    * decodes ONCE at the pattern edge: every composition and every
+    * fixpoint ROUND then shuffles longs instead of term structs — the
+    * one place the §1.5 dictionary win multiplies by graph diameter.
+    * `pred` is the predicate column and `predKey` an IRI's value in it;
+    * `same` is node identity; `seed` a constant term's node value;
+    * `dict` the id plane's decode dictionary, given `needFull`.
     */
-  private def evalPath(p: Path, scoped: DataFrame): DataFrame = p match {
-    case PLink(iri) =>
-      scoped.filter(col("p")("lex") === iri).select(col("s").as("a"), col("o").as("b"))
-    case PVar(_) =>
-      scoped.select(col("s").as("a"), col("o").as("b"))
-    case PNeg(iris) =>
-      scoped.filter(!col("p")("lex").isin(iris: _*))
-        .select(col("s").as("a"), col("o").as("b"))
-    case PInv(q) =>
-      evalPath(q, scoped).select(col("b").as("a"), col("a").as("b"))
-    case PSeq(l, r) =>
-      val ld = evalPath(l, scoped)
-      val rd = evalPath(r, scoped).withColumnRenamed("a", "m").withColumnRenamed("b", "b2")
-      ld.join(rd, termEq(ld("b"), col("m"))).select(ld("a").as("a"), col("b2").as("b"))
-        .distinct()
-    case PAlt(l, r) =>
-      evalPath(l, scoped).unionByName(evalPath(r, scoped)).distinct()
-    case POpt(q) =>
-      evalPath(q, scoped).unionByName(identityPairs(scoped)).distinct()
-    case PPlus(q) => closure(evalPath(q, scoped).distinct())
-    case PStar(q) =>
-      closure(evalPath(q, scoped).distinct()).unionByName(identityPairs(scoped)).distinct()
+  private final case class PathPlane(edges: DataFrame, s: String, o: String,
+      pred: Column, predKey: String => Any, same: (Column, Column) => Column,
+      seed: T => Column, dict: Option[Boolean => DataFrame]) {
+    def link(iri: String): DataFrame = edges.filter(pred === predKey(iri))
+    def negated(iris: Seq[String]): DataFrame =
+      edges.filter(!pred.isin(iris.map(predKey): _*))
+    /** node columns `names` back to term structs (see [[decodeIdCols]]) */
+    def decode(df: DataFrame, names: Seq[String], needFull: Boolean,
+        fallback: Map[String, Column] = Map.empty): DataFrame =
+      dict.fold(df)(d => decodeIdCols(df, names, d(needFull), fallback))
   }
 
-  /** zero-length path endpoints: every term of the scoped graph
-    * (SPARQL §9.3 ZeroLengthPath with both ends unbound). Only reached
-    * when NEITHER endpoint is constant — bound endpoints take the
-    * seeded [[walk]] instead, which never enumerates the term universe.
+  /** The id plane when the encoded view exists and the path has a
+    * closure; else the struct plane.
     */
-  private def identityPairs(scoped: DataFrame): DataFrame =
-    scoped.select(col("s").as("t")).unionByName(scoped.select(col("o").as("t")))
-      .distinct().select(col("t").as("a"), col("t").as("b"))
-
-  /** Path evaluation under `GRAPH ?var`: pair relations carry the
-    * graph column and every composition (join, closure, zero-length)
-    * stays WITHIN one named graph — the per-graph counterpart of
-    * [[evalPath]], sharing one fixpoint across graphs
-    * ([[graft.plans.Fixpoint.closureTermsGrouped]]).
-    */
-  private def evalPathG(p: Path, scoped: DataFrame): DataFrame = p match {
-    case PLink(iri) =>
-      scoped.filter(col("p")("lex") === iri)
-        .select(col("g"), col("s").as("a"), col("o").as("b"))
-    case PVar(_) =>
-      scoped.select(col("g"), col("s").as("a"), col("o").as("b"))
-    case PNeg(iris) =>
-      scoped.filter(!col("p")("lex").isin(iris: _*))
-        .select(col("g"), col("s").as("a"), col("o").as("b"))
-    case PInv(q) =>
-      evalPathG(q, scoped).select(col("g"), col("b").as("a"), col("a").as("b"))
-    case PSeq(l, r) =>
-      val ld = evalPathG(l, scoped)
-      val rd = evalPathG(r, scoped).withColumnRenamed("g", "g2")
-        .withColumnRenamed("a", "m").withColumnRenamed("b", "b2")
-      ld.join(rd, termEq(ld("b"), rd("m")) && ld("g") === rd("g2"))
-        .select(ld("g").as("g"), ld("a").as("a"), col("b2").as("b"))
-        .distinct()
-    case PAlt(l, r) =>
-      evalPathG(l, scoped).unionByName(evalPathG(r, scoped)).distinct()
-    case POpt(q) =>
-      evalPathG(q, scoped).unionByName(identityPairsG(scoped)).distinct()
-    case PPlus(q) =>
-      graft.plans.Fixpoint.closureTermsGrouped(evalPathG(q, scoped).distinct())
-    case PStar(q) =>
-      graft.plans.Fixpoint.closureTermsGrouped(evalPathG(q, scoped).distinct())
-        .unionByName(identityPairsG(scoped)).distinct()
+  private def pathPlane(path: Path, scoped: DataFrame,
+      encSc: Option[DataFrame]): PathPlane = encSc match {
+    case Some(enc) if pathHasClosure(path) =>
+      import graft.core.TermDictionary.litTermId
+      PathPlane(enc, "s_id", "o_id", col("p_id"), litTermId(_, IRI), _ === _,
+        t => lit(litTermId(t.lex, t.kind)),
+        Some(needFull => pathDecodeDict(path, scoped, needFull)))
+    case _ =>
+      PathPlane(scoped, "s", "o", col("p")("lex"), identity, termEq, constCol, None)
   }
 
-  // ---- id-space path evaluation (encoded plane) ---------------------
-  // The struct evaluators above shuffle full term structs every
-  // composition and every fixpoint ROUND — the one place the §1.5
-  // dictionary win multiplies by graph diameter. When the encoded
-  // plane exists, the whole pair relation is built over 8-byte ids
-  // (id equality ⟺ term identity, collision-checked at encode) and
-  // decodes ONCE at the pattern edge. Semantics match the struct
-  // plane's term-identity convention exactly.
-
-  /** id-space [[evalPath]]: `(a, b)` long pair relation. */
-  private def evalPathIds(p: Path, enc: DataFrame): DataFrame = {
-    import graft.core.TermDictionary.litTermId
+  /** Evaluate a path to a pair relation (a, b) over the plane's edges;
+    * `grouped` (the `GRAPH ?var` case) carries the graph column `g` and
+    * keeps every composition (join, closure, zero-length) WITHIN one
+    * named graph, sharing one fixpoint across graphs. `p*`/`p+` run the
+    * distinct-frontier transitive-closure fixpoint of
+    * [[graft.plans.Fixpoint.closure]].
+    */
+  private def evalPath(p: Path, pl: PathPlane, grouped: Boolean): DataFrame = {
+    val groupCols = if (grouped) Seq("g") else Nil
+    val g = groupCols.map(col)
+    def pairs(edges: DataFrame) =
+      edges.select(g :+ col(pl.s).as("a") :+ col(pl.o).as("b"): _*)
+    def close(q: Path) = graft.plans.Fixpoint.closure(
+      evalPath(q, pl, grouped).distinct(), (f, s) => pl.same(f("b"), s("m")),
+      groupCols = groupCols)
     p match {
-      case PLink(iri) =>
-        enc.filter(col("p_id") === lit(litTermId(iri, IRI)))
-          .select(col("s_id").as("a"), col("o_id").as("b"))
-      case PVar(_) =>
-        enc.select(col("s_id").as("a"), col("o_id").as("b"))
-      case PNeg(iris) =>
-        enc.filter(!col("p_id").isin(iris.map(litTermId(_, IRI)): _*))
-          .select(col("s_id").as("a"), col("o_id").as("b"))
+      case PLink(iri) => pairs(pl.link(iri))
+      case PVar(_) => pairs(pl.edges)
+      case PNeg(iris) => pairs(pl.negated(iris))
       case PInv(q) =>
-        evalPathIds(q, enc).select(col("b").as("a"), col("a").as("b"))
+        evalPath(q, pl, grouped).select(g :+ col("b").as("a") :+ col("a").as("b"): _*)
       case PSeq(l, r) =>
-        val ld = evalPathIds(l, enc)
-        val rd = evalPathIds(r, enc)
+        val ld = evalPath(l, pl, grouped)
+        val r0 = evalPath(r, pl, grouped)
+        val rd = (if (grouped) r0.withColumnRenamed("g", "g2") else r0)
           .withColumnRenamed("a", "m").withColumnRenamed("b", "b2")
-        ld.join(rd, ld("b") === col("m"))
-          .select(ld("a").as("a"), col("b2").as("b")).distinct()
-      case PAlt(l, r) =>
-        evalPathIds(l, enc).unionByName(evalPathIds(r, enc)).distinct()
-      case POpt(q) =>
-        evalPathIds(q, enc).unionByName(identityIdPairs(enc)).distinct()
-      case PPlus(q) =>
-        graft.plans.Fixpoint.closureLongs(evalPathIds(q, enc).distinct())
-      case PStar(q) =>
-        graft.plans.Fixpoint.closureLongs(evalPathIds(q, enc).distinct())
-          .unionByName(identityIdPairs(enc)).distinct()
-    }
-  }
-
-  private def identityIdPairs(enc: DataFrame): DataFrame =
-    enc.select(col("s_id").as("t")).unionByName(enc.select(col("o_id").as("t")))
-      .distinct().select(col("t").as("a"), col("t").as("b"))
-
-  /** id-space [[evalPathG]]: `(g, a, b)` pairs within each graph. */
-  private def evalPathIdsG(p: Path, enc: DataFrame): DataFrame = {
-    import graft.core.TermDictionary.litTermId
-    p match {
-      case PLink(iri) =>
-        enc.filter(col("p_id") === lit(litTermId(iri, IRI)))
-          .select(col("g"), col("s_id").as("a"), col("o_id").as("b"))
-      case PVar(_) =>
-        enc.select(col("g"), col("s_id").as("a"), col("o_id").as("b"))
-      case PNeg(iris) =>
-        enc.filter(!col("p_id").isin(iris.map(litTermId(_, IRI)): _*))
-          .select(col("g"), col("s_id").as("a"), col("o_id").as("b"))
-      case PInv(q) =>
-        evalPathIdsG(q, enc).select(col("g"), col("b").as("a"), col("a").as("b"))
-      case PSeq(l, r) =>
-        val ld = evalPathIdsG(l, enc)
-        val rd = evalPathIdsG(r, enc).withColumnRenamed("g", "g2")
-          .withColumnRenamed("a", "m").withColumnRenamed("b", "b2")
-        ld.join(rd, ld("b") === rd("m") && ld("g") === rd("g2"))
-          .select(ld("g").as("g"), ld("a").as("a"), col("b2").as("b"))
+        val sameNode = pl.same(ld("b"), rd("m"))
+        ld.join(rd, if (grouped) sameNode && ld("g") === rd("g2") else sameNode)
+          .select(groupCols.map(ld(_).as("g")) :+ ld("a").as("a") :+ col("b2").as("b"): _*)
           .distinct()
       case PAlt(l, r) =>
-        evalPathIdsG(l, enc).unionByName(evalPathIdsG(r, enc)).distinct()
+        evalPath(l, pl, grouped).unionByName(evalPath(r, pl, grouped)).distinct()
       case POpt(q) =>
-        evalPathIdsG(q, enc).unionByName(identityIdPairsG(enc)).distinct()
-      case PPlus(q) =>
-        graft.plans.Fixpoint.closureLongsGrouped(evalPathIdsG(q, enc).distinct())
-      case PStar(q) =>
-        graft.plans.Fixpoint.closureLongsGrouped(evalPathIdsG(q, enc).distinct())
-          .unionByName(identityIdPairsG(enc)).distinct()
+        evalPath(q, pl, grouped).unionByName(identityPairs(pl, grouped)).distinct()
+      case PPlus(q) => close(q)
+      case PStar(q) => close(q).unionByName(identityPairs(pl, grouped)).distinct()
     }
   }
 
-  private def identityIdPairsG(enc: DataFrame): DataFrame =
-    enc.select(col("g"), col("s_id").as("t"))
-      .unionByName(enc.select(col("g"), col("o_id").as("t")))
-      .distinct().select(col("g"), col("t").as("a"), col("t").as("b"))
-
-  /** id-space [[walk]]: push a LONG frontier (column `n`) through the
-    * path. Closure segments BFS over 8-byte ids — the seeded variant's
-    * whole win compounds here, since every BFS round's shuffle drops
-    * from term structs to longs.
+  /** zero-length path endpoints: every term of the plane's edges, per
+    * named graph when `grouped` (SPARQL §9.3 ZeroLengthPath with both
+    * ends unbound). Only reached when NEITHER endpoint is constant —
+    * bound endpoints take the seeded [[walk]] instead, which never
+    * enumerates the term universe.
     */
-  private def walkIds(p: Path, nodes: DataFrame, fwd: Boolean,
-      enc: DataFrame): DataFrame = {
-    import graft.core.TermDictionary.litTermId
-    def step(edges: DataFrame): DataFrame = {
-      val (from, to) = if (fwd) ("s_id", "o_id") else ("o_id", "s_id")
-      edges.join(nodes, edges(from) === nodes("n"))
-        .select(edges(to).as("n")).distinct()
-    }
-    p match {
-      case PLink(iri) => step(enc.filter(col("p_id") === lit(litTermId(iri, IRI))))
-      case PNeg(iris) =>
-        step(enc.filter(!col("p_id").isin(iris.map(litTermId(_, IRI)): _*)))
-      case PVar(_) => step(enc)
-      case PInv(q) => walkIds(q, nodes, !fwd, enc)
-      case PSeq(l, r) =>
-        if (fwd) walkIds(r, walkIds(l, nodes, fwd, enc), fwd, enc)
-        else walkIds(l, walkIds(r, nodes, fwd, enc), fwd, enc)
-      case PAlt(l, r) =>
-        walkIds(l, nodes, fwd, enc).unionByName(walkIds(r, nodes, fwd, enc)).distinct()
-      case POpt(q) => nodes.unionByName(walkIds(q, nodes, fwd, enc)).distinct()
-      case PPlus(q) =>
-        graft.plans.Fixpoint.reachNodes(nodes, f => walkIds(q, f, fwd, enc))
-      case PStar(q) =>
-        nodes.unionByName(
-          graft.plans.Fixpoint.reachNodes(nodes, f => walkIds(q, f, fwd, enc)))
-          .distinct()
-    }
+  private def identityPairs(pl: PathPlane, grouped: Boolean): DataFrame = {
+    val g = if (grouped) Seq(col("g")) else Nil
+    pl.edges.select(g :+ col(pl.s).as("t"): _*)
+      .unionByName(pl.edges.select(g :+ col(pl.o).as("t"): _*))
+      .distinct().select(g :+ col("t").as("a") :+ col("t").as("b"): _*)
   }
 
   /** Does the path contain a variable-length segment? Only closures
@@ -4047,61 +3904,49 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
     case _ => false
   }
 
-  /** zero-length endpoints per named graph: `(g, t, t)` */
-  private def identityPairsG(scoped: DataFrame): DataFrame =
-    scoped.select(col("g"), col("s").as("t"))
-      .unionByName(scoped.select(col("g"), col("o").as("t")))
-      .distinct().select(col("g"), col("t").as("a"), col("t").as("b"))
-
-  /** Seeded path evaluation: push a node frontier through the path,
-    * forward (`fwd`) or backward (for a constant OBJECT endpoint).
-    * Closure segments BFS from the frontier via [[Fixpoint.reachNodes]]
-    * — work proportional to the REACHABLE subgraph, where the unseeded
-    * [[evalPath]] closes the entire edge relation and (for `p*`/`p?`)
-    * enumerates every term for the zero-length case. At store scale
-    * this is the difference between a frontier of one and a full scan
-    * + fixpoint over everything. Zero-length from a constant matches
-    * the constant itself (SPARQL §9.3 ZeroLengthPath with a bound
-    * term), with no occurs-in-graph requirement.
+  /** Seeded path evaluation: push a node frontier (column `n`)
+    * through the path, forward (`fwd`) or backward (for a constant
+    * OBJECT endpoint). Closure segments BFS from the frontier via
+    * [[graft.plans.Fixpoint.reachNodes]] — work proportional to the
+    * REACHABLE subgraph, where the unseeded [[evalPath]] closes the
+    * entire edge relation and (for `p*`/`p?`) enumerates every term
+    * for the zero-length case. At store scale this is the difference
+    * between a frontier of one and a full scan + fixpoint over
+    * everything. Zero-length from a constant matches the constant
+    * itself (SPARQL §9.3 ZeroLengthPath with a bound term), with no
+    * occurs-in-graph requirement.
     */
   private def walk(p: Path, nodes: DataFrame, fwd: Boolean,
-      scoped: DataFrame): DataFrame = {
+      pl: PathPlane): DataFrame = {
     // frontiers are node SETS (matching evalPath's distinct-pair
     // semantics): dedup each step so the frontier grows with reachable
     // NODES, not path multiplicity — on dense DAGs the difference is
     // exponential
     def step(edges: DataFrame): DataFrame = {
-      val (from, to) = if (fwd) ("s", "o") else ("o", "s")
-      edges.join(nodes, edges(from)("lex") === nodes("n")("lex") &&
-          edges(from)("kind") === nodes("n")("kind"))
+      val (from, to) = if (fwd) (pl.s, pl.o) else (pl.o, pl.s)
+      edges.join(nodes, pl.same(edges(from), nodes("n")))
         .select(edges(to).as("n"))
         .distinct()
     }
     p match {
-      case PLink(iri) => step(scoped.filter(col("p")("lex") === iri))
-      case PNeg(iris) => step(scoped.filter(!col("p")("lex").isin(iris: _*)))
-      case PVar(_) => step(scoped)
-      case PInv(q) => walk(q, nodes, !fwd, scoped)
+      case PLink(iri) => step(pl.link(iri))
+      case PNeg(iris) => step(pl.negated(iris))
+      case PVar(_) => step(pl.edges)
+      case PInv(q) => walk(q, nodes, !fwd, pl)
       case PSeq(l, r) =>
-        if (fwd) walk(r, walk(l, nodes, fwd, scoped), fwd, scoped)
-        else walk(l, walk(r, nodes, fwd, scoped), fwd, scoped)
+        if (fwd) walk(r, walk(l, nodes, fwd, pl), fwd, pl)
+        else walk(l, walk(r, nodes, fwd, pl), fwd, pl)
       case PAlt(l, r) =>
-        walk(l, nodes, fwd, scoped).unionByName(walk(r, nodes, fwd, scoped)).distinct()
-      case POpt(q) => nodes.unionByName(walk(q, nodes, fwd, scoped)).distinct()
+        walk(l, nodes, fwd, pl).unionByName(walk(r, nodes, fwd, pl)).distinct()
+      case POpt(q) => nodes.unionByName(walk(q, nodes, fwd, pl)).distinct()
       case PPlus(q) =>
-        graft.plans.Fixpoint.reachNodes(nodes, f => walk(q, f, fwd, scoped))
+        graft.plans.Fixpoint.reachNodes(nodes, f => walk(q, f, fwd, pl))
       case PStar(q) =>
         nodes.unionByName(
-          graft.plans.Fixpoint.reachNodes(nodes, f => walk(q, f, fwd, scoped)))
+          graft.plans.Fixpoint.reachNodes(nodes, f => walk(q, f, fwd, pl)))
           .distinct()
     }
   }
-
-  /** Semi-naive transitive closure — shared [[graft.plans.Fixpoint]]
-    * machinery (also used by inference and graph analytics).
-    */
-  private def closure(edges0: DataFrame): DataFrame =
-    graft.plans.Fixpoint.closureTerms(edges0)
 
   // ------------------------------------------------------------------
   // expressions (SPARQL 1.1 §17) — all term-struct in, term-struct out

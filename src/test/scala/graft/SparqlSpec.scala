@@ -493,7 +493,17 @@ class SparqlSpec extends GraftSuite {
       // per-graph closure under GRAPH ?var
       "SELECT ?g ?a ?b WHERE { GRAPH ?g { ?a (:nation/:region)+ ?b } }",
       // constant-object backward walk through a sequence
-      "SELECT ?c WHERE { ?c :nation/:region reg:2 }")
+      "SELECT ?c WHERE { ?c :nation/:region reg:2 }",
+      // constant-object backward walk through a closure of a sequence
+      "SELECT ?c WHERE { ?c (:nation/:region)+ reg:2 }",
+      // unseeded zero-length identity pairs over an alternation
+      "SELECT ?a ?b WHERE { ?a (:nation|:region)* ?b }",
+      // per-graph constant endpoint with zero-length pairs
+      "SELECT ?g ?x WHERE { GRAPH ?g { reg:0 (^:region)* ?x } }",
+      // per-graph identity pairs
+      "SELECT ?g ?a ?b WHERE { GRAPH ?g { ?a rdfs:subClassOf* ?b } }",
+      // seeded forward walk through a closure of inverse steps
+      "SELECT ?x WHERE { reg:0 (^:region/^:nation)+ ?x }")
     for (text <- queries) {
       val plain = Sparql.query(spark, quads, text).collect()
         .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
