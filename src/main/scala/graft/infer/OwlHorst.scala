@@ -31,15 +31,21 @@ import graft.rdf.Rdf
   * and properties) is tiny by nature, so its closures are computed
   * driver-side once and COMPILED into a broadcast rule-dispatch table
   * ([[compileRules]]) — mirroring how GraphDB compiles the ruleset
-  * before streaming instances through it. INSTANCE-level work is all
-  * distributed: one dispatch join per round for the single-premise
-  * families, per-rule joins for the two-premise ones, plus a
-  * semi-naive [[Fixpoint]] for transitive properties.
-  * Rules run in rounds until no new triple appears (datalog fixpoint,
-  * `delta = rules(all) ∖ all`). A run and a DRed delete are each one
-  * [[graft.plans.Rounds]] scope: every round's checkpoint is an
-  * `r.keep`, and what the result does not read is freed on return or
-  * throw.
+  * before streaming instances through it. The two-premise families
+  * (rdfp1/2/15/16 and prp-trp) compile the same way into a join-rule
+  * table ([[compileJoinRules]]). INSTANCE-level work is all
+  * distributed, and a round is one plan (the Pregelix superstep: one
+  * join plus one group-by over the state relation): one dispatch join
+  * over the delta for the single-premise families, ONE keyed join of
+  * half-premise rows for every two-premise family — transitivity is a
+  * one-hop rule there, so the longest closed path doubles per round —
+  * and the sameAs expansion, deduped against everything so far.
+  * Rules run in rounds until no new triple appears (semi-naive
+  * datalog fixpoint, `delta = rules(all) ∖ all`, each rule firing
+  * only with a premise in the previous round's delta). A run and a
+  * DRed delete are each one [[graft.plans.Rounds]] scope: every
+  * round's checkpoint is an `r.keep`, and what the result does not
+  * read is freed on return or throw.
   *
   * sameAs: equivalence classes are tiny (entity aliases), so the class
   * map is collected and broadcast, and affected statements are
@@ -240,9 +246,7 @@ object OwlHorst {
     * some statements just land a round earlier.
     */
   private def compileRules(ont: Ontology): Seq[Rule] = {
-    val subsOfProp = ont.subPropOf.groupMap(_._2)(_._1)
-    def matchProps(p: String): Seq[String] =
-      (p +: subsOfProp.getOrElse(p, Nil)).distinct
+    val matchProps = matchPropsOf(ont)
     val supersOfClass = ont.subClassOf.groupMap(_._1)(_._2)
     def outClasses(c: String): Seq[String] =
       (c +: supersOfClass.getOrElse(c, Nil)).distinct
@@ -290,46 +294,106 @@ object OwlHorst {
     b.result().distinct
   }
 
-  /** The dispatch table as a DataFrame, built from explicit Rows with
-    * an explicit nullable schema. Deliberately NOT `rules.toDF()`: the
+  /** A premise property and its (closed) strict sub-properties: a
+    * statement via a sub-property matches the super-property's rules
+    * directly (rdfs7 pre-composed, see [[compileRules]]).
+    */
+  private def matchPropsOf(ont: Ontology): String => Seq[String] = {
+    val subsOfProp = ont.subPropOf.groupMap(_._2)(_._1)
+    p => (p +: subsOfProp.getOrElse(p, Nil)).distinct
+  }
+
+  /** One premise of a compiled two-premise rule — a row of the
+    * broadcast join-rule table built by [[compileJoinRules]]. A
+    * statement (s, p, o) with p.lex = `mp` (and o.lex = `moLex` when
+    * set; o a resource when `objRes`) becomes a half-premise of rule
+    * `tag` on `side` (0 = L, 1 = R), keyed by its o when `keyO`, else
+    * by its s, and carrying the other term. An L and an R half of one
+    * tag with equal keys fire the rule: subject = the L term (the R
+    * term when `sFromR`), predicate = `outP`, object = the IRI `outO`
+    * or else the R term; with `differ` the two carried terms must
+    * differ.
+    */
+  private final case class JoinRule(tag: Int, side: Int, mp: String,
+      moLex: Option[String], objRes: Boolean, keyO: Boolean, outP: String,
+      outO: Option[String], sFromR: Boolean, differ: Boolean)
+
+  /** Compile every TWO-premise rule family into one join-rule table,
+    * so a round fires all of them in ONE keyed self-join of
+    * half-premise rows ([[joinConclusions]]) instead of one shuffle
+    * join per family. Match predicates are expanded over sub-properties
+    * as in [[compileRules]], so no inherited copies are needed.
+    *
+    *  - rdfp1   u f v . u f w → v owl:sameAs w   (f functional; key u)
+    *  - rdfp2   u f w . v f w → u owl:sameAs v   (f inverse-functional; key w)
+    *  - rdfp15  u p x . x rdf:type w → u rdf:type c  (c someValuesFrom w on p; key x)
+    *  - rdfp16  u rdf:type c . u p x → x rdf:type w  (c allValuesFrom w on p; key u)
+    *  - prp-trp a t b . b t c → a t c  (t transitive; key b)
+    *
+    * Transitivity is a one-hop rule inside the round: semi-naive, the
+    * longest closed path doubles per round. sameAs endpoints and
+    * transitive/restriction values are resources (pD* side condition).
+    */
+  private def compileJoinRules(ont: Ontology): Seq[JoinRule] = {
+    val matchProps = matchPropsOf(ont)
+    // (premise property, object lex, object is a resource, key is o)
+    type Premise = (String, Option[String], Boolean, Boolean)
+    val b = Seq.newBuilder[JoinRule]
+    var tag = 0
+    def rule(l: Premise, r: Premise, outP: String, outO: Option[String] = None,
+        sFromR: Boolean = false, differ: Boolean = false): Unit = {
+      tag += 1
+      for ((side, (p, moLex, objRes, keyO)) <- Seq(0 -> l, 1 -> r);
+           mp <- matchProps(p))
+        b += JoinRule(tag, side, mp, moLex, objRes, keyO, outP, outO, sFromR, differ)
+    }
+    for (f <- ont.functional.distinct)
+      rule((f, None, true, false), (f, None, true, false), "owl:sameAs", differ = true)
+    for (f <- ont.invFunctional.distinct)
+      rule((f, None, false, true), (f, None, false, true), "owl:sameAs", differ = true)
+    for ((c, p, w) <- ont.someValues.distinct)
+      rule((p, None, true, true), (RdfType, Some(w), true, false), RdfType, Some(c))
+    for ((c, p, w) <- ont.allValues.distinct)
+      rule((RdfType, Some(c), false, false), (p, None, true, false), RdfType, Some(w),
+        sFromR = true)
+    for (t <- ont.transitive.distinct)
+      rule((t, None, true, true), (t, None, true, false), t)
+    b.result()
+  }
+
+  /** A compiled table as a DataFrame, built from explicit Rows with an
+    * explicit nullable schema. Deliberately NOT `rules.toDF()`: the
     * derived product encoder for a case class with `Option` fields
     * trips Janino's method resolution in the generated serializer
     * (falls back to interpreted with a full error stack in the log),
-    * and `Option → null` is the mapping the join's `isNull` guards
+    * and `Option → null` is the mapping the joins' `isNull` guards
     * want stated explicitly anyway.
     */
-  private def ruleTable(spark: SparkSession, rules: Seq[Rule]): DataFrame = {
+  private def localTable(spark: SparkSession,
+      fields: Seq[(String, org.apache.spark.sql.types.DataType)],
+      rows: Seq[Seq[Any]]): DataFrame = {
     import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("mp", StringType, nullable = false),
-      StructField("moLex", StringType, nullable = true),
-      StructField("moKind", IntegerType, nullable = true),
-      StructField("moDt", StringType, nullable = true),
-      StructField("moLang", StringType, nullable = true),
-      StructField("objRes", BooleanType, nullable = false),
-      StructField("swap", BooleanType, nullable = false),
-      StructField("outP", StringType, nullable = false),
-      StructField("outOLex", StringType, nullable = true),
-      StructField("outOKind", IntegerType, nullable = true),
-      StructField("outODt", StringType, nullable = true),
-      StructField("outOLang", StringType, nullable = true),
-      StructField("outONum", DoubleType, nullable = true)))
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      new java.util.ArrayList(rules.size)
-    rules.foreach { r =>
-      rows.add(org.apache.spark.sql.Row(
-        r.mp, r.moLex.orNull, r.moKind.map(Int.box).orNull,
-        r.moDt.orNull, r.moLang.orNull, r.objRes, r.swap, r.outP,
-        r.outOLex.orNull, r.outOKind.map(Int.box).orNull,
-        r.outODt.orNull, r.outOLang.orNull,
-        r.outONum.map(Double.box).orNull))
-    }
-    spark.createDataFrame(rows, schema)
+    val schema = StructType(fields.map { case (n, t) => StructField(n, t) })
+    val jrows = new java.util.ArrayList[Row](rows.size)
+    rows.foreach(r => jrows.add(Row.fromSeq(r)))
+    spark.createDataFrame(jrows, schema)
   }
 
-  /** Full-term identity for the instance-level two-premise joins: the
-    * shared term of an (inverse-)functional statement may be any term,
-    * so lex + kind + dt + lang all participate (fields never null).
+  private def ruleTable(spark: SparkSession, rules: Seq[Rule]): DataFrame = {
+    import org.apache.spark.sql.types._
+    localTable(spark, Seq("mp" -> StringType, "moLex" -> StringType,
+        "moKind" -> IntegerType, "moDt" -> StringType, "moLang" -> StringType,
+        "objRes" -> BooleanType, "swap" -> BooleanType, "outP" -> StringType,
+        "outOLex" -> StringType, "outOKind" -> IntegerType,
+        "outODt" -> StringType, "outOLang" -> StringType, "outONum" -> DoubleType),
+      rules.map(r => Seq(r.mp, r.moLex.orNull, r.moKind.map(Int.box).orNull,
+        r.moDt.orNull, r.moLang.orNull, r.objRes, r.swap, r.outP,
+        r.outOLex.orNull, r.outOKind.map(Int.box).orNull,
+        r.outODt.orNull, r.outOLang.orNull, r.outONum.map(Double.box).orNull)))
+  }
+
+  /** Full-term identity for the DRed taint loop's transitive flank
+    * joins: lex + kind + dt + lang all participate (fields never null).
     */
   private def sameTerm(a: Column, b: Column): Column =
     a("lex") === b("lex") && a("kind") === b("kind") &&
@@ -400,201 +464,82 @@ object OwlHorst {
           .otherwise(when(col("swap"), c("s")).otherwise(c("o"))).as("o"))
   }
 
-  /** Transitive closure of one property's `(a, b)` edge set over
-    * 8-byte term ids (endpoints here are always resources, so
-    * (lex, kind) identity is full term identity): each fixpoint round
-    * shuffles longs, not lexical structs — the same encoded-plane
-    * discipline as the compiler's path closures. Decode via an
-    * edge-local dictionary (nodes of this property's subgraph), with
-    * the standard collision guard. Shared by [[onePass]] and the DRed
-    * rederive pass.
+  /** Conclusions of the compiled two-premise rules ([[compileJoinRules]])
+    * with at least one premise in `delta` — ONE keyed equi-join.
+    * Half-premise rows come from one broadcast join of `delta`
+    * (`nw` = true) and `all` (`nw` = false; not built when `delta eq
+    * all`) against the table; an L and an R half join on the rule tag
+    * plus the flattened (lex, kind, dt, lang) of their key term, under
+    * `l.nw || r.nw` — semi-naive, and both orientations at once. Both
+    * join sides are the same frame, so exchange reuse can serve them
+    * from one shuffle. The conclusion is read off the table's output
+    * columns, joined back by tag. Term fields are flattened to
+    * top-level columns before the join (see [[keyedSemiJoin]]), and no
+    * hash stands in for a term.
     */
-  private def closeTransitivePairs(r: Rounds, tp: String,
-      edges: DataFrame): DataFrame = {
-    import graft.core.TermDictionary.termId
-    val dict = r.keep(edges.select(col("a").as("term"))
-      .unionByName(edges.select(col("b").as("term")))
-      .distinct()
-      .select(termId(col("term")).as("id"), col("term")))
-    val Array(nIds, nTerms) = dict
-      .agg(countDistinct(col("id")), countDistinct(col("term")))
-      .head().toSeq.map(_.asInstanceOf[Long]).toArray
-    require(nIds == nTerms,
-      s"term-id collision in $tp closure: $nTerms terms, $nIds ids")
-    val closedIds = Fixpoint.closureLongs(
-      edges.select(termId(col("a")).as("a"), termId(col("b")).as("b")))
-    val da = dict.select(col("id").as("__ia"), col("term").as("ta"))
-    val db = dict.select(col("id").as("__ib"), col("term").as("tb"))
-    closedIds
-      .join(da, col("a") === col("__ia"))
-      .join(db, col("b") === col("__ib"))
-      .select(col("ta").as("a"), col("tb").as("b"))
-  }
+  private def joinConclusions(spark: SparkSession, rules: Seq[JoinRule],
+      delta: DataFrame, all: DataFrame): Option[DataFrame] =
+    if (rules.isEmpty) None else {
+      import org.apache.spark.sql.types._
+      val fields = Seq("lex", "kind", "dt", "lang")
+      val matchT = broadcast(localTable(spark, Seq("tag" -> IntegerType,
+          "side" -> IntegerType, "mp" -> StringType, "moLex" -> StringType,
+          "objRes" -> BooleanType, "keyO" -> BooleanType),
+        rules.map(j => Seq(j.tag, j.side, j.mp, j.moLex.orNull, j.objRes, j.keyO))))
+      val outT = broadcast(localTable(spark, Seq("otag" -> IntegerType,
+          "outP" -> StringType, "outO" -> StringType, "sFromR" -> BooleanType,
+          "differ" -> BooleanType),
+        rules.filter(_.side == 0).map(j =>
+          Seq(j.tag, j.outP, j.outO.orNull, j.sFromR, j.differ)).distinct))
+      val src = (Seq(delta -> true) ++ (if (delta eq all) Nil else Seq(all -> false)))
+        .map { case (d, nw) => d.select(col("s"), col("p"), col("o"), lit(nw).as("nw")) }
+        .reduce(_.unionByName(_))
+      val o = src("o")
+      val key = when(col("keyO"), src("o")).otherwise(src("s"))
+      val kept = when(col("keyO"), src("s")).otherwise(src("o"))
+      val halves = src.join(matchT, src("p")("lex") === col("mp") &&
+          (col("moLex").isNull || o("lex") === col("moLex")) &&
+          (!col("objRes") || o("kind") =!= LIT))
+        .select(Seq(col("tag"), col("side"), col("nw")) ++
+          fields.map(f => key(f).as(s"k_$f")) ++
+          (fields :+ "num").map(f => kept(f).as(s"v_$f")): _*)
+      def term(side: String) = Rdf.term(
+        col(s"$side.v_lex"), col(s"$side.v_kind"), col(s"$side.v_dt"),
+        col(s"$side.v_lang"), col(s"$side.v_num"))
+      val keyEq = ("tag" +: fields.map(f => s"k_$f"))
+        .map(c => col(s"l.$c") === col(s"r.$c")).reduce(_ && _)
+      val sameKept = fields.map(f => col(s"l.v_$f") === col(s"r.v_$f")).reduce(_ && _)
+      Some(halves.as("l").join(halves.as("r"), keyEq &&
+          col("l.side") < col("r.side") && (col("l.nw") || col("r.nw")))
+        .join(outT, col("l.tag") === col("otag"))
+        .filter(!col("differ") || !sameKept)
+        .select(when(col("sFromR"), term("r")).otherwise(term("l")).as("s"),
+          Rdf.iri(col("outP")).as("p"),
+          when(col("outO").isNotNull, Rdf.iri(col("outO")))
+            .otherwise(term("r")).as("o")))
+    }
 
-  /** Conclusions of the two-premise rule families (rdfp1/2/15/16)
-    * with one premise drawn from `fed` and the other from `cur`.
-    * rdfp15/16 always fire both orientations; rdfp1/2 fire the
-    * mirrored orientation only when `p12Mirror` (the fixpoint caller
-    * relies on the downstream symmetric sameAs closure instead; the
-    * DRed taint pass has no such closure and needs the mirror).
-    * rdfp14a/b are single-premise given the broadcast ontology — they
-    * live in the compiled dispatch table.
+  /** One application of every rule family, semi-naive: the conclusions
+    * with at least one premise in `newIn` (the previous round's novel
+    * statements) and the rest in `all` (everything through the
+    * previous round). The single-premise families are ONE
+    * broadcast-dispatch join over the delta (their cascades are
+    * pre-composed, see [[compileRules]]); the two-premise families,
+    * transitivity included, are ONE keyed join over half-premise rows
+    * of the delta and `all` ([[joinConclusions]]); the sameAs expansion
+    * joins the caller's pair table. The whole pass is ONE plan,
+    * executed by the caller's single `r.probe(distinct().except(...))`
+    * per round; cascades (a transitive path twice as long, the sameAs
+    * expansion of in-pass statements) resolve across rounds.
     */
-  private def twoPremiseConclusions(spark: SparkSession, ont: Ontology,
-      fed: DataFrame, cur: DataFrame, p12Mirror: Boolean): Seq[DataFrame] = {
-    import spark.implicits._
-    val b = Seq.newBuilder[DataFrame]
-    // rdfp1: u p v . u p w (p functional) → v owl:sameAs w. sameAs
-    // endpoints must be resources, never literals (pD* side condition).
-    if (ont.functional.nonEmpty) {
-      def fire(lhs: DataFrame, rhs: DataFrame): DataFrame = {
-        val l = lhs.filter(lhs("p")("lex").isin(ont.functional: _*) &&
-          lhs("o")("kind") =!= LIT)
-        val r = rhs.filter(rhs("p")("lex").isin(ont.functional: _*) &&
-            rhs("o")("kind") =!= LIT)
-          .select(col("s").as("s2"), col("p").as("p2"), col("o").as("o2"))
-        l.join(r, l("p")("lex") === r("p2")("lex") &&
-            sameTerm(l("s"), r("s2")) && !sameTerm(l("o"), r("o2")))
-          .select(l("o").as("s"), Rdf.iri(lit("owl:sameAs")).as("p"),
-            r("o2").as("o"))
-      }
-      b += fire(fed, cur)
-      if (p12Mirror) b += fire(cur, fed)
-    }
-    // rdfp2: u p w . v p w (p inverse-functional) → u owl:sameAs v
-    if (ont.invFunctional.nonEmpty) {
-      def fire(lhs: DataFrame, rhs: DataFrame): DataFrame = {
-        val l = lhs.filter(lhs("p")("lex").isin(ont.invFunctional: _*))
-        val r = rhs.filter(rhs("p")("lex").isin(ont.invFunctional: _*))
-          .select(col("s").as("s2"), col("p").as("p2"), col("o").as("o2"))
-        l.join(r, l("p")("lex") === r("p2")("lex") &&
-            sameTerm(l("o"), r("o2")) && !sameTerm(l("s"), r("s2")))
-          .select(l("s").as("s"), Rdf.iri(lit("owl:sameAs")).as("p"),
-            r("s2").as("o"))
-      }
-      b += fire(fed, cur)
-      if (p12Mirror) b += fire(cur, fed)
-    }
-    // rdfp15: v someValuesFrom w . v onProperty p . u p x . x rdf:type w
-    // → u rdf:type v
-    if (ont.someValues.nonEmpty) {
-      val sv = broadcast(ont.someValues.toDF("svc", "svp", "svw"))
-      def fire(stmts: DataFrame, typing: DataFrame): DataFrame = {
-        val t = typing.filter(typing("p")("lex") === RdfType &&
-            typing("o")("kind") =!= LIT)
-          .select(col("s").as("xs"), col("o")("lex").as("xt"))
-        stmts.join(sv, stmts("p")("lex") === col("svp") &&
-            stmts("o")("kind") =!= LIT)
-          .join(t, stmts("o")("lex") === col("xs")("lex") &&
-            stmts("o")("kind") === col("xs")("kind") && col("xt") === col("svw"))
-          .select(stmts("s").as("s"), Rdf.iri(lit(RdfType)).as("p"),
-            Rdf.iri(col("svc")).as("o"))
-      }
-      b += fire(fed, cur)
-      b += fire(cur, fed)
-    }
-    // rdfp16: v allValuesFrom w . v onProperty p . u rdf:type v . u p x
-    // → x rdf:type w
-    if (ont.allValues.nonEmpty) {
-      val av = broadcast(ont.allValues.toDF("avc", "avp", "avw"))
-      def fire(typing: DataFrame, stmts: DataFrame): DataFrame = {
-        val t = typing.filter(typing("p")("lex") === RdfType)
-          .join(av, typing("o")("lex") === col("avc"))
-          .select(col("s").as("us"), col("avp").as("uap"), col("avw").as("uaw"))
-        stmts.join(t, stmts("s")("lex") === col("us")("lex") &&
-            stmts("s")("kind") === col("us")("kind") &&
-            stmts("p")("lex") === col("uap") && stmts("o")("kind") =!= LIT)
-          .select(stmts("o").as("s"), Rdf.iri(lit(RdfType)).as("p"),
-            Rdf.iri(col("uaw")).as("o"))
-      }
-      b += fire(fed, cur)
-      b += fire(cur, fed)
-    }
-    b.result()
-  }
-
-  /** One application of every rule family, semi-naive. The
-    * single-premise families are ONE broadcast-dispatch join over the
-    * delta (see [[compileRules]] — their cascades are pre-composed
-    * into the table). The two-premise families (rdfp1/2/15/16) and the
-    * transitive closure additionally read `all` (everything through
-    * the previous round) and a lazy `inherited` intermediate (the
-    * sub-property copies of the delta, so e.g. a functional statement
-    * asserted via a sub-property still pairs in-pass). The whole pass
-    * is ONE plan, executed by the caller's single
-    * `r.keep(distinct().except(...))` per round; deeper
-    * cascades (e.g. sameAs expansion of in-pass statements) resolve
-    * across outer rounds.
-    */
-  private def onePass(r: Rounds, spark: SparkSession, ont: Ontology,
-      ruleDf: Option[DataFrame], all: DataFrame, newIn: DataFrame,
-      prevClosures: scala.collection.mutable.Map[String, DataFrame],
-      equivDf: Option[DataFrame], equivChanged: Boolean,
-      basePreClosed: Boolean = false): DataFrame = {
-    import spark.implicits._
+  private def onePass(spark: SparkSession, ruleDf: Option[DataFrame],
+      joinRules: Seq[JoinRule], all: DataFrame, newIn: DataFrame,
+      equivDf: Option[DataFrame], equivChanged: Boolean): DataFrame = {
     var deltas = Seq.empty[DataFrame]
     def emit(df: DataFrame): Unit =
       deltas :+= df.select(col("s").as("s"), col("p").as("p"), col("o").as("o"))
-    def cur: DataFrame = all
-    def newer: DataFrame = newIn
-
-    // unified single-premise dispatch: one broadcast join over the delta
-    ruleDf.foreach(r => emit(dispatchConclusions(newer, r)))
-    // sub-property copies of the delta, for the TWO-premise rules and
-    // the transitive closure below (their premises must see a
-    // statement asserted via a sub-property under the super-property's
-    // name; the single-premise families get this via compiled rules).
-    // Lazy — re-executes per referencing family, but each reference is
-    // a single broadcast join over a checkpointed leaf.
-    val inherited: Option[DataFrame] =
-      if (ont.subPropOf.isEmpty) None
-      else {
-        val c = newer
-        Some(c.join(broadcast(ont.subPropOf.toDF("sub", "sup")),
-            c("p")("lex") === col("sub"))
-          .select(Seq(col("s"), Rdf.iri(col("sup")).as("p"), col("o")): _*))
-      }
-    val fed = inherited.fold(newer)(newer.unionByName(_))
-    // prp-trp: distributed semi-naive closure per transitive property.
-    // If every tp edge that is new this round is already in the
-    // previous round's closure output, the edge set is closed and the
-    // (expensive) fixpoint is skipped — one subset check instead.
-    ont.transitive.foreach { tp =>
-      val c = cur
-      val edges = c.filter(c("p")("lex") === tp && c("o")("kind") =!= LIT)
-        .select(col("s").as("a"), col("o").as("b"))
-        .unionByName(fed.filter(fed("p")("lex") === tp && fed("o")("kind") =!= LIT)
-          .select(col("s").as("a"), col("o").as("b")))
-      val alreadyClosed = prevClosures.get(tp) match {
-        case Some(prev) =>
-          fed.filter(fed("p")("lex") === tp && fed("o")("kind") =!= LIT)
-            .select(col("s").as("a"), col("o").as("b"))
-            .except(prev).isEmpty
-        case None =>
-          // pre-closed base (delta-seeded caller, r15): the base's tp
-          // statements ARE its closure, so until a round's delta (or
-          // its sub-property copies) carries a NEW tp edge there is
-          // nothing to close — every incremental insert used to
-          // re-close every transitive relation once per call here
-          basePreClosed &&
-            fed.filter(fed("p")("lex") === tp &&
-              fed("o")("kind") =!= LIT).isEmpty
-      }
-      if (!alreadyClosed) {
-        val closed = closeTransitivePairs(r, tp, edges)
-        prevClosures(tp) = closed
-        emit(closed.select(col("a").as("s"), Rdf.iri(lit(tp)).as("p"), col("b").as("o")))
-      }
-    }
-    // ---- pD* long-tail two-premise rules (rdfp1/2/15/16) ------------
-    // rdfp1/2: new × all covers (new, old) and (new, new); the
-    // (old, new) mirror arrives as the symmetric flip, which the
-    // equivalence machinery closes — so `p12Mirror = false` here (the
-    // DRed taint pass, which has no symmetric closure downstream,
-    // fires both orientations). rdfp15/16 fire both delta
-    // orientations (new statements × all typings, and vice versa).
-    twoPremiseConclusions(spark, ont, fed, cur, p12Mirror = false)
-      .foreach(emit)
+    ruleDf.foreach(r => emit(dispatchConclusions(newIn, r)))
+    joinConclusions(spark, joinRules, newIn, all).foreach(emit)
     // eq-*: the (from, to) equivalence pair table is maintained by the
     // caller — broadcast-hinted when it came from the driver union-find,
     // a plain distributed DataFrame when it came from GraphX CC
@@ -606,11 +551,10 @@ object OwlHorst {
         emit(ed.select(Rdf.iri(col("from")).as("s"),
           Rdf.iri(lit("owl:sameAs")).as("p"), Rdf.iri(col("to")).as("o")))
       }
-      val c = if (equivChanged) cur else newer
+      val c = if (equivChanged) all else newIn
       emit(c.join(ed, c("s")("lex") === ed("from"))
         .select(Rdf.iri(ed("to")).as("s"), col("p"), col("o")))
-      val c2 = if (equivChanged) cur else newer
-      emit(c2.join(ed, c2("o")("lex") === ed("from"))
+      emit(c.join(ed, c("o")("lex") === ed("from"))
         .select(col("s"), col("p"), Rdf.iri(ed("to")).as("o")))
     }
     deltas.reduceOption(_.unionByName(_)).getOrElse(all.limit(0))
@@ -946,7 +890,8 @@ object OwlHorst {
       }
       // two-premise families — ONE combined probe of the family slice,
       // then each family fired driver-side in BOTH orientations (the
-      // p12Mirror=true shape of the distributed loop)
+      // distributed loop's keyed join pairs a tainted premise with the
+      // slice on either side)
       if ((ont.functional ++ ont.invFunctional ++ svpPreds ++ avpPreds)
           .exists(deltaPreds) || deltaPreds(RdfType)) {
         val funcD = delta.filter(r =>
@@ -1210,8 +1155,9 @@ object OwlHorst {
     val typeSubjs: Seq[String] = if (!needTyping) Nil
       else taintRows.filter(dP(_).getString(0) == RdfType)
         .map(dS(_).getString(0)).distinct
-    // two-premise seed — the distributed phase's fed/cur pruning with
-    // p12Mirror=false: rdfp1/2 fire (fed, cur) only; rdfp15's live
+    // two-premise seed — the distributed phase's fed/cur pruning:
+    // rdfp1/2 fire (fed, cur) only (a tainted sameAs row has both
+    // endpoints in E, so the mirror adds nothing to the seed); rdfp15's live
     // orientation is (fed-stmts, cur-typings), rdfp16's is
     // (cur-typings, fed-stmts) — the other orientations are vacuous
     // because fed carries no rdf:type rows and cur no svp/avp rows
@@ -1481,6 +1427,11 @@ object OwlHorst {
     val twoPremBase: DataFrame = r.keep(baseAll
       .filter(col("p")("lex").isin(twoPremPreds: _*) ||
         col("p")("lex") === RdfType))
+    // the taint loop's two-premise rules: transitivity taints in its
+    // closed form below, and the closed base carries every inherited
+    // copy, so premises match their exact predicates — the rules the
+    // driver-side taint fires
+    val taintJoinRules = compileJoinRules(ont.copy(transitive = Nil, subPropOf = Nil))
     // ---- axiom-delete taint seed (r16, verdict #6) ---------------------
     // Conclusions whose derivation used a compiled rule LOST with the
     // deleted axiom. ontology() closes the sub-class/property planes
@@ -1513,16 +1464,15 @@ object OwlHorst {
         hasValue = Nil,
         someValues = oOld.someValues.diff(ont.someValues),
         allValues = oOld.allValues.diff(ont.allValues))
-      if (lostOnt.functional.nonEmpty || lostOnt.invFunctional.nonEmpty ||
-          lostOnt.someValues.nonEmpty || lostOnt.allValues.nonEmpty) {
-        val famPreds = (lostOnt.functional ++ lostOnt.invFunctional ++
-          lostOnt.someValues.map(_._2) ++ lostOnt.allValues.map(_._2)).distinct
+      val famPreds = (lostOnt.functional ++ lostOnt.invFunctional ++
+        lostOnt.someValues.map(_._2) ++ lostOnt.allValues.map(_._2)).distinct
+      if (famPreds.nonEmpty) {
         // the closed base already carries every sub-property-inherited
         // copy as a materialized row, so the family slice is complete
         val slice = r.keep(baseAll.filter(col("p")("lex").isin(famPreds: _*) ||
           col("p")("lex") === RdfType))
-        frames ++= twoPremiseConclusions(spark, lostOnt, slice, slice,
-          p12Mirror = false).map(sel0)
+        frames ++= joinConclusions(spark, compileJoinRules(lostOnt), slice, slice)
+          .map(sel0)
       }
       frames.reduceOption(_.unionByName(_)) match {
         case None => (deletedTriples.limit(0), 0L)
@@ -1663,12 +1613,11 @@ object OwlHorst {
           col("xb").as("o")))
       }
       // two-premise with the tainted premise on EITHER side (the
-      // `cur` side reads the checkpointed family slice — every
+      // `all` side reads the checkpointed family slice — every
       // premise of these families has a family predicate or rdf:type)
       if (deltaPreds == null ||
           (twoPremPreds :+ RdfType).exists(deltaPreds))
-        twoPremiseConclusions(spark, ont, delta, twoPremBase, p12Mirror = true)
-          .foreach(emit)
+        joinConclusions(spark, taintJoinRules, delta, twoPremBase).foreach(emit)
       basePairs.foreach { ed =>
         // sameAs expansion of the tainted delta by the pre-delete
         // pairs — only reachable when a delta endpoint is a class
@@ -1761,9 +1710,11 @@ object OwlHorst {
       r.release(remainingProbe)
     }
     var seed2: DataFrame = null
+    var seed2Rows = 0L
     var preClosedOut = false
     if (driverSeed.isDefined) {
       val (rows, pc) = driverSeed.get
+      seed2Rows = rows.size
       seed2 =
         if (rows.isEmpty) deletedTriples.limit(0)
         else r.keep(spark.createDataFrame(
@@ -1842,8 +1793,11 @@ object OwlHorst {
       val cur = r.keep(remaining.filter(col("p")("lex") === RdfType ||
         col("p")("lex").isin(
           (ontSeed.functional ++ ontSeed.invFunctional).distinct: _*)))
-      seeds ++= twoPremiseConclusions(spark, ontSeed,
-        r.keep(fed), cur, p12Mirror = false).map(sel)
+      // transitivity is the seeded closure below; premises match their
+      // exact predicates, as in the taint loop
+      seeds ++= joinConclusions(spark,
+        compileJoinRules(ontSeed.copy(transitive = Nil, subPropOf = Nil)),
+        r.keep(fed), cur).map(sel)
     }
     ont.transitive.foreach { tp =>
       if (taintPreds.contains(tp)) {
@@ -1855,9 +1809,9 @@ object OwlHorst {
         // r15 DRed profile: ~15 s of a 30 s maintenance at sf0.1).
         // Surviving closure pairs double as edges (they are valid
         // paths); tp edges rederived by OTHER rules re-trigger the
-        // closure inside run()'s own fixpoint. Same id plane +
-        // edge-local dictionary + collision guard as
-        // [[closeTransitivePairs]].
+        // closure inside run()'s own fixpoint. Pairs are closed over
+        // 8-byte term ids, decoded through an edge-local dictionary
+        // with a collision guard.
         import graft.core.TermDictionary.termId
         val edges = remaining
           .filter(col("p")("lex") === tp && col("o")("kind") =!= LIT)
@@ -1895,11 +1849,11 @@ object OwlHorst {
     // map-only), THEN distinct: the other order shuffles the full
     // candidate stream (the dispatch pass over a data-shaped slice)
     // just to dedup rows that are about to be discarded
-    val seed = r.keep(tripSemiJoin(
+    val (seed, seedN) = r.probe(tripSemiJoin(
         seeds.reduceOption(_.unionByName(_))
           .getOrElse(deletedTriples.limit(0)),
         taintAll, "left_semi", hintBc = true)
-      .distinct())
+      .distinct(), count(lit(1)))
     // ---- targeted equivalence reseed --------------------------------
     // The hammer stripped EVERY inferred row touching a tainted sameAs
     // edge's class. When the pre-delete pairs are driver-known and the
@@ -2028,10 +1982,10 @@ object OwlHorst {
           // pair table to tainted endpoints — taint-bounded, so the
           // pruned table broadcasts
           case Some(te) if te.nonEmpty =>
-            val rel = r.keep(basePairs.get
+            val (rel, nRel) = r.probe(basePairs.get
               .join(broadcast(te.toSeq.toDF("m")),
-                col("to") === col("m"), "left_semi"))
-            if (!rel.isEmpty)
+                col("to") === col("m"), "left_semi"), count(lit(1)))
+            if (nRel.getLong(0) > 0)
               expSeed = Some(expandInto(broadcast(rel), remaining))
           case _ =>
             // tainted endpoints not driver-collectable: surrender the
@@ -2041,17 +1995,19 @@ object OwlHorst {
         }
       }
     }
-    seed2 = (Seq(seed) ++ reseed ++ expSeed) match {
-      case Seq(s0) => s0
-      case ss => r.keep(ss.reduce(_.unionByName(_)).distinct())
+    val (s2, n2) = (Seq(seed) ++ reseed ++ expSeed) match {
+      case Seq(s0) => (s0, seedN)
+      case ss => r.probe(ss.reduce(_.unionByName(_)).distinct(), count(lit(1)))
     }
+    seed2 = s2
+    seed2Rows = n2.getLong(0)
     preClosedOut = preClosed
     } // end distributed phase 2 (driverSeed.isEmpty)
     // ---- phase 3: REINSERT -------------------------------------------
     val afterDelete = remainingExplicit.unionByName(
       remainingInferred.select(lit(G).as("g"), col("s"), col("p"), col("o")))
     val quadsIn =
-      if (seed2.isEmpty) afterDelete
+      if (seed2Rows == 0) afterDelete
       else afterDelete.unionByName(
         seed2.select(lit(G).as("g"), col("s"), col("p"), col("o")))
     val res = run(spark, quadsIn, seed2, equivPreClosed = preClosedOut)
@@ -2100,6 +2056,7 @@ object OwlHorst {
     // broadcast-hint) it once
     val rules = compileRules(ont)
     val ruleDf = if (rules.isEmpty) None else Some(broadcast(ruleTable(spark, rules)))
+    val joinRules = compileJoinRules(ont)
     // prior g:inferred rows participate in the closure but the output
     // inferred graph is rebuilt against the EXPLICIT statements only —
     // a triple that has become explicitly asserted since it was first
@@ -2118,7 +2075,6 @@ object OwlHorst {
     var delta =
       if (seed eq quads) all // full materialization: seed IS the dataset
       else r.keep(seed.select(col("s"), col("p"), col("o")).distinct())
-    val prevClosures = scala.collection.mutable.Map.empty[String, DataFrame]
     // sameAs equivalence classes: a driver-side union-find fed from
     // each round's checkpointed delta while the pair count is
     // alias-scale; past `broadcastLimit` pairs the whole machinery
@@ -2230,8 +2186,8 @@ object OwlHorst {
               col("o")("lex").isin(eTerms: _*)
           all.filter(cond)
         }
-      val (fresh, p) = r.probe(onePass(r, spark, ont, ruleDf, all, delta,
-          prevClosures, equivDf, equivChanged, basePreClosed = equivPreClosed)
+      val (fresh, p) = r.probe(onePass(spark, ruleDf, joinRules, all, delta,
+          equivDf, equivChanged)
         .distinct().except(relevant),
         count(lit(1)), count(when(col("p")("lex") === "owl:sameAs", 1)))
       if (p.getLong(0) == 0) grew = false

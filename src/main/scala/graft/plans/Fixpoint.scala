@@ -8,8 +8,10 @@ import org.apache.spark.storage.StorageLevel
 
 /** Driver-side iterative fixpoints over DataFrames — the one thing
   * Catalyst cannot express (no recursion; SURVEY §4.2). Used by
-  * property paths (`p+`/`p*`), OWL-Horst materialization, and the
-  * graph-analytics operators.
+  * property paths (`p+`/`p*`) and the graph-analytics operators.
+  * OWL-Horst uses only [[reachNodes]], in the DRed rederive pass; its
+  * materialization closes transitive properties as a one-hop rule
+  * inside each rule round.
   *
   * Discipline at scale (SURVEY §2.C "hard parts"):
   *  - semi-naive: each round joins only the NEW pairs (delta) against
@@ -114,14 +116,6 @@ object Fixpoint {
         else r.keep(spark.createDataFrame(sc.union(deltas).keys, schema))
       } finally cached.foreach(_.unpersist(blocking = false))
     }
-
-  /** Closure of 8-byte term-id pairs `(a, b)` — the encoded-plane
-    * variant: every fixpoint round shuffles 16-byte rows instead of
-    * lexical term structs (SURVEY §1.5/§7 hard-part (5) applied to the
-    * one iterative operator, where the multiplier is the round count).
-    */
-  def closureLongs(edges: DataFrame): DataFrame =
-    closure(edges, (f, s) => f("b") === s("m"))
 
   /** Node set reachable in ≥1 application of `step` from `n0` (a
     * single-column "n" DataFrame). The seeded counterpart of

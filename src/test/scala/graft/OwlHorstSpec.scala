@@ -268,6 +268,61 @@ class OwlHorstSpec extends GraftSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("two-premise families share one keyed join per round: materialize job budget") {
+    // every rdfp1/2/15/16 and transitivity premise goes through one
+    // keyed join per round; one shuffle join per family and a nested
+    // transitive fixpoint per round ran ~150 jobs here
+    val (n, jobs) = jobsIn(
+      OwlHorst.materialize(spark, TpchRdf.graphDf(spark, sf)).count())
+    assert(n > 0)
+    assert(jobs <= 60, s"materialize ran $jobs Spark jobs (budget 60)")
+  }
+
+  test("40-hop transitive chain through sub-properties, sameAs and rdfp1 equals the driver closure") {
+    // n0 → … → n40 over two sub-properties of a transitive property,
+    // an owl:sameAs alias of the end node, and a functional property
+    // asserted through a sub-property that merges n0 with ex:start
+    val chain = (0 until 40).map(i =>
+      (s"ex:n$i", if (i % 2 == 0) "ex:subA" else "ex:subB", s"ex:n${i + 1}"))
+    val explicit = chain ++ Seq(
+      ("ex:loc", "rdf:type", "owl:TransitiveProperty"),
+      ("ex:subA", "rdfs:subPropertyOf", "ex:loc"),
+      ("ex:subB", "rdfs:subPropertyOf", "ex:loc"),
+      ("ex:alias", "owl:sameAs", "ex:n40"),
+      ("ex:f", "rdf:type", "owl:FunctionalProperty"),
+      ("ex:fsub", "rdfs:subPropertyOf", "ex:f"),
+      ("ex:c", "ex:fsub", "ex:n0"),
+      ("ex:c", "ex:f", "ex:start"))
+    // the same rules on the driver: rdfs7, prp-trp, rdfp1 and the
+    // sameAs symmetry, transitivity and subject/object replacement
+    val sup = Map("ex:subA" -> "ex:loc", "ex:subB" -> "ex:loc", "ex:fsub" -> "ex:f")
+    var facts = explicit.toSet
+    var grew = true
+    while (grew) {
+      def by(p: String) = facts.filter(_._2 == p)
+      val loc = by("ex:loc")
+      val same = by("owl:sameAs")
+      val fs = by("ex:f")
+      val derived =
+        facts.collect { case (s, p, o) if sup.contains(p) => (s, sup(p), o) } ++
+          (for ((a, _, b) <- loc; (b2, _, c) <- loc if b == b2) yield (a, "ex:loc", c)) ++
+          (for ((u, _, v) <- fs; (u2, _, w) <- fs if u == u2 && v != w)
+            yield (v, "owl:sameAs", w)) ++
+          same.map { case (a, p, b) => (b, p, a) } ++
+          (for ((a, _, b) <- same; (b2, _, c) <- same if b == b2)
+            yield (a, "owl:sameAs", c)) ++
+          (for ((a, _, b) <- same; (s, p, o) <- facts if s == a || o == a)
+            yield (if (s == a) (b, p, o) else (s, p, b)))
+      val next = facts ++ derived
+      grew = next.size > facts.size
+      facts = next
+    }
+    val m = spo(OwlHorst.materialize(spark, iriQuads(explicit)))
+    assert(facts(("ex:start", "ex:loc", "ex:alias")), "fixture reaches both aliases")
+    assert(m -- facts == Set.empty, "materialize derived rows the rules do not")
+    assert(facts -- m == Set.empty, "materialize missed rows the rules derive")
+  }
+
   test("rdfp15: someValuesFrom types subjects whose value is typed") {
     val m = spo(OwlHorst.materialize(spark, iriQuads(Seq(
       ("ex:R", "owl:onProperty", "ex:p"),
