@@ -3,7 +3,7 @@ package graft.infer
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.plans.{Fixpoint, Rounds}
+import graft.plans.Rounds
 import graft.rdf.Rdf
 
 /** OWL-Horst (pD*) forward-chaining materializer — the reference's one
@@ -70,9 +70,13 @@ object OwlHorst {
   val deltaSeedRuns = new java.util.concurrent.atomic.AtomicLong
   val dredDeletes = new java.util.concurrent.atomic.AtomicLong
   val dredAxiomFallbacks = new java.util.concurrent.atomic.AtomicLong
-  /** Incremental paths that hit a round cap before convergence and
-    * surrendered to the full close (r16: the caps FAIL SAFE — an
-    * unconverged taint/delta fixpoint never commits a partial result).
+  /** Incremental paths that surrendered to the full close: a delta
+    * insert or DRed taint fixpoint at its round cap (the caps FAIL SAFE
+    * — an unconverged fixpoint never commits a partial result), and a
+    * DRed delete whose working set outgrew the driver-side path — the
+    * pre-delete sameAs pairs past `graft.sameas.broadcast.limit`, an
+    * axiom seed or taint seed past its cap, or a taint / rederive probe
+    * past `graft.infer.driver.probe.max`.
     */
   val capFallbacks = new java.util.concurrent.atomic.AtomicLong
   /** SINGLE-axiom deletes maintained incrementally (r16, the r15
@@ -81,14 +85,12 @@ object OwlHorst {
     * still take [[dredAxiomFallbacks]].
     */
   val dredAxiomIncrementals = new java.util.concurrent.atomic.AtomicLong
-  /** DRed taint fixpoints that ran DRIVER-SIDE (r17, the r16 verdict's
-    * #2): when the working set stays collectable (it usually is — the
-    * gate's delete taints 12 rows), the overdelete loop runs on
-    * collected rows with per-round FILTERED PROBES of the checkpointed
-    * base slices, replacing ~3 s/round of plan compilation + job
-    * scheduling on ~0 rows with a handful of map-only collects.
-    * Oversized working sets / probe results fall back to the
-    * distributed loop (the pre-r17 path, unchanged).
+  /** DRed deletes maintained on the driver-side path: the overdelete
+    * taint fixpoint and the rederive seed both ran on collected rows
+    * with FILTERED PROBES of checkpointed slices (the gate's delete
+    * taints 12 rows), so only the reinsert fixpoint runs distributed.
+    * A delete whose working set outgrows the path counts in
+    * [[capFallbacks]] instead.
     */
   val dredDriverTaints = new java.util.concurrent.atomic.AtomicLong
 
@@ -392,13 +394,6 @@ object OwlHorst {
         r.outODt.orNull, r.outOLang.orNull, r.outONum.map(Double.box).orNull)))
   }
 
-  /** Full-term identity for the DRed taint loop's transitive flank
-    * joins: lex + kind + dt + lang all participate (fields never null).
-    */
-  private def sameTerm(a: Column, b: Column): Column =
-    a("lex") === b("lex") && a("kind") === b("kind") &&
-      a("dt") === b("dt") && a("lang") === b("lang")
-
   /** Semi/anti join of `l` against `r` on full triple identity. The
     * key fields are FLATTENED to top-level columns on both sides
     * BEFORE the join, so the join condition references only plain
@@ -407,8 +402,8 @@ object OwlHorst {
     * (NestedColumnAliasing / nested pruning mis-binds the rewritten
     * extracts when the same checkpointed leaf feeds both sides —
     * INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND at codegen). (lex, kind, dt,
-    * lang) is full term identity (`num` is derived from lex+dt — the
-    * [[sameTerm]] discipline). `hintBc` marks the right side
+    * lang) is full term identity (`num` is derived from lex+dt).
+    * `hintBc` marks the right side
     * broadcastable (small delete/taint frames) — the hint is applied
     * ABOVE the flattening projection so it actually reaches the join.
     */
@@ -444,8 +439,8 @@ object OwlHorst {
   }
 
   /** Conclusions of the compiled single-premise dispatch table fired
-    * over `c` — ONE broadcast join, shared by [[onePass]] and the
-    * DRed taint / rederive passes of [[incrementalDelete]].
+    * over `c` — ONE broadcast join, shared by [[onePass]] and the DRed
+    * axiom-delete seed of [[incrementalDelete]].
     */
   private def dispatchConclusions(c: DataFrame, r: DataFrame): DataFrame = {
     val o = c("o")
@@ -609,36 +604,30 @@ object OwlHorst {
     * battery), with the remaining explicit rows' graphs preserved.
     *
     * The reference's engine retracts entailments internally on delete
-    * (GraphDB "smooth delete" — external); before r15 our parity was
-    * correctness-only: any DELETE forced
-    * [[graft.ingest.QuadStore.materializeInference]] to re-close the
-    * world from explicit-only statements — the last O(dataset)
-    * recompute path at 100 TB. Three phases, each O(|delta| +
-    * affected subgraph):
+    * (GraphDB "smooth delete"). Three phases; the first two run on
+    * collected rows against checkpointed slices, each O(|taint|):
     *
-    *  1. OVERDELETE (taint fixpoint): conclusions firable with ≥1
-    *     tainted premise. `base` is closed, so every such conclusion
+    *  1. OVERDELETE ([[taintFixpointDriver]]): conclusions firable with
+    *     ≥1 tainted premise. `base` is closed, so every such conclusion
     *     is already a base row; a REMAINING EXPLICIT statement blocks
     *     taint (an assertion never depends on a derivation).
-    *     Transitivity taints in ONE join round against the
-    *     already-closed pair set (x→a · tainted(a,b) · b→y with
-    *     flanks from the closed set); a tainted sameAs edge fires the
-    *     affected-class hammer — every inferred row touching the
-    *     class's members (alias-scale by contract) is tainted, and
-    *     phase 3's re-expansion restores the survivors.
-    *  2. REDERIVE SEED: tainted statements with a one-step derivation
-    *     from the remaining set (dispatch rules pruned to those
-    *     concluding a tainted predicate; per-property re-closure only
-    *     for transitive properties with tainted rows).
-    *  3. REINSERT: the existing semi-naive insert fixpoint ([[run]])
-    *     propagates the seed; its round-1 sameAs re-harvest +
-    *     full re-expansion over the remaining set restores surviving
-    *     expansions that need no seed row.
+    *     Transitivity taints in ONE step against the already-closed
+    *     pair set (x→a · tainted(a,b) · b→y with flanks from the closed
+    *     set); a tainted sameAs edge fires the affected-class hammer —
+    *     every inferred row touching the class's members (alias-scale
+    *     by contract) is tainted, and phase 3's re-expansion restores
+    *     the survivors.
+    *  2. REDERIVE SEED ([[rederiveSeedDriver]]): tainted statements
+    *     with a one-step derivation from the remaining set.
+    *  3. REINSERT: the semi-naive insert fixpoint ([[run]]) propagates
+    *     the seed.
     *
-    * Axiom deletes (rdfs:subClassOf…, owl:TransitiveProperty typings)
-    * change the compiled rule table itself and fall back to a full
-    * re-materialization — the same rare path as axiom INSERTS in
-    * [[incremental]].
+    * A delete that loses axioms (rdfs:subClassOf…, owl:TransitiveProperty
+    * typings) seeds the taint with the lost rules' conclusions; a batch
+    * past `graft.infer.axiom.batch.max` axioms re-materializes. So does
+    * any delete whose working set outgrows the collected-row phases
+    * (see [[capFallbacks]]): the full close is correct by construction,
+    * and past those caps it is also the faster path.
     */
   def incrementalDelete(spark: SparkSession, base: DataFrame,
       deleted: DataFrame): DataFrame =
@@ -658,7 +647,7 @@ object OwlHorst {
       addInf: DataFrame)
 
   /** Full-diff fallback deltas for the sanctioned re-materialization
-    * paths (axiom deletes, taint-cap surrender) — O(inferred), rare.
+    * paths (oversized axiom batches, DRed surrenders) — O(inferred).
     */
   private def fullDiffDeltas(after: DataFrame,
       priorInfTrip: DataFrame): DeleteResult = {
@@ -762,20 +751,24 @@ object OwlHorst {
   private def sameAsBroadcastLimit: Int =
     sys.props.getOrElse("graft.sameas.broadcast.limit", "50000").toInt
 
-  // ---- driver-side taint fixpoint (r17, the r16 verdict's #2) --------
+  // ---- DRed on collected rows -----------------------------------------
 
-  /** Shared row-plane helpers for BOTH driver-side DRed phases (taint
-    * fixpoint + rederive seed): triple identity and probe capping must
-    * be IDENTICAL between the phases — a drifted copy would make them
-    * disagree on term identity, exactly the silent-under-delete class
-    * the driver≡distributed parity spec exists to prevent.
+  /** Taint working-set cap of a DRed delete: a seed or taint set past
+    * it surrenders to the full re-materialization.
+    */
+  private val DriverTaintMax = 2000
+
+  /** Row-plane helpers shared by both collected-row DRed phases (taint
+    * fixpoint + rederive seed): triple identity, single-premise rule
+    * dispatch and probe capping are written once, so the phases cannot
+    * disagree on term identity — the silent-under-delete class.
     */
   private object DriverRows {
     import org.apache.spark.sql.Row
     type TK = (String, Int, String, String)
     // full-term equality is (lex, kind, dt, lang) — num derives from
-    // lex+dt (the sameTerm discipline), so the 4-field key matches the
-    // distributed loop's tripSemiJoin/except semantics exactly
+    // lex+dt, so the 4-field key matches tripSemiJoin/except semantics
+    // exactly
     def tk(t: Row): TK =
       (t.getString(0), t.getInt(1), t.getString(2), t.getString(3))
     def key(r: Row): (TK, TK, TK) =
@@ -792,38 +785,63 @@ object OwlHorst {
       val got = df.filter(cond).limit(cap + 1).collect()
       if (got.length > cap) None else Some(got)
     }
+    /** Fires the single-premise `rules` (the compiled dispatch table)
+      * on collected rows, appending each conclusion to `out`.
+      */
+    def dispatch(rows: Iterable[Row], rules: Seq[Rule],
+        out: scala.collection.mutable.Growable[Row]): Unit =
+      for (r <- rows; rule <- rules if rule.mp == dP(r).getString(0)) {
+        val s = dS(r); val o = dO(r)
+        val ok = rule.moLex.forall(_ == o.getString(0)) &&
+          rule.moKind.forall(_ == o.getInt(1)) &&
+          rule.moDt.forall(_ == o.getString(2)) &&
+          rule.moLang.forall(_ == o.getString(3)) &&
+          (!rule.objRes || o.getInt(1) != LIT)
+        if (ok) {
+          val outS = if (rule.swap) o else s
+          val outO = rule.outOLex match {
+            case Some(lex) => Row(lex, rule.outOKind.get, rule.outODt.get,
+              rule.outOLang.get, rule.outONum.map(Double.box).orNull)
+            case None => if (rule.swap) s else o
+          }
+          out += Row(outS, mkIri(rule.outP), outO)
+        }
+      }
+    /** Collected triple rows as a frame of the DRed triple schema. */
+    def frame(spark: SparkSession, rows: Seq[Row],
+        schema: org.apache.spark.sql.types.StructType): DataFrame =
+      spark.createDataFrame(new java.util.ArrayList[Row](
+        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
   }
 
   private sealed trait DriverTaintResult
-  /** working set or a probe result outgrew its cap → run the
-    * distributed loop (correct for any size, just per-round-costlier) */
+  /** the working set or a probe result outgrew its cap → the caller
+    * surrenders to the full re-materialization, which at that size is
+    * also the faster path */
   private case object DriverTaintOverflow extends DriverTaintResult
   /** round cap hit before convergence → the caller surrenders to the
-    * full re-materialization (the same FAIL-SAFE as the distributed
-    * loop's cap — an unconverged taint under-deletes) */
+    * full re-materialization (FAIL-SAFE: an unconverged taint
+    * under-deletes) */
   private case object DriverTaintUnconverged extends DriverTaintResult
   private final case class DriverTaintDone(
-      rows: Seq[org.apache.spark.sql.Row], rounds: Int) extends DriverTaintResult
+      rows: Seq[org.apache.spark.sql.Row]) extends DriverTaintResult
 
-  /** The overdelete taint fixpoint on COLLECTED rows — semantics
-    * identical to the distributed loop in [[doRunDelete]] round for
-    * round (same rule dispatch, closed-pair transitive extension,
-    * two-premise families incl. mirrors, sameAs expansion, affected-
-    * class hammer, explicit blocking); OwlHorstSpec's equivalence
-    * battery runs on this path by default and a forcing spec pins the
-    * distributed loop's parity. Each round issues a handful of
-    * map-only FILTERED collects against the round-invariant
-    * checkpointed slices instead of building an 11-branch distributed
-    * plan over ~0 rows (the r15/r16 profile: the per-round cost was
-    * plan compilation + job scheduling, not data). Only entered when
-    * the pre-delete sameAs pairs are DRIVER-KNOWN (the common case;
-    * the distributed-CC branch keeps the distributed loop).
+  /** The overdelete taint fixpoint on COLLECTED rows (phase 1 of
+    * [[incrementalDelete]]): per round, single-premise rule dispatch,
+    * closed-pair transitive extension, the two-premise families in both
+    * orientations (sameAs conclusions with their mirrors), sameAs
+    * expansion under the pre-delete `pairs`, the affected-class hammer,
+    * then explicit blocking. Each round issues a handful of map-only
+    * FILTERED collects against the round-invariant checkpointed slices
+    * (`tpBase`, `twoPremBase`, `blockSlice`, `infTrip`) — no per-round
+    * plan to compile or schedule. OwlHorstSpec's equivalence battery
+    * pins every result against the full re-materialization.
     */
   private def taintFixpointDriver(ont: Ontology, rules: Seq[Rule],
       tpBase: Map[String, DataFrame], twoPremBase: DataFrame,
       blockSlice: DataFrame, infTrip: DataFrame,
       seedRows: Seq[org.apache.spark.sql.Row], pairs: Seq[(String, String)],
-      roundCap: Int, wsCap: Int): DriverTaintResult = {
+      roundCap: Int): DriverTaintResult = {
     import org.apache.spark.sql.Row
     import DriverRows._
     val taint = scala.collection.mutable.LinkedHashMap.empty[(TK, TK, TK), Row]
@@ -842,24 +860,7 @@ object OwlHorst {
       rounds += 1
       val deltaPreds = delta.map(dP(_).getString(0)).toSet
       val concl = scala.collection.mutable.ArrayBuffer.empty[Row]
-      // single-premise dispatch (the broadcast rule table, driver-run)
-      for (r <- delta; rule <- rules if rule.mp == dP(r).getString(0)) {
-        val s = dS(r); val o = dO(r)
-        val ok = rule.moLex.forall(_ == o.getString(0)) &&
-          rule.moKind.forall(_ == o.getInt(1)) &&
-          rule.moDt.forall(_ == o.getString(2)) &&
-          rule.moLang.forall(_ == o.getString(3)) &&
-          (!rule.objRes || o.getInt(1) != LIT)
-        if (ok) {
-          val outS = if (rule.swap) o else s
-          val outO = rule.outOLex match {
-            case Some(lex) => Row(lex, rule.outOKind.get, rule.outODt.get,
-              rule.outOLang.get, rule.outONum.map(Double.box).orNull)
-            case None => if (rule.swap) s else o
-          }
-          concl += Row(outS, mkIri(rule.outP), outO)
-        }
-      }
+      dispatch(delta, rules, concl)
       // transitivity: flanks probed from the closed pair set — one
       // filtered collect per tainted property per round
       for (tp <- ont.transitive if deltaPreds(tp)) {
@@ -889,9 +890,8 @@ object OwlHorst {
         }
       }
       // two-premise families — ONE combined probe of the family slice,
-      // then each family fired driver-side in BOTH orientations (the
-      // distributed loop's keyed join pairs a tainted premise with the
-      // slice on either side)
+      // then each family fired in BOTH orientations (a tainted premise
+      // pairs with the slice on either side)
       if ((ont.functional ++ ont.invFunctional ++ svpPreds ++ avpPreds)
           .exists(deltaPreds) || deltaPreds(RdfType)) {
         val funcD = delta.filter(r =>
@@ -1027,8 +1027,7 @@ object OwlHorst {
         }
       }
       if (pairs.nonEmpty) {
-        // sameAs expansion under the pre-delete pairs (lex-keyed, the
-        // distributed joins' exact condition)
+        // sameAs expansion under the pre-delete pairs (lex-keyed)
         delta.foreach { r =>
           pairsFrom.get(dS(r).getString(0)).foreach(_.foreach(to =>
             concl += Row(mkIri(to), dP(r), dO(r))))
@@ -1065,7 +1064,7 @@ object OwlHorst {
       // bound the candidate set BEFORE building the blocking probe's
       // isin lists — an oversized hammer emission would otherwise
       // compile a giant In expression here
-      else if (cand.size > wsCap) return DriverTaintOverflow
+      else if (cand.size > DriverTaintMax) return DriverTaintOverflow
       else {
         val candS = cand.values.map(dS(_).getString(0)).toSeq.distinct
         val candP = cand.values.map(dP(_).getString(0)).toSeq.distinct
@@ -1079,30 +1078,27 @@ object OwlHorst {
         if (fresh.isEmpty) delta = Nil
         else {
           taint ++= fresh
-          if (taint.size > wsCap) return DriverTaintOverflow
+          if (taint.size > DriverTaintMax) return DriverTaintOverflow
           delta = fresh.values.toSeq
         }
       }
     }
     if (delta.nonEmpty) DriverTaintUnconverged
-    else DriverTaintDone(taint.values.toSeq, rounds)
+    else DriverTaintDone(taint.values.toSeq)
   }
 
-  /** Driver-side REDERIVE SEED (phase 2 of [[doRunDelete]]) — the r17
-    * sibling of [[taintFixpointDriver]]: with the taint driver-known,
-    * the one-step rederivability probes (seed-rule dispatch, the
-    * two-premise seed families, the seeded transitive BFS), the
-    * targeted equivalence reseed, and the expansion rederive all run on
-    * collected rows against a CHECKPOINTED remaining plane — a handful
-    * of map-only filtered collects instead of executing a multi-branch
-    * distributed seed plan whose result is usually empty. Every probe
-    * collects a SUPERSET of the relevant premises (filters keyed by the
-    * taint's lexes), then the exact conclusion ∩ taint happens
-    * driver-side — identical results to the distributed phase 2 by
-    * construction (same pruning legality arguments, same caps). Returns
-    * None on any cap overflow → the distributed phase 2 runs unchanged.
+  /** The REDERIVE SEED on collected rows (phase 2 of
+    * [[incrementalDelete]]), run on the taint rows
+    * [[taintFixpointDriver]] returned: the one-step rederivability
+    * probes (seed-rule dispatch, the two-premise seed families, the
+    * seeded transitive BFS), the targeted equivalence reseed and the
+    * expansion rederive, each a map-only filtered collect against the
+    * CHECKPOINTED `remaining` plane. Every probe collects a SUPERSET of
+    * the relevant premises (filters keyed by the taint's lexes); the
+    * exact conclusion ∩ taint happens on the collected rows.
     *
-    * @return Some((seed2 rows, preClosed)) or None (fall back)
+    * @return Some((seed rows, preClosed)), or None when a probe or the
+    *         BFS outgrew its cap (the caller re-materializes)
     */
   private def rederiveSeedDriver(ont: Ontology, rules: Seq[Rule],
       taintRows: Seq[org.apache.spark.sql.Row],
@@ -1129,23 +1125,7 @@ object OwlHorst {
       val got = probe(remaining, col("p")("lex").isin(mpSet: _*) &&
         (col("s")("lex").isin(touchLex: _*) ||
           col("o")("lex").isin(touchLex: _*)))
-      for (r <- got; rule <- seedRules if rule.mp == dP(r).getString(0)) {
-        val s = dS(r); val o = dO(r)
-        val ok = rule.moLex.forall(_ == o.getString(0)) &&
-          rule.moKind.forall(_ == o.getInt(1)) &&
-          rule.moDt.forall(_ == o.getString(2)) &&
-          rule.moLang.forall(_ == o.getString(3)) &&
-          (!rule.objRes || o.getInt(1) != LIT)
-        if (ok) {
-          val outS = if (rule.swap) o else s
-          val outO = rule.outOLex match {
-            case Some(lex) => Row(lex, rule.outOKind.get, rule.outODt.get,
-              rule.outOLang.get, rule.outONum.map(Double.box).orNull)
-            case None => if (rule.swap) s else o
-          }
-          concl += Row(outS, mkIri(rule.outP), outO)
-        }
-      }
+      dispatch(got, seedRules, concl)
     }
     val needP12 = taintPreds.contains("owl:sameAs")
     val needTyping = taintPreds.contains(RdfType)
@@ -1155,12 +1135,12 @@ object OwlHorst {
     val typeSubjs: Seq[String] = if (!needTyping) Nil
       else taintRows.filter(dP(_).getString(0) == RdfType)
         .map(dS(_).getString(0)).distinct
-    // two-premise seed — the distributed phase's fed/cur pruning:
-    // rdfp1/2 fire (fed, cur) only (a tainted sameAs row has both
-    // endpoints in E, so the mirror adds nothing to the seed); rdfp15's live
-    // orientation is (fed-stmts, cur-typings), rdfp16's is
-    // (cur-typings, fed-stmts) — the other orientations are vacuous
-    // because fed carries no rdf:type rows and cur no svp/avp rows
+    // two-premise seed: each family's conclusion is DETERMINED by one
+    // premise — rdfp1/2 by the tainted sameAs endpoints, rdfp15/16 by
+    // the tainted typing subjects — so that premise is probed by the
+    // taint's lexes and the other by the first's join terms. rdfp1/2
+    // need no mirror: a tainted sameAs row has both endpoints among
+    // `sameEnds`
     if (needP12 && ont.functional.nonEmpty) {
       val l = probe(remaining, col("p")("lex").isin(ont.functional: _*) &&
         col("o")("lex").isin(sameEnds: _*))
@@ -1240,9 +1220,8 @@ object OwlHorst {
         }
       }
     }
-    // seeded transitive BFS — per-hop probes of the remaining edge set
-    // (the distributed phase's reachNodes over O(reachable-from-delta),
-    // without the per-call dictionary/collision/checkpoint machinery)
+    // seeded transitive BFS from the tainted sources — per-hop probes
+    // of the remaining edge set, O(reachable-from-taint)
     for (tp <- ont.transitive if taintPreds.contains(tp) && !overflow) {
       val srcRows = taintRows.filter(dP(_).getString(0) == tp).map(dS)
       val srcByK = srcRows.map(s => tk(s) -> s).toMap
@@ -1284,8 +1263,8 @@ object OwlHorst {
     val reseedRows = scala.collection.mutable.ArrayBuffer.empty[Row]
     if (needP12) {
       if (sameEnds.length > 1000) {
-        // the distributed phase takes the full round-1 re-expansion
-        // here (preClosed=false, no reseed) — replicate that outcome
+        // no targeted reseed: preClosed=false makes run()'s round 1
+        // re-expand the whole remaining world (correct, slower)
         preClosed = false
       } else {
         val ends = sameEnds.toSet
@@ -1338,7 +1317,7 @@ object OwlHorst {
       val rel = validPairs.filter(pr => taintEnds(pr._2))
       if (rel.nonEmpty) {
         val fromMembers = rel.map(_._1).distinct
-        if (fromMembers.size > 1000) return None // distributed handles
+        if (fromMembers.size > 1000) return None
         val relFrom = rel.groupMap(_._1)(_._2)
         val src = probe(remaining, col("s")("lex").isin(fromMembers: _*) ||
           col("o")("lex").isin(fromMembers: _*))
@@ -1367,72 +1346,34 @@ object OwlHorst {
       remainingExplicit: DataFrame, remExpl: DataFrame, infTrip: DataFrame,
       deletedTriples: DataFrame,
       ontOld: Option[Ontology] = None): DeleteResult = {
-    import spark.implicits._
+    // every working set the collected-row phases cannot hold re-closes
+    // the post-delete world instead (correct by construction; past
+    // these caps also the faster path)
+    def surrender(reason: String): DeleteResult = {
+      System.err.println(s"[owlhorst-dred] $reason — falling back to " +
+        "full re-materialization")
+      capFallbacks.incrementAndGet()
+      fullDiffDeltas(materialize(spark, remainingExplicit), infTrip)
+    }
     val ont = ontology(remainingExplicit)
     val rules = compileRules(ont)
-    val ruleDf = if (rules.isEmpty) None else Some(broadcast(ruleTable(spark, rules)))
     // pre-delete triple set as a SET: old explicit = remaining ∪
     // deleted (the surviving-copy triples are already in remaining)
     val baseAll = remExpl.unionByName(deletedTriples).unionByName(infTrip)
     // pre-delete equivalence classes: base is CLOSED, so ONE harvest
-    // of its owl:sameAs rows carries the full class structure — no
-    // fixpoint. Driver union-find at alias scale, distributed CC past
-    // the broadcast limit (the doRun flip).
+    // of its owl:sameAs rows carries the full class structure — a
+    // driver union-find at alias scale
     val broadcastLimit = sameAsBroadcastLimit
     val headPairs = baseAll.filter(col("p")("lex") === "owl:sameAs")
       .select(col("s")("lex"), col("o")("lex"))
       .limit(broadcastLimit + 1).collect()
-    val (basePairs, baseMembers, driverPairs): (Option[DataFrame],
-        Option[Set[String]], Option[Seq[(String, String)]]) =
-      if (headPairs.length > broadcastLimit)
-        (Some(r.keep(SameAs.pairsFromClasses(
-            SameAs.classes(r, spark, baseAll), SameAs.classCap))),
-          None, None)
-      else if (headPairs.isEmpty)
-        (None, Some(Set.empty[String]), Some(Nil))
-      else {
-        val uf = new UnionFind
-        headPairs.foreach(r => uf.union(r.getString(0), r.getString(1)))
-        val pairs = uf.crossPairs
-        (Some(broadcast(pairs.toDF("from", "to"))),
-          Some(pairs.flatMap(p => Seq(p._1, p._2)).toSet),
-          Some(pairs))
-      }
-    val derivablePreds = (rules.map(_.outP) ++ ont.transitive ++
-      Seq(RdfType, "owl:sameAs")).distinct
-    // taint-blocking slice of the remaining EXPLICIT plane: a
-    // surviving assertion is never removed and must not propagate
-    // taint (same predicate/member pruning as doRun's `relevant`).
-    // Round-invariant → checkpointed ONCE; the fixpoint otherwise
-    // re-scans the dataset every round (the r15 DRed profile: the
-    // slice scans, not the joins, dominated the taint cost)
-    val blockSlice: DataFrame = r.keep(baseMembers match {
-      case Some(ms) if ms.size <= 1000 =>
-        var cond = col("p")("lex").isin(derivablePreds: _*)
-        if (ms.nonEmpty)
-          cond = cond || col("s")("lex").isin(ms.toSeq: _*) ||
-            col("o")("lex").isin(ms.toSeq: _*)
-        remExpl.filter(cond)
-      case _ => remExpl
-    })
-    // round-invariant base slices, one scan each: the per-property
-    // closed pair sets and the two-premise-family statement slice
-    val tpBase: Map[String, DataFrame] = ont.transitive.map { tp =>
-      tp -> r.keep(baseAll
-        .filter(col("p")("lex") === tp && col("o")("kind") =!= LIT)
-        .select(col("s"), col("p"), col("o")))
-    }.toMap
-    val twoPremPreds = (ont.functional ++ ont.invFunctional ++
-      ont.someValues.map(_._2) ++ ont.allValues.map(_._2)).distinct
-    val twoPremBase: DataFrame = r.keep(baseAll
-      .filter(col("p")("lex").isin(twoPremPreds: _*) ||
-        col("p")("lex") === RdfType))
-    // the taint loop's two-premise rules: transitivity taints in its
-    // closed form below, and the closed base carries every inherited
-    // copy, so premises match their exact predicates — the rules the
-    // driver-side taint fires
-    val taintJoinRules = compileJoinRules(ont.copy(transitive = Nil, subPropOf = Nil))
-    // ---- axiom-delete taint seed (r16, verdict #6) ---------------------
+    if (headPairs.length > broadcastLimit)
+      return surrender(s"pre-delete sameAs pairs exceed $broadcastLimit")
+    val uf = new UnionFind
+    headPairs.foreach(r => uf.union(r.getString(0), r.getString(1)))
+    val pairs = uf.crossPairs
+    val members = pairs.flatMap(p => Seq(p._1, p._2)).toSet
+    // ---- axiom-delete taint seed ---------------------------------------
     // Conclusions whose derivation used a compiled rule LOST with the
     // deleted axiom. ontology() closes the sub-class/property planes
     // internally, so a REDUNDANT axiom (still reachable through
@@ -1484,533 +1425,82 @@ object OwlHorst {
           (s0, n.getLong(0))
       }
     }
-    // FAIL-SAFE size guard (r16 review): a lost TransitiveProperty
-    // typing on a large closure makes the seed — and so the taint set —
-    // plane-sized, and every downstream semi join BROADCASTS the taint.
-    // Past the cap, surrender to the sanctioned full re-materialization
-    // (correct by construction; the same surrender counter as the
-    // round-cap fallbacks).
+    // FAIL-SAFE size guards, decided before the taint slices are built:
+    // a lost TransitiveProperty typing on a large closure makes the
+    // seed — and so the taint set — plane-sized
     val axiomSeedCap =
       sys.props.getOrElse("graft.infer.axiomseed.cap", "50000").toLong
-    axiomSeed.foreach { case (_, n) =>
-      if (n > axiomSeedCap) {
-        System.err.println(s"[owlhorst-dred] axiom taint seed exceeds " +
-          s"$axiomSeedCap rows — falling back to full re-materialization")
-        capFallbacks.incrementAndGet()
-        return fullDiffDeltas(materialize(spark, remainingExplicit), infTrip)
-      }
+    val seedFrame = axiomSeed match {
+      case Some((_, n)) if n > axiomSeedCap =>
+        return surrender(s"axiom taint seed exceeds $axiomSeedCap rows")
+      case Some((s0, n)) if n > 0 => deletedTriples.unionByName(s0)
+      case _ => deletedTriples
     }
+    val seedHead = seedFrame.limit(DriverTaintMax + 1).collect()
+    if (seedHead.length > DriverTaintMax)
+      return surrender(s"taint seed exceeds $DriverTaintMax rows")
+    val derivablePreds = (rules.map(_.outP) ++ ont.transitive ++
+      Seq(RdfType, "owl:sameAs")).distinct
+    // taint-blocking slice of the remaining EXPLICIT plane: a
+    // surviving assertion is never removed and must not propagate
+    // taint (same predicate/member pruning as doRun's `relevant`).
+    // Round-invariant → checkpointed ONCE, then probed every round
+    val blockSlice: DataFrame = r.keep(
+      if (members.size <= 1000) {
+        var cond = col("p")("lex").isin(derivablePreds: _*)
+        if (members.nonEmpty)
+          cond = cond || col("s")("lex").isin(members.toSeq: _*) ||
+            col("o")("lex").isin(members.toSeq: _*)
+        remExpl.filter(cond)
+      } else remExpl)
+    // round-invariant base slices, one scan each: the per-property
+    // closed pair sets and the two-premise-family statement slice
+    val tpBase: Map[String, DataFrame] = ont.transitive.map { tp =>
+      tp -> r.keep(baseAll
+        .filter(col("p")("lex") === tp && col("o")("kind") =!= LIT)
+        .select(col("s"), col("p"), col("o")))
+    }.toMap
+    val twoPremPreds = (ont.functional ++ ont.invFunctional ++
+      ont.someValues.map(_._2) ++ ont.allValues.map(_._2)).distinct
+    val twoPremBase: DataFrame = r.keep(baseAll
+      .filter(col("p")("lex").isin(twoPremPreds: _*) ||
+        col("p")("lex") === RdfType))
     // ---- phase 1: OVERDELETE taint fixpoint --------------------------
     val taintCap =
       sys.props.getOrElse("graft.infer.taint.max.rounds", "16").toInt
-    // driver-side mode (r17, the r16 verdict's #2): when the working
-    // seed collects under the cap and the pre-delete sameAs pairs are
-    // driver-known, run the whole overdelete fixpoint on collected rows
-    // with per-round filtered probes — the distributed loop below costs
-    // ~3 s/round of plan + job overhead on ~0 rows. Overflow (working
-    // set, probe result, or distributed-CC pairs) falls through to the
-    // distributed loop unchanged; sys.prop graft.infer.driver.taint.max
-    // = 0 forces the distributed path (the parity spec's knob).
-    val driverWsCap =
-      sys.props.getOrElse("graft.infer.driver.taint.max", "2000").toInt
-    var taintAll: DataFrame = null
-    var driverDone = false
-    var driverTaintRows: Seq[org.apache.spark.sql.Row] = null
-    if (driverWsCap > 0 && driverPairs.isDefined) {
-      val seedFrame = axiomSeed match {
-        case Some((s0, n)) if n > 0 => deletedTriples.unionByName(s0)
-        case _ => deletedTriples
-      }
-      val head = seedFrame.limit(driverWsCap + 1).collect()
-      if (head.length <= driverWsCap) {
-        taintFixpointDriver(ont, rules, tpBase, twoPremBase, blockSlice,
-            infTrip, head.toSeq, driverPairs.get, taintCap,
-            driverWsCap) match {
-          case DriverTaintDone(rows, _) =>
-            dredDriverTaints.incrementAndGet()
-            taintAll = r.keep(spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](
-                scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-              deletedTriples.schema))
-            driverTaintRows = rows
-            driverDone = true
-          case DriverTaintUnconverged =>
-            System.err.println(s"[owlhorst-dred] driver taint fixpoint " +
-              s"hit the $taintCap-round cap before convergence — falling " +
-              "back to full re-materialization")
-            capFallbacks.incrementAndGet()
-            return fullDiffDeltas(materialize(spark, remainingExplicit),
-              infTrip)
-          case DriverTaintOverflow => () // distributed loop below
-        }
-      }
+    val taintRows = taintFixpointDriver(ont, rules, tpBase, twoPremBase,
+        blockSlice, infTrip, seedHead.toSeq, pairs, taintCap) match {
+      case DriverTaintDone(rows) => rows
+      case DriverTaintUnconverged => return surrender(
+        s"taint fixpoint hit the $taintCap-round cap before convergence")
+      case DriverTaintOverflow => return surrender(
+        "taint working set or a taint probe outgrew its cap")
     }
-    if (!driverDone) {
-    taintAll = axiomSeed match {
-      case Some((s0, n)) if n > 0 =>
-        r.keep(deletedTriples.unionByName(s0).distinct())
-      case _ => deletedTriples
-    }
-    var delta = taintAll
-    var rounds = 0
-    var grew = true
-    // members whose classes the hammer has already stripped — later
-    // rounds' tainted sameAs rows are typically the SAME class's
-    // expansions, and re-hammering re-scans the inferred plane twice
-    // per round for nothing (driver-known members only; past the cap
-    // the hammer re-fires, correct but slower)
-    var hammered = Set.empty[String]
-    while (grew && rounds < taintCap) {
-      rounds += 1
-      // ---- per-round branch pruning (r16): the delta is a tiny
-      // checkpointed leaf, so ONE driver collect of its (s,p,o) lexes
-      // prunes the round's plan EXACTLY — a rule family whose match
-      // predicate is absent from the delta cannot fire this round, a
-      // transitive property with no tainted row contributes nothing,
-      // and the expansion joins need a delta endpoint inside an
-      // equivalence class. The r15 profile showed the per-round cost
-      // was the full 11-branch plan's compilation + jobs on ~0 rows,
-      // not data. Past 1000 rows the pruning degrades to all branches
-      // (correct, slower).
-      val deltaHead = delta
-        .select(col("s")("lex"), col("p")("lex"), col("o")("lex"))
-        .limit(1001).collect()
-      val (deltaPreds, deltaEnds): (Set[String], Set[String]) =
-        if (deltaHead.length > 1000) (null, null)
-        else (deltaHead.map(_.getString(1)).toSet,
-          deltaHead.flatMap(r => Seq(r.getString(0), r.getString(2))).toSet)
-      var concls = Seq.empty[DataFrame]
-      def emit(df: DataFrame): Unit = concls :+=
-        df.select(col("s").as("s"), col("p").as("p"), col("o").as("o"))
-      // single-premise: one broadcast dispatch join over the delta,
-      // rules pruned to those whose match predicate the delta carries
-      val roundRules =
-        if (deltaPreds == null) rules
-        else rules.filter(r => deltaPreds(r.mp))
-      if (roundRules.nonEmpty)
-        emit(dispatchConclusions(delta,
-          if (roundRules eq rules) ruleDf.get
-          else broadcast(ruleTable(spark, roundRules))))
-      // transitivity: base is closed, so every pair using a tainted
-      // constituent (a, b) decomposes as x→a · (a,b) · b→y with both
-      // flanks drawn from the closed pair set — ONE join round
-      ont.transitive
-        .filter(tp => deltaPreds == null || deltaPreds(tp)).foreach { tp =>
-        val tdf = broadcast(delta
-          .filter(col("p")("lex") === tp && col("o")("kind") =!= LIT)
-          .select(col("s").as("ta"), col("o").as("tb")))
-        val c1 = tpBase(tp).select(col("s").as("c1a"), col("o").as("c1b"))
-        val c2 = tpBase(tp).select(col("s").as("c2a"), col("o").as("c2b"))
-        // left extension: (x, b) = x→a · (a, b), plus (a, b) itself
-        val ext = tdf.select(col("ta").as("xa"), col("tb").as("xb"))
-          .unionByName(c1.join(tdf, sameTerm(col("c1b"), col("ta")))
-            .select(col("c1a").as("xa"), col("tb").as("xb")))
-        // right extension: append b→y to both
-        val full = ext.unionByName(
-          ext.join(c2, sameTerm(col("xb"), col("c2a")))
-            .select(col("xa"), col("c2b").as("xb")))
-        emit(full.select(col("xa").as("s"), Rdf.iri(lit(tp)).as("p"),
-          col("xb").as("o")))
-      }
-      // two-premise with the tainted premise on EITHER side (the
-      // `all` side reads the checkpointed family slice — every
-      // premise of these families has a family predicate or rdf:type)
-      if (deltaPreds == null ||
-          (twoPremPreds :+ RdfType).exists(deltaPreds))
-        joinConclusions(spark, taintJoinRules, delta, twoPremBase).foreach(emit)
-      basePairs.foreach { ed =>
-        // sameAs expansion of the tainted delta by the pre-delete
-        // pairs — only reachable when a delta endpoint is a class
-        // member (the join's from-side), so skip the two joins
-        // otherwise (driver-known members only)
-        val expRelevant = (baseMembers, Option(deltaEnds)) match {
-          case (Some(ms), Some(de)) => de.exists(ms)
-          case _ => true
-        }
-        if (expRelevant) {
-          emit(delta.join(ed, delta("s")("lex") === ed("from"))
-            .select(Rdf.iri(ed("to")).as("s"), delta("p").as("p"),
-              delta("o").as("o")))
-          emit(delta.join(ed, delta("o")("lex") === ed("from"))
-            .select(delta("s").as("s"), delta("p").as("p"),
-              Rdf.iri(ed("to")).as("o")))
-        }
-        // affected-class hammer: a tainted sameAs edge may split its
-        // class — taint every INFERRED row touching the class's
-        // members; phase 3's re-harvest + re-expansion restores the
-        // survivors. Classes are alias-scale, so `affected` is tiny.
-        // No tainted sameAs row this round → no class can split → the
-        // hammer (and its collect probe) is skipped outright.
-        if (deltaPreds == null || deltaPreds("owl:sameAs")) {
-        val tSame = delta.filter(col("p")("lex") === "owl:sameAs")
-        val tmHead = tSame.select(col("s")("lex").as("m"))
-          .unionByName(tSame.select(col("o")("lex").as("m"))).distinct()
-          .limit(1001).collect().map(_.getString(0))
-        val newEnds =
-          if (tmHead.length <= 1000) tmHead.toSet -- hammered else Set("")
-        if (tmHead.nonEmpty && newEnds.nonEmpty) {
-          val tm =
-            if (tmHead.length <= 1000) newEnds.toSeq.toDF("m")
-            else tSame.select(col("s")("lex").as("m"))
-              .unionByName(tSame.select(col("o")("lex").as("m"))).distinct()
-          val affected = broadcast(r.keep(tm.unionByName(
-              ed.join(tm, ed("from") === tm("m")).select(ed("to").as("m")))
-            .distinct()))
-          if (tmHead.length <= 1000)
-            hammered ++= affected.select("m").collect().map(_.getString(0))
-          emit(infTrip.join(affected,
-            infTrip("s")("lex") === affected("m"), "left_semi"))
-          emit(infTrip.join(affected,
-            infTrip("o")("lex") === affected("m"), "left_semi"))
-        }
-        }
-      }
-      // checkpoint the (tiny) novel conclusions FIRST, then subtract
-      // the explicit blockers by a REVERSED broadcast semi join —
-      // tiny-left anti joins reshuffle the big slice every round
-      // (the deletedTriples surviving-copy trick)
-      val cand = r.keep(concls.reduceOption(_.unionByName(_))
-        .getOrElse(deletedTriples.limit(0))
-        .distinct()
-        .except(taintAll))
-      val (fresh, p) = r.probe(cand.except(
-        tripSemiJoin(blockSlice, cand, "left_semi", hintBc = true).distinct()),
-        count(lit(1)))
-      if (p.getLong(0) == 0) grew = false
-      else {
-        taintAll = taintAll.unionByName(fresh)
-        delta = fresh
-      }
-    }
-    if (grew) {
-      // FAIL SAFE (r16): an unconverged taint set under-deletes — the
-      // committed inferred plane would silently keep dead entailments.
-      // Surrender the incremental path and re-close the post-delete
-      // world (correct by construction, just slower).
-      System.err.println(s"[owlhorst-dred] taint fixpoint hit the " +
-        s"$taintCap-round cap before convergence — falling back to full " +
-        "re-materialization")
-      capFallbacks.incrementAndGet()
-      return fullDiffDeltas(materialize(spark, remainingExplicit), infTrip)
-    }
-    } // end distributed taint loop (!driverDone)
+    val taintAll = r.keep(DriverRows.frame(spark, taintRows,
+      deletedTriples.schema))
     // ---- phase 2: REDERIVE SEED --------------------------------------
     val remainingInferred =
       r.keep(tripSemiJoin(infTrip, taintAll, "left_anti"))
-    val remaining = remExpl.unionByName(remainingInferred)
-    // driver-side phase 2 (r17): with the taint driver-known, the seed
-    // probes run on collected rows against ONE checkpointed remaining
-    // plane — see [[rederiveSeedDriver]]; None (cap overflow) falls
-    // through to the distributed phase 2 below unchanged
-    var driverSeed: Option[(Seq[org.apache.spark.sql.Row], Boolean)] = None
-    if (driverTaintRows != null) {
-      val remainingProbe = r.keep(remaining)
-      driverSeed = rederiveSeedDriver(ont, rules, driverTaintRows,
-        driverPairs.get, remainingProbe, remExpl)
-      r.release(remainingProbe)
+    val remaining = r.keep(remExpl.unionByName(remainingInferred))
+    val rederived = rederiveSeedDriver(ont, rules, taintRows, pairs,
+      remaining, remExpl)
+    r.release(remaining)
+    val (seedRows, preClosed) = rederived match {
+      case Some(sp) => sp
+      case None => return surrender("a rederive probe outgrew its cap")
     }
-    var seed2: DataFrame = null
-    var seed2Rows = 0L
-    var preClosedOut = false
-    if (driverSeed.isDefined) {
-      val (rows, pc) = driverSeed.get
-      seed2Rows = rows.size
-      seed2 =
-        if (rows.isEmpty) deletedTriples.limit(0)
-        else r.keep(spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-          deletedTriples.schema))
-      preClosedOut = pc
-    } else {
-    val taintPreds = taintAll.select(col("p")("lex")).distinct()
-      .collect().map(_.getString(0)).toSet
-    var seeds = Seq.empty[DataFrame]
-    def sel(df: DataFrame): DataFrame =
-      df.select(col("s").as("s"), col("p").as("p"), col("o").as("o"))
-    val seedRules = rules.filter(r => taintPreds.contains(r.outP))
-    if (seedRules.nonEmpty) {
-      val mpSet = seedRules.map(_.mp).distinct
-      seeds :+= sel(dispatchConclusions(
-        remaining.filter(col("p")("lex").isin(mpSet: _*)),
-        broadcast(ruleTable(spark, seedRules))))
-    }
-    val needP12 = taintPreds.contains("owl:sameAs")
-    val needTyping = taintPreds.contains(RdfType)
-    // tainted sameAs ENDPOINTS — used by the two-premise premise
-    // pruning below AND the targeted equivalence reseed after the seed
-    val sameEnds = if (!needP12) Array.empty[String]
-      else taintAll.filter(col("p")("lex") === "owl:sameAs")
-        .select(col("s")("lex").as("m"))
-        .unionByName(taintAll.filter(col("p")("lex") === "owl:sameAs")
-          .select(col("o")("lex").as("m")))
-        .distinct().limit(10001).collect().map(_.getString(0))
-    if (needP12 || needTyping) {
-      val ontSeed = ont.copy(
-        functional = if (needP12) ont.functional else Nil,
-        invFunctional = if (needP12) ont.invFunctional else Nil,
-        someValues = if (needTyping) ont.someValues else Nil,
-        allValues = if (needTyping) ont.allValues else Nil)
-      // TAINT-TARGET pruning (r15 DRed profile: joining the full
-      // someValuesFrom-property slice — the locatedIn closure —
-      // against all typings dominated the rederive phase). The
-      // conclusion of each family is DETERMINED by one premise —
-      // rdfp1/2 by the tainted sameAs ENDPOINTS E, rdfp15/16 by the
-      // tainted TYPING SUBJECTS T — so the determining side prunes to
-      // rows that can conclude a tainted statement (tiny), and ONE
-      // orientation against the full typing/family slice is complete.
-      // E/T collect driver-side, bounded by |taint|; past 10k keys
-      // the pruning degrades to the unpruned slice (correct, slower).
-      val typeSubjs = if (!needTyping) Array.empty[String]
-        else taintAll.filter(col("p")("lex") === RdfType)
-          .select(col("s")("lex")).distinct().limit(10001)
-          .collect().map(_.getString(0))
-      val prunable = sameEnds.length <= 10000 && typeSubjs.length <= 10000
-      val svpPreds = ont.someValues.map(_._2).distinct
-      val avpPreds = ont.allValues.map(_._2).distinct
-      val fed =
-        if (!prunable)
-          remaining.filter(col("p")("lex").isin(twoPremPreds: _*) ||
-            col("p")("lex") === RdfType)
-        else {
-          var cond = lit(false)
-          if (needTyping && svpPreds.nonEmpty)
-            cond = cond || (col("p")("lex").isin(svpPreds: _*) &&
-              col("s")("lex").isin(typeSubjs.toSeq: _*))
-          if (needTyping && avpPreds.nonEmpty)
-            cond = cond || (col("p")("lex").isin(avpPreds: _*) &&
-              col("o")("lex").isin(typeSubjs.toSeq: _*))
-          if (needP12 && ontSeed.functional.nonEmpty)
-            cond = cond || (col("p")("lex").isin(ontSeed.functional: _*) &&
-              col("o")("lex").isin(sameEnds.toSeq: _*))
-          if (needP12 && ontSeed.invFunctional.nonEmpty)
-            cond = cond || (col("p")("lex").isin(ontSeed.invFunctional: _*) &&
-              col("s")("lex").isin(sameEnds.toSeq: _*))
-          remaining.filter(cond)
-        }
-      // the non-determining sides: typings + the (small) functional
-      // family slices — never the svp/avp statement bulk
-      val cur = r.keep(remaining.filter(col("p")("lex") === RdfType ||
-        col("p")("lex").isin(
-          (ontSeed.functional ++ ontSeed.invFunctional).distinct: _*)))
-      // transitivity is the seeded closure below; premises match their
-      // exact predicates, as in the taint loop
-      seeds ++= joinConclusions(spark,
-        compileJoinRules(ontSeed.copy(transitive = Nil, subPropOf = Nil)),
-        r.keep(fed), cur).map(sel)
-    }
-    ont.transitive.foreach { tp =>
-      if (taintPreds.contains(tp)) {
-        // SEEDED re-closure: a rederivable tainted pair (x, y) has a
-        // tainted subject x, so BFS from the TAINTED SOURCES over the
-        // remaining edge set reaches every candidate — O(reachable-
-        // from-delta), never O(property subgraph) (re-closing the
-        // whole relation to rederive a handful of rows dominated the
-        // r15 DRed profile: ~15 s of a 30 s maintenance at sf0.1).
-        // Surviving closure pairs double as edges (they are valid
-        // paths); tp edges rederived by OTHER rules re-trigger the
-        // closure inside run()'s own fixpoint. Pairs are closed over
-        // 8-byte term ids, decoded through an edge-local dictionary
-        // with a collision guard.
-        import graft.core.TermDictionary.termId
-        val edges = remaining
-          .filter(col("p")("lex") === tp && col("o")("kind") =!= LIT)
-          .select(col("s").as("a"), col("o").as("b"))
-        val srcs = taintAll.filter(col("p")("lex") === tp)
-          .select(col("s").as("term")).distinct()
-        val dict = r.keep(edges.select(col("a").as("term"))
-          .unionByName(edges.select(col("b").as("term")))
-          .unionByName(srcs)
-          .distinct()
-          .select(termId(col("term")).as("id"), col("term")))
-        val Array(nIds, nTerms) = dict
-          .agg(countDistinct(col("id")), countDistinct(col("term")))
-          .head().toSeq.map(_.asInstanceOf[Long]).toArray
-        require(nIds == nTerms,
-          s"term-id collision in $tp seeded closure: $nTerms terms, $nIds ids")
-        val eIds = r.keep(edges
-          .select(termId(col("a")).as("ea"), termId(col("b")).as("eb")))
-        val n0 = srcs.select(termId(col("term")).as("x"),
-          termId(col("term")).as("y"))
-        val pairs = Fixpoint.reachNodes(n0, f =>
-          f.join(eIds, f("y") === eIds("ea"))
-            .select(f("x"), eIds("eb").as("y")))
-        val da = dict.select(col("id").as("__ia"), col("term").as("ta"))
-        val db = dict.select(col("id").as("__ib"), col("term").as("tb"))
-        seeds :+= pairs
-          .join(da, col("x") === col("__ia"))
-          .join(db, col("y") === col("__ib"))
-          .select(col("ta").as("s"), Rdf.iri(lit(tp)).as("p"),
-            col("tb").as("o"))
-      }
-    }
-    // the seed is exactly the tainted one-step-rederivable statements
-    // ∩ taint FIRST (broadcast semi over the checkpointed taint set —
-    // map-only), THEN distinct: the other order shuffles the full
-    // candidate stream (the dispatch pass over a data-shaped slice)
-    // just to dedup rows that are about to be discarded
-    val (seed, seedN) = r.probe(tripSemiJoin(
-        seeds.reduceOption(_.unionByName(_))
-          .getOrElse(deletedTriples.limit(0)),
-        taintAll, "left_semi", hintBc = true)
-      .distinct(), count(lit(1)))
-    // ---- targeted equivalence reseed --------------------------------
-    // The hammer stripped EVERY inferred row touching a tainted sameAs
-    // edge's class. When the pre-delete pairs are driver-known and the
-    // tainted endpoints alias-scale, restore the survivors DIRECTLY:
-    // re-cluster the affected members over the remaining (plus
-    // rederived) sameAs edges with a driver union-find, seed the new
-    // cross pairs and the one-step re-expansion of remaining rows
-    // touching them. The world is then expansion-PRE-CLOSED again and
-    // run() skips its full round-1 re-expansion (equivPreClosed) —
-    // without this, every DRed delete paid a whole-dataset expansion
-    // emission whose rows the novelty anti-join then discarded.
-    var preClosed = !needP12
-    var reseed: Option[DataFrame] = None
-    // driver-known POST-delete pairs for the expansion rederive below:
-    // with no tainted sameAs row the pre-delete pairs are still valid
-    // (the sameAs plane is untouched); a targeted reseed swaps the
-    // affected classes' pairs for the re-clustered ones. None = pair
-    // set not driver-known (distributed CC branch).
-    var validPairs: Option[Seq[(String, String)]] =
-      if (needP12) None else driverPairs
-    if (needP12) driverPairs match {
-      case Some(prePairs) if sameEnds.length <= 1000 =>
-        val ends = sameEnds.toSet
-        val m = ends ++ prePairs.collect { case (f, t) if ends(f) => t }
-        val mSeq = m.toSeq
-        // post-delete edges among the affected members: explicit
-        // remaining (class edges never leave the class, so the s-side
-        // filter is complete) plus the p1/p2-rederived seed rows
-        val survivors = remaining
-          .filter(col("p")("lex") === "owl:sameAs" &&
-            col("s")("lex").isin(mSeq: _*))
-          .select(col("s")("lex"), col("o")("lex")).collect()
-          .map(r => (r.getString(0), r.getString(1)))
-        val rederived = seed.filter(col("p")("lex") === "owl:sameAs")
-          .select(col("s")("lex"), col("o")("lex")).collect()
-          .map(r => (r.getString(0), r.getString(1)))
-        val uf2 = new UnionFind
-        (survivors ++ rederived).foreach(pr => uf2.union(pr._1, pr._2))
-        val newPairs = uf2.crossPairs.filter(pr => m(pr._1))
-        if (newPairs.nonEmpty) {
-          val pdf = broadcast(newPairs.toDF("from", "to"))
-          val touching = remaining.filter(
-            col("s")("lex").isin(mSeq: _*) ||
-              col("o")("lex").isin(mSeq: _*))
-          val sExp = touching.join(pdf, touching("s")("lex") === pdf("from"))
-            .select(Rdf.iri(pdf("to")).as("s"), touching("p").as("p"),
-              touching("o").as("o"))
-          val oExp = touching.join(pdf, touching("o")("lex") === pdf("from"))
-            .select(touching("s").as("s"), touching("p").as("p"),
-              Rdf.iri(pdf("to")).as("o"))
-          val prs = newPairs.toDF("from", "to").select(
-            Rdf.iri(col("from")).as("s"),
-            Rdf.iri(lit("owl:sameAs")).as("p"), Rdf.iri(col("to")).as("o"))
-          // a re-clustered pair (or an expansion) may COINCIDE with a
-          // remaining EXPLICIT assertion — e.g. the surviving explicit
-          // (x sameAs m) is itself a member of newPairs. It must not
-          // re-enter the inferred plane as a g:inferred duplicate (the
-          // full close's assembly excludes explicit rows; every other
-          // seed frame is taint-guarded and taint excludes explicit —
-          // the reseed was the one unguarded path, r16 red-first)
-          val rsCand = r.keep(sExp.unionByName(oExp).unionByName(prs).distinct())
-          reseed = Some(r.keep(rsCand.except(
-            tripSemiJoin(remExpl, rsCand, "left_semi", hintBc = true).distinct())))
-        }
-        // post-delete pairs: unaffected classes keep their pre-delete
-        // pairs; the affected classes' pairs come from the re-cluster
-        // (uf2 only ever unions members of m — tainted sameAs rows
-        // have both endpoints in the affected classes)
-        validPairs = Some(prePairs.filterNot(pr => m(pr._1)) ++ uf2.crossPairs)
-        preClosed = true
-      case _ => () // distributed or oversized taint: full re-expansion
-    }
-    // ---- expansion rederive (r16) ------------------------------------
-    // A tainted statement may be restorable ONLY as the sameAs-expansion
-    // of a SURVIVING statement (delete `m qsub y` with `x q y` explicit
-    // and `x sameAs m`: the tainted (m,q,y) has no dispatch/transitive/
-    // two-premise rederivation — its qsub premise died — but remains the
-    // expansion of (x,q,y)). With equivPreClosed the reinsert run never
-    // re-expands the remaining world, so seed the ONE-STEP expansion of
-    // remaining rows under the valid post-delete pairs, intersected with
-    // the taint set; run()'s per-round delta expansion then restores the
-    // rest of the orbit (mixed-endpoint variants are themselves tainted,
-    // so novelty never blocks them). Pairs prune to those targeting a
-    // tainted endpoint — a taint touching no equivalence class skips
-    // this entirely (the common delete).
-    var expSeed: Option[DataFrame] = None
-    if (preClosed) {
-      val taintEndHead = taintAll.select(col("s")("lex").as("m"))
-        .unionByName(taintAll.select(col("o")("lex").as("m")))
-        .distinct().limit(10001).collect()
-      val taintEnds: Option[Set[String]] =
-        if (taintEndHead.length > 10000) None
-        else Some(taintEndHead.map(_.getString(0)).toSet)
-      def expandInto(pdf: DataFrame, src: DataFrame): DataFrame = {
-        val sE = src.join(pdf, src("s")("lex") === pdf("from"))
-          .select(Rdf.iri(pdf("to")).as("s"), src("p").as("p"),
-            src("o").as("o"))
-        val oE = src.join(pdf, src("o")("lex") === pdf("from"))
-          .select(src("s").as("s"), src("p").as("p"),
-            Rdf.iri(pdf("to")).as("o"))
-        r.keep(tripSemiJoin(sE.unionByName(oE), taintAll, "left_semi",
-          hintBc = true).distinct())
-      }
-      validPairs match {
-        case Some(vp) =>
-          val rel = taintEnds match {
-            case Some(te) => vp.filter(pr => te(pr._2))
-            case None => vp // taint endpoints over the cap: keep all
-          }
-          if (rel.nonEmpty) {
-            // ONE scan of the remaining plane builds the (tiny)
-            // member-touching slice; both expansion joins then read
-            // the checkpointed leaf instead of re-scanning the world
-            val fromMembers = rel.map(_._1).distinct
-            val src =
-              if (fromMembers.size <= 1000)
-                r.keep(remaining.filter(
-                  col("s")("lex").isin(fromMembers: _*) ||
-                    col("o")("lex").isin(fromMembers: _*)))
-              else remaining
-            expSeed = Some(expandInto(broadcast(rel.toDF("from", "to")), src))
-          }
-        case None => taintEnds match {
-          // distributed pre-delete pairs with NO tainted sameAs row
-          // (the only preClosed route without driver pairs): prune the
-          // pair table to tainted endpoints — taint-bounded, so the
-          // pruned table broadcasts
-          case Some(te) if te.nonEmpty =>
-            val (rel, nRel) = r.probe(basePairs.get
-              .join(broadcast(te.toSeq.toDF("m")),
-                col("to") === col("m"), "left_semi"), count(lit(1)))
-            if (nRel.getLong(0) > 0)
-              expSeed = Some(expandInto(broadcast(rel), remaining))
-          case _ =>
-            // tainted endpoints not driver-collectable: surrender the
-            // fast path — run()'s full round-1 re-expansion restores
-            // any expansion-only survivors (correct, slower)
-            preClosed = false
-        }
-      }
-    }
-    val (s2, n2) = (Seq(seed) ++ reseed ++ expSeed) match {
-      case Seq(s0) => (s0, seedN)
-      case ss => r.probe(ss.reduce(_.unionByName(_)).distinct(), count(lit(1)))
-    }
-    seed2 = s2
-    seed2Rows = n2.getLong(0)
-    preClosedOut = preClosed
-    } // end distributed phase 2 (driverSeed.isEmpty)
+    dredDriverTaints.incrementAndGet()
     // ---- phase 3: REINSERT -------------------------------------------
     val afterDelete = remainingExplicit.unionByName(
       remainingInferred.select(lit(G).as("g"), col("s"), col("p"), col("o")))
-    val quadsIn =
-      if (seed2Rows == 0) afterDelete
-      else afterDelete.unionByName(
-        seed2.select(lit(G).as("g"), col("s"), col("p"), col("o")))
-    val res = run(spark, quadsIn, seed2, equivPreClosed = preClosedOut)
+    val (seed2, quadsIn) =
+      if (seedRows.isEmpty) (deletedTriples.limit(0), afterDelete)
+      else {
+        val s2 = r.keep(DriverRows.frame(spark, seedRows, deletedTriples.schema))
+        (s2, afterDelete.unionByName(
+          s2.select(lit(G).as("g"), col("s"), col("p"), col("o"))))
+      }
+    val res = run(spark, quadsIn, seed2, equivPreClosed = preClosed)
     // ---- taint-bounded inferred-plane deltas (r16) ---------------------
     // Both delta directions live inside the taint set (see
     // [[DeleteResult]]), so restrict each plane to the (broadcast-small)

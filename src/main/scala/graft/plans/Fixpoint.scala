@@ -9,9 +9,9 @@ import org.apache.spark.storage.StorageLevel
 /** Driver-side iterative fixpoints over DataFrames — the one thing
   * Catalyst cannot express (no recursion; SURVEY §4.2). Used by
   * property paths (`p+`/`p*`) and the graph-analytics operators.
-  * OWL-Horst uses only [[reachNodes]], in the DRed rederive pass; its
-  * materialization closes transitive properties as a one-hop rule
-  * inside each rule round.
+  * OWL-Horst uses none: its materialization closes transitive
+  * properties as a one-hop rule inside each rule round, and its DRed
+  * delete walks transitive edges on collected rows.
   *
   * Discipline at scale (SURVEY §2.C "hard parts"):
   *  - semi-naive: each round joins only the NEW pairs (delta) against

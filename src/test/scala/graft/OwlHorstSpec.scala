@@ -940,12 +940,11 @@ class OwlHorstSpec extends GraftSuite {
 
   // ---- r17: driver-side taint fixpoint (the r16 verdict's #2) --------
 
-  test("DRed driver taint: takes the driver path and equals the distributed loop") {
+  test("DRed driver taint: takes the driver path and equals full re-materialization") {
     // the fixture delete crosses every rule family (dispatch, functional
-    // sameAs, hasValue cycle, transitive chains, class expansion) — run
-    // it once on the default DRIVER path and once with the driver mode
-    // forced off, and require identical maintained worlds; checkDelete
-    // separately pins both against the full re-materialization
+    // sameAs, hasValue cycle, transitive chains, class expansion) — it
+    // must run on the collected-row path, and checkDelete pins the
+    // maintained world against the full re-materialization
     val quads = TpchRdf.graphDf(spark, sf)
     val del = quads.filter(
       (col("s")("lex") === "cust:1" && col("p")("lex") === ":nation") ||
@@ -953,41 +952,43 @@ class OwlHorstSpec extends GraftSuite {
           col("o")("lex") === "hq:b") ||
         (col("s")("lex") === "thing:9" && col("p")("lex") === ":prio"))
     val dtBefore = OwlHorst.dredDriverTaints.get()
-    val incDriver = checkDelete(quads, mat, del)
+    checkDelete(quads, mat, del)
     assert(OwlHorst.dredDriverTaints.get() == dtBefore + 1,
       "the collectable working set must take the driver taint path")
-    val incDist = {
-      sys.props("graft.infer.driver.taint.max") = "0" // force distributed
-      try {
-        val before = OwlHorst.dredDriverTaints.get()
-        val r = checkDelete(quads, mat, del)
-        assert(OwlHorst.dredDriverTaints.get() == before,
-          "driver.taint.max=0 must keep the distributed loop")
-        r
-      } finally sys.props.remove("graft.infer.driver.taint.max")
-    }
-    def key(df: DataFrame) = df.select(col("g"), col("s")("lex"),
-      col("p")("lex"), col("o")("lex")).distinct()
-    assert(key(incDriver).except(key(incDist)).isEmpty &&
-      key(incDist).except(key(incDriver)).isEmpty,
-      "driver and distributed taint fixpoints must maintain identical worlds")
   }
 
-  test("DRed driver taint: probe overflow falls back to the distributed loop") {
+  test("DRed driver taint: probe overflow falls back to re-materialization") {
     // probe cap 0 makes the first filtered collect overflow — the
-    // driver loop surrenders and the distributed loop still maintains
-    // correctly (checkDelete pins ≡ full re-materialization)
+    // delete surrenders to the full re-materialization (checkDelete
+    // pins ≡ full re-materialization)
     val quads = TpchRdf.graphDf(spark, sf)
     val del = quads.filter(col("s")("lex") === "cust:1" &&
       col("p")("lex") === ":nation")
     sys.props("graft.infer.driver.probe.max") = "0"
     try {
       val dtBefore = OwlHorst.dredDriverTaints.get()
+      val cfBefore = OwlHorst.capFallbacks.get()
       val inc = checkDelete(quads, mat, del)
       assert(OwlHorst.dredDriverTaints.get() == dtBefore,
         "an overflowing probe must not count as a driver-mode run")
+      assert(OwlHorst.capFallbacks.get() == cfBefore + 1,
+        "an overflowing probe must surrender to the full re-materialization")
       assert(spo(inc.filter(col("s")("lex") === "cust:1"))
         .forall(r => r._2 != ":locatedIn"))
     } finally sys.props.remove("graft.infer.driver.probe.max")
+  }
+
+  test("DRed: axiom delete past the taint working-set cap re-materializes") {
+    // deleting A⊑B seeds the taint with all 2,100 inferred `:B`
+    // typings — past the 2,000-row working-set cap the delete builds
+    // no taint slice and re-closes the post-delete world
+    val quads = iriQuads((":A", "rdfs:subClassOf", ":B") +:
+      (1 to 2100).map(i => (s"i:$i", "rdf:type", ":A")))
+    val baseMat = OwlHorst.materialize(spark, quads)
+    val cfBefore = OwlHorst.capFallbacks.get()
+    val inc = checkDelete(quads, baseMat,
+      quads.filter(col("p")("lex") === "rdfs:subClassOf"))
+    assert(OwlHorst.capFallbacks.get() == cfBefore + 1)
+    assert(!spo(inc).exists(_._3 == ":B"))
   }
 }
