@@ -517,6 +517,26 @@ class SparqlSpec extends GraftSuite {
     val enc = graft.core.EncodedQuads(
       graft.core.TermDictionary.encode(quads),
       graft.core.TermDictionary.build(quads))
+    // correlated EXISTS shapes the id plane refuses, so both runs take
+    // the struct plane: a condition reading an outer-nullable key, a
+    // hoisted BIND feeding an aggregate argument, an l-only condition
+    // read under MINUS, and a MINUS sharing no var with the outer
+    // (the bounded dependent cross join)
+    val corrStruct = Seq(
+      """SELECT ?c ?bal WHERE { { ?c :acctbal ?bal } UNION { ?s :acctbal ?bal }
+           FILTER EXISTS { { SELECT ?c (COUNT(?o) AS ?n) WHERE {
+               ?o :custkey ?c . FILTER(STR(?c) != STR(?bal)) }
+             GROUP BY ?c HAVING(?n >= 2) } } }""",
+      """SELECT ?c WHERE { ?c :acctbal ?bal . ?c a :Customer .
+           FILTER EXISTS { { SELECT ?c (MAX(?z) AS ?m) WHERE {
+               ?o :custkey ?c . BIND(?bal * 2 AS ?z) }
+             GROUP BY ?c HAVING(?m >= 15000) } } }""",
+      """SELECT ?c ?bal WHERE { ?c :acctbal ?bal .
+           FILTER EXISTS { ?c :nation ?n . ?c :mktsegment ?m
+             MINUS { ?c :nation ?n . FILTER(?m = "BUILDING" && ?bal > 5000) } } }""",
+      """SELECT ?c ?bal WHERE { ?c :acctbal ?bal .
+           FILTER EXISTS { ?r a :Region
+             MINUS { ?r :name ?nm . FILTER(STRLEN(?nm) * 1000 > ?bal) } } }""")
     val queries = Seq(
       "SELECT ?t (COUNT(?x) AS ?n) WHERE { ?x a ?t } GROUP BY ?t",
       "SELECT (COUNT(*) AS ?n) WHERE { ?s ?p ?o }",
@@ -594,12 +614,45 @@ class SparqlSpec extends GraftSuite {
       "SELECT ?c ?bal WHERE { ?c a :Customer . ?c :acctbal ?bal } ORDER BY DESC(?bal) ?c LIMIT 7",
       "SELECT ?c WHERE { ?c a :Customer . ?c :acctbal ?bal . FILTER(?bal > 0) } ORDER BY ?c OFFSET 3 LIMIT 5",
       // ORDER BY on a non-projected var still orders the cut
-      "SELECT ?nm WHERE { ?c :name ?nm . ?c :acctbal ?bal } ORDER BY DESC(?bal) ?c LIMIT 4")
+      "SELECT ?nm WHERE { ?c :name ?nm . ?c :acctbal ?bal } ORDER BY DESC(?bal) ?c LIMIT 4",
+      // correlated EXISTS shapes the id plane takes: plain semi join,
+      // hoisted BIND, wide correlated UNION, per-key MINUS, OPTIONAL,
+      // aggregation and empty-group HAVING
+      """SELECT ?c ?bal WHERE { ?c :acctbal ?bal .
+           FILTER EXISTS { ?c :nation ?n . FILTER(?bal >= 7500) } }""",
+      """SELECT ?c ?bal WHERE { ?c :acctbal ?bal .
+           FILTER EXISTS { ?c :nation ?n .
+             BIND(?bal * 2 AS ?x) FILTER(?x >= 15000) } }""",
+      """SELECT ?c ?bal WHERE { ?c :acctbal ?bal .
+           FILTER EXISTS {
+             { ?c :mktsegment "BUILDING" . FILTER(?bal > 1000) }
+             UNION { ?c :mktsegment "AUTOMOBILE" . FILTER(?bal > 2000) }
+             UNION { ?c :nation ?n . FILTER(?bal > 9000) }
+             UNION { ?c a :Customer . FILTER(?bal < 0) } } }""",
+      """SELECT ?c ?bal WHERE { ?c :acctbal ?bal .
+           FILTER EXISTS { ?c :nation ?n
+             MINUS { ?c :nation ?n . FILTER(?bal >= 7500) } } }""",
+      """SELECT ?c ?bal WHERE { ?c :acctbal ?bal .
+           FILTER EXISTS { ?c :nation ?n .
+             OPTIONAL { ?n :name ?nm . FILTER(?bal >= 7500) }
+             FILTER(BOUND(?nm)) } }""",
+      """SELECT ?c ?bal WHERE { ?c :acctbal ?bal .
+           FILTER EXISTS { { SELECT ?c (COUNT(?o) AS ?n) WHERE {
+               ?o :custkey ?c . FILTER(?bal >= 7500) }
+             GROUP BY ?c HAVING(?n >= 3) } } }""",
+      """SELECT ?c ?bal WHERE { ?c :acctbal ?bal .
+           FILTER EXISTS { { SELECT (COUNT(?o) AS ?n) WHERE {
+               ?o :custkey ?c . FILTER(?bal >= 7500) }
+             HAVING(?n = 0) } } }""") ++ corrStruct
     for (text <- queries) {
       val plain = Sparql.query(spark, quads, text).collect()
         .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+      val before = Sparql.corrIdExistsJoins.get()
       val viaIds = Sparql.query(spark, quads, text, encoded = Some(enc)).collect()
         .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+      if (corrStruct.contains(text))
+        assert(Sparql.corrIdExistsJoins.get() == before,
+          s"the id plane took a correlated-EXISTS shape it refuses: $text")
       assert(viaIds == plain, s"pushdown divergence for: $text")
     }
   }
