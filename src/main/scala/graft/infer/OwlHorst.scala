@@ -61,22 +61,22 @@ object OwlHorst {
   private val G = InferredGraph
 
   /** Telemetry (the corrIdExistsJoins precedent): closed-world
-    * materializations vs delta-seeded fixpoint runs vs DRed deletes.
-    * The DRed contract is pinned structurally in OwlHorstSpec — a
-    * non-axiom DELETE bumps [[dredDeletes]] and leaves
-    * [[fullCloseRuns]] unchanged (it must never re-close the world).
+    * materializations vs DRed deletes. The DRed contract is pinned
+    * structurally in OwlHorstSpec — a non-axiom DELETE bumps
+    * [[dredDeletes]] and leaves [[fullCloseRuns]] unchanged (it must
+    * never re-close the world).
     */
   val fullCloseRuns = new java.util.concurrent.atomic.AtomicLong
-  val deltaSeedRuns = new java.util.concurrent.atomic.AtomicLong
   val dredDeletes = new java.util.concurrent.atomic.AtomicLong
   val dredAxiomFallbacks = new java.util.concurrent.atomic.AtomicLong
   /** Incremental paths that surrendered to the full close: a delta
     * insert or DRed taint fixpoint at its round cap (the caps FAIL SAFE
     * — an unconverged fixpoint never commits a partial result), and a
     * DRed delete whose working set outgrew the driver-side path — the
-    * pre-delete sameAs pairs past `graft.sameas.broadcast.limit`, an
-    * axiom seed or taint seed past its cap, or a taint / rederive probe
-    * past `graft.infer.driver.probe.max`.
+    * pre-delete sameAs pairs past `graft.sameas.broadcast.limit`, a
+    * taint seed (the deleted triples plus a lost axiom's seed) past
+    * 2,000 rows (`DriverTaintMax`), or a taint / rederive probe past
+    * `graft.infer.driver.probe.max`.
     */
   val capFallbacks = new java.util.concurrent.atomic.AtomicLong
   /** SINGLE-axiom deletes maintained incrementally (r16, the r15
@@ -1425,14 +1425,10 @@ object OwlHorst {
           (s0, n.getLong(0))
       }
     }
-    // FAIL-SAFE size guards, decided before the taint slices are built:
+    // FAIL-SAFE size guard, decided before the taint slices are built:
     // a lost TransitiveProperty typing on a large closure makes the
     // seed — and so the taint set — plane-sized
-    val axiomSeedCap =
-      sys.props.getOrElse("graft.infer.axiomseed.cap", "50000").toLong
     val seedFrame = axiomSeed match {
-      case Some((_, n)) if n > axiomSeedCap =>
-        return surrender(s"axiom taint seed exceeds $axiomSeedCap rows")
       case Some((s0, n)) if n > 0 => deletedTriples.unionByName(s0)
       case _ => deletedTriples
     }
@@ -1540,7 +1536,6 @@ object OwlHorst {
       seed: DataFrame, equivPreClosed: Boolean = false): DataFrame = {
     import spark.implicits._
     if (seed eq quads) fullCloseRuns.incrementAndGet()
-    else deltaSeedRuns.incrementAndGet()
     val ont = ontology(quads)
     // the compiled dispatch table is static across rounds — build (and
     // broadcast-hint) it once

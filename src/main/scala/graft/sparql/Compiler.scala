@@ -2105,18 +2105,6 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
     res
   }
 
-  /** Correlated `FILTER [NOT] EXISTS` via decorrelation: §18.6 says
-    * the current outer binding substitutes into the EXISTS pattern;
-    * for correlated conditions on the conjunctive spine that is
-    * equivalent to evaluating the residual pattern ONCE (set-based,
-    * no per-row re-execution) and turning each hoisted condition into
-    * a JOIN condition between the outer row and the sub-solutions —
-    * the classic subquery decorrelation, which is also the shape that
-    * scales (one semi/anti join instead of |outer| pattern runs).
-    * Substitution semantics for a var bound on BOTH sides: the outer
-    * binding wins (that is what textual substitution would produce);
-    * an outer-unbound shared var falls back to the inner binding.
-    */
   /** Free mentions (pattern vars ∪ expression reads, recursively
     * including deeper EXISTS levels) of every EExists nested inside
     * `op`'s expressions — NOT `op`'s own top-level reads. These are
@@ -2275,8 +2263,7 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
     * (tag column name, tag → constant)). None when a node is not
     * expressible; the caller stays on the struct plane.
     */
-  private def corrProbeFrame(op: Op, keep: Set[String])
-      : Option[(DataFrame, Set[String], Map[String, (String, Map[Long, T])])] =
+  private def corrProbeFrame(op: Op, keep: Set[String]): Option[ExSide] =
     op match {
     case Extend(i, v, EConst(t)) =>
       corrProbeFrame(i, keep - v).map { case (df, nul, cs) =>
@@ -2411,375 +2398,12 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
         .otherwise(acc)
     }
 
-  /** Correlated `FILTER [NOT] EXISTS` on the ID PLANE (r14, closing
-    * the r13 verdict's top item): the decorrelated semi/anti join of
-    * [[compCorrelatedExistsFilter]] with 8-byte join keys and ZERO
-    * probe-side dictionary decode. The outer tree compiles to an id
-    * frame; the hoisted §18.6 conditions read the outer vars from a
-    * partial decode into throwaway columns (join keys stay ids) and
-    * the inner vars from the probe's partial decode / literal const
-    * columns; the semi/anti join keys on raw store ids; the survivors
-    * decode ONCE at the result edge. At 100 TB this turns every
-    * exchange in the EXISTS pipeline from term-struct rows into
-    * 8-byte-keyed rows and deletes the probe-side dictionary joins.
-    *
-    * None (→ struct plane) when: either tree is not id-expressible, a
-    * condition reads a var bound on BOTH sides (outer-wins coalesce
-    * substitution — rare, keeps the struct path's exact semantics),
-    * or a shared join var is not a long id column (raw-g graph
-    * strings, const binds).
+  /** Correlated `FILTER [NOT] EXISTS`: a spine-splittable sub-pattern
+    * runs as the decorrelated semi/anti join ([[existsJoin]]); else a
+    * top-level MINUS, visible OPTIONAL or aggregation interior runs
+    * per key. Each evaluator runs on the id plane, else on the struct
+    * plane ([[onExistsPlane]]).
     */
-  /** Outer-side analysis shared by the id-plane correlated-EXISTS
-    * family: peel the FILTER layers, require a wide id-expressible
-    * tree, and compute the late-materialization keep set (query-wide
-    * reads ∪ vars shared with leaves OUTSIDE the input∪inner trees).
-    */
-  private final case class ExOuter(core: Op, inConds: Seq[Expr],
-      lScope: Set[String], lNull: Set[String],
-      leftFilterVars: Set[String], keepOut: Set[String])
-
-  private def existsOuterScope(input: Op, inner: Seq[Op]): Option[ExOuter] = {
-    if (encoded.isEmpty) return None
-    val (core, inConds) = stripFilters(input)
-    val (lScope, lNull) = idTreeScopeWide(core) match {
-      case Some(x) => x
-      case None => return None
-    }
-    if (Algebra.inScope(core).toSet != lScope) return None
-    val leftFilterVars = inConds.flatMap(exprVarSet).toSet
-      .intersect(lScope)
-    val inTree = inner.foldLeft(countTreeLeaves(core))((m, o) =>
-      countTreeLeaves(o, m))
-    val external = lScope.filter(v =>
-      leafCounts.getOrElse(v, 0) > inTree.getOrElse(v, 0))
-    val keepOut = (refNeeded ++ external).intersect(lScope)
-    Some(ExOuter(core, inConds, lScope, lNull, leftFilterVars, keepOut))
-  }
-
-  /** Shared verdict tail of the id-plane EXISTS family: outer FILTER
-    * layers over the surviving id frame, late-materialization drop,
-    * ONE result-edge decode — and the telemetry bump specs pin on.
-    */
-  private def existsDecodeTail(o: ExOuter, joined: DataFrame,
-      extraDrop: Seq[String]): DataFrame = {
-    val dropped =
-      if (extraDrop.isEmpty) joined else joined.drop(extraDrop: _*)
-    val filtered = applyFilters(dropped, o.inConds, o.leftFilterVars,
-      o.lNull.intersect(o.leftFilterVars))
-    val dead = filtered.columns.filterNot(o.keepOut)
-    val kept =
-      if (dead.length == filtered.columns.length)
-        filtered.select(nullTerm.as(freshName("c")))
-      else filtered.drop(dead.toIndexedSeq: _*)
-    Sparql.corrIdExistsJoins.incrementAndGet()
-    decodeCols(kept, kept.columns.toSet, kept.columns.filter(o.lNull).toSet)
-  }
-
-  private def corrFilterJoinOverIds(input: Op, residual: Op,
-      conds: Seq[Expr], binds: Seq[(String, Expr)],
-      positive: Boolean): Option[DataFrame] = {
-    val o = existsOuterScope(input, Seq(residual)).getOrElse(return None)
-    val probeScope = Algebra.inScope(residual).toSet
-    val shared = o.lScope.intersect(probeScope)
-    val bindTargets = binds.map(_._1).toSet
-    val condVars = (conds.flatMap(exprVarSet) ++
-      binds.flatMap(b => exprVarSet(b._2))).toSet -- bindTargets
-    if (condVars.exists(shared)) return None
-    val condOuter = condVars.intersect(o.lScope)
-    val condInner = condVars -- o.lScope
-    val (pf0, pNull, pConst) =
-      corrProbeFrame(residual, shared ++ condInner).getOrElse(return None)
-    if (shared.exists(pConst.contains)) return None
-    if (!shared.forall(v => pf0.columns.contains(v) &&
-        pf0.schema(v).dataType == LongType)) return None
-    // the outer side must expose the shared vars as long ids too
-    val leftIds = idFrameOf(o.core, o.keepOut ++ shared ++
-      o.leftFilterVars ++ condOuter).getOrElse(return None)
-    if (!shared.forall(v => leftIds.columns.contains(v) &&
-        leftIds.schema(v).dataType == LongType)) return None
-    // partial decode of the outer condition-read vars into throwaway
-    // struct columns — the id columns stay join keys
-    val tmpMap = condOuter.map(v => v -> freshName("cv")).toMap
-    val leftDec = decodeCols(
-      tmpMap.foldLeft(leftIds) { case (d, (v, n)) => d.withColumn(n, d(v)) },
-      tmpMap.values.toSet,
-      tmpMap.collect { case (v, n) if o.lNull(v) => n }.toSet)
-    // probe side: decode inner condition-read pattern vars the same way
-    val pTmp = condInner
-      .filter(v => pf0.columns.contains(v) && !pConst.contains(v))
-      .map(v => v -> freshName("cv")).toMap
-    val pfDec = decodeCols(
-      pTmp.foldLeft(pf0) { case (d, (v, n)) => d.withColumn(n, d(v)) },
-      pTmp.values.toSet,
-      pTmp.collect { case (v, n) if pNull(v) => n }.toSet)
-    val pKeep = (shared.toSeq.sorted ++ pConst.values.map(_._1) ++
-      pTmp.values).distinct
-    val renames = pKeep.map(c => c -> freshName(c)).toMap
-    val rr = pKeep.foldLeft(pfDec.select(pKeep.map(pfDec(_)): _*)) {
-      (d, c) => d.withColumnRenamed(c, renames(c))
-    }
-    val keyCond = shared.toSeq.sorted.map { v =>
-      if (o.lNull(v) || pNull(v))
-        leftDec(v).isNull || rr(renames(v)).isNull ||
-          leftDec(v) === rr(renames(v))
-      else leftDec(v) === rr(renames(v))
-    }
-    val base: String => Column = v =>
-      if (condOuter(v)) leftDec(tmpMap(v))
-      else if (pConst.contains(v))
-        constTagCol(rr(renames(pConst(v)._1)), pConst(v)._2)
-      else if (pTmp.contains(v)) rr(renames(pTmp(v)))
-      else nullTerm
-    val resB = layerBinds(binds, base)
-    val corrCond = conds
-      .map(c => coalesce(compBool(c, resB), lit(false)))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val joined = leftDec.join(rr, (keyCond :+ corrCond).reduce(_ && _),
-      if (positive) "left_semi" else "left_anti")
-    Some(existsDecodeTail(o, joined, tmpMap.values.toSeq))
-  }
-
-  /** Id-plane twin of [[compCorrExistsMinus]] (r14): the per-key
-    * MINUS runs entirely over 8-byte term ids — key frame, dependent
-    * join, anti join, and verdict exchange all ship longs; only the
-    * condition-read key columns decode (on the DISTINCT key frame, a
-    * bounded fraction of the outer) plus the probe's own condition
-    * reads, and the surviving outer rows decode once at the result
-    * edge. None (→ struct plane) when a side is not id-expressible,
-    * a condition reads an l-only var, or the outer shares nothing
-    * with l (the guarded dependent-cross class).
-    */
-  private def compCorrExistsMinusIds(input: Op, l: Op, rRes: Op,
-      conds: Seq[Expr], binds: Seq[(String, Expr)], corrR: Set[String],
-      positive: Boolean): Option[DataFrame] = {
-    val o = existsOuterScope(input, Seq(l, rRes)).getOrElse(return None)
-    val lFull = Algebra.inScope(l).toSet
-    val rFull = Algebra.inScope(rRes).toSet
-    val sharedIL = o.lScope.intersect(lFull).toSeq.sorted
-    if (sharedIL.isEmpty) return None
-    val keyCols = (sharedIL ++
-      corrR.toSeq.sorted.filterNot(sharedIL.contains)).toIndexedSeq
-    if (!keyCols.forall(o.lScope)) return None
-    val bindTargets = binds.map(_._1).toSet
-    val condVars = (conds.flatMap(exprVarSet) ++
-      binds.flatMap(b => exprVarSet(b._2))).toSet -- bindTargets
-    // resolution classes mirror the struct path's priority (key over
-    // r); an l-only read keeps the struct path's exact semantics
-    if (!condVars.forall(v => keyCols.contains(v) || rFull(v)))
-      return None
-    val minusShared = lFull.intersect(rFull).toSeq.sorted
-    val leftIds = idFrameOf(o.core,
-      o.keepOut ++ o.leftFilterVars ++ keyCols).getOrElse(return None)
-    if (!keyCols.forall(v => leftIds.columns.contains(v) &&
-        leftIds.schema(v).dataType == LongType)) return None
-    val (lf0, lfNull, lfConst) =
-      corrProbeFrame(l, sharedIL.toSet ++ minusShared).getOrElse(return None)
-    if (lfConst.nonEmpty) return None
-    if (!(sharedIL ++ minusShared).distinct.forall(v =>
-        !lf0.columns.contains(v) ||
-        lf0.schema(v).dataType == LongType)) return None
-    val condR = condVars.intersect(rFull) -- keyCols
-    val (rf0, rfNull, rfConst) =
-      corrProbeFrame(rRes, minusShared.toSet ++ condR).getOrElse(return None)
-    if (minusShared.exists(rfConst.contains)) return None
-    if (!minusShared.forall(v => !rf0.columns.contains(v) ||
-        rf0.schema(v).dataType == LongType)) return None
-    // key frame on ids; condition-read key vars decode on the
-    // DISTINCT frame only
-    val keys0 = leftIds.select(keyCols.map(leftIds(_)): _*).distinct()
-    val kRen = keyCols.map(v => v -> freshName(v)).toMap
-    val keys = keyCols.foldLeft(keys0)((d, v) =>
-      d.withColumnRenamed(v, kRen(v)))
-    val condKey = condVars.intersect(keyCols.toSet)
-    val kTmp = condKey.map(v => v -> freshName("kv")).toMap
-    val keysDec = decodeCols(
-      kTmp.foldLeft(keys) { case (d, (v, n)) => d.withColumn(n, d(kRen(v))) },
-      kTmp.values.toSet,
-      kTmp.collect { case (v, n) if o.lNull(v) => n }.toSet)
-    val lRen = lf0.columns.map(c => c -> freshName(c)).toMap
-    val lr = lf0.columns.foldLeft(lf0)((d, c) =>
-      d.withColumnRenamed(c, lRen(c)))
-    val ilCond = sharedIL.map { v =>
-      if (o.lNull(v) || lfNull(v))
-        keysDec(kRen(v)).isNull || lr(lRen(v)).isNull ||
-          keysDec(kRen(v)) === lr(lRen(v))
-      else keysDec(kRen(v)) === lr(lRen(v))
-    }.reduce(_ && _)
-    val cand = keysDec.join(lr, ilCond)
-    def lVal(v: String): Column =
-      if (sharedIL.contains(v) && (o.lNull(v) || lfNull(v)))
-        coalesce(cand(kRen(v)), cand(lRen(v)))
-      else if (sharedIL.contains(v)) cand(kRen(v))
-      else cand(lRen(v))
-    val rTmp = condR
-      .filter(v => rf0.columns.contains(v) && !rfConst.contains(v))
-      .map(v => v -> freshName("cv")).toMap
-    val rfDec = decodeCols(
-      rTmp.foldLeft(rf0) { case (d, (v, n)) => d.withColumn(n, d(v)) },
-      rTmp.values.toSet,
-      rTmp.collect { case (v, n) if rfNull(v) => n }.toSet)
-    val rKeep = (minusShared.filter(rfDec.columns.contains) ++
-      rfConst.values.map(_._1) ++ rTmp.values).distinct
-    val rRen = rKeep.map(c => c -> freshName(c)).toMap
-    val rr = rKeep.foldLeft(rfDec.select(rKeep.map(rfDec(_)): _*))(
-      (d, c) => d.withColumnRenamed(c, rRen(c)))
-    def compatNull(v: String): Boolean =
-      lfNull(v) || rfNull(v) || (sharedIL.contains(v) && o.lNull(v))
-    val compat = minusShared.map { v =>
-      if (compatNull(v))
-        lVal(v).isNull || rr(rRen(v)).isNull || lVal(v) === rr(rRen(v))
-      else lVal(v) === rr(rRen(v))
-    }.reduce(_ && _)
-    val overlap = minusShared.map { v =>
-      if (compatNull(v)) lVal(v).isNotNull && rr(rRen(v)).isNotNull
-      else lit(true)
-    }.reduce(_ || _)
-    val res: String => Column = v =>
-      if (kTmp.contains(v)) cand(kTmp(v))
-      else if (rfConst.contains(v))
-        constTagCol(rr(rRen(rfConst(v)._1)), rfConst(v)._2)
-      else if (rTmp.contains(v)) rr(rRen(rTmp(v)))
-      else nullTerm
-    val resB = layerBinds(binds, res)
-    val corrCond = conds
-      .map(c => coalesce(compBool(c, resB), lit(false)))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val surv = cand.join(rr, compat && overlap && corrCond, "left_anti")
-    val ok = surv.select(keyCols.map(v => surv(kRen(v))): _*).distinct()
-    val eq = keyCols.map(v => leftIds(v) <=> ok(kRen(v))).reduce(_ && _)
-    val verdict = leftIds.join(ok, eq,
-      if (positive) "left_semi" else "left_anti")
-    Some(existsDecodeTail(o, verdict, Nil))
-  }
-
-  /** Id-plane twin of [[compCorrExistsOptional]] (r14) — the per-key
-    * OPTIONAL over 8-byte ids, same decode discipline as the MINUS
-    * twin. The above-filters/embedded-condition reads split three
-    * ways: key columns (decoded on the distinct key frame), r columns
-    * (probe partial decode; NULL structs on unmatched rows read as
-    * unbound, exactly §18.6's per-binding evaluation), l columns
-    * (probe partial decode on the l side).
-    */
-  private def compCorrExistsOptionalIds(input: Op, l: Op, rRes: Op,
-      cond: Option[Expr], above: Seq[Expr], rConds: Seq[Expr],
-      rBinds: Seq[(String, Expr)], corr: Set[String],
-      positive: Boolean): Option[DataFrame] = {
-    val o = existsOuterScope(input, Seq(l, rRes)).getOrElse(return None)
-    val lFull = Algebra.inScope(l).toSet
-    val rFull = Algebra.inScope(rRes).toSet
-    val sharedIL = o.lScope.intersect(lFull).toSeq.sorted
-    if (sharedIL.isEmpty) return None
-    val keyCols = (sharedIL ++
-      corr.toSeq.sorted.filterNot(sharedIL.contains)).toIndexedSeq
-    if (!keyCols.forall(o.lScope)) return None
-    val bindTargets = rBinds.map(_._1).toSet
-    val condVars = ((above ++ cond.toSeq ++ rConds).flatMap(exprVarSet) ++
-      rBinds.flatMap(b => exprVarSet(b._2))).toSet -- bindTargets
-    val ljShared = lFull.intersect(rFull).toSeq.sorted
-    val leftIds = idFrameOf(o.core,
-      o.keepOut ++ o.leftFilterVars ++ keyCols).getOrElse(return None)
-    if (!keyCols.forall(v => leftIds.columns.contains(v) &&
-        leftIds.schema(v).dataType == LongType)) return None
-    // NOT minus rFull: a var bound by both sides must also decode on
-    // the l side — unmatched LeftJoin rows carry the SPINE's binding
-    // (§15.1), so reads fall back l-ward when the probe side is null
-    val condL = condVars.intersect(lFull) -- keyCols
-    val (lf0, lfNull, lfConst) =
-      corrProbeFrame(l, sharedIL.toSet ++ ljShared ++ condL)
-        .getOrElse(return None)
-    if (lfConst.nonEmpty) return None
-    if (!(sharedIL ++ ljShared).distinct.forall(v =>
-        !lf0.columns.contains(v) ||
-        lf0.schema(v).dataType == LongType)) return None
-    val condR = condVars.intersect(rFull) -- keyCols
-    val (rf0, rfNull, rfConst) =
-      corrProbeFrame(rRes, ljShared.toSet ++ condR).getOrElse(return None)
-    if (ljShared.exists(rfConst.contains)) return None
-    if (!ljShared.forall(v => !rf0.columns.contains(v) ||
-        rf0.schema(v).dataType == LongType)) return None
-    val keys0 = leftIds.select(keyCols.map(leftIds(_)): _*).distinct()
-    val kRen = keyCols.map(v => v -> freshName(v)).toMap
-    val keys = keyCols.foldLeft(keys0)((d, v) =>
-      d.withColumnRenamed(v, kRen(v)))
-    val condKey = condVars.intersect(keyCols.toSet)
-    val kTmp = condKey.map(v => v -> freshName("kv")).toMap
-    val keysDec = decodeCols(
-      kTmp.foldLeft(keys) { case (d, (v, n)) => d.withColumn(n, d(kRen(v))) },
-      kTmp.values.toSet,
-      kTmp.collect { case (v, n) if o.lNull(v) => n }.toSet)
-    val lTmp = condL
-      .filter(v => lf0.columns.contains(v) && !lfConst.contains(v))
-      .map(v => v -> freshName("cv")).toMap
-    val lfDec = decodeCols(
-      lTmp.foldLeft(lf0) { case (d, (v, n)) => d.withColumn(n, d(v)) },
-      lTmp.values.toSet,
-      lTmp.collect { case (v, n) if lfNull(v) => n }.toSet)
-    val lRen = lfDec.columns.map(c => c -> freshName(c)).toMap
-    val lr = lfDec.columns.foldLeft(lfDec)((d, c) =>
-      d.withColumnRenamed(c, lRen(c)))
-    val ilCond = sharedIL.map { v =>
-      if (o.lNull(v) || lfNull(v))
-        keysDec(kRen(v)).isNull || lr(lRen(v)).isNull ||
-          keysDec(kRen(v)) === lr(lRen(v))
-      else keysDec(kRen(v)) === lr(lRen(v))
-    }.reduce(_ && _)
-    val cand = keysDec.join(lr, ilCond)
-    def lVal(v: String): Column =
-      if (sharedIL.contains(v) && (o.lNull(v) || lfNull(v)))
-        coalesce(cand(kRen(v)), cand(lRen(v)))
-      else if (sharedIL.contains(v)) cand(kRen(v))
-      else cand(lRen(v))
-    val rTmp = condR
-      .filter(v => rf0.columns.contains(v) && !rfConst.contains(v))
-      .map(v => v -> freshName("cv")).toMap
-    val rfDec = decodeCols(
-      rTmp.foldLeft(rf0) { case (d, (v, n)) => d.withColumn(n, d(v)) },
-      rTmp.values.toSet,
-      rTmp.collect { case (v, n) if rfNull(v) => n }.toSet)
-    // non-null iff the left-outer join found an r match — gates the
-    // hoisted correlated BINDs (unmatched ⇒ unbound)
-    val matchInd = freshName("matched")
-    val rKeep = (ljShared.filter(rfDec.columns.contains) ++
-      rfConst.values.map(_._1) ++ rTmp.values).distinct
-    val rRen = (rKeep :+ matchInd).map(c => c -> freshName(c)).toMap
-    val rr = (rKeep :+ matchInd).foldLeft(
-      rfDec.select(rKeep.map(rfDec(_)): _*)
-        .withColumn(matchInd, lit(true)))(
-      (d, c) => d.withColumnRenamed(c, rRen(c)))
-    def compatNull(v: String): Boolean =
-      lfNull(v) || rfNull(v) || (sharedIL.contains(v) && o.lNull(v))
-    val compat = ljShared.map { v =>
-      if (compatNull(v))
-        lVal(v).isNull || rr(rRen(v)).isNull || lVal(v) === rr(rRen(v))
-      else lVal(v) === rr(rRen(v))
-    }.reduceOption(_ && _).getOrElse(lit(true))
-    val res: String => Column = v =>
-      if (kTmp.contains(v)) cand(kTmp(v))
-      else if (rfConst.contains(v))
-        constTagCol(rr(rRen(rfConst(v)._1)), rfConst(v)._2)
-      else if (rTmp.contains(v) && lTmp.contains(v))
-        // bound on BOTH sides: matched rows read the (compatible)
-        // merged value, unmatched rows fall back to the spine's
-        coalesce(rr(rRen(rTmp(v))), cand(lRen(lTmp(v))))
-      else if (rTmp.contains(v)) rr(rRen(rTmp(v)))
-      else if (lTmp.contains(v)) cand(lRen(lTmp(v)))
-      else nullTerm
-    val resB = layerBindsGated(rBinds, res, rr(rRen(matchInd)))
-    val joinCond = (cond.toSeq ++ rConds)
-      .map(c => coalesce(compBool(c, resB), lit(false)))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val joined = cand.join(rr, compat && joinCond, "left_outer")
-    val aboveCond = above
-      .map(c => coalesce(compBool(c, resB), lit(false)))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val surv = joined.filter(aboveCond)
-    val ok = surv.select(keyCols.map(v => surv(kRen(v))): _*).distinct()
-    val eq = keyCols.map(v => leftIds(v) <=> ok(kRen(v))).reduce(_ && _)
-    val verdict = leftIds.join(ok, eq,
-      if (positive) "left_semi" else "left_anti")
-    Some(existsDecodeTail(o, verdict, Nil))
-  }
-
   private def compCorrelatedExistsFilter(input: Op, sub: Op,
       positive: Boolean, outerScope: Set[String]): DataFrame = {
     val corr = corrVarsOf(sub, outerScope)
@@ -2834,191 +2458,132 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
           "pattern position, or nested EXISTS)"))
     // nested EXISTS deeper in the residual see the widened scope
     walkExists(residual, outerScope ++ Algebra.inScope(residual))
-    // id-plane fast path: 8-byte join keys, no probe-side decode
-    corrFilterJoinOverIds(input, residual, conds, binds, positive) match {
-      case Some(df) => return df
-      case None => ()
-    }
-    val in = comp(input)
-    val subDf = comp(residual)
-    val shared = in.columns.intersect(subDf.columns).toIndexedSeq
-    // inner-only vars the hoisted conditions/binds read must ride along
-    val condInnerVars = (conds.flatMap(exprVarSet) ++
-      binds.flatMap(b => exprVarSet(b._2))).toSet.diff(binds.map(_._1).toSet)
-      .intersect(subDf.columns.toSet).diff(in.columns.toSet).toIndexedSeq
-    val rrCols = (shared ++ condInnerVars).distinct
-    val renames = rrCols.map(v => v -> freshName(v)).toMap
-    val rr = rrCols.foldLeft(subDf.select(rrCols.map(subDf(_)): _*)) {
-      (d, v) => d.withColumnRenamed(v, renames(v))
-    }
-    val nullable = maybeUnbound(input) ++ maybeUnbound(residual)
-    val sharedCond = shared.map(v =>
-        if (nullable(v))
-          in(v).isNull || rr(renames(v)).isNull ||
-            termEq(in(v), rr(renames(v)))
-        else termEq(in(v), rr(renames(v))))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val base: String => Column = v =>
-      if (in.columns.contains(v) && renames.contains(v))
-        coalesce(in(v), rr(renames(v))) // substitution: outer wins
-      else if (in.columns.contains(v)) in(v)
-      else if (renames.contains(v)) rr(renames(v))
-      else nullTerm
-    val res = layerBinds(binds, base)
-    val corrCond = conds
-      .map(c => coalesce(compBool(c, res), lit(false)))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    in.join(rr, sharedCond && corrCond,
-      if (positive) "left_semi" else "left_anti")
+    onExistsPlane(input, Seq(residual))(
+      existsJoin(_, residual, conds, binds, positive)).get
   }
 
-  /** `FILTER [NOT] EXISTS { l MINUS r }` with §18.6 expression
-    * correlation confined to r's conjunctive spine (l uncorrelated).
-    * Hoisting a condition OUT of the MINUS right side is unsound (it
-    * sits under negation), so the substitution is realized per key:
-    *
-    *   1. key frame K = distinct outer rows over (outer∩l pattern
-    *      vars ∪ correlated vars) — each distinct correlated binding
-    *      decides independently;
-    *   2. cand = K ⋈ l (the per-key l solutions; a dependent CROSS
-    *      join only when l shares nothing with the outer, guarded by
-    *      a key-count bound — that blowup is inherent to dependent
-    *      negation, not an artifact);
-    *   3. per-key MINUS = one anti join of cand against r's residual
-    *      with [[compMinus]]'s compatibility + domain-overlap
-    *      condition AND the hoisted correlated conditions reading the
-    *      key columns (substitution, realized set-based);
-    *   4. EXISTS(key) = key survives with ≥ 1 row; semi/anti join
-    *      back to the outer on the key frame.
-    *
-    * Disjoint l/r domains short-circuit to plain `EXISTS { l }`
-    * (MINUS removes nothing, §18.5). Correlation in r's PATTERN
-    * positions is out of scope here as everywhere in the engine
-    * (bottom-up evaluation school); only EXPRESSION refs correlate.
+  /** Correlated `FILTER [NOT] EXISTS` via decorrelation: §18.6 says
+    * the current outer binding substitutes into the EXISTS pattern;
+    * for correlated conditions on the conjunctive spine that is
+    * equivalent to evaluating the residual pattern ONCE (set-based,
+    * no per-row re-execution) and turning each hoisted condition into
+    * a JOIN condition between the outer row and the sub-solutions —
+    * the classic subquery decorrelation, which is also the shape that
+    * scales (one semi/anti join instead of |outer| pattern runs).
+    * Substitution semantics for a var bound on BOTH sides: the outer
+    * binding wins (that is what textual substitution would produce);
+    * an outer-unbound shared var falls back to the inner binding. The
+    * id plane refuses a condition that reads such a var.
     */
-  /** `FILTER [NOT] EXISTS { l OPTIONAL { r } FILTER f… }` with §18.6
-    * expression correlation anywhere in the OPTIONAL's embedded
-    * filter, r's conjunctive spine, or the filters above — the
-    * VISIBLE-OPTIONAL class (`?nm` IS read by `f`), which the
-    * invisible-OPTIONAL drop cannot touch. Hoisting out of a left
-    * join's right side is unsound (an unmatched row must yield
-    * unbound, not a dropped condition), so the substitution is
-    * realized per key, the [[compCorrExistsMinus]] shape:
-    *
-    *   1. key frame K = distinct outer rows over (outer∩l vars ∪
-    *      correlated vars);
-    *   2. cand = K ⋈ l (dependent cross join only when l shares
-    *      nothing with the outer, same 1000-key guard);
-    *   3. per-key OPTIONAL = ONE left-outer join of cand against r's
-    *      residual with the l/r compatibility condition AND the
-    *      substituted correlated/join conditions (an unmatched cand
-    *      row keeps null r-columns — BOUND sees unbound, exactly
-    *      §18.6's per-binding evaluation, set-based);
-    *   4. the above-filters evaluate post-join with the substituted
-    *      resolver; EXISTS(key) = ≥ 1 surviving row; semi/anti join
-    *      back to the outer.
-    *
-    * With no filters above, a left join cannot remove l rows, so
-    * `EXISTS { l OPTIONAL r }` short-circuits to `EXISTS { l }`
-    * whatever the correlation inside r decides.
+  private def existsJoin(p: ExistsPlane, residual: Op, conds: Seq[Expr],
+      binds: Seq[(String, Expr)], positive: Boolean): Option[DataFrame] = {
+    val shared = p.scope.intersect(p.innerScope(residual)).toSeq.sorted
+    val condVars = condReads(conds, binds)
+    if (p.ids && condVars.exists(shared.contains)) return None
+    val condOuter = condVars.intersect(p.scope)
+    val side = p.inner(residual, shared.toSet ++ (condVars -- p.scope), shared)
+      .getOrElse(return None)
+    val outer = p.outer(shared, condOuter).getOrElse(return None)
+    val (left, oRead) =
+      p.reads(outer, condOuter.map(v => v -> v).toMap, p.outerNull)
+    val (rr, ren, iRead) = narrowInner(p, side, shared, condVars)
+    val keyCond = shared.map(v =>
+      p.compatible(p.outerNull(v) || side._2(v), left(v), rr(ren(v))))
+    val base: String => Column = v =>
+      (oRead.get(v).map(left(_)), iRead.get(v)) match {
+        case (Some(o), Some(i)) => coalesce(o, i) // substitution: outer wins
+        case (o, i) => o.orElse(i).getOrElse(nullTerm)
+      }
+    val cond = holds(conds, layerBinds(binds, base))
+    Some(p.edge(left.join(rr, (keyCond :+ cond).reduce(_ && _),
+      if (positive) "left_semi" else "left_anti")))
+  }
+
+  /** Vars the hoisted conditions and bind definitions read, the bind
+    * targets excluded (those resolve through [[layerBinds]]).
     */
-  private def compCorrExistsOptional(input: Op, l: Op, r: Op,
-      cond: Option[Expr], above: Seq[Expr], corr: Set[String],
-      outerScope: Set[String], positive: Boolean): Option[DataFrame] = {
-    if (corrVarsOf(l, outerScope).nonEmpty) return None
-    // an r-ONLY pattern var also bound in the OUTER scope takes part
-    // in the outer semi-join's compatibility (an optional extension
-    // binding it differently is incompatible) — the key frame below
-    // keys only on (outer∩l ∪ correlated) vars, so that class must
-    // stay loud, and the EXISTS{l} short-circuit would drop it
-    if ((Algebra.inScope(r).toSet -- Algebra.inScope(l).toSet)
-        .intersect(outerScope).nonEmpty) return None
-    if (above.isEmpty)
-      return Some(comp(Filter(EExists(l, positive), input)))
-    val corrR = corrVarsOf(r, outerScope)
-    val (rRes, rConds, rBinds) =
-      splitCorrelated(r, corrR).getOrElse(return None)
-    walkExists(l, outerScope ++ Algebra.inScope(l))
-    walkExists(rRes, outerScope ++ Algebra.inScope(rRes))
-    // id-plane fast path (r14): per-key OPTIONAL over 8-byte ids
-    compCorrExistsOptionalIds(input, l, rRes, cond, above, rConds,
-      rBinds, corr, positive) match {
-      case Some(df) => return Some(df)
-      case None => ()
-    }
-    val in = comp(input)
-    val ld = comp(l)
-    val rd = comp(rRes)
-    val sharedIL = in.columns.intersect(ld.columns).toIndexedSeq
-    val keyCols = (sharedIL ++ corr.toSeq.filterNot(sharedIL.contains))
-      .toIndexedSeq
-    // a correlated var must be an outer COLUMN to key on
-    if (!keyCols.forall(in.columns.contains)) return None
-    val keys = in.select(keyCols.map(in(_)): _*).distinct()
-    val nullIL = maybeUnbound(input) ++ maybeUnbound(l)
-    val lRen = ld.columns.map(v => v -> freshName(v)).toMap
-    val lr = ld.columns.foldLeft(ld) { (d, v) =>
-      d.withColumnRenamed(v, lRen(v))
-    }
-    val ilCond = sharedIL.map(v =>
-        if (nullIL(v))
-          keys(v).isNull || lr(lRen(v)).isNull || termEq(keys(v), lr(lRen(v)))
-        else termEq(keys(v), lr(lRen(v))))
-      .reduceOption(_ && _)
-    val cand = ilCond match {
+  private def condReads(conds: Seq[Expr], binds: Seq[(String, Expr)]): Set[String] =
+    (conds.flatMap(exprVarSet) ++ binds.flatMap(b => exprVarSet(b._2))).toSet --
+      binds.map(_._1)
+
+  /** Every condition holds under `res`; an erroring one is false. */
+  private def holds(conds: Seq[Expr], res: String => Column): Column =
+    conds.map(c => coalesce(compBool(c, res), lit(false)))
+      .reduceOption(_ && _).getOrElse(lit(true))
+
+  /** An inner operand narrowed to the join vars `join`, its const tags
+    * and the term columns of the vars in `read` it binds, every column
+    * renamed fresh. Returns the frame, each join var's column name and
+    * each read var's term column.
+    */
+  private def narrowInner(p: ExistsPlane, side: ExSide, join: Seq[String],
+      read: Set[String]): (DataFrame, Map[String, String], Map[String, Column]) = {
+    val (f, nul, consts) = side
+    val (dec, rd) = p.reads(f, read.filter(v =>
+      f.columns.contains(v) && !consts.contains(v)).map(v => v -> v).toMap, nul)
+    val keep = (join.filter(dec.columns.contains) ++
+      consts.values.map(_._1) ++ rd.values).distinct
+    val ren = keep.map(c => c -> freshName(c)).toMap
+    val rr = keep.foldLeft(dec.select(keep.map(dec(_)): _*))((d, c) =>
+      d.withColumnRenamed(c, ren(c)))
+    (rr, ren, rd.map { case (v, c) => v -> rr(ren(c)) } ++
+      consts.map { case (v, (c, tags)) => v -> constTagCol(rr(ren(c)), tags) })
+  }
+
+  /** Step 1 of the per-key scheme ([[perKeyMinus]]): the distinct
+    * outer rows over `keyCols`, renamed fresh (the returned map), plus
+    * the term column of each key var in `read`.
+    */
+  private def keyFrame(p: ExistsPlane, outer: DataFrame,
+      keyCols: Seq[String], read: Set[String])
+      : (DataFrame, Map[String, String], Map[String, String]) = {
+    val kRen = keyCols.map(v => v -> freshName(v)).toMap
+    val keys = keyCols.foldLeft(
+      outer.select(keyCols.map(outer(_)): _*).distinct())((d, v) =>
+      d.withColumnRenamed(v, kRen(v)))
+    val (kd, kRead) =
+      p.reads(keys, read.map(v => v -> kRen(v)).toMap, p.outerNull)
+    (kd, kRen, kRead)
+  }
+
+  /** Step 2 of the per-key scheme: cand = K ⋈ l, the per-key solutions
+    * of the uncorrelated left operand — a dependent CROSS join, bounded
+    * by [[boundedKeyFrame]], when l shares nothing with the outer.
+    * Returns cand, an l var's value on a cand row (the outer key wins
+    * where joined) and the term column of each var in `read`.
+    */
+  private def perKeyCand(p: ExistsPlane, keys: DataFrame,
+      kRen: Map[String, String], sharedIL: Seq[String], l: ExSide,
+      read: Set[String]): Option[(DataFrame, String => Column, Map[String, Column])] = {
+    val (lf, lNull, _) = l
+    val (ld, rd) =
+      p.reads(lf, read.filter(lf.columns.contains).map(v => v -> v).toMap, lNull)
+    val lRen = ld.columns.map(c => c -> freshName(c)).toMap
+    val lr = ld.columns.foldLeft(ld)((d, c) => d.withColumnRenamed(c, lRen(c)))
+    def nullable(v: String) = p.outerNull(v) || lNull(v)
+    val cand = sharedIL.map(v =>
+      p.compatible(nullable(v), keys(kRen(v)), lr(lRen(v))))
+      .reduceOption(_ && _) match {
       case Some(c) => keys.join(lr, c)
-      case None =>
-        // dependent cross join: bound the key frame before exploding
-        boundedKeyFrame(keys).getOrElse(return None).crossJoin(lr)
+      case None => boundedKeyFrame(keys).getOrElse(return None).crossJoin(lr)
     }
     def lVal(v: String): Column =
-      if (sharedIL.contains(v) && nullIL(v)) coalesce(cand(v), cand(lRen(v)))
-      else if (sharedIL.contains(v)) cand(v)
+      if (sharedIL.contains(v) && nullable(v))
+        coalesce(cand(kRen(v)), cand(lRen(v)))
+      else if (sharedIL.contains(v)) cand(kRen(v))
       else cand(lRen(v))
-    val ljShared = ld.columns.intersect(rd.columns).toIndexedSeq
-    val innerRead = (above ++ cond.toSeq ++ rConds).flatMap(exprVarSet)
-      .toSet ++ rBinds.flatMap(b => exprVarSet(b._2)).toSet
-    val rrCols = (ljShared ++ innerRead.diff(rBinds.map(_._1).toSet)
-      .intersect(rd.columns.toSet).toSeq.filterNot(ljShared.contains))
-      .distinct
-    val rRen = rrCols.map(v => v -> freshName(v)).toMap
-    // non-null iff the left-outer join below found an r match — the
-    // hoisted correlated BINDs are gated on it (unmatched ⇒ unbound)
-    val matchInd = freshName("matched")
-    val rr = rrCols.foldLeft(rd.select(rrCols.map(rd(_)): _*)) { (d, v) =>
-      d.withColumnRenamed(v, rRen(v))
-    }.withColumn(matchInd, lit(true))
-    val nullLR = maybeUnbound(l) ++ maybeUnbound(rRes)
-    val compat = ljShared.map(v =>
-        if (nullLR(v))
-          lVal(v).isNull || rr(rRen(v)).isNull || termEq(lVal(v), rr(rRen(v)))
-        else termEq(lVal(v), rr(rRen(v))))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val res: String => Column = v =>
-      if (keyCols.contains(v)) cand(v) // substituted outer binding
-      else if (rRen.contains(v) && ld.columns.contains(v))
-        // bound on BOTH sides: unmatched LeftJoin rows carry the
-        // SPINE's binding (§15.1) — fall back l-ward past the nulls
-        coalesce(rr(rRen(v)), lVal(v))
-      else if (rRen.contains(v)) rr(rRen(v)) // r-only reads (null = unbound)
-      else if (ld.columns.contains(v)) lVal(v)
-      else nullTerm
-    val resB = layerBindsGated(rBinds, res, rr(matchInd))
-    val joinCond = (cond.toSeq ++ rConds)
-      .map(c => coalesce(compBool(c, resB), lit(false)))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val joined = cand.join(rr, compat && joinCond, "left_outer")
-    val aboveCond = above
-      .map(c => coalesce(compBool(c, resB), lit(false)))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val surv = joined.filter(aboveCond)
-    val okKeys = surv.select(keyCols.map(surv(_)): _*).distinct()
-    val mRen = keyCols.map(v => v -> freshName(v)).toMap
-    val ok = keyCols.foldLeft(okKeys) { (d, v) =>
-      d.withColumnRenamed(v, mRen(v))
-    }
-    val eq = keyCols.map(v => in(v) <=> ok(mRen(v))).reduce(_ && _)
-    Some(in.join(ok, eq, if (positive) "left_semi" else "left_anti"))
+    Some((cand, lVal, rd.map { case (v, c) => v -> cand(lRen(c)) }))
+  }
+
+  /** Step 4 of the per-key scheme: EXISTS(key) = the key has ≥ 1 row in
+    * `surv`; the outer semi/anti joins on the key columns.
+    */
+  private def keyVerdict(p: ExistsPlane, outer: DataFrame,
+      keyCols: Seq[String], kRen: Map[String, String], surv: DataFrame,
+      positive: Boolean): DataFrame = {
+    val ok = surv.select(keyCols.map(v => surv(kRen(v))): _*).distinct()
+    val eq = keyCols.map(v => outer(v) <=> ok(kRen(v))).reduce(_ && _)
+    p.edge(outer.join(ok, eq, if (positive) "left_semi" else "left_anti"))
   }
 
   /** The 1000-key guard of a dependent cross join on the struct plane:
@@ -3047,74 +2612,197 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
     val rScope = Algebra.inScope(rRes).toSet
     if (!Algebra.inScope(l).exists(rScope))
       return Some(comp(Filter(EExists(l, positive), input)))
-    // id-plane fast path (r14): per-key MINUS over 8-byte ids
-    compCorrExistsMinusIds(input, l, rRes, conds, binds, corrR,
-      positive) match {
-      case Some(df) => return Some(df)
-      case None => ()
-    }
-    val in = comp(input)
-    val ld = comp(l)
-    val rd = comp(rRes)
-    val sharedIL = in.columns.intersect(ld.columns).toIndexedSeq
-    val keyCols = (sharedIL ++ corrR.toSeq.filterNot(sharedIL.contains))
-      .toIndexedSeq
-    val keys = in.select(keyCols.map(in(_)): _*).distinct()
-    val nullIL = maybeUnbound(input) ++ maybeUnbound(l)
-    val lRen = ld.columns.map(v => v -> freshName(v)).toMap
-    val lr = ld.columns.foldLeft(ld) { (d, v) =>
-      d.withColumnRenamed(v, lRen(v))
-    }
-    val ilCond = sharedIL.map(v =>
-        if (nullIL(v))
-          keys(v).isNull || lr(lRen(v)).isNull || termEq(keys(v), lr(lRen(v)))
-        else termEq(keys(v), lr(lRen(v))))
-      .reduceOption(_ && _)
-    val cand = ilCond match {
-      case Some(c) => keys.join(lr, c)
-      case None =>
-        // dependent cross join: bound the key frame before exploding
-        boundedKeyFrame(keys).getOrElse(return None).crossJoin(lr)
-    }
-    // an l var's value on a cand row: the outer key wins where joined
-    def lVal(v: String): Column =
-      if (sharedIL.contains(v) && nullIL(v)) coalesce(cand(v), cand(lRen(v)))
-      else if (sharedIL.contains(v)) cand(v)
-      else cand(lRen(v))
-    val minusShared = ld.columns.intersect(rd.columns).toIndexedSeq
-    val condInnerVars = (conds.flatMap(exprVarSet) ++
-      binds.flatMap(b => exprVarSet(b._2))).toSet
-      .diff(binds.map(_._1).toSet)
-      .intersect(rd.columns.toSet).toIndexedSeq
-    val rrCols = (minusShared ++ condInnerVars).distinct
-    val rRen = rrCols.map(v => v -> freshName(v)).toMap
-    val rr = rrCols.foldLeft(rd.select(rrCols.map(rd(_)): _*)) { (d, v) =>
-      d.withColumnRenamed(v, rRen(v))
-    }
-    val nullLR = maybeUnbound(l) ++ maybeUnbound(rRes)
+    onExistsPlane(input, Seq(l, rRes))(
+      perKeyMinus(_, l, rRes, conds, binds, corrR, positive))
+  }
+
+  /** `FILTER [NOT] EXISTS { l MINUS r }` with §18.6 expression
+    * correlation confined to r's conjunctive spine (l uncorrelated).
+    * Hoisting a condition OUT of the MINUS right side is unsound (it
+    * sits under negation), so the substitution is realized per key:
+    *
+    *   1. key frame K = distinct outer rows over (outer∩l pattern
+    *      vars ∪ correlated vars) — each distinct correlated binding
+    *      decides independently;
+    *   2. cand = K ⋈ l (the per-key l solutions; a dependent CROSS
+    *      join only when l shares nothing with the outer, guarded by
+    *      a key-count bound — that blowup is inherent to dependent
+    *      negation, not an artifact);
+    *   3. per-key MINUS = one anti join of cand against r's residual
+    *      with [[compMinus]]'s compatibility + domain-overlap
+    *      condition AND the hoisted correlated conditions reading the
+    *      key columns (substitution, realized set-based);
+    *   4. EXISTS(key) = key survives with ≥ 1 row; semi/anti join
+    *      back to the outer on the key frame.
+    *
+    * Disjoint l/r domains short-circuit to plain `EXISTS { l }`
+    * (MINUS removes nothing, §18.5). Correlation in r's PATTERN
+    * positions is out of scope here as everywhere in the engine
+    * (bottom-up evaluation school); only EXPRESSION refs correlate.
+    * The id plane refuses the dependent cross and a condition that
+    * reads an l-only var.
+    */
+  private def perKeyMinus(p: ExistsPlane, l: Op, rRes: Op, conds: Seq[Expr],
+      binds: Seq[(String, Expr)], corrR: Set[String],
+      positive: Boolean): Option[DataFrame] = {
+    val lScope = p.innerScope(l)
+    val rScope = p.innerScope(rRes)
+    val sharedIL = p.scope.intersect(lScope).toSeq.sorted
+    val keyCols = sharedIL ++ corrR.toSeq.sorted.filterNot(sharedIL.contains)
+    if (!keyCols.forall(p.scope)) return None
+    val condVars = condReads(conds, binds)
+    // resolution priority: key, then r, then l
+    val condR = condVars.intersect(rScope) -- keyCols
+    val condL = condVars -- keyCols -- rScope
+    if (p.ids && (sharedIL.isEmpty || condL.nonEmpty)) return None
+    val minusShared = lScope.intersect(rScope).toSeq.sorted
+    val outer = p.outer(keyCols, Set.empty).getOrElse(return None)
+    val lSide = p.inner(l, sharedIL.toSet ++ minusShared,
+      sharedIL ++ minusShared).getOrElse(return None)
+    if (lSide._3.nonEmpty) return None
+    val rSide = p.inner(rRes, minusShared.toSet ++ condR, minusShared)
+      .getOrElse(return None)
+    val (keys, kRen, kRead) =
+      keyFrame(p, outer, keyCols, condVars.intersect(keyCols.toSet))
+    val (cand, lVal, lRead) =
+      perKeyCand(p, keys, kRen, sharedIL, lSide, condL).getOrElse(return None)
+    val (rr, rRen, rRead) = narrowInner(p, rSide, minusShared, condR)
+    val nullLR = lSide._2 ++ rSide._2
     val compat = minusShared.map(v =>
-        if (nullLR(v))
-          lVal(v).isNull || rr(rRen(v)).isNull || termEq(lVal(v), rr(rRen(v)))
-        else termEq(lVal(v), rr(rRen(v)))).reduce(_ && _)
+      p.compatible(nullLR(v), lVal(v), rr(rRen(v)))).reduce(_ && _)
     val overlap = minusShared.map(v =>
-        if (nullLR(v)) lVal(v).isNotNull && rr(rRen(v)).isNotNull
-        else lit(true)).reduce(_ || _)
-    val res: String => Column = v =>
-      if (keyCols.contains(v)) cand(v) // substituted outer binding
-      else if (rRen.contains(v)) rr(rRen(v)) // r-inner reads
-      else if (ld.columns.contains(v)) lVal(v)
-      else nullTerm
-    val resB = layerBinds(binds, res)
-    val corrCond = conds.map(c => coalesce(compBool(c, resB), lit(false)))
+      if (nullLR(v)) lVal(v).isNotNull && rr(rRen(v)).isNotNull
+      else lit(true)).reduce(_ || _)
+    val res: String => Column = v => kRead.get(v).map(cand(_))
+      .orElse(rRead.get(v)).orElse(lRead.get(v)).getOrElse(nullTerm)
+    val surv = cand.join(rr,
+      compat && overlap && holds(conds, layerBinds(binds, res)), "left_anti")
+    Some(keyVerdict(p, outer, keyCols, kRen, surv, positive))
+  }
+
+  private def compCorrExistsOptional(input: Op, l: Op, r: Op,
+      cond: Option[Expr], above: Seq[Expr], corr: Set[String],
+      outerScope: Set[String], positive: Boolean): Option[DataFrame] = {
+    if (corrVarsOf(l, outerScope).nonEmpty) return None
+    // an r-ONLY pattern var also bound in the OUTER scope takes part
+    // in the outer semi-join's compatibility (an optional extension
+    // binding it differently is incompatible) — the key frame below
+    // keys only on (outer∩l ∪ correlated) vars, so that class must
+    // stay loud, and the EXISTS{l} short-circuit would drop it
+    if ((Algebra.inScope(r).toSet -- Algebra.inScope(l).toSet)
+        .intersect(outerScope).nonEmpty) return None
+    if (above.isEmpty)
+      return Some(comp(Filter(EExists(l, positive), input)))
+    val corrR = corrVarsOf(r, outerScope)
+    val (rRes, rConds, rBinds) =
+      splitCorrelated(r, corrR).getOrElse(return None)
+    walkExists(l, outerScope ++ Algebra.inScope(l))
+    walkExists(rRes, outerScope ++ Algebra.inScope(rRes))
+    onExistsPlane(input, Seq(l, rRes))(perKeyOptional(_, l, rRes, cond,
+      above, rConds, rBinds, corr, positive))
+  }
+
+  /** `FILTER [NOT] EXISTS { l OPTIONAL { r } FILTER f… }` with §18.6
+    * expression correlation anywhere in the OPTIONAL's embedded
+    * filter, r's conjunctive spine, or the filters above — the
+    * VISIBLE-OPTIONAL class (`?nm` IS read by `f`), which the
+    * invisible-OPTIONAL drop cannot touch. Hoisting out of a left
+    * join's right side is unsound (an unmatched row must yield
+    * unbound, not a dropped condition), so the substitution is
+    * realized per key, steps 1, 2 and 4 as in [[perKeyMinus]]; step
+    * 3, the per-key OPTIONAL, is ONE left-outer join of cand against
+    * r's residual with the l/r compatibility condition AND the
+    * substituted correlated/join conditions (an unmatched cand row
+    * keeps null r-columns — BOUND sees unbound, exactly §18.6's
+    * per-binding evaluation, set-based), then the above-filters
+    * evaluate post-join with the substituted resolver.
+    *
+    * With no filters above, a left join cannot remove l rows, so
+    * `EXISTS { l OPTIONAL r }` short-circuits to `EXISTS { l }`
+    * whatever the correlation inside r decides. The id plane refuses
+    * the dependent cross.
+    */
+  private def perKeyOptional(p: ExistsPlane, l: Op, rRes: Op,
+      cond: Option[Expr], above: Seq[Expr], rConds: Seq[Expr],
+      rBinds: Seq[(String, Expr)], corr: Set[String],
+      positive: Boolean): Option[DataFrame] = {
+    val lScope = p.innerScope(l)
+    val rScope = p.innerScope(rRes)
+    val sharedIL = p.scope.intersect(lScope).toSeq.sorted
+    if (p.ids && sharedIL.isEmpty) return None
+    val keyCols = sharedIL ++ corr.toSeq.sorted.filterNot(sharedIL.contains)
+    // a correlated var must be an outer COLUMN to key on
+    if (!keyCols.forall(p.scope)) return None
+    val condVars = condReads(above ++ cond.toSeq ++ rConds, rBinds)
+    val ljShared = lScope.intersect(rScope).toSeq.sorted
+    val outer = p.outer(keyCols, Set.empty).getOrElse(return None)
+    // NOT minus rScope: a var bound by both sides must also read on
+    // the l side — unmatched LeftJoin rows carry the SPINE's binding
+    // (§15.1), so reads fall back l-ward when the r side is null
+    val condL = condVars.intersect(lScope) -- keyCols
+    val lSide = p.inner(l, sharedIL.toSet ++ ljShared ++ condL,
+      sharedIL ++ ljShared).getOrElse(return None)
+    if (lSide._3.nonEmpty) return None
+    val condR = condVars.intersect(rScope) -- keyCols
+    val rSide = p.inner(rRes, ljShared.toSet ++ condR, ljShared)
+      .getOrElse(return None)
+    val (keys, kRen, kRead) =
+      keyFrame(p, outer, keyCols, condVars.intersect(keyCols.toSet))
+    val (cand, lVal, lRead) =
+      perKeyCand(p, keys, kRen, sharedIL, lSide, condL).getOrElse(return None)
+    val (rr0, rRen, rRead) = narrowInner(p, rSide, ljShared, condR)
+    // non-null iff the left-outer join found an r match — gates the
+    // hoisted correlated BINDs (unmatched ⇒ unbound)
+    val matched = freshName("matched")
+    val rr = rr0.withColumn(matched, lit(true))
+    val nullLR = lSide._2 ++ rSide._2
+    val compat = ljShared.map(v =>
+      p.compatible(nullLR(v), lVal(v), rr(rRen(v))))
       .reduceOption(_ && _).getOrElse(lit(true))
-    val surv = cand.join(rr, compat && overlap && corrCond, "left_anti")
-    val okKeys = surv.select(keyCols.map(surv(_)): _*).distinct()
-    val mRen = keyCols.map(v => v -> freshName(v)).toMap
-    val ok = keyCols.foldLeft(okKeys) { (d, v) =>
-      d.withColumnRenamed(v, mRen(v))
+    val res: String => Column = v => kRead.get(v).map(cand(_)).getOrElse(
+      (rRead.get(v), lRead.get(v)) match {
+        // bound on BOTH sides: matched rows read the (compatible)
+        // merged value, unmatched rows fall back to the spine's
+        case (Some(rc), Some(lc)) => coalesce(rc, lc)
+        case (rc, lc) => rc.orElse(lc).getOrElse(nullTerm)
+      })
+    val resB = layerBindsGated(rBinds, res, rr(matched))
+    val joined = cand.join(rr, compat && holds(cond.toSeq ++ rConds, resB),
+      "left_outer")
+    Some(keyVerdict(p, outer, keyCols, kRen, joined.filter(holds(above, resB)),
+      positive))
+  }
+
+  private def compCorrExistsAggregate(input: Op, sub: Op,
+      corr: Set[String], outerScope: Set[String],
+      positive: Boolean): Option[DataFrame] = {
+    def peelToGroup(o: Op, hs: Seq[Expr]): Option[(Seq[Expr], Group)] =
+      o match {
+        case Project(i, _) => peelToGroup(i, hs)
+        case Distinct(i) => peelToGroup(i, hs)
+        case Filter(c, i) => peelToGroup(i, hs :+ c)
+        case g: Group => Some((hs, g))
+        case _ => None
+      }
+    val (havings, grp) = peelToGroup(sub, Nil).getOrElse(return None)
+    val Group(i, gkeys, aggs) = grp
+    // implicit group, no HAVING: exactly one row whatever the
+    // correlated spine decides — EXISTS is constant
+    if (gkeys.isEmpty && havings.isEmpty) {
+      val in = comp(input)
+      return Some(if (positive) in else in.limit(0))
     }
-    val eq = keyCols.map(v => in(v) <=> ok(mRen(v))).reduce(_ && _)
-    Some(in.join(ok, eq, if (positive) "left_semi" else "left_anti"))
+    if (havings.exists(containsExists)) return None
+    // correlation must not reach aggregate args or group-key exprs
+    val aggArgRefs = aggs.flatMap(_._2.arg.toSeq).flatMap(exprVarSet).toSet
+    val gkeyRefs = gkeys.flatMap(_._2.toSeq).flatMap(exprVarSet).toSet
+    if ((aggArgRefs ++ gkeyRefs).exists(corr)) return None
+    val corrI = corrVarsOf(i, outerScope)
+    val (iRes, iConds, iBinds) =
+      splitCorrelated(i, corrI).getOrElse(return None)
+    walkExists(iRes, outerScope ++ Algebra.inScope(iRes))
+    onExistsPlane(input, Seq(iRes))(perKeyAggregate(_, iRes, iConds, iBinds,
+      gkeys, aggs, havings, corr, positive))
   }
 
   /** `FILTER [NOT] EXISTS { SELECT … WHERE { i } GROUP BY g
@@ -3137,272 +2825,87 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
     *      + substituted key columns); surviving keys semi/anti join
     *      back to the outer.
     *
-    * Guards (stay loud): correlation inside an aggregate argument or
-    * a group-key expression (the per-key agg would need per-key
-    * expressions); nested EXISTS in the filters; an IMPLICIT group
-    * with HAVING (an empty group still yields one row whose
-    * aggregate-over-empty values the key frame cannot synthesize).
-    * An implicit group with NO having is constant-nonempty and
-    * short-circuits before any of this.
+    * With an IMPLICIT group (empty-group HAVING), aggregating ZERO
+    * candidate rows still yields ONE group per outer key (§18.5.1:
+    * Count/Sum/Avg of {} are 0, GroupConcat "", Min/Max/Sample
+    * unbound): step 2 LEFT-joins the key frame and MASKS the
+    * non-contributing rows instead of filtering them. Guards (stay
+    * loud): correlation inside an aggregate argument or a group-key
+    * expression; nested EXISTS in the filters. An implicit group with
+    * NO having is constant-nonempty and short-circuits before any of
+    * this. On the id plane the groups key on ids and only
+    * condition-read key columns, non-COUNT aggregate arguments and
+    * HAVING reads decode; it refuses hoisted binds, expression group
+    * keys, the dependent cross, an outer-nullable condition-read key
+    * and reads outside the key and pattern vars.
     */
-  /** Id-plane twin of [[compCorrExistsAggregate]] (r14): the per-key
-    * aggregation groups on 8-byte ids (group keys ++ key columns all
-    * long), the key frame and dependent join ship ids, and decode
-    * happens at three bounded edges only — condition-read key columns
-    * on the DISTINCT key frame, non-COUNT aggregate arguments in
-    * place on the candidate frame (all-COUNT aggregates, the common
-    * §18.6 shape, decode NOTHING pre-agg: count over an id column is
-    * count over the term), and HAVING-read columns on the tiny
-    * grouped frame. Falls back (None) on expression group keys,
-    * hoisted binds, an outer-nullable condition-read key, or any
-    * side not id-expressible.
-    */
-  private def compCorrExistsAggregateIds(input: Op, iRes: Op,
-      iConds: Seq[Expr], iBinds: Seq[(String, Expr)],
-      gkeys: Seq[(String, Option[Expr])], aggs: Seq[(String, EAgg)],
-      havings: Seq[Expr], corr: Set[String], emptyGroup: Boolean,
+  private def perKeyAggregate(p: ExistsPlane, iRes: Op, iConds: Seq[Expr],
+      iBinds: Seq[(String, Expr)], gkeys: Seq[(String, Option[Expr])],
+      aggs: Seq[(String, EAgg)], havings: Seq[Expr], corr: Set[String],
       positive: Boolean): Option[DataFrame] = {
-    if (iBinds.nonEmpty) return None
-    if (gkeys.exists(_._2.nonEmpty)) return None
-    val o = existsOuterScope(input, Seq(iRes)).getOrElse(return None)
-    val iFull = Algebra.inScope(iRes).toSet
-    val sharedIK = o.lScope.intersect(iFull).toSeq.sorted
-    if (sharedIK.isEmpty) return None
-    val keyCols = (sharedIK ++
-      corr.toSeq.sorted.filterNot(sharedIK.contains)).toIndexedSeq
-    if (!keyCols.forall(o.lScope)) return None
-    val condVars = iConds.flatMap(exprVarSet).toSet
-    if (!condVars.forall(v => keyCols.contains(v) || iFull(v)))
-      return None
-    // an outer-nullable condition-read shared key would need the
-    // struct path's outer-wins coalesce — stays there
-    if (condVars.exists(v => sharedIK.contains(v) && o.lNull(v)))
-      return None
+    val emptyGroup = gkeys.isEmpty
+    val iScope = p.innerScope(iRes)
+    val sharedIK = p.scope.intersect(iScope).toSeq.sorted
+    val keyCols = sharedIK ++ corr.toSeq.sorted.filterNot(sharedIK.contains)
+    if (!keyCols.forall(p.scope)) return None
+    val condVars = condReads(iConds, iBinds)
     val gkeyVars = gkeys.map(_._1)
-    if (!gkeyVars.forall(iFull)) return None
     val hVars = havings.flatMap(exprVarSet).toSet
     val aggOut = aggs.map(_._1).toSet
-    if (!hVars.forall(v => aggOut(v) || keyCols.contains(v) ||
-        gkeyVars.contains(v))) return None
     val aggArgVars = aggs.flatMap(_._2.arg.toSeq).flatMap(exprVarSet).toSet
     // args that feed anything beyond a plain COUNT need term values
-    val decodeArgVars = aggs.filter(a =>
-      a._2.fn != "count" || a._2.distinct)
+    val decodeArgVars = aggs.filter(a => a._2.fn != "count" || a._2.distinct)
       .flatMap(_._2.arg.toSeq).flatMap(exprVarSet).toSet
-    if (!aggArgVars.forall(v => iFull(v) || keyCols.contains(v)))
+    // an outer-nullable shared key a condition reads falls back to the
+    // inner binding (outer-wins coalesce)
+    val coalesced = condVars.filter(v => sharedIK.contains(v) && p.outerNull(v))
+    if (p.ids && (iBinds.nonEmpty || gkeys.exists(_._2.nonEmpty) ||
+        sharedIK.isEmpty || coalesced.nonEmpty ||
+        !condVars.forall(v => keyCols.contains(v) || iScope(v)) ||
+        !gkeyVars.forall(iScope) ||
+        !hVars.forall(v => aggOut(v) || keyCols.contains(v) ||
+          gkeyVars.contains(v)) ||
+        !aggArgVars.forall(v => iScope(v) || keyCols.contains(v))))
       return None
-    val condI = condVars.intersect(iFull) -- keyCols
-    val keep = sharedIK.toSet ++ gkeyVars ++
-      aggArgVars.intersect(iFull) ++ condI
-    val (pf0, pNull, pConst) =
-      corrProbeFrame(iRes, keep).getOrElse(return None)
-    if ((sharedIK ++ gkeyVars ++ decodeArgVars).exists(pConst.contains))
-      return None
-    if (!(sharedIK ++ gkeyVars).distinct.forall(v =>
-        !pf0.columns.contains(v) ||
-        pf0.schema(v).dataType == LongType)) return None
-    val leftIds = idFrameOf(o.core,
-      o.keepOut ++ o.leftFilterVars ++ keyCols).getOrElse(return None)
-    if (!keyCols.forall(v => leftIds.columns.contains(v) &&
-        leftIds.schema(v).dataType == LongType)) return None
-    // key frame: ids, plus decoded structs for the condition reads
-    val keys0 = leftIds.select(keyCols.map(leftIds(_)): _*).distinct()
-    val kRen = keyCols.map(v => v -> freshName(v)).toMap
-    val keys = keyCols.foldLeft(keys0)((d, v) =>
-      d.withColumnRenamed(v, kRen(v)))
-    val condKey = condVars.intersect(keyCols.toSet)
-    val kTmp = condKey.map(v => v -> freshName("kv")).toMap
-    val keysDec = decodeCols(
-      kTmp.foldLeft(keys) { case (d, (v, n)) => d.withColumn(n, d(kRen(v))) },
-      kTmp.values.toSet,
-      kTmp.collect { case (v, n) if o.lNull(v) => n }.toSet)
-    // probe: decode its own condition-read vars pre-join
-    val iTmp = condI
-      .filter(v => pf0.columns.contains(v) && !pConst.contains(v))
-      .map(v => v -> freshName("cv")).toMap
-    val pfDec = decodeCols(
-      iTmp.foldLeft(pf0) { case (d, (v, n)) => d.withColumn(n, d(v)) },
-      iTmp.values.toSet,
-      iTmp.collect { case (v, n) if pNull(v) => n }.toSet)
-    val mk = freshName("m")
-    val pRen = pfDec.columns.map(c => c -> freshName(c)).toMap
-    val pr0 = pfDec.columns.foldLeft(pfDec)((d, c) =>
-      d.withColumnRenamed(c, pRen(c)))
-    val pr = if (emptyGroup) pr0.withColumn(mk, lit(true)) else pr0
-    val ikCond = sharedIK.map { v =>
-      if (o.lNull(v) || pNull(v))
-        keysDec(kRen(v)).isNull || pr(pRen(v)).isNull ||
-          keysDec(kRen(v)) === pr(pRen(v))
-      else keysDec(kRen(v)) === pr(pRen(v))
-    }.reduce(_ && _)
-    val cand0 =
-      if (emptyGroup) keysDec.join(pr, ikCond, "left_outer")
-      else keysDec.join(pr, ikCond)
-    val res: String => Column = v =>
-      if (kTmp.contains(v)) cand0(kTmp(v))
-      else if (pConst.contains(v))
-        constTagCol(cand0(pRen(pConst(v)._1)), pConst(v)._2)
-      else if (iTmp.contains(v)) cand0(pRen(iTmp(v)))
-      else nullTerm
-    val condCol = iConds
-      .map(c => coalesce(compBool(c, res), lit(false)))
-      .reduceOption(_ && _)
-    val probeCols = pfDec.columns.toSeq
-    val cand =
-      if (!emptyGroup) condCol.map(cand0.filter).getOrElse(cand0)
-      else {
-        // §18.5.1: a key whose candidates all fail the substituted
-        // conditions (or that matched nothing) still aggregates the
-        // EMPTY multiset — null the contribution columns, keep the key
-        val contrib = (condCol.toSeq :+ cand0(mk).isNotNull)
-          .reduce(_ && _)
-        val keepK = keyCols.map(v => cand0(kRen(v)).as(kRen(v)))
-        val maskCols = probeCols.map(c =>
-          when(contrib, cand0(pRen(c))).as(pRen(c)))
-        cand0.select((keepK ++ maskCols :+ contrib.as(mk)): _*)
-      }
-    // non-COUNT aggregate arguments decode in place on the candidate
-    // frame (nothing joins on them downstream); COUNT args stay ids
-    val argTmp = decodeArgVars
-      .filter(v => pfDec.columns.contains(v))
-      .map(v => v -> pRen(v)).toMap
-    val bound0 = decodeCols(cand, argTmp.values.toSet,
-      argTmp.values.toSet) // nullable: masked/unmatched rows are null
-    // aggregate over a frame whose probe columns answer to their
-    // ORIGINAL var names (compAgg resolves by name)
-    val bound = bound0.select((keyCols.map(v => bound0(kRen(v))) ++
-      probeCols.map(c => bound0(pRen(c)).as(c)) ++
-      (if (emptyGroup) Seq(bound0(mk)) else Nil)): _*)
-    val groupCols = gkeyVars.map(v => bound(v).as(v)) ++
-      keyCols.map(v => bound(kRen(v)))
-    val aggCols = aggs.map { case (out, a) =>
-      val base =
-        if (emptyGroup && a.fn == "count" && a.arg.isEmpty)
-          termNumDt(sum(when(col(mk), 1L).otherwise(0L)).cast("double"),
-            Rdf.XsdInteger)
-        else compAgg(a, bound)
-      val fixed =
-        if (!emptyGroup) base
-        else a.fn match {
-          case "sum" => coalesce(base, termNumDt(lit(0.0), Rdf.XsdInteger))
-          case "avg" => coalesce(base, termNum(lit(0.0)))
-          case _ => base
-        }
-      fixed.as(out)
-    }
-    val grouped =
-      if (aggCols.isEmpty) bound.select(groupCols: _*).distinct()
-      else bound.groupBy(groupCols: _*).agg(aggCols.head, aggCols.tail: _*)
-    // HAVING decodes its reads on the TINY grouped frame: group keys /
-    // key columns that are still ids get throwaway struct copies
-    val hNeed = hVars.filterNot(aggOut)
-    val hTmp = hNeed.flatMap { v =>
-      val c =
-        if (gkeyVars.contains(v) && grouped.columns.contains(v)) Some(v)
-        else if (kRen.contains(v)) Some(kRen(v))
-        else None
-      c.filter(n => grouped.schema(n).dataType == LongType)
-        .map(n => v -> (n, freshName("hv")))
-    }.toMap
-    val groupedDec = decodeCols(
-      hTmp.foldLeft(grouped) { case (d, (_, (src, n))) =>
-        d.withColumn(n, d(src))
-      },
-      hTmp.values.map(_._2).toSet,
-      hTmp.collect { case (v, (_, n))
-        if o.lNull(v) || pNull(v) || emptyGroup => n }.toSet)
-    val hRes: String => Column = v =>
-      if (aggOut(v)) groupedDec(v)
-      else if (hTmp.contains(v)) groupedDec(hTmp(v)._2)
-      // a group key decoded in place for an aggregate argument is
-      // already a struct column — read it directly
-      else if (grouped.columns.contains(v) &&
-        grouped.schema(v).dataType != LongType) groupedDec(v)
-      else nullTerm
-    val surv = havings
-      .map(c => coalesce(compBool(c, hRes), lit(false)))
-      .reduceOption(_ && _)
-      .map(groupedDec.filter).getOrElse(groupedDec)
-    val ok = surv.select(keyCols.map(v => surv(kRen(v))): _*).distinct()
-    val eq = keyCols.map(v => leftIds(v) <=> ok(kRen(v))).reduce(_ && _)
-    val verdict = leftIds.join(ok, eq,
-      if (positive) "left_semi" else "left_anti")
-    Some(existsDecodeTail(o, verdict, Nil))
-  }
-
-  private def compCorrExistsAggregate(input: Op, sub: Op,
-      corr: Set[String], outerScope: Set[String],
-      positive: Boolean): Option[DataFrame] = {
-    def peelToGroup(o: Op, hs: Seq[Expr]): Option[(Seq[Expr], Group)] =
-      o match {
-        case Project(i, _) => peelToGroup(i, hs)
-        case Distinct(i) => peelToGroup(i, hs)
-        case Filter(c, i) => peelToGroup(i, hs :+ c)
-        case g: Group => Some((hs, g))
-        case _ => None
-      }
-    val (havings, grp) = peelToGroup(sub, Nil).getOrElse(return None)
-    val Group(i, gkeys, aggs) = grp
-    // implicit group, no HAVING: exactly one row whatever the
-    // correlated spine decides — EXISTS is constant
-    if (gkeys.isEmpty && havings.isEmpty) {
-      val in = comp(input)
-      return Some(if (positive) in else in.limit(0))
-    }
-    // empty-group HAVING (r13): with an IMPLICIT group, aggregating
-    // ZERO candidate rows still yields ONE group per outer key
-    // (§18.5.1: Count/Sum/Avg of {} are 0, GroupConcat "", Min/Max/
-    // Sample unbound) — realized below by LEFT-joining the key frame
-    // and MASKING non-contributing rows instead of filtering them
-    val emptyGroup = gkeys.isEmpty
-    if (havings.exists(containsExists)) return None
-    // correlation must not reach aggregate args or group-key exprs
-    val aggArgRefs = aggs.flatMap(_._2.arg.toSeq).flatMap(exprVarSet).toSet
-    val gkeyRefs = gkeys.flatMap(_._2.toSeq).flatMap(exprVarSet).toSet
-    if ((aggArgRefs ++ gkeyRefs).exists(corr)) return None
-    val corrI = corrVarsOf(i, outerScope)
-    val (iRes, iConds, iBinds) =
-      splitCorrelated(i, corrI).getOrElse(return None)
-    walkExists(iRes, outerScope ++ Algebra.inScope(iRes))
-    // id-plane fast path (r14): per-key aggregation over 8-byte ids
-    compCorrExistsAggregateIds(input, iRes, iConds, iBinds, gkeys,
-      aggs, havings, corr, emptyGroup, positive) match {
-      case Some(df) => return Some(df)
-      case None => ()
-    }
-    val in = comp(input)
-    val id = comp(iRes)
-    val sharedIK = in.columns.intersect(id.columns).toIndexedSeq
-    val keyCols = (sharedIK ++ corr.toSeq.filterNot(sharedIK.contains))
-      .toIndexedSeq
-    if (!keyCols.forall(in.columns.contains)) return None
-    val kRen = keyCols.map(v => v -> freshName(v)).toMap
-    val keys = keyCols.foldLeft(
-      in.select(keyCols.map(in(_)): _*).distinct()) { (d, v) =>
-      d.withColumnRenamed(v, kRen(v))
-    }
-    val nullIK = maybeUnbound(input) ++ maybeUnbound(iRes)
-    val ikCond = sharedIK.map(v =>
-        if (nullIK(v))
-          keys(kRen(v)).isNull || id(v).isNull || termEq(keys(kRen(v)), id(v))
-        else termEq(keys(kRen(v)), id(v)))
-      .reduceOption(_ && _)
-    // marker survives the left join on matched rows only
-    val mk = freshName("m")
-    val idM = if (emptyGroup) id.withColumn(mk, lit(true)) else id
-    val cand0 = ikCond match {
-      case Some(c) =>
-        if (emptyGroup) keys.join(idM, c, "left_outer") else keys.join(idM, c)
-      case None =>
-        val keysCk = boundedKeyFrame(keys).getOrElse(return None)
-        if (emptyGroup) keysCk.join(idM, lit(true), "left_outer")
-        else keysCk.crossJoin(idM)
-    }
+    val condI = condVars.intersect(iScope) -- keyCols
+    val (pf, pNull, pConst) = p.inner(iRes, sharedIK.toSet ++ gkeyVars ++
+      aggArgVars.intersect(iScope) ++ condI, sharedIK ++ gkeyVars)
+      .getOrElse(return None)
+    if (decodeArgVars.exists(pConst.contains)) return None
     // a hoisted bind must not collide with a key column or a residual
     // column — the materialization below could not disambiguate the
     // occupied name (rare shadowing shapes stay loud)
-    if (iBinds.exists(b => keyCols.contains(b._1) ||
-        id.columns.contains(b._1))) return None
+    if (iBinds.exists(b => keyCols.contains(b._1) || pf.columns.contains(b._1)))
+      return None
+    val outer = p.outer(keyCols, Set.empty).getOrElse(return None)
+    val (keys, kRen, kRead) =
+      keyFrame(p, outer, keyCols, condVars.intersect(keyCols.toSet))
+    val (pd, iRead) = p.reads(pf, (condI ++ coalesced).filter(v =>
+      pf.columns.contains(v) && !pConst.contains(v)).map(v => v -> v).toMap, pNull)
+    val pRen = pd.columns.map(c => c -> freshName(c)).toMap
+    val pr0 = pd.columns.foldLeft(pd)((d, c) => d.withColumnRenamed(c, pRen(c)))
+    // marker survives the left join on matched rows only
+    val mk = freshName("m")
+    val pr = if (emptyGroup) pr0.withColumn(mk, lit(true)) else pr0
+    val cand0 = sharedIK.map(v => p.compatible(p.outerNull(v) || pNull(v),
+        keys(kRen(v)), pr(pRen(v)))).reduceOption(_ && _) match {
+      case Some(c) => keys.join(pr, c, if (emptyGroup) "left_outer" else "inner")
+      case None =>
+        val keysCk = boundedKeyFrame(keys).getOrElse(return None)
+        if (emptyGroup) keysCk.join(pr, lit(true), "left_outer")
+        else keysCk.crossJoin(pr)
+    }
+    // substituted resolver over a candidate frame: key (outer)
+    // bindings win on shared vars, residual/bind columns otherwise
+    val bRen = iBinds.map(b => b._1 -> freshName(b._1)).toMap
+    def res(d: DataFrame)(v: String): Column =
+      if (bRen.contains(v) && d.columns.contains(bRen(v))) d(bRen(v))
+      else if (coalesced(v)) coalesce(d(kRead(v)), d(pRen(iRead(v))))
+      else if (kRead.contains(v)) d(kRead(v))
+      else if (pConst.contains(v))
+        constTagCol(d(pRen(pConst(v)._1)), pConst(v)._2)
+      else if (iRead.contains(v)) d(pRen(iRead(v)))
+      else nullTerm
     // materialize the hoisted correlated BINDs as REAL columns of the
     // candidate frame (sound: pre-aggregation binds run on every row),
     // so an aggregate argument or plain-var group key reading a bind
@@ -3410,46 +2913,39 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
     // layering left those reads nullTerm, silently collapsing groups
     // and nulling aggregates
     val cand1 = iBinds.foldLeft(cand0) { case (d, (v, e)) =>
-      val r: String => Column = x =>
-        if (kRen.contains(x) && id.columns.contains(x))
-          coalesce(d(kRen(x)), d(x))
-        else if (kRen.contains(x)) d(kRen(x))
-        else if (d.columns.contains(x)) d(x)
-        else nullTerm
-      d.withColumn(v, compExpr(e, r))
+      d.withColumn(bRen(v), compExpr(e, res(d)))
     }
-    // substituted resolver over the candidate frame: key (outer)
-    // bindings win on shared vars, i-residual/bind columns otherwise
-    val res: String => Column = v =>
-      if (kRen.contains(v) && id.columns.contains(v))
-        coalesce(cand1(kRen(v)), cand1(v))
-      else if (kRen.contains(v)) cand1(kRen(v))
-      else if (cand1.columns.contains(v)) cand1(v)
-      else nullTerm
-    val condCol = iConds
-      .map(c => coalesce(compBool(c, res), lit(false)))
-      .reduceOption(_ && _)
+    val condCol = holds(iConds, res(cand1))
+    val rowCols = pd.columns.toSeq.map(pRen) ++ iBinds.map(b => bRen(b._1))
     val cand =
-      if (!emptyGroup) condCol.map(cand1.filter).getOrElse(cand1)
+      if (!emptyGroup) cand1.filter(condCol)
       else {
         // a key whose candidates all fail the substituted conditions
         // (or that matched nothing) must still aggregate the EMPTY
         // multiset: null out the contribution columns, keep the key
-        val contrib = (condCol.toSeq :+ cand1(mk).isNotNull).reduce(_ && _)
-        val keep = keyCols.map(v => cand1(kRen(v)).as(kRen(v)))
-        val maskCols = (id.columns.toSeq ++ iBinds.map(_._1)).distinct
-          .map(v => when(contrib, cand1(v)).as(v))
-        cand1.select((keep ++ maskCols :+ contrib.as(mk)): _*)
+        val contrib = condCol && cand1(mk).isNotNull
+        cand1.select((keyCols.map(v => cand1(kRen(v)).as(kRen(v))) ++
+          rowCols.map(c => when(contrib, cand1(c)).as(c)) :+
+          contrib.as(mk)): _*)
       }
+    // non-COUNT aggregate arguments decode on the candidate frame
+    // (nothing joins on them downstream); COUNT args stay ids
+    val (cd, argRead) = p.reads(cand, decodeArgVars.filter(pd.columns.contains)
+      .map(v => v -> pRen(v)).toMap, decodeArgVars) // masked rows are null
+    // aggregate over a frame whose columns answer to their ORIGINAL
+    // var names (compAgg resolves by name)
+    val bound0 = cd.select((keyCols.map(v => cd(kRen(v))) ++
+      pd.columns.map(c => cd(argRead.getOrElse(c, pRen(c))).as(c)) ++
+      iBinds.map(b => cd(bRen(b._1)).as(b._1)) ++
+      (if (emptyGroup) Seq(cd(mk)) else Nil)): _*)
     // bind group-key expressions (uncorrelated by the guard above)
-    val bound = gkeys.foldLeft(cand) {
+    val bound = gkeys.foldLeft(bound0) {
       case (d, (v, Some(e))) => d.withColumn(v, compExpr(e, resolver(d)))
       case (d, (_, None)) => d
     }
-    def gCol(k: (String, Option[Expr])): Column =
-      (if (bound.columns.contains(k._1)) bound(k._1) else nullTerm)
-        .as(k._1)
-    val groupCols = gkeys.map(gCol) ++ keyCols.map(v => bound(kRen(v)))
+    val groupCols = gkeyVars.map(v =>
+      (if (bound.columns.contains(v)) bound(v) else nullTerm).as(v)) ++
+      keyCols.map(v => bound(kRen(v)))
     val aggCols = aggs.map { case (out, a) =>
       // COUNT(*) over the masked frame must count CONTRIBUTING rows,
       // not the placeholder; Sum/Avg of the empty multiset are 0 per
@@ -3470,22 +2966,20 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
       fixed.as(out)
     }
     val grouped =
-      if (aggCols.isEmpty)
-        bound.select(groupCols: _*).distinct()
+      if (aggCols.isEmpty) bound.select(groupCols: _*).distinct()
       else bound.groupBy(groupCols: _*).agg(aggCols.head, aggCols.tail: _*)
     // HAVING with substitution: agg outputs / group keys from the
-    // grouped frame, correlated vars from the key columns
+    // grouped frame, correlated vars from the key columns — on the id
+    // plane those still ids decode on the TINY grouped frame
+    val hCols = (hVars -- aggOut).flatMap(v =>
+      if (grouped.columns.contains(v)) Some(v -> v) else kRen.get(v).map(v -> _))
+      .toMap
+    val (gd, hRead) = p.reads(grouped, hCols,
+      if (emptyGroup) hCols.keySet else p.outerNull ++ pNull)
     val hRes: String => Column = v =>
-      if (grouped.columns.contains(v)) grouped(v)
-      else if (kRen.contains(v)) grouped(kRen(v))
-      else nullTerm
-    val surv = havings
-      .map(c => coalesce(compBool(c, hRes), lit(false)))
-      .reduceOption(_ && _)
-      .map(grouped.filter).getOrElse(grouped)
-    val ok = surv.select(keyCols.map(v => surv(kRen(v))): _*).distinct()
-    val eq = keyCols.map(v => in(v) <=> ok(kRen(v))).reduce(_ && _)
-    Some(in.join(ok, eq, if (positive) "left_semi" else "left_anti"))
+      if (aggOut(v)) gd(v) else hRead.get(v).map(gd(_)).getOrElse(nullTerm)
+    Some(keyVerdict(p, outer, keyCols, kRen, gd.filter(holds(havings, hRes)),
+      positive))
   }
 
   /** §18.6 requires substituting the CURRENT outer binding into an
@@ -3724,6 +3218,120 @@ final class Compiler(spark: SparkSession, quads: DataFrame,
     }
     gVar.foreach { gv => cols = cols :+ graft.rdf.Rdf.iri(d("g")).as(gv) }
     d.select(cols: _*)
+  }
+
+  // ------------------------------------------------------------------
+  // correlated EXISTS term planes
+  // ------------------------------------------------------------------
+
+  /** An inner operand of a correlated-EXISTS shape on a term plane:
+    * (frame, nullable vars, const-BIND var → (tag column, tag →
+    * constant)); see [[corrProbeFrame]].
+    */
+  private type ExSide = (DataFrame, Set[String], Map[String, (String, Map[Long, T])])
+
+  /** What the correlated-EXISTS evaluators ([[existsJoin]],
+    * [[perKeyMinus]], [[perKeyOptional]], [[perKeyAggregate]]) differ in
+    * between the two term planes. The struct plane compiles the outer
+    * and each inner operand to term-struct frames and reads every
+    * column as it is. The id plane keeps them as 8-byte term ids (id
+    * equality ⟺ term identity): the key frame, the candidate joins and
+    * the verdict exchange ship longs, only the vars a condition reads
+    * decode (into throwaway copies; join keys stay ids), and the
+    * surviving outer rows decode ONCE at the result edge. `scope` and
+    * `outerNull` are the outer's vars and its nullable ones;
+    * `outer(keys, extra)` its frame with `keys` as join columns;
+    * `innerScope` an inner operand's vars and `inner(op, keep, keys)`
+    * its side with `keys` as join columns; `same` node identity;
+    * `edge` the result edge. `ids` marks the id plane, on which each
+    * evaluator refuses the shapes it cannot realize over ids.
+    */
+  private final case class ExistsPlane(ids: Boolean, scope: Set[String],
+      outerNull: Set[String],
+      outer: (Seq[String], Set[String]) => Option[DataFrame],
+      innerScope: Op => Set[String],
+      inner: (Op, Set[String], Seq[String]) => Option[ExSide],
+      same: (Column, Column) => Column, edge: DataFrame => DataFrame) {
+    /** `a` and `b` are the same node, or one is unbound if `nullable` */
+    def compatible(nullable: Boolean, a: Column, b: Column): Column =
+      if (nullable) a.isNull || b.isNull || same(a, b) else same(a, b)
+    /** `df` plus the term column each condition-read var (→ its column
+      * in `df`) resolves to: the column itself on the struct plane, a
+      * decoded copy on the id plane (`nul`: vars that may be unbound).
+      */
+    def reads(df: DataFrame, cols: Map[String, String], nul: Set[String])
+        : (DataFrame, Map[String, String]) =
+      if (!ids || cols.isEmpty) (df, cols)
+      else {
+        val tmp = cols.map { case (v, c) => v -> (c, freshName("cv")) }
+        val copied = tmp.values.foldLeft(df) { case (d, (c, n)) =>
+          d.withColumn(n, d(c))
+        }
+        (decodeCols(copied, tmp.values.map(_._2).toSet,
+          tmp.collect { case (v, (_, n)) if nul(v) => n }.toSet),
+          tmp.map { case (v, (_, n)) => v -> n })
+      }
+  }
+
+  /** Run a correlated-EXISTS evaluator on the id plane, else on the
+    * struct plane.
+    */
+  private def onExistsPlane(input: Op, inner: Seq[Op])(
+      eval: ExistsPlane => Option[DataFrame]): Option[DataFrame] =
+    existsIdPlane(input, inner).flatMap(eval)
+      .orElse(eval(existsStructPlane(input, inner)))
+
+  /** The id plane when the encoded view exists and the outer, its
+    * FILTER layers peeled, is a wide id-expressible tree. The outer
+    * frame keeps (query-wide reads ∪ vars shared with leaves OUTSIDE
+    * the input∪inner trees) for late materialization; the edge applies
+    * the peeled FILTERs, drops the rest, decodes once and bumps
+    * [[Sparql.corrIdExistsJoins]].
+    */
+  private def existsIdPlane(input: Op, inner: Seq[Op]): Option[ExistsPlane] = {
+    if (encoded.isEmpty) return None
+    val (core, inConds) = stripFilters(input)
+    val (scope, lNull) = idTreeScopeWide(core).getOrElse(return None)
+    if (Algebra.inScope(core).toSet != scope) return None
+    val filterVars = inConds.flatMap(exprVarSet).toSet.intersect(scope)
+    val inTree = inner.foldLeft(countTreeLeaves(core))((m, o) =>
+      countTreeLeaves(o, m))
+    val keepOut = (refNeeded ++ scope.filter(v =>
+      leafCounts.getOrElse(v, 0) > inTree.getOrElse(v, 0))).intersect(scope)
+    def longs(f: DataFrame, vs: Seq[String]) = vs.forall(v =>
+      f.columns.contains(v) && f.schema(v).dataType == LongType)
+    def edge(joined: DataFrame): DataFrame = {
+      val filtered = applyFilters(joined, inConds, filterVars,
+        lNull.intersect(filterVars))
+      val dead = filtered.columns.filterNot(keepOut)
+      val kept =
+        if (dead.length == filtered.columns.length)
+          filtered.select(nullTerm.as(freshName("c")))
+        else filtered.drop(dead.toIndexedSeq: _*)
+      Sparql.corrIdExistsJoins.incrementAndGet()
+      decodeCols(kept, kept.columns.toSet, kept.columns.filter(lNull).toSet)
+    }
+    Some(ExistsPlane(ids = true, scope, lNull,
+      (keys, extra) => idFrameOf(core, keepOut ++ filterVars ++ keys ++ extra)
+        .filter(longs(_, keys)),
+      Algebra.inScope(_).toSet,
+      (op, keep, keys) => corrProbeFrame(op, keep).filter { case (f, _, cs) =>
+        !keys.exists(cs.contains) && longs(f, keys)
+      },
+      _ === _, edge))
+  }
+
+  /** The struct plane: `input` and each of `inner`, in that order,
+    * compiled to term-struct frames.
+    */
+  private def existsStructPlane(input: Op, inner: Seq[Op]): ExistsPlane = {
+    val in = comp(input)
+    val frames = inner.map(o => o -> comp(o))
+    def frame(op: Op) = frames.find(_._1 eq op).get._2
+    ExistsPlane(ids = false, in.columns.toSet, maybeUnbound(input),
+      (_, _) => Some(in), frame(_).columns.toSet,
+      (op, _, _) => Some((frame(op), maybeUnbound(op), Map.empty)),
+      termEq, identity)
   }
 
   // ------------------------------------------------------------------

@@ -803,24 +803,20 @@ class OwlHorstSpec extends GraftSuite {
   }
 
   test("DRed axiom: oversized taint seed surrenders to full re-materialization") {
-    // the broadcast-size guard: a lost transitive typing seeds the
-    // property's whole inferred closure — past the cap the incremental
-    // path must NOT broadcast it, it re-closes the world instead
-    val quads = iriQuads(Seq(
-      ("ex:partOf", "rdf:type", "owl:TransitiveProperty"),
-      ("ex:a", "ex:partOf", "ex:b"),
-      ("ex:b", "ex:partOf", "ex:c"),
-      ("ex:c", "ex:partOf", "ex:d")))
+    // the size guard: a lost transitive typing seeds the property's
+    // whole inferred closure — a 66-node chain loses (65·64)/2 = 2,080
+    // inferred pairs, past the 2,000-row taint seed cap, so the
+    // incremental path must NOT collect it; it re-closes the world
+    val nodes = (0 to 65).map(i => s"ex:n$i")
+    val quads = iriQuads(("ex:partOf", "rdf:type", "owl:TransitiveProperty") +:
+      nodes.zip(nodes.tail).map { case (a, b) => (a, "ex:partOf", b) })
     val baseMat = OwlHorst.materialize(spark, quads)
-    sys.props("graft.infer.axiomseed.cap") = "0"
-    try {
-      val cfBefore = OwlHorst.capFallbacks.get()
-      val inc = checkDelete(quads, baseMat,
-        quads.filter(col("o")("lex") === "owl:TransitiveProperty"))
-      assert(OwlHorst.capFallbacks.get() == cfBefore + 1)
-      val pairs = spo(inc).filter(_._2 == "ex:partOf").map(r => (r._1, r._3))
-      assert(pairs == Set(("ex:a", "ex:b"), ("ex:b", "ex:c"), ("ex:c", "ex:d")))
-    } finally sys.props.remove("graft.infer.axiomseed.cap")
+    val cfBefore = OwlHorst.capFallbacks.get()
+    val inc = checkDelete(quads, baseMat,
+      quads.filter(col("o")("lex") === "owl:TransitiveProperty"))
+    assert(OwlHorst.capFallbacks.get() == cfBefore + 1)
+    val pairs = spo(inc).filter(_._2 == "ex:partOf").map(r => (r._1, r._3))
+    assert(pairs == nodes.zip(nodes.tail).toSet)
   }
 
   test("DRed axiom: FunctionalProperty typing delete collapses derived sameAs") {
